@@ -1167,6 +1167,45 @@ def iter_records_span(
         yield rec
 
 
+def _check_head(off: int, size: int, key_len: int, limit: int | None) -> None:
+    # smallest block: size, key, metadata length, entry count
+    if size < 20 + key_len or (limit is not None and off + size > limit):
+        raise ShardPackCodecError(
+            f"record at {off}: damaged block head (size {size}, key length {key_len})"
+        )
+
+
+def _key_at(buf: bytes, off: int) -> bytes:
+    """Key bytes of the block at ``off`` in an in-memory record region:
+    the keyed walk's probe reads size, key length and key, nothing else."""
+    if not 0 <= off <= len(buf) - 12:
+        raise ShardPackCodecError(f"record at {off}: offset outside the record region")
+    size, key_len = struct.unpack_from("<QI", buf, off)
+    _check_head(off, size, key_len, len(buf))
+    return buf[off + 12 : off + 12 + key_len]
+
+
+def _read_head(f, off: int, limit: int | None) -> tuple[bytes, int, int]:
+    """The same probe on an open shard: (block prefix, size, key_len).
+    The prefix is the size field plus up to 4 KiB (key+metadata sit at
+    the block head), extended through a longer key; ``f`` is left right
+    after it."""
+    if off < 0:
+        raise ShardPackCodecError(f"record at {off}: offset outside the shard")
+    f.seek(off)
+    head = f.read(8)
+    size = struct.unpack("<Q", head)[0] if len(head) == 8 else 0
+    _check_head(off, size, 0, limit)
+    head += f.read(min(size - 8, 4096))
+    key_len = struct.unpack_from("<I", head, 8)[0] if len(head) >= 12 else size
+    _check_head(off, size, key_len, limit)
+    if len(head) < 12 + key_len:
+        head += f.read(12 + key_len - len(head))
+    if len(head) < 12 + key_len:
+        raise ShardPackCodecError(f"record at {off}: truncated block head")
+    return head, size, key_len
+
+
 def iter_records(
     path: str,
     verify_checksums: bool = True,
@@ -1174,56 +1213,58 @@ def iter_records(
     skip_payload: bool = False,
     skip_entries: bool = False,
     entry_names: "set[str] | None" = None,
+    keys: "set[str] | frozenset[str] | None" = None,
 ) -> Iterator[Record]:
     """Sequential streaming (draft.md:213-218); with `offsets`, reads only
-    the selected record blocks (partition range / pruned access path)."""
-    if offsets is None:
-        idx = read_index(path)
-        offsets = idx.offsets
-        # Metadata-only scans of payload-heavy shards: seek from block head
-        # to block head and never pull the payload bytes off disk at all
-        # (the index-serves-metadata access path, src/bucket.rs:185-188).
-        avg = idx.index_start / max(1, len(offsets))
-        if skip_entries and avg > 64 * 1024:
-            with storage.for_path(path).open_read(path) as f:
-                for off in offsets:
-                    f.seek(off)
-                    head = f.read(8)
-                    (record_size,) = struct.unpack("<Q", head)
-                    # key+metadata sit at the block head; 4 KiB covers the
-                    # overwhelming case, extend only when lengths demand it
-                    chunk = f.read(min(record_size - 8, 4096))
+    the selected record blocks (partition range / pruned access path).
 
-                    def ensure(n: int) -> None:
-                        nonlocal chunk
-                        if len(chunk) < n:  # f is positioned right after chunk
-                            chunk += f.read(n - len(chunk))
-
-                    ensure(4)
-                    (key_len,) = struct.unpack_from("<I", chunk, 0)
-                    ensure(8 + key_len)
-                    (meta_len,) = struct.unpack_from("<I", chunk, 4 + key_len)
-                    ensure(8 + key_len + meta_len)
-                    key = chunk[4 : 4 + key_len].decode("utf-8")
-                    meta_b = chunk[8 + key_len : 8 + key_len + meta_len]
-                    yield Record(
-                        key=key,
-                        entries=[],
-                        metadata=json.loads(meta_b) if meta_b else {},
-                    )
+    ``keys``: the keyed walk (point lookups, src/bucket.rs:147-169) —
+    the unkeyed call's records whose key is in ``keys``, in shard order
+    and with the same I/O, but only blocks whose probed key matches go
+    through ``decode_record``.  So only RETURNED records are
+    decompressed and checksum-verified; whole-shard integrity is an
+    unkeyed walk or ``verify_dataset``.  A damaged block head raises
+    ShardPackCodecError."""
+    want = None if keys is None else {k.encode("utf-8") for k in keys}
+    opts = (verify_checksums, skip_payload, skip_entries, entry_names)
+    if offsets is not None:
+        if want is None:
+            for off in offsets:
+                yield read_record_at(path, off, *opts)
             return
-        buf = storage.for_path(path).read_bytes(path, 0, idx.index_start)
-        pos = 0
-        for _ in range(len(offsets)):
-            rec, pos = decode_record(
-                buf, pos, verify_checksums, skip_payload, skip_entries, entry_names
-            )
-            yield rec
-    else:
-        for off in offsets:
-            yield read_record_at(
-                path, off, verify_checksums, skip_payload, skip_entries, entry_names
-            )
+        with storage.for_path(path).open_read(path) as f:
+            for off in offsets:
+                head, size, key_len = _read_head(f, off, None)
+                if head[12 : 12 + key_len] in want:
+                    yield decode_record(head + f.read(size - len(head)), 0, *opts)[0]
+        return
+    idx = read_index(path)
+    # Metadata-only scans of payload-heavy shards: seek from block head
+    # to block head and never pull the payload bytes off disk at all
+    # (the index-serves-metadata access path, src/bucket.rs:185-188).
+    avg = idx.index_start / max(1, len(idx.offsets))
+    if skip_entries and avg > 64 * 1024:
+        with storage.for_path(path).open_read(path) as f:
+            for off in idx.offsets:
+                head, _, key_len = _read_head(f, off, idx.index_start)
+                if want is not None and head[12 : 12 + key_len] not in want:
+                    continue
+                # extend the prefix through the metadata only when its
+                # length demands it (f sits right after the prefix)
+                if len(head) < 16 + key_len:
+                    head += f.read(16 + key_len - len(head))
+                (meta_len,) = struct.unpack_from("<I", head, 12 + key_len)
+                if len(head) < 16 + key_len + meta_len:
+                    head += f.read(16 + key_len + meta_len - len(head))
+                yield decode_record(head, 0, skip_entries=True)[0]
+        return
+    if want is None:
+        yield from iter_records_span(path, 0, idx.index_start, len(idx.offsets), *opts)
+        return
+    buf = storage.for_path(path).read_bytes(path, 0, idx.index_start)
+    for off in idx.offsets:
+        if _key_at(buf, off) in want:
+            yield decode_record(buf, off, *opts)[0]
 
 
 # --- dataset (bucket of sequentially numbered shards) -----------------------

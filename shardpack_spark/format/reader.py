@@ -28,10 +28,12 @@ graph is import-audited pyspark-free by tests/test_reader_facade.py.
     ds.read_record_at_offset(shard, off)  # O(1) seek
 
 Scale shape: ``records()`` streams shard by shard (one ranged read per
-shard, constant memory); ``lookup`` opens only bloom/range-surviving
-shards; ``__getitem__`` resolves through per-shard record counts from
-the manifest (metadata-only) and one EOF-index tail read for the owning
-shard.  The patch overlay is O(patched keys) in memory — small by
+shard, constant memory); ``lookup`` costs one ranged read per shard
+that survives bloom/range pruning, plus a decode of the matching
+records only (a keyed walk: every other block is probed for its key
+and skipped); ``__getitem__`` resolves through per-shard record counts
+from the manifest (metadata-only) and one EOF-index tail read for the
+owning shard.  The patch overlay is O(patched keys) in memory — small by
 construction (compact_patches folds them down); ``patches="error"``
 refuses datasets where that assumption broke.
 """
@@ -125,6 +127,8 @@ class Dataset:
             )
         self._overlay: dict[str, object] | None = None  # lazy {key: Record|_TOMBSTONE}
         self._cum_counts: list[int] | None = None  # lazy, for __getitem__
+        self._bloom_bits: dict[str, bytes] = {}  # lazy, for _candidate_shards
+        self._base_presence: dict[str, bool] = {}  # lazy, for _key_has_base_row
 
     # --- shard-level surface ------------------------------------------------
 
@@ -180,7 +184,6 @@ class Dataset:
         loader over caption+image records pays zero image
         decompression; unselected entries come back header-only with
         their true declared sizes)."""
-        overlay = self._load_overlay()
         names = manifest._names_matching_meta(
             list(self._names), self._stats, where_meta, where_meta_range
         )
@@ -222,36 +225,13 @@ class Dataset:
         sel = (
             frozenset(entry_names) if entry_names is not None else self.entry_names
         )
-        emitted: set[str] = set()
-        for name in names:
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(
-                sp,
-                verify_checksums=self.verify_checksums,
-                skip_payload=skip_payload,
-                entry_names=sel,
-            ):
-                if overlay and rec.key in overlay:
-                    patched = overlay[rec.key]
-                    if patched is _TOMBSTONE or rec.key in emitted:
-                        continue
-                    emitted.add(rec.key)
-                    if row_ok(patched):
-                        yield _select_entries(patched, sel)
-                    continue
-                if row_ok(rec):
-                    yield rec
-        # overlay keys whose base row was never visited — patch INSERTS,
-        # plus patch UPDATES whose base shard the meta pruning skipped
-        # (the merged-view row is the patch row, judged on its CURRENT
-        # state, exactly like read_with_patches' filter-after-merge rule)
-        if overlay:
-            for key in sorted(overlay):
-                rec = overlay[key]
-                if rec is _TOMBSTONE or key in emitted:
-                    continue
-                if row_ok(rec):
-                    yield _select_entries(rec, sel)
+        # a patch UPDATE whose base shard the meta pruning skipped comes
+        # out as an unvisited overlay row: the merged-view row is the patch
+        # row, judged on its CURRENT state, exactly like
+        # read_with_patches' filter-after-merge rule
+        for rec in self._overlaid(names, sel, skip_payload=skip_payload):
+            if row_ok(rec):
+                yield rec
 
     def follow(
         self,
@@ -327,77 +307,60 @@ class Dataset:
         each."""
         if not 0 <= index < num_shards:
             raise ValueError(f"index must be in [0, {num_shards}), got {index}")
-        overlay = self._load_overlay()
         sel = (
             frozenset(entry_names) if entry_names is not None else self.entry_names
         )
-        mine = self._names[index::num_shards]
+
+        def claim(key: str) -> bool:
+            # patch-INSERTED keys (no base row anywhere): claimed by key
+            # hash so exactly one worker emits each.  Updates are never
+            # claimed here — the worker whose shards hold the base row
+            # already emitted them in place, which _key_has_base_row
+            # (bloom/range-pruned metadata probe) distinguishes.
+            h = int(hashlib.sha256(key.encode()).hexdigest()[:8], 16)
+            return h % num_shards == index and not self._key_has_base_row(key)
+
+        yield from self._overlaid(
+            self._names[index::num_shards], sel, claim, skip_payload=skip_payload
+        )
+
+    def _overlaid(
+        self, names, sel=None, claim=None, **decode
+    ) -> Iterator[codec.Record]:
+        """Stream the base records of shards ``names`` with the patch
+        overlay applied in place — a patched key yields its patch row
+        once, a tombstoned key nothing — then, in key order, the live
+        overlay rows whose key no base row carried (patch INSERTS, and
+        updates whose base shard is not in ``names``) that ``claim``
+        accepts.  ``sel`` and ``decode`` go to ``codec.iter_records``."""
+        overlay = self._load_overlay()
         emitted: set[str] = set()
-        for name in mine:
-            sp = os.path.join(self.path, name)
+        decode.setdefault("verify_checksums", self.verify_checksums)
+        for name in names:
             for rec in codec.iter_records(
-                sp,
-                verify_checksums=self.verify_checksums,
-                skip_payload=skip_payload,
-                entry_names=sel,
+                os.path.join(self.path, name), entry_names=sel, **decode
             ):
                 if overlay and rec.key in overlay:
                     patched = overlay[rec.key]
                     if patched is _TOMBSTONE or rec.key in emitted:
                         continue
                     emitted.add(rec.key)
-                    yield _select_entries(patched, sel)
-                    continue
+                    rec = _select_entries(patched, sel)
                 yield rec
-        if overlay:
-            # patch-INSERTED keys (no base row anywhere): claimed by key
-            # hash so exactly one worker emits each.  Updates are never
-            # claimed here — the worker whose shards hold the base row
-            # already emitted them in place, which _key_has_base_row
-            # (bloom/range-pruned metadata probe) distinguishes.
-            for key in sorted(overlay):
-                rec = overlay[key]
-                if rec is _TOMBSTONE or key in emitted:
-                    continue
-                if int(hashlib.sha256(key.encode()).hexdigest()[:8], 16) % num_shards != index:
-                    continue
-                if self._key_has_base_row(key):
-                    continue  # an update: the worker holding its base emits it
+        for key in sorted(overlay):
+            rec = overlay[key]
+            if rec is not _TOMBSTONE and key not in emitted and (
+                claim is None or claim(key)
+            ):
                 yield _select_entries(rec, sel)
 
     def _key_has_base_row(self, key: str) -> bool:
         """Does ANY visible shard hold a base row for ``key``?  Bloom +
-        range pruning first, then a metadata-only scan of surviving
-        shards; memoized per key set."""
-        cache = getattr(self, "_base_presence", None)
-        if cache is None:
-            cache = self._base_presence = {}
-        if key in cache:
-            return cache[key]
-        hashes = manifest._bloom_key_hashes(key)
-        present = False
-        for name in self._names:
-            s = self._stats.get(name, {})
-            kmin, kmax = s.get("min_key"), s.get("max_key")
-            if kmin is not None and kmax is not None and not (kmin <= key <= kmax):
-                continue
-            bloom = s.get("bloom")
-            if bloom:
-                try:
-                    bits = base64.b64decode(bloom.get("bits", ""))
-                except Exception:
-                    bits = b""
-                if not manifest._bloom_maybe_contains(bloom, bits, key, hashes):
-                    continue
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(sp, verify_checksums=False, skip_entries=True):
-                if rec.key == key:
-                    present = True
-                    break
-            if present:
-                break
-        cache[key] = present
-        return present
+        range pruning first, then a keyed metadata-only walk of the
+        surviving shards; memoized per key set."""
+        if key not in self._base_presence:
+            self._base_presence[key] = self._base_metadata(key) is not None
+        return self._base_presence[key]
 
     def to_batches(
         self,
@@ -475,30 +438,23 @@ class Dataset:
 
     def keys(self) -> Iterator[str]:
         """Every live record key (payloads never decoded)."""
-        overlay = self._load_overlay()
-        seen: set[str] = set()
-        for name in self._names:
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(
-                sp, verify_checksums=False, skip_entries=True
-            ):
-                if overlay and rec.key in overlay:
-                    if overlay[rec.key] is _TOMBSTONE or rec.key in seen:
-                        continue
-                    seen.add(rec.key)
-                yield rec.key
-        if overlay:
-            for key in sorted(overlay):
-                if overlay[key] is not _TOMBSTONE and key not in seen:
-                    yield key
+        for rec in self._overlaid(
+            self._names, verify_checksums=False, skip_entries=True
+        ):
+            yield rec.key
 
     def lookup(self, key: str) -> list[codec.Record]:
         """Point lookup by record key — the bucket-index access path
         (src/bucket.rs:147-169) served from manifest stats: shards whose
         [min,max] key range excludes the key are skipped, surviving
         shards are vetoed by their Bloom filter, and only then are
-        shard bytes touched.  Returns every matching record (the format
-        permits duplicate keys), overlaid by patches.
+        shard bytes touched: one ranged read per surviving shard, then a
+        keyed walk that decodes only the matching records.  Returns every
+        matching record (the format permits duplicate keys), overlaid by
+        patches.  Returned records are always checksum-verified (when the
+        dataset verifies); non-matching records in the same shard are
+        not — whole-shard integrity is a ``records()`` epoch or
+        ``verify_dataset``.
 
         Delegates to :meth:`lookup_many` — ONE pruning pipeline, so the
         single- and batched-lookup paths cannot drift apart (the
@@ -513,10 +469,12 @@ class Dataset:
         serial ``lookup`` calls — each Bloom-pruned to ~one shard, but a
         shard naming many of the values is re-read once per value.  Here
         every key is pruned against each shard's [min,max] range + Bloom
-        first, then each shard with ≥1 candidate is scanned once for ALL
-        its candidates.  Returns ``{key: [records]}`` (missing keys map
-        to []), identical to ``{k: self.lookup(k) for k in keys}``
-        including patch-overlay semantics."""
+        first, then each shard with ≥1 candidate gets ONE keyed walk
+        (``codec.iter_records(keys=...)``) for ALL its candidates, which
+        decodes and verifies only the matching records.  Returns
+        ``{key: [records]}`` (missing keys map to []), identical to
+        ``{k: self.lookup(k) for k in keys}`` including patch-overlay
+        semantics and the integrity contract of :meth:`lookup`."""
         out: dict[str, list[codec.Record]] = {k: [] for k in keys}
         overlay = self._load_overlay()
         rest: set[str] = set()
@@ -529,38 +487,14 @@ class Dataset:
                 rest.add(k)
         if not rest:
             return out
-        hashes = {k: manifest._bloom_key_hashes(k) for k in rest}
-        for name in self._names:
-            s = self._stats.get(name, {})
-            kmin, kmax = s.get("min_key"), s.get("max_key")
-            bloom = s.get("bloom")
-            bits = b""
-            if bloom:
-                try:
-                    bits = base64.b64decode(bloom.get("bits", ""))
-                except Exception:
-                    bits = b""
-            cand = {
-                k
-                for k in rest
-                if not (
-                    kmin is not None and kmax is not None and not (kmin <= k <= kmax)
-                )
-                and not (
-                    bloom
-                    and not manifest._bloom_maybe_contains(bloom, bits, k, hashes[k])
-                )
-            }
-            if not cand:
-                continue
-            sp = os.path.join(self.path, name)
+        for sp, cand in self._candidate_shards(rest):
             for rec in codec.iter_records(
                 sp,
                 verify_checksums=self.verify_checksums,
                 entry_names=self.entry_names,
+                keys=cand,
             ):
-                if rec.key in cand:
-                    out[rec.key].append(rec)
+                out[rec.key].append(rec)
         return out
 
     def metadata(self, key: str) -> dict | None:
@@ -570,25 +504,48 @@ class Dataset:
         if overlay and key in overlay:
             rec = overlay[key]
             return None if rec is _TOMBSTONE else dict(rec.metadata)
-        hashes = manifest._bloom_key_hashes(key)
+        return self._base_metadata(key)
+
+    def _base_metadata(self, key: str) -> dict | None:
+        """Metadata of the first base row for ``key`` (patches not
+        applied): a keyed walk of the shards that survive pruning, which
+        parses no other record's metadata."""
+        for sp, _ in self._candidate_shards({key}):
+            for rec in codec.iter_records(
+                sp, keys={key}, skip_entries=True, verify_checksums=False
+            ):
+                return rec.metadata
+        return None
+
+    def _candidate_shards(self, keys) -> "Iterator[tuple[str, set[str]]]":
+        """(shard path, candidate keys) for every visible shard, in name
+        order, whose manifest stats may hold any of ``keys``: a shard is
+        skipped for a key outside its [min,max] range or vetoed by its
+        Bloom filter.  Pruning is a pure optimization — shards without
+        stats, or with malformed filters, keep every key."""
+        hashes = {k: manifest._bloom_key_hashes(k) for k in keys}
         for name in self._names:
             s = self._stats.get(name, {})
             kmin, kmax = s.get("min_key"), s.get("max_key")
-            if kmin is not None and kmax is not None and not (kmin <= key <= kmax):
-                continue
             bloom = s.get("bloom")
-            if bloom:
+            bits = self._bloom_bits.get(name)
+            if bloom and bits is None:  # base64-decoded once per Dataset
                 try:
                     bits = base64.b64decode(bloom.get("bits", ""))
-                except Exception:
-                    bits = b""
-                if not manifest._bloom_maybe_contains(bloom, bits, key, hashes):
-                    continue
-            sp = os.path.join(self.path, name)
-            for rec in codec.iter_records(sp, verify_checksums=False, skip_entries=True):
-                if rec.key == key:
-                    return dict(rec.metadata)
-        return None
+                except (AttributeError, TypeError, ValueError):
+                    bits = b""  # undecodable: the probe answers True
+                self._bloom_bits[name] = bits
+            cand = {
+                k
+                for k in keys
+                if (kmin is None or kmax is None or kmin <= k <= kmax)
+                and not (
+                    bloom
+                    and not manifest._bloom_maybe_contains(bloom, bits, k, hashes[k])
+                )
+            }
+            if cand:
+                yield os.path.join(self.path, name), cand
 
     # --- loader ergonomics ---------------------------------------------------
 

@@ -314,6 +314,127 @@ def test_skip_entries_seek_path(tmp_path):
     assert [r.metadata["i"] for r in got] == [str(i) for i in range(10)]
 
 
+def _keyed_shard(path, heavy: bool) -> None:
+    """Duplicate keys within the shard, a key and metadata longer than
+    the walk's 4 KiB head probe, and two entries per record; ``heavy``
+    makes the average record > 64 KiB (the header-seek branch)."""
+    w = C.ShardWriter(path, compression="gzip")
+    size = 100_000 if heavy else 50
+    keys = ["a", "b", "a", "L" * 5000, "c", "b", "d"]
+    for i, key in enumerate(keys):
+        w.write_record(
+            C.Record(
+                key=key,
+                entries=[
+                    C.FileEntry("img", "image/x", bytes([i]) * size),
+                    C.FileEntry("txt", "text/plain", b"caption %d" % i),
+                ],
+                metadata={"i": str(i), "pad": "m" * (5000 if i == 4 else 3)},
+            )
+        )
+    w.close()
+
+
+@pytest.mark.parametrize("heavy", [False, True])
+def test_keyed_walk_parity(tmp_path, heavy):
+    """iter_records(keys=K, **kw) == the filtered full iteration, across
+    every decode option and all three read branches (whole-shard buffer,
+    header seek for payload-heavy shards, explicit offsets)."""
+    path = str(tmp_path / "s.shardpack")
+    _keyed_shard(path, heavy)
+    offsets = C.read_index(path).offsets
+    kws = [
+        {},
+        {"skip_payload": True},
+        {"skip_entries": True},
+        {"skip_entries": True, "verify_checksums": False},
+        {"entry_names": {"txt"}},
+        {"offsets": offsets[1:]},
+        {"offsets": offsets[::-1], "skip_entries": True},
+    ]
+    for keys in ({"a"}, {"b", "c", "L" * 5000}, {"nope"}, set()):
+        for kw in kws:
+            want = [r for r in C.iter_records(path, **kw) if r.key in keys]
+            assert list(C.iter_records(path, keys=keys, **kw)) == want, (keys, kw)
+    assert [r.metadata["i"] for r in C.iter_records(path, keys={"a", "b"})] == [
+        "0", "1", "2", "5"
+    ]
+
+
+def test_keyed_walk_decodes_only_matches(tmp_path, monkeypatch):
+    path = str(tmp_path / "s.shardpack")
+    _keyed_shard(path, heavy=False)
+    calls = []
+    real = C.decode_record
+
+    def counting(buf, pos=0, *a, **kw):
+        calls.append(pos)
+        return real(buf, pos, *a, **kw)
+
+    monkeypatch.setattr(C, "decode_record", counting)
+    assert [r.key for r in C.iter_records(path, keys={"b"})] == ["b", "b"]
+    assert len(calls) == 2
+    calls.clear()
+    offsets = C.read_index(path).offsets
+    assert [r.key for r in C.iter_records(path, offsets=offsets, keys={"c"})] == ["c"]
+    assert len(calls) == 1
+    calls.clear()
+    assert list(C.iter_records(path, keys={"nope"})) == []
+    assert calls == []
+
+
+def test_keyed_walk_skips_corrupt_non_matching(tmp_path):
+    """Only returned records are verified: a damaged payload in another
+    record does not fail a keyed walk; walking to it does."""
+    path = str(tmp_path / "s.shardpack")
+    w = C.ShardWriter(path)
+    w.write_record(mk_record("good", b"G" * 64))
+    w.write_record(mk_record("bad", b"B" * 64))
+    w.close()
+    raw = bytearray(open(path, "rb").read())
+    raw[raw.find(b"B" * 64) + 5] ^= 0xFF
+    open(path, "wb").write(bytes(raw))
+    for kw in ({}, {"offsets": C.read_index(path).offsets}):
+        [rec] = C.iter_records(path, keys={"good"}, **kw)
+        assert rec.entries[0].data == b"G" * 64
+        with pytest.raises(C.ShardPackChecksumError):
+            list(C.iter_records(path, keys={"bad"}, **kw))
+    with pytest.raises(C.ShardPackChecksumError):
+        list(C.iter_records(path))
+
+
+@pytest.mark.parametrize("heavy", [False, True])
+def test_keyed_walk_damaged_head_is_typed(tmp_path, heavy):
+    """A damaged block head raises ShardPackCodecError (never struct.error
+    or IndexError) on every branch of the keyed walk."""
+    path = str(tmp_path / "s.shardpack")
+    _keyed_shard(path, heavy)
+    good = open(path, "rb").read()
+    idx = C.read_index(path)
+    second = idx.offsets[1]
+
+    def damaged(pos, fmt, value):
+        raw = bytearray(good)
+        struct.pack_into(fmt, raw, pos, value)
+        open(path, "wb").write(bytes(raw))
+
+    cases = [
+        (second + 8, "<I", 1 << 30),  # key length runs past the block
+        (second, "<Q", 1 << 40),  # block runs past the index start
+        (second, "<Q", 3),  # block smaller than its own head
+        (idx.index_start + 16, "<Q", idx.index_start + 4),  # offset past index_start
+    ]
+    for pos, fmt, value in cases:
+        damaged(pos, fmt, value)
+        for kw in ({}, {"skip_entries": True}):
+            with pytest.raises(C.ShardPackCodecError):
+                list(C.iter_records(path, keys={"d"}, **kw))
+    open(path, "wb").write(good)
+    for offsets in ([len(good) + 10], [-1], [idx.index_start + 4]):
+        with pytest.raises(C.ShardPackCodecError):
+            list(C.iter_records(path, offsets=offsets, keys={"d"}))
+
+
 def test_inprogress_rename_crash_safety(tmp_path):
     """An open (crashed) writer leaves only an invisible temp file (the
     WriteHandle contract: publication happens at close); close() makes

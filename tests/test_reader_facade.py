@@ -288,6 +288,67 @@ def test_adhoc_directory_without_commit_log(tmp_path):
     assert ds[3].key == [r.key for r in ds.records()][3]
 
 
+def _adhoc(base, keys, target_shard_bytes=2048, compression="gzip"):
+    w = codec.DatasetWriter(
+        base, basename="t", target_shard_bytes=target_shard_bytes, compression=compression
+    )
+    for i, key in enumerate(keys):
+        w.write(
+            codec.Record(
+                key=key,
+                entries=[codec.FileEntry("b.bin", "application/octet-stream", bytes([i]) * 300)],
+                metadata={"i": str(i)},
+            )
+        )
+    w.close()
+    return open_dataset(base)
+
+
+def test_lookup_decodes_only_matching_records(tmp_path, monkeypatch):
+    """The keyed walk: a point lookup decodes the records it returns and
+    nothing else, duplicate keys within and across shards included."""
+    keys = [f"a/{i % 9:03d}" for i in range(40)]
+    ds = _adhoc(str(tmp_path / "keyed"), keys)
+    assert len(ds.shards()) >= 3
+    full = list(ds.records())
+    decoded = []
+    real = codec.decode_record
+
+    def counting(*a, **kw):
+        decoded.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(codec, "decode_record", counting)
+    want = ["a/003", "a/005", "a/nope"]
+    got = ds.lookup_many(want)
+    for k in want:
+        assert got[k] == [r for r in full if r.key == k]
+    assert len(got["a/003"]) > 1
+    assert len(decoded) == sum(len(v) for v in got.values())
+    decoded.clear()
+    assert ds.metadata("a/005") == {"i": "5"}
+    assert len(decoded) == 1
+
+
+def test_lookup_survives_corrupt_neighbour(tmp_path):
+    """Only returned records are verified: a damaged payload in another
+    record of the same shard does not fail a lookup; looking it up does."""
+    ds = _adhoc(str(tmp_path / "neighbour"), ["a/000", "a/001", "a/002"], 1 << 20, "none")
+    [shard] = ds.shards()
+    raw = bytearray(open(shard, "rb").read())
+    pos = raw.find(bytes([1]) * 300)
+    assert pos > 0
+    raw[pos + 7] ^= 0xFF
+    open(shard, "wb").write(bytes(raw))
+    ds = open_dataset(str(tmp_path / "neighbour"))
+    assert ds.lookup("a/002")[0].entries[0].data == bytes([2]) * 300
+    assert ds.metadata("a/001") == {"i": "1"}
+    with pytest.raises(codec.ShardPackChecksumError):
+        ds.lookup("a/001")
+    with pytest.raises(codec.ShardPackChecksumError):
+        list(ds.records())
+
+
 def test_shard_records_partitions_exactly(spark, tmp_path):
     """Worker sharding: disjoint slices whose union == records(), with
     patches (update in place, tombstone dropped, insert claimed once)."""
