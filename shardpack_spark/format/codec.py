@@ -13,10 +13,10 @@ Spec conformance (citations into /root/reference/docs/draft.md):
 Integrity: SHA-256 over the UNCOMPRESSED payload, stored per entry and
 verified after decompression on read — the semantics of the reference's
 compute/verify pair (src/checksum.rs:15-29) without its whole-shard read
-bug (SURVEY.md D4).  Compression: none|gzip always; lz4|zstd|snappy when
-the optional libraries are importable (the reference declares all five but
-implements two — SURVEY.md D9; we gate instead of erroring at write time
-with data loss).
+bug (SURVEY.md D4).  Compression: none, gzip (stdlib) and lz4|snappy|zstd
+(pyarrow's native codecs) — the reference declares all five but implements
+two (SURVEY.md D9).  Decoding yields exactly the entry's declared size or
+raises ShardPackCodecError (``decompress``).
 
 All integers are little-endian.  Layout (exact bytes, this implementation):
 
@@ -49,10 +49,13 @@ import io
 import json
 import os
 import struct
+import zlib
 from collections.abc import Iterable, Iterator
 from dataclasses import dataclass, field
 
-from shardpack_spark.format import storage, zstd_entropy
+import pyarrow as pa
+
+from shardpack_spark.format import storage
 
 MAGIC = b"SHARDPK1"
 DEFAULT_TARGET_SHARD_BYTES = 256 * 1024 * 1024  # reference src/shard/config.rs:1
@@ -82,6 +85,14 @@ class ShardPackCodecError(ShardPackError):
 
 
 # --- compression codecs -----------------------------------------------------
+#
+# Every codec but gzip is pyarrow's native one (pyarrow is a declared
+# dependency).  The on-disk framings are fixed: 'lz4' is the LZ4 *block*
+# format (pyarrow 'lz4_raw', not the lz4 frame format), 'snappy' is raw
+# snappy, 'zstd' is standard RFC 8878 frames.  pa.Codec objects are NOT
+# picklable and this module travels to Python workers via cloudpickle,
+# so codecs are built per call (~0.2 us, far below one decompress).
+
 
 def _gzip_c(b: bytes) -> bytes:
     # mtime=0 -> deterministic output for identical payloads
@@ -91,549 +102,51 @@ def _gzip_c(b: bytes) -> bytes:
     return buf.getvalue()
 
 
-def _lz4_compress(src: bytes) -> bytes:
-    """LZ4 *block* format (greedy hash-chain-less matcher).
-
-    Pure-Python implementation of the public LZ4 block spec so the codec
-    declared by the reference (src/bucket.rs:16-25) is never dead code in
-    environments without the `lz4` wheel.  Fixes the reference's bounded
-    3x decompression-buffer bug (SURVEY.md D10) by construction: our
-    container tracks the exact uncompressed size per entry.
-    """
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-
-    def emit(lit: bytes, mlen: int, offset: int) -> None:
-        ll, ml = len(lit), mlen - 4 if mlen else 0
-        token = (min(ll, 15) << 4) | (min(ml, 15) if mlen else 0)
-        out.append(token)
-        if ll >= 15:
-            rest = ll - 15
-            while rest >= 255:
-                out.append(255)
-                rest -= 255
-            out.append(rest)
-        out.extend(lit)
-        if mlen:
-            out.append(offset & 0xFF)
-            out.append(offset >> 8)
-            if ml >= 15:
-                rest = ml - 15
-                while rest >= 255:
-                    out.append(255)
-                    rest -= 255
-                out.append(rest)
-
-    table: dict[bytes, int] = {}
-    i = anchor = 0
-    # spec margins: last match must start >= 12 bytes from end; the final
-    # 5 bytes are always literals
-    limit = n - 12
-    while i < limit:
-        seq = src[i : i + 4]
-        j = table.get(seq)
-        table[seq] = i
-        if j is not None and i - j <= 0xFFFF:
-            m, k = i + 4, j + 4
-            stop = n - 5
-            while m < stop and src[m] == src[k]:
-                m += 1
-                k += 1
-            emit(src[anchor:i], m - i, i - j)
-            anchor = i = m
-        else:
-            i += 1
-    emit(src[anchor:], 0, 0)
-    return bytes(out)
+def _decode_lz4(b: bytes, n: int) -> bytes:
+    # An LZ4 block does not record its decoded length, and pyarrow hands
+    # back n bytes whatever the block held: a block that decodes shorter
+    # would leave uninitialized memory in the tail.  A block of exactly
+    # n bytes cannot fit in n - 1, so that second decode must fail.
+    lz4 = pa.Codec("lz4_raw")
+    out = lz4.decompress(b, n, asbytes=True)
+    if n:
+        try:
+            lz4.decompress(b, n - 1, asbytes=True)
+        except OSError:
+            return out
+        raise ShardPackCodecError(f"lz4: block decodes to fewer than the declared {n} bytes")
+    return out
 
 
-def _lz4_decompress(src: bytes) -> bytes:
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-    i = 0
-    while i < n:
-        token = src[i]
-        i += 1
-        ll = token >> 4
-        if ll == 15:
-            while True:
-                b = src[i]
-                i += 1
-                ll += b
-                if b != 255:
-                    break
-        out += src[i : i + ll]
-        i += ll
-        if i >= n:
-            break  # final literals-only sequence
-        offset = src[i] | (src[i + 1] << 8)
-        i += 2
-        if offset == 0:
-            raise ShardPackCodecError("lz4: zero match offset")
-        ml = (token & 15) + 4
-        if token & 15 == 15:
-            while True:
-                b = src[i]
-                i += 1
-                ml += b
-                if b != 255:
-                    break
-        start = len(out) - offset
-        if start < 0:
-            raise ShardPackCodecError("lz4: match offset before block start")
-        if offset >= ml:
-            out += out[start : start + ml]
-        else:  # overlapping match: replicate in offset-sized chunks
-            while ml > 0:
-                chunk = out[start : start + min(offset, ml)]
-                out += chunk
-                ml -= len(chunk)
-    return bytes(out)
-
-
-def _snappy_compress(src: bytes) -> bytes:
-    """Snappy raw format: varint length preamble + literal / copy elements.
-
-    Emits literals and 2-byte-offset copies (type-10) only — every
-    decoder accepts that subset; our decoder handles all four element
-    types."""
-    src = bytes(src)
-    n = len(src)
-    out = bytearray()
-    v = n
-    while True:  # little-endian varint of the uncompressed length
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
-
-    def emit_literal(lit: bytes) -> None:
-        ln = len(lit)
-        if ln == 0:
-            return
-        ln -= 1
-        if ln < 60:
-            out.append(ln << 2)
-        elif ln < 1 << 8:
-            out.append(60 << 2)
-            out.append(ln)
-        elif ln < 1 << 16:
-            out.append(61 << 2)
-            out.extend(ln.to_bytes(2, "little"))
-        elif ln < 1 << 24:
-            out.append(62 << 2)
-            out.extend(ln.to_bytes(3, "little"))
-        else:
-            out.append(63 << 2)
-            out.extend(ln.to_bytes(4, "little"))
-        out.extend(lit)
-
-    def emit_copy(offset: int, mlen: int) -> None:
-        while mlen > 0:  # type-10 copies carry 1..64 bytes each
-            step = min(mlen, 64)
-            out.append(((step - 1) << 2) | 2)
-            out.extend(offset.to_bytes(2, "little"))
-            mlen -= step
-
-    table: dict[bytes, int] = {}
-    i = anchor = 0
-    limit = n - 4
-    while i < limit:
-        seq = src[i : i + 4]
-        j = table.get(seq)
-        table[seq] = i
-        if j is not None and i - j <= 0xFFFF:
-            m, k = i + 4, j + 4
-            while m < n and src[m] == src[k]:
-                m += 1
-                k += 1
-            emit_literal(src[anchor:i])
-            emit_copy(i - j, m - i)
-            anchor = i = m
-        else:
-            i += 1
-    emit_literal(src[anchor:])
-    return bytes(out)
-
-
-def _snappy_decompress(src: bytes) -> bytes:
-    src = bytes(src)
-    n = len(src)
-    # varint preamble
-    length = 0
-    shift = 0
-    i = 0
-    while True:
-        b = src[i]
-        i += 1
-        length |= (b & 0x7F) << shift
-        if not b & 0x80:
+def _decode_snappy(b: bytes, n: int) -> bytes:
+    # Raw snappy opens with its decoded length as a varint; pyarrow only
+    # checks that the buffer is large enough, so a larger declared size
+    # would also leave an uninitialized tail.
+    size = shift = 0
+    for byte in b[:5]:
+        size |= (byte & 0x7F) << shift
+        if byte < 0x80:
             break
         shift += 7
-    out = bytearray()
-    while i < n:
-        tag = src[i]
-        i += 1
-        typ = tag & 3
-        if typ == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nb = ln - 59
-                ln = int.from_bytes(src[i : i + nb], "little")
-                i += nb
-            ln += 1
-            out += src[i : i + ln]
-            i += ln
-            continue
-        if typ == 1:  # copy, 1-byte offset
-            ml = ((tag >> 2) & 0x7) + 4
-            offset = ((tag >> 5) << 8) | src[i]
-            i += 1
-        elif typ == 2:  # copy, 2-byte offset
-            ml = (tag >> 2) + 1
-            offset = int.from_bytes(src[i : i + 2], "little")
-            i += 2
-        else:  # copy, 4-byte offset
-            ml = (tag >> 2) + 1
-            offset = int.from_bytes(src[i : i + 4], "little")
-            i += 4
-        if offset == 0:
-            raise ShardPackCodecError("snappy: zero copy offset")
-        start = len(out) - offset
-        if start < 0:
-            raise ShardPackCodecError("snappy: copy offset before stream start")
-        if offset >= ml:
-            out += out[start : start + ml]
-        else:
-            while ml > 0:
-                chunk = out[start : start + min(offset, ml)]
-                out += chunk
-                ml -= len(chunk)
-    if len(out) != length:
-        raise ShardPackCodecError(f"snappy: decoded {len(out)} bytes, preamble said {length}")
-    return bytes(out)
-
-
-# --- zstd (pure-Python, RFC 8878) -------------------------------------------
-#
-# The fallback ENCODER emits real entropy-coded frames: per 128 KiB
-# block it runs zstd_entropy's LZ77 greedy parse + predefined-FSE
-# sequences + canonical-Huffman literals and keeps the Compressed block
-# when it is smaller (RLE for constant runs, Raw otherwise) — so a
-# wheel-free writer gets genuine compression, just at pure-Python speed
-# (hence the one-time "slower" warning below).  The fallback DECODER
-# reads ANY spec-compliant frame: Raw/RLE blocks here, entropy-coded
-# (Compressed) blocks via zstd_entropy (full FSE + Huffman + sequence
-# execution, RFC 8878 §3-4), so data zstd-compressed by pyarrow/libzstd
-# elsewhere stays readable without any wheel.  Only dictionary frames
-# raise (undecodable without the dictionary).
-
-_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-_ZSTD_BLOCK_MAX = 128 * 1024  # Block_Maximum_Size (RFC 8878 §3.1.1.2.3)
-
-_XX_P1 = 0x9E3779B185EBCA87
-_XX_P2 = 0xC2B2AE3D27D4EB4F
-_XX_P3 = 0x165667B19E3779F9
-_XX_P4 = 0x85EBCA77C2B2AE63
-_XX_P5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl64(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxh64(data: bytes, seed: int = 0) -> int:
-    """XXH64 (the zstd content checksum is its low 32 bits).
-
-    Cross-checked against Spark's XxHash64 expression in
-    tests/test_codec.py, so the two implementations vouch for each other.
-    """
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _XX_P1 + _XX_P2) & _M64
-        v2 = (seed + _XX_P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _XX_P1) & _M64
-        while i <= n - 32:
-            v1 = (_rotl64((v1 + int.from_bytes(data[i : i + 8], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
-            v2 = (_rotl64((v2 + int.from_bytes(data[i + 8 : i + 16], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
-            v3 = (_rotl64((v3 + int.from_bytes(data[i + 16 : i + 24], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
-            v4 = (_rotl64((v4 + int.from_bytes(data[i + 24 : i + 32], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
-            i += 32
-        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            h = (((h ^ ((_rotl64((v * _XX_P2) & _M64, 31) * _XX_P1) & _M64)) * _XX_P1) + _XX_P4) & _M64
     else:
-        h = (seed + _XX_P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        k = (_rotl64((int.from_bytes(data[i : i + 8], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
-        h = ((_rotl64(h ^ k, 27) * _XX_P1) + _XX_P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = ((_rotl64(h ^ ((int.from_bytes(data[i : i + 4], "little") * _XX_P1) & _M64), 23) * _XX_P2) + _XX_P3) & _M64
-        i += 4
-    while i < n:
-        h = (_rotl64(h ^ ((data[i] * _XX_P5) & _M64), 11) * _XX_P1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _XX_P2) & _M64
-    h ^= h >> 29
-    h = (h * _XX_P3) & _M64
-    h ^= h >> 32
-    return h
+        raise ShardPackCodecError("snappy: truncated length preamble")
+    if size != n:
+        raise ShardPackCodecError(f"snappy: payload holds {size} bytes, entry declares {n}")
+    return pa.Codec("snappy").decompress(b, n, asbytes=True)
 
 
-_zstd_fallback_warned = False
-
-
-def _zstd_compress(src: bytes) -> bytes:
-    # Honesty over silence: this pure-Python encoder emits real
-    # entropy-coded frames (LZ77 + predefined-FSE sequences + Huffman
-    # literals via zstd_entropy) but runs 10-100x slower than libzstd
-    # and compresses somewhat less (single-probe greedy parse, no repeat
-    # offsets).  It only engages when neither pyarrow nor zstandard is
-    # importable; say so ONCE per process so a bulk-write deployment
-    # knows why throughput dropped.
-    global _zstd_fallback_warned
-    if not _zstd_fallback_warned:
-        _zstd_fallback_warned = True
-        import warnings
-
-        warnings.warn(
-            "compression='zstd' is using the pure-Python fallback encoder "
-            "(no pyarrow/zstandard in this environment): frames are real "
-            "entropy-coded zstd, but encoding is 10-100x slower than "
-            "libzstd. Install pyarrow or zstandard for fast compression.",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    out = bytearray(_ZSTD_MAGIC)
-    n = len(src)
-    # Frame_Header_Descriptor: FCS-size flag in bits 7-6, Single_Segment
-    # bit 5 (no Window_Descriptor; window = content size), checksum bit 2.
-    if n <= 0xFF:
-        fcs_flag, fcs = 0, n.to_bytes(1, "little")
-    elif n - 256 <= 0xFFFF:
-        fcs_flag, fcs = 1, (n - 256).to_bytes(2, "little")
-    elif n <= 0xFFFFFFFF:
-        fcs_flag, fcs = 2, n.to_bytes(4, "little")
-    else:
-        fcs_flag, fcs = 3, n.to_bytes(8, "little")
-    out.append((fcs_flag << 6) | (1 << 5) | (1 << 2))
-    out += fcs
-    if n == 0:
-        out += (1).to_bytes(3, "little")  # last=1, Raw, size 0
-    i = 0
-    lz_table: dict = {}  # 4-byte-hash -> recent positions, frame-wide
-    rep = [1, 4, 8]  # §3.1.1.5 repeat-offset history, frame-wide
-    while i < n:
-        chunk = src[i : i + _ZSTD_BLOCK_MAX]
-        start, i = i, i + len(chunk)
-        last = 1 if i >= n else 0
-        if len(chunk) >= 2 and chunk.count(chunk[0]) == len(chunk):
-            # RLE block: size field = regenerated size, content = 1 byte
-            out += (last | (1 << 1) | (len(chunk) << 3)).to_bytes(3, "little")
-            out.append(chunk[0])
-            continue
-        body, rep_out = zstd_entropy.encode_compressed_block(
-            src, start, i, lz_table, rep
-        )
-        if len(body) < len(chunk):
-            out += (last | (2 << 1) | (len(body) << 3)).to_bytes(3, "little")
-            out += body
-            rep = rep_out  # decoder history advances only on decoded blocks
-        else:
-            out += (last | (0 << 1) | (len(chunk) << 3)).to_bytes(3, "little")
-            out += chunk
-    out += (_xxh64(src) & 0xFFFFFFFF).to_bytes(4, "little")
-    return bytes(out)
-
-
-_ZSTD_SKIP_LO = 0x184D2A50  # skippable frame magic range (RFC 8878 §3.1.2)
-_ZSTD_SKIP_HI = 0x184D2A5F
-
-
-def _zstd_decompress(src: bytes) -> bytes:
-    # a truncated frame header must fail TYPED like every other corrupt
-    # input (the body's src[i] byte reads raise IndexError on short input)
-    try:
-        return _zstd_decompress_inner(src)
-    except IndexError as e:
-        raise ShardPackCodecError(f"zstd: truncated frame: {e}") from e
-
-
-def _zstd_decompress_inner(src: bytes) -> bytes:
-    """Decode a zstd FILE: one or more concatenated frames, skippable
-    frames ignored — `cat a.zst b.zst` and zstd-CLI outputs with
-    metadata frames decode like the reference implementation, instead of
-    silently truncating after the first frame."""
-    if not src:
-        raise ShardPackCodecError("zstd: empty input")
-    out = bytearray()
-    i = 0
-    while i < len(src):
-        magic = int.from_bytes(src[i : i + 4], "little")
-        if _ZSTD_SKIP_LO <= magic <= _ZSTD_SKIP_HI:
-            if i + 8 > len(src):
-                raise ShardPackCodecError("zstd: truncated skippable frame")
-            size = int.from_bytes(src[i + 4 : i + 8], "little")
-            if i + 8 + size > len(src):
-                raise ShardPackCodecError("zstd: truncated skippable frame")
-            i += 8 + size
-            continue
-        if src[i : i + 4] != _ZSTD_MAGIC:
-            raise ShardPackCodecError("zstd: bad magic")
-        frame, i = _zstd_decode_frame(src, i + 4)
-        out += frame
-    return bytes(out)
-
-
-def _zstd_decode_frame(src: bytes, i: int) -> tuple[bytes, int]:
-    """Decode ONE frame whose header starts at ``i`` (past the magic);
-    returns (content, offset past the frame)."""
-    desc = src[i]
-    i += 1
-    fcs_flag = desc >> 6
-    single_segment = bool(desc & 0x20)
-    has_checksum = bool(desc & 0x04)
-    dict_flag = desc & 0x03
-    if not single_segment:
-        i += 1  # Window_Descriptor
-    if dict_flag:
-        # a dictionary frame is undecodable without its dictionary by
-        # definition — not a fallback limitation
-        did = int.from_bytes(src[i : i + (0, 1, 2, 4)[dict_flag]], "little")
-        if did != 0:
-            raise ShardPackCodecError(f"zstd: dictionary frames unsupported (id {did})")
-    i += (0, 1, 2, 4)[dict_flag]
-    entropy_ctx: dict = {}
-    fcs = None
-    fcs_size = {0: 1 if single_segment else 0, 1: 2, 2: 4, 3: 8}[fcs_flag]
-    if fcs_size:
-        fcs = int.from_bytes(src[i : i + fcs_size], "little")
-        if fcs_flag == 1:
-            fcs += 256
-        i += fcs_size
-    out = bytearray()
-    while True:
-        if i + 3 > len(src):
-            # a zero-filled "header" would read as a non-last Raw block of
-            # size 0 and spin forever — truncation must raise, like every
-            # other codec path
-            raise ShardPackCodecError("zstd: truncated frame (missing block header)")
-        hdr = int.from_bytes(src[i : i + 3], "little")
-        i += 3
-        last, btype, bsize = hdr & 1, (hdr >> 1) & 3, hdr >> 3
-        if btype == 0:  # Raw
-            out += src[i : i + bsize]
-            i += bsize
-        elif btype == 1:  # RLE
-            out += src[i : i + 1] * bsize
-            i += 1
-        elif btype == 2:  # Compressed: FSE/Huffman entropy block
-            try:
-                zstd_entropy.decode_compressed_block(src, i, bsize, out, entropy_ctx)
-            except (ValueError, IndexError) as e:
-                raise ShardPackCodecError(f"zstd: corrupt compressed block: {e}") from e
-            i += bsize
-        else:
-            raise ShardPackCodecError("zstd: reserved block type")
-        if last:
-            break
-    if has_checksum:
-        if i + 4 > len(src):
-            raise ShardPackCodecError("zstd: truncated content checksum")
-        want = int.from_bytes(src[i : i + 4], "little")
-        got = _xxh64(bytes(out)) & 0xFFFFFFFF
-        if want != got:
-            raise ShardPackCodecError(f"zstd: content checksum mismatch ({got:#x} != {want:#x})")
-        i += 4
-    if fcs is not None and fcs != len(out):
-        raise ShardPackCodecError(f"zstd: content size {len(out)} != header {fcs}")
-    return bytes(out), i
-
-
-# Decompressors take (stored_bytes, expected_size|None): the container
-# records the uncompressed size per entry, which native codecs (pyarrow)
-# need for raw block formats.
+# name -> (compress(bytes), decompress(bytes, expected_size)); zstd needs
+# no length guard: pyarrow rejects a frame that decodes to any size but n
 _CODECS: dict[str, tuple] = {
-    "none": (lambda b: b, lambda b, n=None: b),
-    "gzip": (_gzip_c, lambda b, n=None: _gzip.decompress(b)),
-    # pure-Python, deterministic, env-independent (see functions above)
-    "lz4": (_lz4_compress, lambda b, n=None: _lz4_decompress(b)),
-    "snappy": (_snappy_compress, lambda b, n=None: _snappy_decompress(b)),
-    "zstd": (_zstd_compress, lambda b, n=None: _zstd_decompress(b)),
+    "none": (lambda b: b, lambda b, n: b),
+    "gzip": (_gzip_c, lambda b, n: _gzip.decompress(b)),
+    "lz4": (lambda b: pa.Codec("lz4_raw").compress(b, asbytes=True), _decode_lz4),
+    "snappy": (lambda b: pa.Codec("snappy").compress(b, asbytes=True), _decode_snappy),
+    "zstd": (
+        lambda b: pa.Codec("zstd").compress(b, asbytes=True),
+        lambda b, n: pa.Codec("zstd").decompress(b, n, asbytes=True),
+    ),
 }
-
-try:
-    # Native codecs (pyarrow ships lz4/zstd/snappy): take over the hot
-    # path when importable — ~100x the pure-Python throughput.  Formats
-    # interoperate: pyarrow 'lz4_raw' IS the LZ4 block format the pure
-    # encoder emits, 'snappy' is the standard raw-snappy framing, and
-    # zstd interoperates BOTH ways: pyarrow reads the pure encoder's
-    # Raw/RLE frames, and the pure decoder (zstd_entropy) reads
-    # pyarrow's entropy-coded frames — verified by the cross-codec
-    # matrix in tests/test_codec.py.
-    import pyarrow  # noqa: F401  (probe only — codecs are built lazily)
-
-    # pa.Codec objects are NOT picklable, and this module travels to
-    # Python workers via cloudpickle — no module-level codec instances or
-    # caches allowed.  Construction is ~0.2 us (80x cheaper than one
-    # 32 KiB decompress), so just build per call.
-    def _arrow_codec(arrow_name: str):
-        import pyarrow as pa
-
-        return pa.Codec(arrow_name)
-
-    def _lz4_c_native(b: bytes) -> bytes:
-        return _arrow_codec("lz4_raw").compress(b, asbytes=True)
-
-    def _lz4_d_native(b: bytes, n: int | None = None) -> bytes:
-        if n is None:  # raw block format needs the size; pure decoder doesn't
-            return _lz4_decompress(b)
-        return _arrow_codec("lz4_raw").decompress(b, n, asbytes=True)
-
-    def _snappy_c_native(b: bytes) -> bytes:
-        return _arrow_codec("snappy").compress(b, asbytes=True)
-
-    def _snappy_d_native(b: bytes, n: int | None = None) -> bytes:
-        if n is None:
-            return _snappy_decompress(b)
-        return _arrow_codec("snappy").decompress(b, n, asbytes=True)
-
-    def _zstd_c_native(b: bytes) -> bytes:
-        return _arrow_codec("zstd").compress(b, asbytes=True)
-
-    def _zstd_d_native(b: bytes, n: int | None = None) -> bytes:
-        if n is None:
-            return _zstd_decompress(b)
-        return _arrow_codec("zstd").decompress(b, n, asbytes=True)
-
-    _CODECS["lz4"] = (_lz4_c_native, _lz4_d_native)
-    _CODECS["snappy"] = (_snappy_c_native, _snappy_d_native)
-    _CODECS["zstd"] = (_zstd_c_native, _zstd_d_native)
-except ImportError:
-    pass
-
-try:
-    # zstandard lib (if ever installed) wins over pyarrow: full-featured
-    # streaming API and dictionary support.
-    import zstandard as _zstd
-
-    _CODECS["zstd"] = (
-        lambda b: _zstd.ZstdCompressor().compress(b),
-        lambda b, n=None: _zstd.ZstdDecompressor().decompress(b),
-    )
-except ImportError:
-    pass
 
 
 def compress(data: bytes, encoding: str) -> bytes:
@@ -647,14 +160,28 @@ def compress(data: bytes, encoding: str) -> bytes:
     return _CODECS[encoding][0](data)
 
 
-def decompress(data: bytes, encoding: str, expected_size: int | None = None) -> bytes:
-    if ";chunk=" in encoding:
-        return _decode_chunked(data, encoding.partition(";chunk=")[0])
-    if encoding not in _CODECS:
+def decompress(data: bytes, encoding: str, expected_size: int) -> bytes:
+    """Decode a stored payload to exactly ``expected_size`` bytes, the
+    size its entry header declares, or raise ShardPackCodecError: corrupt
+    input, any native codec exception, and a payload that decodes to
+    another length all fail typed."""
+    base = encoding.partition(";chunk=")[0]
+    if base not in _CODECS:
         raise ShardPackCodecError(
-            f"compression '{encoding}' not available (have: {sorted(_CODECS)})"
+            f"compression '{base}' not available (have: {sorted(_CODECS)})"
         )
-    return _CODECS[encoding][1](data, expected_size)
+    try:
+        if ";chunk=" in encoding:
+            out = _decode_chunked(data, base)
+        else:
+            out = _CODECS[base][1](data, expected_size)
+    except (OSError, ValueError, EOFError, struct.error, zlib.error) as e:
+        raise ShardPackCodecError(f"{encoding}: corrupt payload: {e}") from e
+    if len(out) != expected_size:
+        raise ShardPackCodecError(
+            f"{encoding}: decoded {len(out)} bytes, entry declares {expected_size}"
+        )
+    return out
 
 
 # --- chunk-level entry compression (draft.md:144-148) -------------------------
@@ -683,8 +210,6 @@ _CHUNK_MAGIC = b"SPCH"
 
 
 def _encode_chunked(data: bytes, base_codec: str, chunk_bytes: int) -> bytes:
-    import zlib
-
     if chunk_bytes <= 0:
         raise ShardPackCodecError(f"chunk_bytes must be positive, got {chunk_bytes}")
     if base_codec not in _CODECS or base_codec == "none":
@@ -716,8 +241,6 @@ def _parse_chunk_container(stored: bytes):
 
 
 def _decode_chunked(stored: bytes, base_codec: str) -> bytes:
-    import zlib
-
     n, cb, total, table, base = _parse_chunk_container(stored)
     out = []
     pos = base
@@ -726,14 +249,9 @@ def _decode_chunked(stored: bytes, base_codec: str) -> bytes:
         if zlib.crc32(blob) & 0xFFFFFFFF != crc:
             raise ShardPackChecksumError(f"chunk {i} crc32 mismatch")
         raw_len = min(cb, total - i * cb)
-        out.append(_CODECS[base_codec][1](blob, raw_len))
+        out.append(decompress(blob, base_codec, raw_len))
         pos += clen
-    data = b"".join(out)
-    if len(data) != total:
-        raise ShardPackCodecError(
-            f"chunked entry decoded {len(data)} bytes, container says {total}"
-        )
-    return data
+    return b"".join(out)
 
 
 # --- data model -------------------------------------------------------------
@@ -869,10 +387,6 @@ def decode_record(
         stored = buf[p : p + data_len]
         p += data_len
         data = decompress(bytes(stored), enc, expected_size=file_size)
-        if len(data) != file_size:
-            raise ShardPackCodecError(
-                f"entry '{name}': decompressed size {len(data)} != declared {file_size}"
-            )
         if verify_checksums and hashlib.sha256(data).digest() != digest:
             raise ShardPackChecksumError(f"checksum mismatch for entry '{name}' of key '{key}'")
         entries.append(
@@ -1102,8 +616,6 @@ def read_entry_slice(
                 f.seek(data_pos + start)
                 return f.read(want)
             if ";chunk=" in enc:
-                import zlib
-
                 base_codec = enc.partition(";chunk=")[0]
                 head = f.read(24)
                 if head[:4] != _CHUNK_MAGIC:
@@ -1128,7 +640,7 @@ def read_entry_slice(
                             f"entry '{name}': chunk {i} crc32 mismatch"
                         )
                     raw_len = min(cb, total - i * cb)
-                    out.append(_CODECS[base_codec][1](blob, raw_len))
+                    out.append(decompress(blob, base_codec, raw_len))
                 raw = b"".join(out)
                 off = start - c0 * cb
                 return raw[off : off + want]

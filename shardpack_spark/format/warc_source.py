@@ -752,12 +752,11 @@ def _pickle_by_value() -> None:
     from shardpack_spark.format import stream_offsets as offsets_mod
     from shardpack_spark.format import warc as warc_mod
     from shardpack_spark.format import warc_index as warc_index_mod
-    from shardpack_spark.format import zstd_entropy as zstd_mod
 
     # manifest + reader: the planning worker resolves dump_index locator
     # lookups (_locator_partitions); cdx_public: public-CDX pushdown
     # (_public_cdx_partitions) — all pyspark-free
-    for mod in (storage_mod, zstd_mod, codec_mod, manifest_mod, reader_mod, warc_mod, warc_index_mod, cdx_mod, offsets_mod, sys.modules[__name__]):
+    for mod in (storage_mod, codec_mod, manifest_mod, reader_mod, warc_mod, warc_index_mod, cdx_mod, offsets_mod, sys.modules[__name__]):
         try:
             cloudpickle.register_pickle_by_value(mod)
         except Exception:

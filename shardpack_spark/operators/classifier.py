@@ -11,7 +11,7 @@ ids.  No per-row Python anywhere.
 
 Feature map: whitespace tokens -> ``pmod(xxhash64(token), dim)`` buckets
 (XXH64 at Spark's fixed seed 42 — bit-replicated by the pure-Python
-``format.codec._xxh64``, pinned in tests/test_codec.py), per-doc counts
+reference ``_xxh64`` in tests/test_classifier.py), per-doc counts
 L1-normalized (cnt / n_tokens), plus a bias term.  Deterministic given
 ``dim``; the same extraction serves train and apply, so there is no
 train/serve skew.

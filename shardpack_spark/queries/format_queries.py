@@ -134,9 +134,8 @@ def q02_shardpack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = "sim://" + tempfile.mkdtemp(prefix="shardpack_rt_")
     docs = load_table(spark, sf_dir, "documents")
     rows = docs_as_shardpack_rows(docs)
-    # lz4 (pyarrow-native when importable, pure-Python block codec
-    # otherwise) so a compressed round-trip is part of the declared,
-    # driver-checked surface — not just a pytest case
+    # lz4 (pyarrow's native block codec) so a compressed round-trip is
+    # part of the declared, oracle-checked query surface, not just a test
     writer_opts = {
         "target_shard_bytes": 256 * 1024,
         "compression": "lz4",

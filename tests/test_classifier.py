@@ -1,6 +1,7 @@
 """Hashed linear classifier: feature extraction, scoring, and full-batch
 training all match a NumPy reference that replicates the exact same hashed
-feature map (pure-Python XXH64 at Spark's seed 42)."""
+feature map (pure-Python XXH64 at Spark's seed 42, defined here and
+pinned by known-answer vectors and Spark's own xxhash64)."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import math
 import numpy as np
 import pytest
 
-from shardpack_spark.format.codec import _xxh64
 from shardpack_spark.operators.classifier import (
     hashed_classifier_scores,
     hashed_features,
@@ -17,6 +17,83 @@ from shardpack_spark.operators.classifier import (
 )
 
 DIM = 64
+
+_XX_P1 = 0x9E3779B185EBCA87
+_XX_P2 = 0xC2B2AE3D27D4EB4F
+_XX_P3 = 0x165667B19E3779F9
+_XX_P4 = 0x85EBCA77C2B2AE63
+_XX_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64(data: bytes, seed: int = 0) -> int:
+    """XXH64 (the zstd content checksum is its low 32 bits).
+
+    Cross-checked against Spark's XxHash64 expression below, so the two
+    implementations vouch for each other.
+    """
+    n = len(data)
+    i = 0
+    if n >= 32:
+        v1 = (seed + _XX_P1 + _XX_P2) & _M64
+        v2 = (seed + _XX_P2) & _M64
+        v3 = seed & _M64
+        v4 = (seed - _XX_P1) & _M64
+        while i <= n - 32:
+            v1 = (_rotl64((v1 + int.from_bytes(data[i : i + 8], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
+            v2 = (_rotl64((v2 + int.from_bytes(data[i + 8 : i + 16], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
+            v3 = (_rotl64((v3 + int.from_bytes(data[i + 16 : i + 24], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
+            v4 = (_rotl64((v4 + int.from_bytes(data[i + 24 : i + 32], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
+            i += 32
+        h = (_rotl64(v1, 1) + _rotl64(v2, 7) + _rotl64(v3, 12) + _rotl64(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = (((h ^ ((_rotl64((v * _XX_P2) & _M64, 31) * _XX_P1) & _M64)) * _XX_P1) + _XX_P4) & _M64
+    else:
+        h = (seed + _XX_P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        k = (_rotl64((int.from_bytes(data[i : i + 8], "little") * _XX_P2) & _M64, 31) * _XX_P1) & _M64
+        h = ((_rotl64(h ^ k, 27) * _XX_P1) + _XX_P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h = ((_rotl64(h ^ ((int.from_bytes(data[i : i + 4], "little") * _XX_P1) & _M64), 23) * _XX_P2) + _XX_P3) & _M64
+        i += 4
+    while i < n:
+        h = (_rotl64(h ^ ((data[i] * _XX_P5) & _M64), 11) * _XX_P1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XX_P2) & _M64
+    h ^= h >> 29
+    h = (h * _XX_P3) & _M64
+    h ^= h >> 32
+    return h
+
+
+def test_xxh64_vectors():
+    assert _xxh64(b"") == 0xEF46DB3751D8E999
+    assert _xxh64(b"a") == 0xD24EC4F1A98C6E5B
+    assert _xxh64(b"abc") == 0x44BC2CF5AD770999
+
+
+def test_xxh64_matches_spark_jvm(spark):
+    """Cross-implementation check: the pure-Python XXH64 agrees with
+    Spark's JVM XxHash64 expression (seed 42) on raw bytes."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    payloads = [b"", b"a", b"hello world", random.Random(3).randbytes(999)]
+    df = spark.createDataFrame([(bytearray(p),) for p in payloads], "b binary")
+    got = [r[0] for r in df.select(F.xxhash64("b")).collect()]
+    want = [
+        v - (1 << 64) if (v := _xxh64(p, seed=42)) >= (1 << 63) else v
+        for p in payloads
+    ]
+    assert got == want
 
 
 def _bucket(tok: str) -> int:
