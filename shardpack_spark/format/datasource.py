@@ -12,9 +12,14 @@ Row schema (SURVEY.md §1.3):
                            encoding STRING, size BIGINT, data BINARY>>
 
 Scale mapping (reference semantics -> Spark execution):
-- one InputPartition per shard; shards over `split_target_bytes` are split
-  into record-ranges using the EOF offset table (draft.md:124-127), so a
-  1000-executor cluster gets even work regardless of shard sizing
+- read tasks are sized by bytes per core, Spark's FilePartition rule:
+  max_split = min(split_target_bytes, max(4 MiB open cost, sum(shard
+  bytes + open cost) / defaultParallelism)).  Shards over max_split split
+  into record ranges (manifest record counts, or the EOF offset table,
+  draft.md:124-127); the rest pack, in name order, into grouped
+  partitions of at most max_split — so ~1 MB shards cost ~one task per
+  core, not one Python worker launch each, and a 1000-executor cluster
+  gets even work regardless of shard sizing
 - key filters prune partitions BEFORE any shard is opened (the bucket
   index access path, src/bucket.rs:147-169, as partition pruning) using
   two manifest stats per shard: the [min,max] key range (decisive when
@@ -78,7 +83,9 @@ Options:
                                   0 disables, fold_manifest_parts is the
                                   manual equivalent)
     verify_checksums    true|false                    (read; default true)
-    split_target_bytes  int                           (read; default 128 MiB)
+    split_target_bytes  int         (read; default 128 MiB — the largest
+                                     read task; smaller when the dataset's
+                                     bytes per core are, see Scale mapping)
     skip_payload        true|false  (read; entry headers without payload
                                      bytes — the metadata-only access path,
                                      src/bucket.rs:185-188)
@@ -242,12 +249,17 @@ class ShardPartition(InputPartition):
     # store is the difference between metadata-speed planning and O(n)
     # remote reads.
     rec_range: tuple[int, int] | None = None
-    # Many-small-shards coalescing: when set, this ONE task reads every
-    # listed shard whole (path == group[0]).  The inverse of record-range
-    # splitting — without it a directory of 10^4 KB-sized shards (stream
-    # sinks, tiny commits, freshly converted ad-hoc dirs) costs 10^4
-    # Python-worker task launches per scan.
+    # Bin of small shards: when set, this ONE task reads every listed
+    # shard whole (path == group[0]).  The inverse of record-range
+    # splitting — _plan_partitions packs shards up to its bytes-per-core
+    # max_split, so 20 ~1 MB shards cost ~parallelism Python-worker task
+    # launches per scan, not 20 (each launch costs ~0.4 s on a 4-core host).
     group: list[str] | None = None
+
+
+# Spark's spark.sql.files.openCostInBytes default: the bytes one more
+# file (here: one more shard, one more Python task input) is worth
+OPEN_COST = 4 * 1024 * 1024
 
 
 def _plan_partitions(
@@ -255,93 +267,90 @@ def _plan_partitions(
     names: Sequence[str],
     split_target: int,
     stats: dict[str, tuple[int, int | None]] | None = None,
-    small_bin_bytes: int = 32 * 1024 * 1024,
-    min_group_bins: int = 64,
+    parallelism: int | None = None,
 ) -> list[ShardPartition]:
-    """One partition per shard; oversized shards split into record-ranges,
-    MANY SMALL shards coalesce into grouped partitions — executor work
-    stays even at any scale in both directions.
+    """Size read tasks by bytes per core, Spark's FilePartition rule:
+    max_split = min(split_target, max(OPEN_COST, sum(size + OPEN_COST)
+    // parallelism)), parallelism being the session's defaultParallelism
+    (read_shardpack's internal ``default_parallelism`` option) else this
+    process's CPUs.  A shard over max_split splits into ceil(size /
+    max_split) near-equal record ranges; the rest next-fit, in name
+    order, into ``group`` bins costing (size + OPEN_COST each) at most
+    max_split, so many ~MB shards cost ~parallelism Python tasks, not one
+    each.  A bin also closes early while the shards left are needed one
+    per task to reach min(#shards, parallelism) tasks.
 
     ``stats`` carries manifest/marker-recorded (bytes, records) pairs: a
     committed dataset plans with ZERO per-shard I/O — sizes decide the
     split count, record counts produce [start, end) record ranges, and
     the owning EXECUTOR resolves ranges to byte offsets with one
     EOF-index read.  The driver opens a shard only for log-less ad-hoc
-    directories (stat for size, tail read for the offset table).
-
-    Coalescing engages only past ``min_group_bins`` whole shards and
-    never produces fewer than that many bins, so normal datasets (and
-    pruned lookups) keep their one-task-per-shard parallelism while a
-    10^4-tiny-shard directory plans ~64+ tasks instead of 10^4 Python
-    worker launches.  ``small_bin_bytes=0`` disables grouping."""
+    directories (stat for size, tail read for the offset table)."""
     be = storage.for_path(path)
-    sizes: dict[str, int] = {}
-
-    def _one(name: str) -> list[ShardPartition]:
-        sp = os.path.join(path, name)
-        size, records = (stats or {}).get(name, (None, None))
-        if size is None:
-            size = be.getsize(sp)
-        sizes[sp] = size
-        if size <= split_target:
-            return [ShardPartition(sp, None)]
-        if records is not None:
-            if records <= 0:
-                return []
-            n_splits = max(1, size // split_target)
-            per = max(1, records // n_splits)
-            return [
-                ShardPartition(sp, None, rec_range=(i, min(i + per, records)))
-                for i in range(0, records, per)
-            ]
-        idx = codec.read_index(sp)
-        if not idx.offsets:
-            return []
-        n_splits = max(1, size // split_target)
-        per = max(1, len(idx.offsets) // n_splits)
-        return [
-            ShardPartition(sp, idx.offsets[i : i + per])
-            for i in range(0, len(idx.offsets), per)
-        ]
-
+    stats = stats or {}
+    names = sorted(names)
+    parallelism = max(1, parallelism or os.cpu_count() or 1)
     # committed datasets plan from pure metadata (stats has every name);
     # only log-less ad-hoc dirs stat/open shards — do those with an I/O
     # thread pool, the reference's parallel index build (R8,
     # src/index/bucket.rs:85-117: buffer_unordered(parallelism))
-    needs_io = stats is None or any(n not in stats for n in names)
-    if needs_io and len(names) > 8:
-        from concurrent.futures import ThreadPoolExecutor
+    needs_io = any(None in stats.get(n, (None, None)) for n in names)
 
-        with ThreadPoolExecutor(max_workers=min(16, len(names))) as ex:
-            per_name = list(ex.map(_one, names))
-    else:
-        per_name = [_one(n) for n in names]
-    parts = [p for parts in per_name for p in parts]
+    def io_map(fn, items: list[str]) -> list:
+        if needs_io and len(items) > 8:
+            from concurrent.futures import ThreadPoolExecutor
 
-    whole = [p for p in parts if p.offsets is None and p.rec_range is None]
-    if small_bin_bytes <= 0 or len(whole) <= min_group_bins:
-        return parts
-    split = [p for p in parts if p.offsets is not None or p.rec_range is not None]
-    total = sum(sizes[p.path] for p in whole)
-    # bytes-driven bin count, floored at min_group_bins so grouping never
-    # costs parallelism a real cluster has
-    n_bins = max(-(-total // small_bin_bytes), min_group_bins)
-    if n_bins >= len(whole):
-        return parts
-    bin_target = -(-total // n_bins)
-    groups: list[list[str]] = []
-    cur: list[str] = []
-    cur_bytes = 0
-    for p in sorted(whole, key=lambda p: p.path):  # contiguous name runs
-        if cur and cur_bytes + sizes[p.path] > bin_target:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(p.path)
-        cur_bytes += sizes[p.path]
-    if cur:
-        groups.append(cur)
-    return split + [
-        ShardPartition(g[0], None, group=g if len(g) > 1 else None) for g in groups
+            with ThreadPoolExecutor(max_workers=min(16, len(items))) as ex:
+                return list(ex.map(fn, items))
+        return [fn(n) for n in items]
+
+    def size_of(name: str) -> int:
+        size = stats.get(name, (None, None))[0]
+        return be.getsize(os.path.join(path, name)) if size is None else size
+
+    sizes = dict(zip(names, io_map(size_of, names)))
+    total_cost = sum(sizes.values()) + OPEN_COST * len(names)
+    max_split = min(split_target, max(OPEN_COST, total_cost // parallelism))
+
+    def ranges(name: str) -> list[ShardPartition]:
+        sp = os.path.join(path, name)
+        records = stats.get(name, (None, None))[1]
+        offsets = codec.read_index(sp).offsets if records is None else None
+        n = len(offsets) if offsets is not None else records
+        k = min(n, -(-sizes[name] // max_split))
+        cuts = [n * i // k for i in range(k + 1)] if k > 0 else []
+        return [
+            ShardPartition(sp, offsets[lo:hi])
+            if offsets is not None
+            else ShardPartition(sp, None, rec_range=(lo, hi))
+            for lo, hi in zip(cuts, cuts[1:])
+        ]
+
+    big = [n for n in names if sizes[n] > max_split]
+    split = dict(zip(big, io_map(ranges, big)))
+    whole_left = len(names) - len(big)
+    # bins needed so the plan has >= min(#shards, parallelism) tasks
+    floor = min(whole_left, parallelism - sum(len(r) for r in split.values()))
+    slots: list = []  # range partitions and bin member lists, in name order
+    cur: list[str] | None = None
+    cur_cost = opened = 0
+    for name in names:
+        if name in split:
+            slots.extend(split[name])
+            cur = None
+            continue
+        cost = sizes[name] + OPEN_COST
+        if cur is None or cur_cost + cost > max_split or opened + whole_left <= floor:
+            cur, cur_cost, opened = [], 0, opened + 1
+            slots.append(cur)
+        cur.append(os.path.join(path, name))
+        cur_cost += cost
+        whole_left -= 1
+    return [
+        s
+        if isinstance(s, ShardPartition)
+        else ShardPartition(s[0], None, group=s if len(s) > 1 else None)
+        for s in slots
     ]
 
 
@@ -482,8 +491,8 @@ class ShardPackReader(DataSourceReader):
             raise codec.ShardPackIOError("shardpack reader requires a path")
         self.verify = str(options.get("verify_checksums", "true")).lower() == "true"
         self.split_target = int(options.get("split_target_bytes", 128 * 1024 * 1024))
-        # 0 disables many-small-shards coalescing (one task per shard)
-        self.small_bin = int(options.get("small_bin_bytes", 32 * 1024 * 1024))
+        dp = options.get("default_parallelism")  # internal: set by read_shardpack
+        self.parallelism = int(dp) if dp else None
         self.skip_payload = str(options.get("skip_payload", "false")).lower() == "true"
         self.metadata_only = str(options.get("metadata_only", "false")).lower() == "true"
         # modality-selective decode: JSON list of entry file names whose
@@ -661,7 +670,7 @@ class ShardPackReader(DataSourceReader):
                 kept.append(name)
             names = kept
         mstats = _manifest_stats(self.path, manifest)
-        tail_cut: tuple[str, int] | None = None
+        tail_k: int | None = None  # records the last kept shard is cut to
         if self.limit_records and self.limit_records > 0 and names:
             # truncate planning at the first prefix of the (pruned,
             # name-ordered) shard sequence whose recorded record counts
@@ -676,34 +685,28 @@ class ShardPackReader(DataSourceReader):
                 if rec is not None:
                     if need - rec <= 0:
                         if need < rec:
-                            tail_cut = (os.path.join(self.path, n), need)
+                            tail_k = need
                         need = 0
                         break
                     need -= rec
             names = kept_n
-        parts = _plan_partitions(
-            self.path,
-            names,
-            self.split_target,
-            mstats,
-            small_bin_bytes=self.small_bin,
+        if tail_k is None:
+            return _plan_partitions(
+                self.path, names, self.split_target, mstats, self.parallelism
+            )
+        # the cut shard plans on its own, outside the bins, so its [0, k)
+        # record range survives coalescing (its record count is known, so
+        # it plans whole or as record ranges, never as offsets)
+        head, tail = (
+            _plan_partitions(self.path, ns, self.split_target, mstats, self.parallelism)
+            for ns in (names[:-1], names[-1:])
         )
-        if tail_cut is not None:
-            tail_path, k = tail_cut
-            out = []
-            for p in parts:
-                if p.path != tail_path or p.group is not None or p.offsets is not None:
-                    out.append(p)  # grouped/offset plans: limit on top
-                elif p.rec_range is None:
-                    out.append(ShardPartition(p.path, None, rec_range=(0, k)))
-                elif p.rec_range[0] < k:
-                    out.append(
-                        ShardPartition(
-                            p.path, None, rec_range=(p.rec_range[0], min(p.rec_range[1], k))
-                        )
-                    )
-            parts = out
-        return parts
+        return head + [
+            ShardPartition(p.path, None, rec_range=(lo, min(hi, tail_k)))
+            for p in tail
+            for lo, hi in [p.rec_range or (0, tail_k)]
+            if lo < tail_k
+        ]
 
     def read(self, partition: ShardPartition):
         if partition is None or not partition.path:
@@ -997,7 +1000,6 @@ class ShardPackStreamReader(DataSourceStreamReader):
             raise codec.ShardPackIOError("shardpack stream reader requires a path")
         self.verify = str(options.get("verify_checksums", "true")).lower() == "true"
         self.split_target = int(options.get("split_target_bytes", 128 * 1024 * 1024))
-        self.small_bin = int(options.get("small_bin_bytes", 32 * 1024 * 1024))
         # Admission control: cap how many shards a micro-batch admits so a
         # deep backlog (or a bulk import landing mid-stream) drains as
         # bounded batches instead of one giant catch-up batch.  0 = no cap.
@@ -1089,11 +1091,7 @@ class ShardPackStreamReader(DataSourceStreamReader):
                 self.where_meta_range,
             )
         return _plan_partitions(
-            self.path,
-            names,
-            self.split_target,
-            _manifest_stats(self.path, manifest),
-            small_bin_bytes=self.small_bin,
+            self.path, names, self.split_target, _manifest_stats(self.path, manifest)
         )
 
     def commit(self, end: dict) -> None:
@@ -2302,6 +2300,9 @@ def read_shardpack(
         == "true"
     ):
         options["prune_by_key"] = "true"
+    # plan read tasks for this session's cores, not the planning
+    # process's (_plan_partitions' bytes-per-core rule)
+    options.setdefault("default_parallelism", spark.sparkContext.defaultParallelism)
     if (
         columns is not None
         and not explode_entries  # exploded view consumes the entries array

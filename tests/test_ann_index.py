@@ -71,14 +71,21 @@ def test_persisted_search_equals_in_session(spark, built):
 
 
 def test_probe_reads_subset_of_shards(spark, built):
+    from pyspark.sql.datasource import EqualTo
+
     from shardpack_spark.format import codec
+    from shardpack_spark.format.datasource import ShardPackPruningReader
 
     _, coarse, _, path = built
     n_shards = len(codec.list_shards(path))
     if n_shards < 3:
         pytest.skip("index fits too few shards at this SF")
     probed = read_ann_codes(spark, path, [coarse[0][0]])
-    assert probed.rdd.getNumPartitions() < n_shards
+    # count the shards the pruned plan covers, not its partitions: a
+    # partition may be a bin of several shards
+    r = ShardPackPruningReader({"path": path, "prune_by_key": "true"})
+    r.pushFilters([EqualTo(("key",), f"b/{int(coarse[0][0]):08d}")])
+    assert len({m for p in r.partitions() for m in p.group or [p.path]}) < n_shards
     assert probed.count() > 0
 
 

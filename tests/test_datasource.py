@@ -19,6 +19,14 @@ def spark_ds(spark):
     return spark
 
 
+def _planned_shards(parts) -> set[str]:
+    """Shard names a plan covers (grouped partitions expanded; the empty
+    sentinel covers none) — a pruning count independent of binning."""
+    return {
+        full.rsplit("/", 1)[-1] for p in parts if p.path for full in p.group or [p.path]
+    }
+
+
 def _docs_as_records(spark, sf_dir):
     """documents table -> shardpack row shape (text as a JSON entry)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -64,14 +72,28 @@ def test_write_read_round_trip(spark_ds, sf_dir, tmp_path):
 
 
 def test_multiple_shards_multiple_partitions(spark_ds, sf_dir, tmp_path):
+    """16 KiB shards pack into bins by bytes per core: fewer tasks than
+    shards, never fewer than min(#shards, cores), every record read once."""
+    from shardpack_spark.format.datasource import read_shardpack
+
     out = str(tmp_path / "ds")
-    _docs_as_records(spark_ds, sf_dir).coalesce(1).write.format("shardpack").option(
+    src = _docs_as_records(spark_ds, sf_dir)
+    src.coalesce(1).write.format("shardpack").option(
         "target_shard_bytes", 16 * 1024
     ).mode("append").save(out)
     shards = codec.list_shards(out)
     assert len(shards) > 3
-    back = spark_ds.read.format("shardpack").load(out)
-    assert back.rdd.getNumPartitions() == len(shards)
+    two = read_shardpack(spark_ds, out, default_parallelism=2)
+    assert 2 <= two.rdd.getNumPartitions() < len(shards)
+    assert two.count() == src.count()
+    # by default the session's parallelism; a plain load (nothing
+    # passed) plans for this process's CPUs
+    cores = spark_ds.sparkContext.defaultParallelism
+    for df, n in (
+        (read_shardpack(spark_ds, out), cores),
+        (spark_ds.read.format("shardpack").load(out), os.cpu_count()),
+    ):
+        assert min(len(shards), n) <= df.rdd.getNumPartitions() <= len(shards)
 
 
 def test_overwrite_mode(spark_ds, sf_dir, tmp_path):
@@ -103,7 +125,7 @@ def test_key_filter_prunes_partitions(spark_ds, sf_dir, tmp_path):
 
     filtered = read_shardpack(spark_ds, out).filter(F.col("key") == "doc/00000007")
     assert filtered.count() == 1
-    assert filtered.rdd.getNumPartitions() < n_shards
+    assert n_shards > 1 and filtered.rdd.getNumPartitions() == 1  # one shard survives
 
     from shardpack_spark.format.datasource import _load_manifest
 
@@ -143,14 +165,11 @@ def test_range_filter_prunes_partitions(spark_ds, sf_dir, tmp_path):
     assert rng.count() == 20
     assert rng.rdd.getNumPartitions() < len(shards)
 
-    def kept(filters, small_bin="0"):
-        # small_bin_bytes=0 disables tiny-shard coalescing so the count
-        # below is a SHARD count, not a bin count
-        r = ShardPackPruningReader(
-            {"path": out, "prune_by_key": "true", "small_bin_bytes": small_bin}
-        )
+    def kept(filters):
+        # the shard set the plan covers, not its (binned) partition count
+        r = ShardPackPruningReader({"path": out, "prune_by_key": "true"})
         r.pushFilters(filters)
-        return r.partitions()
+        return _planned_shards(r.partitions())
 
     all_n = len(kept([]))
     assert all_n == len(shards)
@@ -1009,35 +1028,28 @@ def test_metadata_zone_map_skipping(spark_ds, sf_dir, tmp_path):
 
     # pruning: a top-of-range cut plans strictly fewer partitions
     hi_cut = max(s["meta_ranges"]["n_chars"][0] for s in m["shards"])
-    all_parts = ShardPackReader({"path": out, "small_bin_bytes": "0"}).partitions()
-    pruned = ShardPackReader(
-        {
-            "path": out,
-            "small_bin_bytes": "0",
-            "where_meta_range": _json.dumps({"n_chars": [hi_cut, None]}),
-        }
-    ).partitions()
-    assert 0 < len(pruned) < len(all_parts)
+    all_shards = _planned_shards(ShardPackReader({"path": out}).partitions())
+    pruned = _planned_shards(
+        ShardPackReader(
+            {
+                "path": out,
+                "where_meta_range": _json.dumps({"n_chars": [hi_cut, None]}),
+            }
+        ).partitions()
+    )
+    assert 0 < len(pruned) < len(all_shards)
     # an impossible interval prunes everything (empty sentinel comes back)
     nothing = ShardPackReader(
-        {
-            "path": out,
-            "small_bin_bytes": "0",
-            "where_meta_range": _json.dumps({"n_chars": [None, -1]}),
-        }
+        {"path": out, "where_meta_range": _json.dumps({"n_chars": [None, -1]})}
     ).partitions()
     assert len(nothing) == 1 and nothing[0].path == ""
 
     # poisoned / untracked keys never prune
     for probe in ({"lang": [0, 1]}, {"nope": [0, 1]}):
         kept = ShardPackReader(
-            {
-                "path": out,
-                "small_bin_bytes": "0",
-                "where_meta_range": _json.dumps(probe),
-            }
+            {"path": out, "where_meta_range": _json.dumps(probe)}
         ).partitions()
-        assert len(kept) == len(all_parts)
+        assert _planned_shards(kept) == all_shards
 
     # semantics: exactly the rows a plain numeric filter returns
     want = docs.filter(
@@ -1100,15 +1112,16 @@ def test_string_zone_map_date_tailing(spark_ds, tmp_path):
         assert "mixed" not in mr, "mixed numeric/string domain must poison"
 
     # pruning: tail from March plans strictly fewer partitions
-    all_parts = ShardPackReader({"path": out, "small_bin_bytes": "0"}).partitions()
-    pruned = ShardPackReader(
-        {
-            "path": out,
-            "small_bin_bytes": "0",
-            "where_meta_range": _json.dumps({"event_date": ["2024-03-01", None]}),
-        }
-    ).partitions()
-    assert 0 < len(pruned) < len(all_parts)
+    all_shards = _planned_shards(ShardPackReader({"path": out}).partitions())
+    pruned = _planned_shards(
+        ShardPackReader(
+            {
+                "path": out,
+                "where_meta_range": _json.dumps({"event_date": ["2024-03-01", None]}),
+            }
+        ).partitions()
+    )
+    assert 0 < len(pruned) < len(all_shards)
 
     # semantics: exactly the rows a plain lexicographic filter returns,
     # including the boundary shard that straddles the cut
@@ -1352,9 +1365,9 @@ def test_read_exploded_entries_option(spark_ds, sf_dir, tmp_path):
 
 
 def test_small_shard_coalescing(spark_ds, tmp_path):
-    """A directory of many tiny shards must plan grouped partitions (not
-    one Python task per shard) while small/pruned datasets keep
-    one-partition-per-shard; results are identical either way."""
+    """300 one-record shards pack into ~one grouped partition per core
+    (not one Python task per shard), while more cores than shards keep a
+    task per shard; results are identical either way."""
     from shardpack_spark.format import codec
     from shardpack_spark.format.datasource import (
         ShardPackReader,
@@ -1370,17 +1383,18 @@ def test_small_shard_coalescing(spark_ds, tmp_path):
     w.close()
     convert_to_dataset(spark_ds, out, key_stats=False)
 
-    parts = ShardPackReader({"path": out}).partitions()
-    assert 64 <= len(parts) < n  # floored at min_group_bins, well under n
+    parts = ShardPackReader({"path": out, "default_parallelism": "8"}).partitions()
+    assert 8 <= len(parts) < 16  # ~one bin per core, not n tasks
     grouped = [p for p in parts if p.group]
     assert grouped and sum(len(p.group) for p in grouped) + (
         len(parts) - len(grouped)
     ) == n  # every shard read exactly once
     assert read_shardpack(spark_ds, out).count() == n
 
-    # opt-out restores one partition per shard
-    parts_off = ShardPackReader({"path": out, "small_bin_bytes": "0"}).partitions()
-    assert len(parts_off) == n
+    # more cores than shards: bytes per core fall to the open cost, so
+    # every shard keeps its own task
+    wide = ShardPackReader({"path": out, "default_parallelism": str(2 * n)}).partitions()
+    assert len(wide) == n and not any(p.group for p in wide)
 
     # grouped partitions compose with the payload-skipping projection
     # and metadata-only reads (group expansion forwards the flags)
@@ -1394,53 +1408,237 @@ def test_small_shard_coalescing(spark_ds, tmp_path):
 
 
 def test_plan_partitions_grouping_invariants(tmp_path):
-    """Hypothesis fuzz of the planner's coalescing math (pure metadata —
-    no files opened): every shard planned exactly once, groups only form
-    past the bin floor, and group count never drops below it."""
+    """Hypothesis fuzz of the bytes-per-core planner over shard sizes,
+    record counts and parallelism.  Pure metadata: the dataset path does
+    not exist, so any stat or index read would raise.  Every shard and
+    record is planned exactly once, record ranges are contiguous and
+    differ by at most one record, every multi-shard bin costs at most
+    max_split, partitions follow name order, and a plan never has fewer
+    tasks than min(#shards, parallelism)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from shardpack_spark.format.datasource import _plan_partitions
+    from shardpack_spark.format.datasource import OPEN_COST, _plan_partitions
 
     SPLIT = 128 * 1024 * 1024
-    BIN = 32 * 1024 * 1024
+    absent = str(tmp_path / "absent")
+    size = st.one_of(st.integers(0, 8 * 1024 * 1024), st.integers(0, 3 * SPLIT))
 
-    @settings(max_examples=200, deadline=None)
+    @settings(max_examples=300, deadline=None)
     @given(
-        st.lists(
-            st.integers(min_value=0, max_value=SPLIT),  # whole-shard sizes
-            min_size=1,
-            max_size=400,
-        )
+        st.lists(st.tuples(size, st.integers(1, 10**6)), min_size=1, max_size=300),
+        st.integers(1, 64),
     )
-    def run(sizes):
-        names = [f"s{i:05d}.shardpack" for i in range(len(sizes))]
-        stats = {n: (sz, 10) for n, sz in zip(names, sizes)}
-        parts = _plan_partitions(str(tmp_path), names, SPLIT, stats)
-        seen: list[str] = []
+    def run(shards, parallelism):
+        names = [f"s{i:05d}.shardpack" for i in range(len(shards))]
+        stats = dict(zip(names, shards))
+        parts = _plan_partitions(absent, names, SPLIT, stats, parallelism)
+        total = sum(sz + OPEN_COST for sz, _ in shards)
+        max_split = min(SPLIT, max(OPEN_COST, total // parallelism))
+        whole: list[str] = []
+        ranges: dict[str, list[tuple[int, int]]] = {}
+        order: list[str] = []
         for p in parts:
-            if p.group:
-                assert p.path == p.group[0]
-                assert len(p.group) > 1
-                seen.extend(os.path.basename(x) for x in p.group)
-            else:
-                assert p.offsets is None and p.rec_range is None
-                seen.append(os.path.basename(p.path))
-        # exactly-once coverage
-        assert sorted(seen) == sorted(names)
-        # grouping engages only past the 64-shard floor and never
-        # produces fewer than 64 bins
-        if len(names) <= 64:
-            assert all(p.group is None for p in parts)
-        else:
-            assert len(parts) >= min(len(names), 64)
-        # no bin mixes more bytes than one target-split shard would hold
-        for p in parts:
-            if p.group:
-                total = sum(stats[os.path.basename(x)][0] for x in p.group)
-                assert total <= SPLIT
+            assert p.offsets is None
+            if p.rec_range is not None:
+                assert p.group is None
+                ranges.setdefault(os.path.basename(p.path), []).append(p.rec_range)
+                order.append(os.path.basename(p.path))
+                continue
+            members = [os.path.basename(x) for x in p.group or [p.path]]
+            assert p.path == os.path.join(absent, members[0])
+            if len(members) > 1:
+                assert sum(stats[m][0] + OPEN_COST for m in members) <= max_split
+            assert all(stats[m][0] <= max_split for m in members)
+            whole.extend(members)
+            order.extend(members)
+        assert order == sorted(order)  # ranges and bins interleave in name order
+        assert sorted(whole + list(ranges)) == names and len(set(whole)) == len(whole)
+        for name, rs in ranges.items():
+            sz, records = stats[name]
+            assert sz > max_split
+            assert len(rs) == min(records, -(-sz // max_split))  # ceil split count
+            assert rs[0][0] == 0 and rs[-1][1] == records
+            assert all(a[1] == b[0] for a, b in zip(rs, rs[1:]))
+            widths = [hi - lo for lo, hi in rs]
+            assert min(widths) >= 1 and max(widths) - min(widths) <= 1
+        assert len(parts) >= min(len(names), parallelism)
 
     run()
+
+
+def test_plan_partitions_split_counts_round_up(tmp_path):
+    """Oversized shards split into ceil(size / max_split) near-equal
+    pieces on both paths: record ranges from manifest counts, and offset
+    chunks from the index of a log-less shard."""
+    from shardpack_spark.format.datasource import _plan_partitions
+
+    MiB = 1024 * 1024
+    absent = str(tmp_path / "absent")
+
+    def rec_ranges(size, records):
+        parts = _plan_partitions(absent, ["a"], 128 * MiB, {"a": (size, records)}, 1)
+        return [p.rec_range for p in parts]
+
+    assert rec_ranges(250 * MiB, 1000) == [(0, 500), (500, 1000)]  # not 1 whole range
+    assert rec_ranges(3 * 128 * MiB - 1, 1000) == [(0, 333), (333, 666), (666, 1000)]
+
+    d = str(tmp_path / "adhoc")
+    w = codec.DatasetWriter(d, basename="t", target_shard_bytes=10**9)
+    for i in range(10):
+        w.write(
+            codec.Record(
+                key=f"k{i:02d}",
+                entries=[codec.FileEntry("b.bin", "application/octet-stream", b"x" * 1000)],
+            )
+        )
+    w.close()
+    [shard] = codec.list_shards(d)
+    size = os.path.getsize(shard)
+    parts = _plan_partitions(d, [os.path.basename(shard)], -(-size // 3), None, 1)
+    assert [len(p.offsets) for p in parts] == [3, 3, 4]  # not 5/5 or 3/3/3/1
+    assert [o for p in parts for o in p.offsets] == codec.read_index(shard).offsets
+
+
+def test_limit_records_tail_cut_survives_binning(spark_ds, tmp_path):
+    """A limit_records prefix spanning more tiny shards than cores packs
+    the prefix into bins, but the shard the limit cuts still plans its
+    own [0, k) record range, and the row count is exact."""
+    from shardpack_spark.format.datasource import (
+        ShardPackReader,
+        _load_manifest,
+        convert_to_dataset,
+        read_shardpack,
+    )
+
+    out = str(tmp_path / "tiny")
+    w = codec.DatasetWriter(out, basename="t", target_shard_bytes=1024)
+    for i in range(400):
+        w.write(
+            codec.Record(
+                key=f"k{i:04d}",
+                entries=[codec.FileEntry("b.bin", "application/octet-stream", b"p" * 200)],
+            )
+        )
+    w.close()
+    convert_to_dataset(spark_ds, out, key_stats=False)
+    shards = sorted(_load_manifest(out)["shards"], key=lambda s: s["path"])
+    cores = 4
+    m = 3 * cores  # whole shards before the cut one
+    assert len(shards) > m and shards[m]["records"] > 2
+    n = sum(s["records"] for s in shards[:m]) + 2
+
+    parts = ShardPackReader(
+        {"path": out, "limit_records": str(n), "default_parallelism": str(cores)}
+    ).partitions()
+    assert any(p.group for p in parts)  # the prefix is binned
+    assert parts[-1].rec_range == (0, 2)
+    assert parts[-1].path == os.path.join(out, shards[m]["path"])
+    assert _planned_shards(parts) == {s["path"] for s in shards[: m + 1]}
+    got = read_shardpack(spark_ds, out, limit_records=n, default_parallelism=cores)
+    assert got.count() == n
+
+
+def _grouped_dataset(spark, sp_rows, out):
+    """600 records over several shards per `lang` partition: one write and
+    two appends, 4 KiB shards."""
+    rows = [
+        (
+            f"k{i:04d}",
+            {"lang": ("en", "de", "fr")[i % 3], "i": str(i)},
+            bytes([i % 251]) * (50 + i % 97),
+        )
+        for i in range(600)
+    ]
+    for lo, hi in ((0, 300), (300, 450), (450, 600)):
+        sp_rows(spark, rows[lo:hi]).coalesce(1).write.format("shardpack").option(
+            "partition_by", "lang"
+        ).option("target_shard_bytes", 4096).mode("append").save(out)
+    return len(rows)
+
+
+def test_grouped_scan_matches_facade_and_shard_column(spark_ds, sp_rows, tmp_path):
+    """A binned DSv2 full scan returns exactly the Spark-free reader's
+    records, and each `_shard` value names the shard holding the record."""
+    import hashlib
+    from collections import Counter
+
+    from shardpack_spark.format.datasource import ShardPackReader, read_shardpack
+    from shardpack_spark.format.reader import open_dataset
+
+    out = str(tmp_path / "grouped")
+    n = _grouped_dataset(spark_ds, sp_rows, out)
+    parts = ShardPackReader({"path": out, "default_parallelism": "2"}).partitions()
+    assert any(p.group for p in parts)
+
+    def digest(entries):
+        h = hashlib.sha256()
+        for name, ctype, data in entries:
+            h.update(f"{name}\0{ctype}\0{len(data)}\0".encode() + bytes(data))
+        return h.hexdigest()
+
+    rows = read_shardpack(
+        spark_ds, out, with_shard_column="true", default_parallelism=2
+    ).collect()
+    got = Counter(
+        (
+            r["key"],
+            tuple(sorted(r["metadata"].items())),
+            digest((e["file_name"], e["content_type"], e["data"]) for e in r["entries"]),
+        )
+        for r in rows
+    )
+    want = Counter(
+        (
+            rec.key,
+            tuple(sorted(rec.metadata.items())),
+            digest((e.file_name, e.content_type, e.data) for e in rec.entries),
+        )
+        for rec in open_dataset(out).records()
+    )
+    assert got == want and sum(got.values()) == n
+
+    holds: dict[str, set[str]] = {}
+    for shard in codec.list_shards(out):
+        for rec in codec.iter_records(shard):
+            holds.setdefault(rec.key, set()).add(os.path.basename(shard))
+    assert all(r["_shard"] in holds[r["key"]] for r in rows)
+
+
+def test_grouped_plan_in_vanilla_session(spark_ds, sp_rows, tmp_path):
+    """A binned plan pickles by value: a vanilla local[2] session started
+    outside the repo (its Python workers cannot import the package) reads
+    every record and every shard through grouped partitions."""
+    import subprocess
+    import sys
+
+    out = str(tmp_path / "grouped")
+    n = _grouped_dataset(spark_ds, sp_rows, out)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from shardpack_spark.format.datasource import ShardPackReader, read_shardpack
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+parts = ShardPackReader({{"path": {out!r}, "default_parallelism": "2"}}).partitions()
+assert any(p.group for p in parts), parts
+df = read_shardpack(spark, {out!r}, with_shard_column="true")
+assert df.rdd.getNumPartitions() == len(parts)
+print(df.count(), df.select("_shard").distinct().count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert r.stdout.split()[-2:] == [str(n), str(len(codec.list_shards(out)))]
 
 
 def test_shard_sample_deterministic_fraction(spark_ds, tmp_path):
@@ -1485,20 +1683,18 @@ def test_limit_records_head_preview(spark_ds, sf_dir, tmp_path):
         "target_shard_bytes", 16 * 1024
     ).mode("append").save(out)
 
-    all_parts = ShardPackReader({"path": out, "small_bin_bytes": "0"}).partitions()
-    assert len(all_parts) > 4
+    all_shards = _planned_shards(ShardPackReader({"path": out}).partitions())
+    assert len(all_shards) > 4
     # tiny limit plans exactly one partition carrying a [0, k) range
-    head = ShardPackReader(
-        {"path": out, "small_bin_bytes": "0", "limit_records": "7"}
-    ).partitions()
+    head = ShardPackReader({"path": out, "limit_records": "7"}).partitions()
     assert len(head) == 1
     assert head[0].rec_range is not None and head[0].rec_range[0] == 0
     assert head[0].rec_range[1] >= 7  # >= N records planned
     # limit past the dataset keeps the full plan
     over = ShardPackReader(
-        {"path": out, "small_bin_bytes": "0", "limit_records": str(total * 2)}
+        {"path": out, "limit_records": str(total * 2)}
     ).partitions()
-    assert len(over) == len(all_parts)
+    assert _planned_shards(over) == all_shards
 
     # exact row cap, deterministic under re-read
     assert read_shardpack(spark_ds, out, limit_records=7).count() == 7

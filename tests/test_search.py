@@ -143,16 +143,22 @@ def test_max_df_drops_stopword_terms(spark, sf_dir, con, tmp_path):
 
 
 def test_in_filter_prunes_index_shards(spark, con, index_path):
-    """key IN (...) pushdown: a 2-term probe opens O(1) shards."""
+    """key IN (...) pruning: a 2-term probe plans a strict subset of the
+    index's shards."""
+    from pyspark.sql.datasource import In
+
     from shardpack_spark.format import codec
-    from shardpack_spark.format.datasource import read_shardpack
+    from shardpack_spark.format.datasource import ShardPackPruningReader
 
     n_shards = len(codec.list_shards(index_path))
     if n_shards < 2:
         pytest.skip("index fits one shard at this SF")
     t1, t2 = _pick_terms(con, n=2)
-    probed = read_shardpack(spark, index_path).filter(F.col("key").isin([t1, t2]))
-    assert probed.rdd.getNumPartitions() < n_shards
+    # count the shards the pruned plan covers, not its partitions: a
+    # partition may be a bin of several shards
+    r = ShardPackPruningReader({"path": index_path, "prune_by_key": "true"})
+    r.pushFilters([In(("key",), (t1, t2))])
+    assert len({m for p in r.partitions() for m in p.group or [p.path]}) < n_shards
 
 
 def test_reader_in_and_prefix_pruning(spark, sf_dir, tmp_path):
@@ -184,15 +190,14 @@ def test_reader_in_and_prefix_pruning(spark, sf_dir, tmp_path):
     n_shards = len(codec.list_shards(out))
     assert n_shards >= 8
 
-    r_in = ShardPackPruningReader({"path": out})
-    r_in.pushFilters([In(("key",), ("a005", "d055"))])
-    kept_in = len(r_in.partitions())
-    assert 1 <= kept_in < n_shards
+    def kept(filters):
+        # shards the plan covers (binned partitions expanded)
+        r = ShardPackPruningReader({"path": out})
+        r.pushFilters(filters)
+        return {m for p in r.partitions() for m in p.group or [p.path]}
 
-    r_pfx = ShardPackPruningReader({"path": out})
-    r_pfx.pushFilters([StringStartsWith(("key",), "c")])
-    kept_pfx = len(r_pfx.partitions())
-    assert 1 <= kept_pfx < n_shards
+    assert 1 <= len(kept([In(("key",), ("a005", "d055"))])) < n_shards
+    assert 1 <= len(kept([StringStartsWith(("key",), "c")])) < n_shards
 
     # pruning is conservative: full reads agree with the filters
     from shardpack_spark.format.datasource import read_shardpack
