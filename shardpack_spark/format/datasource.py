@@ -1,6 +1,6 @@
 """Python DataSource V2 for the ShardPack format (Spark >= 4.0).
 
-    spark.dataSource.register(ShardPackDataSource)
+    register(spark)  # also records the session's cores for read planning
     df = spark.read.format("shardpack").load("/path/to/dataset")
     df.write.format("shardpack").mode("append").save("/path/to/dataset")
     stream = spark.readStream.format("shardpack").load("/path/to/dataset")
@@ -19,7 +19,10 @@ Scale mapping (reference semantics -> Spark execution):
   draft.md:124-127); the rest pack, in name order, into grouped
   partitions of at most max_split — so ~1 MB shards cost ~one task per
   core, not one Python worker launch each, and a 1000-executor cluster
-  gets even work regardless of shard sizing
+  gets even work regardless of shard sizing.  defaultParallelism is the
+  one of the session that ran register(spark), for batch and stream
+  reads alike; a class registered directly with spark.dataSource.register
+  plans for the planning worker's CPUs instead
 - key filters prune partitions BEFORE any shard is opened (the bucket
   index access path, src/bucket.rs:147-169, as partition pruning) using
   two manifest stats per shard: the [min,max] key range (decisive when
@@ -271,9 +274,9 @@ def _plan_partitions(
 ) -> list[ShardPartition]:
     """Size read tasks by bytes per core, Spark's FilePartition rule:
     max_split = min(split_target, max(OPEN_COST, sum(size + OPEN_COST)
-    // parallelism)), parallelism being the session's defaultParallelism
-    (read_shardpack's internal ``default_parallelism`` option) else this
-    process's CPUs.  A shard over max_split splits into ceil(size /
+    // parallelism)), parallelism being the registering session's
+    defaultParallelism (ShardPackDataSource.parallelism, set by register())
+    else this process's CPUs.  A shard over max_split splits into ceil(size /
     max_split) near-equal record ranges; the rest next-fit, in name
     order, into ``group`` bins costing (size + OPEN_COST each) at most
     max_split, so many ~MB shards cost ~parallelism Python tasks, not one
@@ -285,38 +288,41 @@ def _plan_partitions(
     split count, record counts produce [start, end) record ranges, and
     the owning EXECUTOR resolves ranges to byte offsets with one
     EOF-index read.  The driver opens a shard only for log-less ad-hoc
-    directories (stat for size, tail read for the offset table)."""
+    directories: one pass stats each shard and reads the offset table of
+    any large enough to split."""
     be = storage.for_path(path)
     stats = stats or {}
     names = sorted(names)
     parallelism = max(1, parallelism or os.cpu_count() or 1)
     # committed datasets plan from pure metadata (stats has every name);
-    # only log-less ad-hoc dirs stat/open shards — do those with an I/O
-    # thread pool, the reference's parallel index build (R8,
-    # src/index/bucket.rs:85-117: buffer_unordered(parallelism))
+    # log-less ad-hoc dirs probe shards in an I/O thread pool, the
+    # reference's parallel index build (R8, src/index/bucket.rs:85-117)
     needs_io = any(None in stats.get(n, (None, None)) for n in names)
 
-    def io_map(fn, items: list[str]) -> list:
-        if needs_io and len(items) > 8:
-            from concurrent.futures import ThreadPoolExecutor
+    def probe(name: str) -> tuple[int, list[int] | None]:
+        # one I/O pass: a shard with no recorded count that may split (as
+        # max_split >= min(split_target, OPEN_COST)) reads its offset table
+        sp = os.path.join(path, name)
+        size, records = stats.get(name, (None, None))
+        size = be.getsize(sp) if size is None else size
+        may_split = records is None and size > min(split_target, OPEN_COST)
+        return size, codec.read_index(sp).offsets if may_split else None
 
-            with ThreadPoolExecutor(max_workers=min(16, len(items))) as ex:
-                return list(ex.map(fn, items))
-        return [fn(n) for n in items]
+    if needs_io and len(names) > 8:
+        from concurrent.futures import ThreadPoolExecutor
 
-    def size_of(name: str) -> int:
-        size = stats.get(name, (None, None))[0]
-        return be.getsize(os.path.join(path, name)) if size is None else size
-
-    sizes = dict(zip(names, io_map(size_of, names)))
+        with ThreadPoolExecutor(max_workers=min(16, len(names))) as ex:
+            probed = dict(zip(names, ex.map(probe, names)))
+    else:
+        probed = {n: probe(n) for n in names}
+    sizes = {n: s for n, (s, _) in probed.items()}
     total_cost = sum(sizes.values()) + OPEN_COST * len(names)
     max_split = min(split_target, max(OPEN_COST, total_cost // parallelism))
 
     def ranges(name: str) -> list[ShardPartition]:
         sp = os.path.join(path, name)
-        records = stats.get(name, (None, None))[1]
-        offsets = codec.read_index(sp).offsets if records is None else None
-        n = len(offsets) if offsets is not None else records
+        offsets = probed[name][1]
+        n = len(offsets) if offsets is not None else stats[name][1]
         k = min(n, -(-sizes[name] // max_split))
         cuts = [n * i // k for i in range(k + 1)] if k > 0 else []
         return [
@@ -326,9 +332,8 @@ def _plan_partitions(
             for lo, hi in zip(cuts, cuts[1:])
         ]
 
-    big = [n for n in names if sizes[n] > max_split]
-    split = dict(zip(big, io_map(ranges, big)))
-    whole_left = len(names) - len(big)
+    split = {n: ranges(n) for n in names if sizes[n] > max_split}
+    whole_left = len(names) - len(split)
     # bins needed so the plan has >= min(#shards, parallelism) tasks
     floor = min(whole_left, parallelism - sum(len(r) for r in split.values()))
     slots: list = []  # range partitions and bin member lists, in name order
@@ -485,14 +490,13 @@ class ShardPackReader(DataSourceReader):
     pushFilters while spark.sql.python.filterPushdown.enabled is false, so
     the pruning variant below is chosen only when the conf is on."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int | None = None):
         self.path = _norm_path(options.get("path"))
         if not self.path:
             raise codec.ShardPackIOError("shardpack reader requires a path")
         self.verify = str(options.get("verify_checksums", "true")).lower() == "true"
         self.split_target = int(options.get("split_target_bytes", 128 * 1024 * 1024))
-        dp = options.get("default_parallelism")  # internal: set by read_shardpack
-        self.parallelism = int(dp) if dp else None
+        self.parallelism = parallelism  # cores to plan for; None: this process's
         self.skip_payload = str(options.get("skip_payload", "false")).lower() == "true"
         self.metadata_only = str(options.get("metadata_only", "false")).lower() == "true"
         # modality-selective decode: JSON list of entry file names whose
@@ -994,12 +998,13 @@ class ShardPackStreamReader(DataSourceStreamReader):
     executors read as Arrow batches — the driver never materializes
     records, so multi-shard backfills scale like a batch scan."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, parallelism: int | None = None):
         self.path = _norm_path(options.get("path"))
         if not self.path:
             raise codec.ShardPackIOError("shardpack stream reader requires a path")
         self.verify = str(options.get("verify_checksums", "true")).lower() == "true"
         self.split_target = int(options.get("split_target_bytes", 128 * 1024 * 1024))
+        self.parallelism = parallelism  # as ShardPackReader's
         # Admission control: cap how many shards a micro-batch admits so a
         # deep backlog (or a bulk import landing mid-stream) drains as
         # bounded batches instead of one giant catch-up batch.  0 = no cap.
@@ -1091,7 +1096,11 @@ class ShardPackStreamReader(DataSourceStreamReader):
                 self.where_meta_range,
             )
         return _plan_partitions(
-            self.path, names, self.split_target, _manifest_stats(self.path, manifest)
+            self.path,
+            names,
+            self.split_target,
+            _manifest_stats(self.path, manifest),
+            self.parallelism,
         )
 
     def commit(self, end: dict) -> None:
@@ -1245,7 +1254,13 @@ class ShardPackStreamWriter(DataSourceStreamArrowWriter):
 
 
 class ShardPackDataSource(DataSource):
-    """format("shardpack") — register with spark.dataSource.register."""
+    """format("shardpack") — register with register(spark)."""
+
+    # the registering session's defaultParallelism: register() sets it
+    # before the class is pickled by value, so batch loads, read_shardpack
+    # and readStream all size read tasks for the session's cores rather
+    # than the planning worker's CPUs
+    parallelism: int | None = None
 
     @classmethod
     def name(cls) -> str:
@@ -1263,13 +1278,13 @@ class ShardPackDataSource(DataSource):
         # automatically driver-side.
         prune = str(self.options.get("prune_by_key", "false")).lower() == "true"
         cls = ShardPackPruningReader if prune else ShardPackReader
-        return cls(self.options)
+        return cls(self.options, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> ShardPackWriter:
         return ShardPackWriter(self.options, overwrite)
 
     def streamReader(self, schema: StructType) -> ShardPackStreamReader:  # noqa: N802
-        return ShardPackStreamReader(self.options)
+        return ShardPackStreamReader(self.options, self.parallelism)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> ShardPackStreamWriter:  # noqa: N802
         return ShardPackStreamWriter(self.options)
@@ -1321,6 +1336,7 @@ def register(spark) -> None:
     if getattr(spark, "_shardpack_registered", False):
         return
     _pickle_by_value()
+    ShardPackDataSource.parallelism = spark.sparkContext.defaultParallelism
     spark.dataSource.register(ShardPackDataSource)
     spark._shardpack_registered = True
 
@@ -2300,9 +2316,6 @@ def read_shardpack(
         == "true"
     ):
         options["prune_by_key"] = "true"
-    # plan read tasks for this session's cores, not the planning
-    # process's (_plan_partitions' bytes-per-core rule)
-    options.setdefault("default_parallelism", spark.sparkContext.defaultParallelism)
     if (
         columns is not None
         and not explode_entries  # exploded view consumes the entries array

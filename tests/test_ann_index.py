@@ -81,11 +81,12 @@ def test_probe_reads_subset_of_shards(spark, built):
     if n_shards < 3:
         pytest.skip("index fits too few shards at this SF")
     probed = read_ann_codes(spark, path, [coarse[0][0]])
-    # count the shards the pruned plan covers, not its partitions: a
-    # partition may be a bin of several shards
-    r = ShardPackPruningReader({"path": path, "prune_by_key": "true"})
+    cores = spark.sparkContext.defaultParallelism
+    r = ShardPackPruningReader({"path": path, "prune_by_key": "true"}, cores)
     r.pushFilters([EqualTo(("key",), f"b/{int(coarse[0][0]):08d}")])
-    assert len({m for p in r.partitions() for m in p.group or [p.path]}) < n_shards
+    # the probe plans the reader-level pruned plan, which has fewer tasks
+    # than the min(#shards, cores) an unpruned plan never goes below
+    assert probed.rdd.getNumPartitions() == len(r.partitions()) < min(n_shards, cores)
     assert probed.count() > 0
 
 

@@ -74,7 +74,7 @@ def test_write_read_round_trip(spark_ds, sf_dir, tmp_path):
 def test_multiple_shards_multiple_partitions(spark_ds, sf_dir, tmp_path):
     """16 KiB shards pack into bins by bytes per core: fewer tasks than
     shards, never fewer than min(#shards, cores), every record read once."""
-    from shardpack_spark.format.datasource import read_shardpack
+    from shardpack_spark.format.datasource import ShardPackReader, read_shardpack
 
     out = str(tmp_path / "ds")
     src = _docs_as_records(spark_ds, sf_dir)
@@ -83,17 +83,17 @@ def test_multiple_shards_multiple_partitions(spark_ds, sf_dir, tmp_path):
     ).mode("append").save(out)
     shards = codec.list_shards(out)
     assert len(shards) > 3
-    two = read_shardpack(spark_ds, out, default_parallelism=2)
-    assert 2 <= two.rdd.getNumPartitions() < len(shards)
-    assert two.count() == src.count()
-    # by default the session's parallelism; a plain load (nothing
-    # passed) plans for this process's CPUs
+    two = ShardPackReader({"path": out}, 2).partitions()
+    assert 2 <= len(two) < len(shards)
+    assert _planned_shards(two) == {os.path.basename(s) for s in shards}
+    # read_shardpack and a plain load both plan for the session's cores,
+    # which register() records on the data source
     cores = spark_ds.sparkContext.defaultParallelism
-    for df, n in (
-        (read_shardpack(spark_ds, out), cores),
-        (spark_ds.read.format("shardpack").load(out), os.cpu_count()),
-    ):
-        assert min(len(shards), n) <= df.rdd.getNumPartitions() <= len(shards)
+    planned = len(ShardPackReader({"path": out}, cores).partitions())
+    assert min(len(shards), cores) <= planned <= len(shards)
+    for df in (read_shardpack(spark_ds, out), spark_ds.read.format("shardpack").load(out)):
+        assert df.rdd.getNumPartitions() == planned
+        assert df.count() == src.count()
 
 
 def test_overwrite_mode(spark_ds, sf_dir, tmp_path):
@@ -163,7 +163,10 @@ def test_range_filter_prunes_partitions(spark_ds, sf_dir, tmp_path):
         (F.col("key") >= lo) & (F.col("key") < hi)
     )
     assert rng.count() == 20
-    assert rng.rdd.getNumPartitions() < len(shards)
+    # an unpruned plan never has fewer than min(#shards, cores) tasks, so
+    # binning cannot pass this without pruning
+    cores = spark_ds.sparkContext.defaultParallelism
+    assert rng.rdd.getNumPartitions() < min(len(shards), cores)
 
     def kept(filters):
         # the shard set the plan covers, not its (binned) partition count
@@ -1383,7 +1386,7 @@ def test_small_shard_coalescing(spark_ds, tmp_path):
     w.close()
     convert_to_dataset(spark_ds, out, key_stats=False)
 
-    parts = ShardPackReader({"path": out, "default_parallelism": "8"}).partitions()
+    parts = ShardPackReader({"path": out}, 8).partitions()
     assert 8 <= len(parts) < 16  # ~one bin per core, not n tasks
     grouped = [p for p in parts if p.group]
     assert grouped and sum(len(p.group) for p in grouped) + (
@@ -1393,7 +1396,7 @@ def test_small_shard_coalescing(spark_ds, tmp_path):
 
     # more cores than shards: bytes per core fall to the open cost, so
     # every shard keeps its own task
-    wide = ShardPackReader({"path": out, "default_parallelism": str(2 * n)}).partitions()
+    wide = ShardPackReader({"path": out}, 2 * n).partitions()
     assert len(wide) == n and not any(p.group for p in wide)
 
     # grouped partitions compose with the payload-skipping projection
@@ -1513,7 +1516,7 @@ def test_limit_records_tail_cut_survives_binning(spark_ds, tmp_path):
 
     out = str(tmp_path / "tiny")
     w = codec.DatasetWriter(out, basename="t", target_shard_bytes=1024)
-    for i in range(400):
+    for i in range(1600):
         w.write(
             codec.Record(
                 key=f"k{i:04d}",
@@ -1523,25 +1526,22 @@ def test_limit_records_tail_cut_survives_binning(spark_ds, tmp_path):
     w.close()
     convert_to_dataset(spark_ds, out, key_stats=False)
     shards = sorted(_load_manifest(out)["shards"], key=lambda s: s["path"])
-    cores = 4
+    cores = spark_ds.sparkContext.defaultParallelism
     m = 3 * cores  # whole shards before the cut one
     assert len(shards) > m and shards[m]["records"] > 2
     n = sum(s["records"] for s in shards[:m]) + 2
 
-    parts = ShardPackReader(
-        {"path": out, "limit_records": str(n), "default_parallelism": str(cores)}
-    ).partitions()
+    parts = ShardPackReader({"path": out, "limit_records": str(n)}, cores).partitions()
     assert any(p.group for p in parts)  # the prefix is binned
     assert parts[-1].rec_range == (0, 2)
     assert parts[-1].path == os.path.join(out, shards[m]["path"])
     assert _planned_shards(parts) == {s["path"] for s in shards[: m + 1]}
-    got = read_shardpack(spark_ds, out, limit_records=n, default_parallelism=cores)
-    assert got.count() == n
+    assert read_shardpack(spark_ds, out, limit_records=n).count() == n
 
 
 def _grouped_dataset(spark, sp_rows, out):
-    """600 records over several shards per `lang` partition: one write and
-    two appends, 4 KiB shards."""
+    """600 records over many shards per `lang` partition: one write and
+    two appends, 1 KiB shards (more shards than a 32-core session's bins)."""
     rows = [
         (
             f"k{i:04d}",
@@ -1553,7 +1553,7 @@ def _grouped_dataset(spark, sp_rows, out):
     for lo, hi in ((0, 300), (300, 450), (450, 600)):
         sp_rows(spark, rows[lo:hi]).coalesce(1).write.format("shardpack").option(
             "partition_by", "lang"
-        ).option("target_shard_bytes", 4096).mode("append").save(out)
+        ).option("target_shard_bytes", 1024).mode("append").save(out)
     return len(rows)
 
 
@@ -1568,7 +1568,7 @@ def test_grouped_scan_matches_facade_and_shard_column(spark_ds, sp_rows, tmp_pat
 
     out = str(tmp_path / "grouped")
     n = _grouped_dataset(spark_ds, sp_rows, out)
-    parts = ShardPackReader({"path": out, "default_parallelism": "2"}).partitions()
+    parts = ShardPackReader({"path": out}, spark_ds.sparkContext.defaultParallelism).partitions()
     assert any(p.group for p in parts)
 
     def digest(entries):
@@ -1577,9 +1577,9 @@ def test_grouped_scan_matches_facade_and_shard_column(spark_ds, sp_rows, tmp_pat
             h.update(f"{name}\0{ctype}\0{len(data)}\0".encode() + bytes(data))
         return h.hexdigest()
 
-    rows = read_shardpack(
-        spark_ds, out, with_shard_column="true", default_parallelism=2
-    ).collect()
+    df = read_shardpack(spark_ds, out, with_shard_column="true")
+    assert df.rdd.getNumPartitions() == len(parts)  # the binned plan
+    rows = df.collect()
     got = Counter(
         (
             r["key"],
@@ -1608,12 +1608,14 @@ def test_grouped_scan_matches_facade_and_shard_column(spark_ds, sp_rows, tmp_pat
 def test_grouped_plan_in_vanilla_session(spark_ds, sp_rows, tmp_path):
     """A binned plan pickles by value: a vanilla local[2] session started
     outside the repo (its Python workers cannot import the package) reads
-    every record and every shard through grouped partitions."""
+    every record and every shard through grouped partitions.  Batch loads
+    and readStream plan for the session's 2 cores, not the host's CPUs."""
     import subprocess
     import sys
 
     out = str(tmp_path / "grouped")
     n = _grouped_dataset(spark_ds, sp_rows, out)
+    ckpt = str(tmp_path / "ckpt")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = f"""
 import sys
@@ -1621,10 +1623,22 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
 from shardpack_spark.format.datasource import ShardPackReader, read_shardpack
 spark = SparkSession.builder.master("local[2]").getOrCreate()
-parts = ShardPackReader({{"path": {out!r}, "default_parallelism": "2"}}).partitions()
+opts = {{"split_target_bytes": str(1 << 40)}}  # bins sized by cores alone
+parts = ShardPackReader({{"path": {out!r}, **opts}}, 2).partitions()
 assert any(p.group for p in parts), parts
-df = read_shardpack(spark, {out!r}, with_shard_column="true")
-assert df.rdd.getNumPartitions() == len(parts)
+df = read_shardpack(spark, {out!r}, with_shard_column="true", **opts)
+plain = spark.read.format("shardpack").options(**opts).load({out!r})
+assert df.rdd.getNumPartitions() == plain.rdd.getNumPartitions() == len(parts)
+seen = []
+q = (
+    spark.readStream.format("shardpack").options(**opts).load({out!r}).writeStream
+    .foreachBatch(lambda b, _: seen.append(b.rdd.getNumPartitions()))
+    .option("checkpointLocation", {ckpt!r})
+    .trigger(availableNow=True)
+    .start()
+)
+q.awaitTermination()
+assert seen == [len(parts)], (seen, len(parts))
 print(df.count(), df.select("_shard").distinct().count())
 spark.stop()
 """

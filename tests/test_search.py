@@ -143,22 +143,19 @@ def test_max_df_drops_stopword_terms(spark, sf_dir, con, tmp_path):
 
 
 def test_in_filter_prunes_index_shards(spark, con, index_path):
-    """key IN (...) pruning: a 2-term probe plans a strict subset of the
-    index's shards."""
-    from pyspark.sql.datasource import In
-
+    """key IN (...) pushdown: a 2-term probe opens O(1) shards."""
     from shardpack_spark.format import codec
-    from shardpack_spark.format.datasource import ShardPackPruningReader
+    from shardpack_spark.format.datasource import read_shardpack
 
     n_shards = len(codec.list_shards(index_path))
     if n_shards < 2:
         pytest.skip("index fits one shard at this SF")
     t1, t2 = _pick_terms(con, n=2)
-    # count the shards the pruned plan covers, not its partitions: a
-    # partition may be a bin of several shards
-    r = ShardPackPruningReader({"path": index_path, "prune_by_key": "true"})
-    r.pushFilters([In(("key",), (t1, t2))])
-    assert len({m for p in r.partitions() for m in p.group or [p.path]}) < n_shards
+    probed = read_shardpack(spark, index_path).filter(F.col("key").isin([t1, t2]))
+    # an unpruned plan never has fewer than min(#shards, cores) tasks, so
+    # binning cannot pass this without pruning
+    cores = spark.sparkContext.defaultParallelism
+    assert probed.rdd.getNumPartitions() < min(n_shards, cores)
 
 
 def test_reader_in_and_prefix_pruning(spark, sf_dir, tmp_path):
