@@ -164,6 +164,7 @@ from pyspark.sql.types import (
 )
 
 from shardpack_spark.format import codec, storage
+from shardpack_spark.format.stream_offsets import CappedListingOffsets
 from shardpack_spark.format.commit import (  # noqa: F401  (re-exported:
     # the writer-side commit protocol lives pyspark-free in format.commit
     # so the Spark-free writer facade shares ONE implementation; existing
@@ -1008,7 +1009,7 @@ class ShardPackStreamReader(DataSourceStreamReader):
         # Admission control: cap how many shards a micro-batch admits so a
         # deep backlog (or a bulk import landing mid-stream) drains as
         # bounded batches instead of one giant catch-up batch.  0 = no cap.
-        self.max_shards = int(options.get("max_shards_per_batch", 0))
+        max_shards = int(options.get("max_shards_per_batch", 0))
         self.shard_column = str(options.get("with_shard_column", "false")).lower() == "true"
         # metadata data skipping for stream consumers (a tailer of one
         # partition/lang must not read every committed shard): same
@@ -1020,24 +1021,6 @@ class ShardPackStreamReader(DataSourceStreamReader):
         self.where_meta: dict[str, str] | None = json.loads(wm) if wm else None
         wmr = options.get("where_meta_range")
         self.where_meta_range: dict | None = json.loads(wmr) if wmr else None
-        self._last = ""  # high-watermark of the newest offset handed out
-        # False until initialOffset (fresh query) or partitions (any
-        # running query) — a RESTARTED reader's first latestOffset must
-        # not return a capped offset, see stream_offsets module doc: the
-        # engine logs it even when it sorts below the checkpoint, and a
-        # crash before the next batch advances past the old watermark
-        # would make the following restart re-deliver everything between
-        self._primed = False
-        # Restart safety for admission control: the engine is free to call
-        # latestOffset() on a fresh reader BEFORE anything reveals the
-        # checkpointed position (initialOffset is not called on restart),
-        # so a capped offset can momentarily sort BELOW the committed
-        # watermark.  That alone must never re-deliver data: partitions()
-        # learns the true position from the engine's own start offset and
-        # keeps it as a consumed FLOOR — shards at or below the floor are
-        # never emitted again, so a regressed batch is empty rather than a
-        # duplicate, and the cap re-engages from the floor afterwards.
-        self._floor = ""
         # earliest (default) replays the whole committed history; latest
         # tails from the shards committed as of query START (the standard
         # startingOffsets=latest semantics — only NEW commits flow).
@@ -1049,44 +1032,25 @@ class ShardPackStreamReader(DataSourceStreamReader):
             raise codec.ShardPackIOError(
                 f"starting_position must be earliest|latest, got {sp!r}"
             )
-        self.starting_position = sp
+        # offset/floor/admission-control discipline shared with the WARC
+        # stream source (see stream_offsets module doc)
+        self._offsets = CappedListingOffsets(
+            lambda: _visible_shards(self.path), max_shards, sp
+        )
 
     def initialOffset(self) -> dict:  # noqa: N802
-        self._primed = True
-        if self.starting_position == "latest":
-            names = _visible_shards(self.path)
-            return {"last": names[-1] if names else ""}
-        return {"last": ""}
+        return self._offsets.initial()
 
     def latestOffset(self) -> dict:  # noqa: N802
-        names = _visible_shards(self.path)
-        if not self.max_shards:
-            return {"last": names[-1] if names else ""}
-        if not self._primed:
-            # restarted query: one uncapped (monotone) offset, so the
-            # offset log can never regress below the checkpoint; the cap
-            # re-engages next trigger once partitions() reveals the floor
-            self._primed = True
-            if names:
-                self._last = max(self._last, names[-1])
-            return {"last": self._last}
-        pending = [n for n in names if n > self._last]
-        if pending:
-            self._last = pending[: self.max_shards][-1]
-        return {"last": self._last}
+        return self._offsets.latest()
 
     def partitions(self, start: dict, end: dict) -> Sequence[ShardPartition]:
-        self._primed = True
-        lo, hi = start.get("last", ""), end.get("last", "")
-        # the engine's start offset IS the consumed position: remember the
-        # highest one ever seen and never hand out offsets below it again
-        self._floor = max(self._floor, lo)
-        self._last = max(self._last, self._floor, hi)
+        lo, hi = self._offsets.advance(start, end)
         manifest = _load_manifest(self.path)
         names = [
             n
             for n in _visible_shards(self.path, manifest)
-            if lo < n <= hi and n > self._floor
+            if lo < n <= hi
         ]
         if self.where_meta or self.where_meta_range:
             names = _names_matching_meta(
@@ -1104,10 +1068,7 @@ class ShardPackStreamReader(DataSourceStreamReader):
         )
 
     def commit(self, end: dict) -> None:
-        # offsets live in the query checkpoint; track committed progress so
-        # the post-restart cap resumes from the right place
-        self._floor = max(self._floor, end.get("last", ""))
-        self._last = max(self._last, self._floor)
+        self._offsets.commit(end)
 
     def read(self, partition: ShardPartition):
         # schema() advertises _shard for streams too — batches must match
@@ -1307,6 +1268,7 @@ def _pickle_by_value() -> None:
     from shardpack_spark.format import commit as commit_mod
     from shardpack_spark.format import manifest as manifest_mod
     from shardpack_spark.format import storage as storage_mod
+    from shardpack_spark.format import stream_offsets as offsets_mod
     from shardpack_spark.format import writer as writer_mod
 
     # order matters only in that EVERY module codec references at module
@@ -1319,6 +1281,7 @@ def _pickle_by_value() -> None:
         manifest_mod,
         commit_mod,
         writer_mod,
+        offsets_mod,
         sys.modules[__name__],
     ):
         try:

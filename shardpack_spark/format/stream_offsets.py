@@ -1,6 +1,7 @@
 """Offset / floor / admission-control discipline for listing-backed
-stream sources (``format("warc")``; the shardpack stream reader applies
-the same rules inline for manifest-visible shards).
+stream sources: ``format("warc")`` over crawl files and the shardpack
+stream reader over manifest-visible shards both delegate to
+:class:`CappedListingOffsets`.
 
 The Python DataSourceStreamReader API gives ``latestOffset()`` no start
 hint (unlike Kafka's ``latestOffset(start, limit)``), which makes capped

@@ -151,8 +151,9 @@ def minhash_signatures_oph(
     return agged.select("sid", F.expr(_oph_densify_sql("m", n_bins)).alias("sig"))
 
 
-def _oph_densify(sparse, n_bins: int):
-    """Rotation densification of a sparse (NULL-holed) per-bin min array.
+def _oph_densify_sql(map_col: str, n_bins: int) -> str:
+    """Rotation densification of the ``(bin -> min)`` map column
+    ``map_col``, expanded to a sparse (NULL-holed) per-bin array.
 
     Runs over the doubled array: after one full cycle every slot has seen
     a non-empty bin (a doc always has >= 1), so the second half is fully
@@ -160,35 +161,8 @@ def _oph_densify(sparse, n_bins: int):
     distance): two docs agree on a filled slot exactly when they borrowed
     EQUAL values at EQUAL distance (the rotation-densification agreement
     rule), and hashing avoids the long-overflow a wraparound add would
-    hit under ANSI."""
-    doubled = F.concat(sparse, sparse)
-    acc0 = F.struct(
-        F.array().cast("array<bigint>").alias("out"),
-        F.lit(None).cast("bigint").alias("last"),
-        F.lit(0).alias("dist"),
-    )
-    return F.aggregate(
-        doubled,
-        acc0,
-        lambda acc, x: F.struct(
-            F.concat(
-                acc["out"],
-                F.array(F.coalesce(x, F.xxhash64(acc["last"], acc["dist"]))),
-            ).alias("out"),
-            F.coalesce(x, acc["last"]).alias("last"),
-            F.when(x.isNull(), acc["dist"] + 1).otherwise(F.lit(0)).alias("dist"),
-        ),
-        lambda acc: F.slice(acc["out"], n_bins + 1, n_bins),
-    )
-
-
-def _oph_densify_sql(map_col: str, n_bins: int) -> str:
-    """:func:`_oph_densify` (including the sparse per-bin expansion of the
-    ``(bin -> min)`` map column ``map_col``) as ONE SQL string — a single
-    py4j round trip instead of ~40 building the fold through the Column
-    API.  The parsed tree matches the Column version node for node: same
-    INT ``j`` index and ``dist`` counter, same BIGINT ``last``, same
-    ``xxhash64(last, dist)`` fill — so signatures are bit-identical."""
+    hit under ANSI.  One parsed SQL string: a single py4j round trip
+    instead of ~40 building the fold through the Column API."""
     sparse = (
         f"transform(sequence(0, {int(n_bins) - 1}), "
         f"j -> element_at({map_col}, CAST(j AS INT)))"
@@ -234,9 +208,12 @@ def minhash_oph_profiles(
     counts shingle rows, not set size, preserving the historical
     collision semantics of the verify aggregation.
 
-    Feed ``select("sid", "sig")`` to banding/prefilter and pass
-    ``select("sid", "shset", "n")`` as ``jaccard_pairs_exact(sets=...)``;
-    persist the profile when both consumers run in one job."""
+    Persist the profile, feed ``select("sid", "sig")`` to
+    ``minhash_lsh_candidates`` and verify the candidates against the
+    whole profile with ``verify_candidates_with_profiles`` — the chain
+    q29's 'oph' variant and ``queries.llm.fuzzy_dedup_lsh`` run.  (The
+    ``select("sid", "shset", "n")`` projection also serves as
+    ``jaccard_pairs_exact(sets=...)``.)"""
     h = F.xxhash64("shingle", F.lit(seed * _SEED_MIX))
     per_bin = (
         shingled.groupBy("sid", F.pmod(h, F.lit(n_bins)).alias("bin"))
@@ -456,15 +433,10 @@ def incremental_near_dup(
     b = corpus_signatures.select(
         F.col("sid").alias("sid_corpus"), F.col("sig").alias("__sb")
     )
-    agree = F.aggregate(
-        F.zip_with("__sa", "__sb", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     return (
         cand.join(a, "sid_new")
         .join(b, "sid_corpus")
-        .withColumn("est", agree / F.size("__sa"))
+        .withColumn("est", F.expr(_sig_estimate_sql()))
         .filter(F.col("est") >= threshold)
         .groupBy("sid_new")
         .agg(F.min("sid_corpus").alias("dup_of"), F.max("est").alias("est"))
@@ -473,9 +445,8 @@ def incremental_near_dup(
 
 def _sig_estimate_sql(sa: str = "__sa", sb: str = "__sb") -> str:
     """Fraction of agreeing signature components as one SQL string (the
-    unbiased Jaccard estimator).  Same tree as the former Column-lambda
-    build: INT 0/1 agreement, INT left-fold sum, INT/INT division
-    yielding DOUBLE."""
+    unbiased Jaccard estimator): INT 0/1 agreement, INT left-fold sum,
+    INT/INT division yielding DOUBLE."""
     return (
         f"(aggregate(zip_with({sa}, {sb}, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), "
         f"0, (acc, x) -> acc + x) / size({sa}))"
@@ -533,9 +504,7 @@ def verify_candidates_with_profiles(
         "sid AS sid_b", "sig AS __sb", "shset AS sb", "n AS nb"
     )
     # signature estimate + exact Jaccard as parsed exprs (one py4j round
-    # trip each vs ~40 through the Column lambda API); identical trees —
-    # INT agree counter, INT/INT division yielding DOUBLE, same
-    # double-cast Jaccard
+    # trip each vs ~40 through the Column lambda API)
     return (
         hint(candidates)
         .join(a, "sid_a")
@@ -552,142 +521,6 @@ def verify_candidates_with_profiles(
         .filter(F.expr(f"jac >= {float(threshold)!r}D"))
         .select("sid_a", "sid_b", "jac")
     )
-
-
-def oph_profile_sql(shingle_view: str, n_bins: int = 64, seed: int = 42) -> str:
-    """:func:`minhash_oph_profiles` over a registered (sid, shingle) view
-    as ONE SQL statement — a single parse instead of ~100 py4j round
-    trips through the DataFrame/Column API (plan CONSTRUCTION latency,
-    not execution: the bench rebuilds every plan inside the timed
-    region).  The analyzed tree is identical: same two-level aggregate
-    (per-(sid, pmod(hash, n_bins)) min/collect_set/count, then per-sid
-    map pivot + flatten + sum), same seeded ``xxhash64``, same
-    ``_oph_densify_sql`` expression — signatures, sets and counts are
-    bit-identical (pinned by tests/test_sql_expr_twins.py)."""
-    h = f"xxhash64(shingle, {int(seed) * _SEED_MIX})"
-    return f"""
-    SELECT sid, {_oph_densify_sql('m', int(n_bins))} AS sig, shset, n
-    FROM (
-      SELECT sid,
-             map_from_entries(collect_list(struct(bin, mh))) AS m,
-             flatten(collect_list(bs)) AS shset,
-             sum(bn) AS n
-      FROM (
-        SELECT sid, pmod({h}, {int(n_bins)}) AS bin,
-               min({h}) AS mh,
-               collect_set(shingle) AS bs,
-               count(1) AS bn
-        FROM {shingle_view}
-        GROUP BY sid, pmod({h}, {int(n_bins)})
-      )
-      GROUP BY sid
-    )
-    """
-
-
-def shingles_sql(
-    docs_view: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    repartition: int | None = None,
-) -> str:
-    """:func:`char_shingles(hashed=True)` over a registered documents view
-    as a SQL fragment — same row-local array_distinct + explode +
-    ``xxhash64``, optional round-robin ``REPARTITION(n)`` hint matching
-    ``df.repartition(n)`` (rows never leave their partition otherwise, so
-    partitioning cannot change results; pinned row-identical by
-    tests/test_sql_expr_twins.py)."""
-    # the hint goes on an inner projection so the round-robin exchange
-    # sits BELOW the explode, exactly like df.repartition(n) before
-    # char_shingles — the shingle work is what needs spreading, not the
-    # already-exploded rows
-    if repartition is not None and int(repartition) < 1:
-        raise ValueError(f"repartition must be >= 1, got {repartition}")
-    src = (
-        f"(SELECT /*+ REPARTITION({int(repartition)}) */ {id_col}, {text_col}"
-        f" FROM {docs_view})"
-        if repartition is not None
-        else docs_view
-    )
-    return (
-        f"SELECT {id_col} AS sid, xxhash64(shingle) AS shingle FROM ("
-        f"SELECT {id_col}, explode(array_distinct(transform("
-        f"sequence(1, length({text_col}) - {int(k) - 1}),"
-        f" i -> substring({text_col}, i, {int(k)})))) AS shingle"
-        f" FROM {src} WHERE length({text_col}) >= {int(k)})"
-    )
-
-
-def oph_profile_from_docs_sql(
-    docs_view: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    n_bins: int = 64,
-    seed: int = 42,
-    repartition: int | None = None,
-) -> str:
-    """:func:`oph_profile_sql` with the shingle step folded in: the whole
-    docs -> shingles -> OPH profile pipeline as ONE parsed statement.
-    Used by plan-rebuilt-per-pass callers (bench) where even the shingle
-    chain's ~15 Column-API round trips are measurable driver latency;
-    library callers that share the shingle table across variants keep
-    the two-step form."""
-    return oph_profile_sql(
-        f"({shingles_sql(docs_view, text_col=text_col, id_col=id_col, k=k, repartition=repartition)})",
-        n_bins=n_bins,
-        seed=seed,
-    )
-
-
-def oph_verify_sql(
-    profile_view: str,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    threshold: float = 0.8,
-    min_estimate: float = 0.6,
-) -> str:
-    """:func:`minhash_lsh_candidates` + :func:`verify_candidates_with_profiles`
-    over a registered (usually persisted) profile view as ONE SQL
-    statement — same banded self-join (band slice hash, sid_a < sid_b,
-    DISTINCT), same broadcast-hinted candidate attach, same signature
-    estimate gate and exact ``array_intersect`` Jaccard with the same
-    double casts.  Returns (sid_a, sid_b, jac) with jac UN-rounded,
-    exactly like the operator chain (callers canonicalize)."""
-    banded = (
-        f"SELECT sid, bb.band AS band, bb.bh AS bh FROM ("
-        f"SELECT sid, explode(transform(sequence(0, {int(bands) - 1}), "
-        f"b -> struct(b AS band, xxhash64(slice(sig, b * {int(rows_per_band)} + 1, "
-        f"{int(rows_per_band)})) AS bh))) AS bb FROM {profile_view})"
-    )
-    return f"""
-    WITH cand AS (
-      SELECT DISTINCT l.sid AS sid_a, r.sid AS sid_b
-      FROM ({banded}) l
-      JOIN ({banded}) r
-        ON l.band = r.band AND l.bh = r.bh AND l.sid < r.sid
-    )
-    SELECT sid_a, sid_b, jac
-    FROM (
-      SELECT sid_a, sid_b,
-             CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE) AS jac
-      FROM (
-        SELECT sid_a, sid_b, na, nb, size(array_intersect(sa, sb)) AS inter
-        FROM (
-          SELECT /*+ BROADCAST(c) */ c.sid_a, c.sid_b,
-                 a.__sa, a.sa, a.na, b.__sb, b.sb, b.nb
-          FROM cand c
-          JOIN (SELECT sid AS sid_a, sig AS __sa, shset AS sa, n AS na
-                FROM {profile_view}) a USING (sid_a)
-          JOIN (SELECT sid AS sid_b, sig AS __sb, shset AS sb, n AS nb
-                FROM {profile_view}) b USING (sid_b)
-          WHERE {_sig_estimate_sql()} >= {float(min_estimate)!r}D
-        )
-      )
-    )
-    WHERE jac >= {float(threshold)!r}D
-    """
 
 
 def jaccard_pairs_exact(

@@ -20,27 +20,15 @@ and, at scale, for reproducible reruns.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(a, b) -> Column:
-    prod = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prod, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _norm(a) -> Column:
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
-
-
-# SQL-string twins of _dot/_norm.  Building the higher-order fold
-# expressions through the Column API costs ~30 py4j round trips EACH
-# (lambda registration + nested calls); a query that scores three ways
-# spent ~0.5 s of driver latency just constructing cosines.  One parsed
-# expr string is a single round trip, and the parsed tree is the same
-# expression node for node (same casts, same 0.0D zero, same left fold),
-# so scores are bit-identical.
+# The cosine fold as parsed SQL strings: building the higher-order fold
+# through the Column API costs ~30 py4j round trips EACH (lambda
+# registration + nested calls); a query that scores three ways spent
+# ~0.5 s of driver latency just constructing cosines.  One parsed expr
+# string is a single round trip.
 def _dot_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -59,24 +47,20 @@ def _cosine_sql(vec: str, q: str) -> str:
     return f"({_dot_sql(vec, q)}) / (({_norm_sql(vec)}) * ({_norm_sql(q)}))"
 
 
-def _query_lit(query_vec) -> Column:
-    """A pre-collected query vector as a literal array<double> column.
-
-    Element-wise identical to broadcasting the source row: the collected
-    values are float32 widened exactly to Python floats, and ``_dot`` /
-    ``_norm`` cast every element to double on both paths anyway — so a
-    literal-vs-broadcast query cannot change a single bit of the scores,
-    while removing the broadcast-build job (and, for sketched queries,
-    its Python-worker round trip) from every probe."""
-    return F.expr(_query_arr_sql(query_vec))
-
-
 def _query_arr_sql(query_vec) -> str:
-    """The same literal array<double> as ONE SQL string (one py4j round
-    trip instead of one per element).  ``repr`` of a Python float is the
-    shortest decimal that round-trips to the same IEEE double, and the
-    SQL double literal parse is correctly rounded, so every element is
-    bit-identical to ``F.lit(float(x))``."""
+    """A pre-collected query vector as a literal array<double>, as ONE
+    SQL string (one py4j round trip instead of one per element).
+
+    ``repr`` of a Python float is the shortest decimal that round-trips
+    to the same IEEE double, and the SQL double literal parse is
+    correctly rounded, so every element is bit-identical to
+    ``F.lit(float(x))``.  Element-wise identical to broadcasting the
+    source row too: the collected values are float32 widened exactly to
+    Python floats, and ``_cosine_sql`` casts every element to double on
+    both paths anyway — so a literal-vs-broadcast query cannot change a
+    single bit of the scores, while removing the broadcast-build job
+    (and, for sketched queries, its Python-worker round trip) from every
+    probe."""
     return "array(" + ",".join(f"{float(x)!r}D" for x in query_vec) + ")"
 
 
@@ -91,7 +75,7 @@ def cosine_scores(
 
     ``query_vec`` (a pre-collected number sequence) replaces the
     broadcast crossJoin with a literal vector — one job fewer per probe;
-    see :func:`_query_lit` for the value-identity argument."""
+    see :func:`_query_arr_sql` for the value-identity argument."""
     if query_vec is not None:
         # literal query inlined into ONE parsed cosine expr — no
         # intermediate __q projection, no per-element py4j chatter;

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shardpack_spark.operators import dedup, sampling, similarity, text
-from shardpack_spark.operators.skew import is_narrow, spread_if_narrow
+from shardpack_spark.operators.skew import spread_if_narrow
 from shardpack_spark.queries import register
 from shardpack_spark.queries.canon import round4d
 from shardpack_spark.tables import load_table
@@ -188,41 +188,27 @@ def _lsh_pairs(sh: DataFrame, oph: bool = False) -> DataFrame:
         # the scale path (verified pair-identical to classic on all SFs).
         # The fused profile carries the verify-side shingle sets through
         # the same two exchanges as the signature, so the corpus is
-        # exploded+hashed once.
-        #
-        # Built as TWO parsed SQL statements over views instead of the
-        # operator chain's ~350 py4j round trips: the bench rebuilds this
-        # plan every timed pass, and plan construction measured 1.02 ->
-        # 0.26 s (bench-protocol median 2.04 -> 1.41 s on the same
-        # window).  Same aggregates, joins, hints and expressions — the
-        # operator chain stays the library surface and
-        # tests/test_sql_expr_twins.py pins the two forms row-identical.
-        spark = sh.sparkSession
-        sh.createOrReplaceTempView("__q29_shingles")
-        prof = spark.sql(dedup.oph_profile_sql("__q29_shingles", n_bins=64, seed=42))
-        prof = prof.persist()
-        prof.createOrReplaceTempView("__q29_oph_prof")
-        # fused prefilter + verify: the estimate filter still guards the
-        # array_intersect, but candidates attach to the profile ONCE
-        # instead of through two separate join chains
-        return spark.sql(
-            dedup.oph_verify_sql(
-                "__q29_oph_prof", bands=16, rows_per_band=4,
-                threshold=0.8, min_estimate=0.6,
-            )
+        # exploded+hashed once; the fused prefilter + verify attaches the
+        # candidates to the profile ONCE, and the estimate filter still
+        # guards the array_intersect.
+        prof = dedup.minhash_oph_profiles(sh, n_bins=64, seed=42).persist()
+        cand = dedup.minhash_lsh_candidates(
+            prof.select("sid", "sig"), bands=16, rows_per_band=4
         )
-    else:
-        # classic minhash's 64 codegen'd min() aggregates cannot host a
-        # collect_set without degrading the whole aggregate to interpreted
-        # ObjectHashAggregate (see minhash_oph_profiles docstring), so the
-        # set fold stays a separate pass — but built ONCE and persisted,
-        # where the old plan recomputed it for each verify join side.
-        sigs = dedup.minhash_signatures(sh, n_hashes=64, seed=42).persist()
-        sets = (
-            sh.groupBy("sid")
-            .agg(F.collect_set("shingle").alias("shset"), F.count(F.lit(1)).alias("n"))
-            .persist()
+        return dedup.verify_candidates_with_profiles(
+            cand, prof, threshold=0.8, min_estimate=0.6
         )
+    # classic minhash's 64 codegen'd min() aggregates cannot host a
+    # collect_set without degrading the whole aggregate to interpreted
+    # ObjectHashAggregate (see minhash_oph_profiles docstring), so the set
+    # fold stays a separate pass — but built ONCE and persisted, where the
+    # old plan recomputed it for each verify join side.
+    sigs = dedup.minhash_signatures(sh, n_hashes=64, seed=42).persist()
+    sets = (
+        sh.groupBy("sid")
+        .agg(F.collect_set("shingle").alias("shset"), F.count(F.lit(1)).alias("n"))
+        .persist()
+    )
     cand = dedup.minhash_lsh_candidates(sigs, bands=16, rows_per_band=4)
     # signature prefilter kills the false-positive bulk from dense buckets
     # before the (comparatively expensive) exact shingle intersection
@@ -235,40 +221,17 @@ def fuzzy_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same pipeline as q29_fuzzy_dedup's 'oph' variant (one-permutation
     hashing: 1 hash per shingle instead of 64 — the configuration a
     100 TB dedup run would use; its pair output is held equal to the
-    exact-Jaccard anchor by q29's oracle), with the whole
-    docs -> shingles -> profile chain folded into the profile parse:
-    the bench rebuilds this plan every timed pass, and the shingle
-    Column chain + extra view were the last ~15 round trips of build
-    latency.  Row-identical to the operator-chain form by
-    tests/test_sql_expr_twins.py.
+    exact-Jaccard anchor by q29's oracle) and the same jac rounding.
 
     The profile persist is NOT unpersisted here (the returned plan
     references it); callers that rebuild this plan repeatedly must
     clear it between runs — bench.py clearCache()s before every timed
     pass (r10), which also re-materializes the profile inside the
     timed region."""
-    docs = load_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__q29_docs")
-    # spread the explode-and-hash work only when the scan is
-    # under-parallelized (single-split fixtures); a many-split real
-    # input skips the round-robin exchange entirely
-    par = spark.sparkContext.defaultParallelism
-    prof = spark.sql(
-        dedup.oph_profile_from_docs_sql(
-            "__q29_docs", k=5, n_bins=64, seed=42,
-            repartition=par if is_narrow(docs) else None,
-        )
-    ).persist()
-    prof.createOrReplaceTempView("__q29_oph_prof")
-    return spark.sql(
-        dedup.oph_verify_sql(
-            "__q29_oph_prof", bands=16, rows_per_band=4,
-            threshold=0.8, min_estimate=0.6,
-        )
+    return _lsh_pairs(_shingles(spark, sf_dir), oph=True).selectExpr(
         # round4d(jac) as one selectExpr: FLOOR(double)/double — the
         # identical IEEE op sequence (D suffixes matter: un-suffixed
         # 10000.0 would parse as DECIMAL and change the arithmetic)
-    ).selectExpr(
         "sid_a", "sid_b", "FLOOR(jac * 10000.0D + 0.5D) / 10000.0D AS jac"
     )
 
@@ -391,7 +354,7 @@ def q30b_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment's centroid collect, ivf's own, the query collect, and a
     # broadcast build with a dedicated Python sketch pass for the query.
     # Scores are bit-identical: literal query vectors widen float32 ->
-    # double exactly like the broadcast path (similarity._query_lit).
+    # double exactly like the broadcast path (similarity._query_arr_sql).
     pre = (
         emb.filter((F.col("vec_id") == 0) | (F.col("vec_id") % 50 == 7))
         .select("vec_id", "embedding")

@@ -1,0 +1,51 @@
+"""Session hygiene of the fuzzy-dedup library calls: building and running
+q29 or the bench's LSH path must not leave temp views in the session, and
+the package source must not register session-global ``__``-named views."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+import shardpack_spark
+from shardpack_spark.queries import load_all
+from shardpack_spark.queries.llm import _lsh_pairs, _shingles, fuzzy_dedup_lsh
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def test_fuzzy_dedup_leaves_no_temp_views(spark, sf_dir):
+    before = _temp_views(spark)
+    try:
+        fuzzy_dedup_lsh(spark, sf_dir).collect()
+        load_all()["q29_fuzzy_dedup"].builder(spark, sf_dir).collect()
+        assert _temp_views(spark) == before
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_q29_oph_reads_profile_from_cache(spark, sf_dir):
+    """The OPH profile has four readers (both banding sides and both
+    verify sides); they must read the persisted profile, not recompute
+    the corpus aggregation each."""
+    spark.catalog.clearCache()
+    try:
+        df = _lsh_pairs(_shingles(spark, sf_dir), oph=True)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_package_registers_no_dunder_temp_views():
+    pkg = pathlib.Path(shardpack_spark.__file__).parent
+    pat = re.compile(r"""create(OrReplace)?TempView\(\s*f?["']__""")
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if pat.search(p.read_text(encoding="utf-8"))
+    ]
+    assert offenders == []

@@ -1,12 +1,15 @@
-"""Round-9 optimization pin: the SQL-string expression twins must stay
-bit-identical to the Column-API originals they replaced.
+"""Pins for the parsed-SQL expression fragments.
 
-The optimization round rebuilt several higher-order fold expressions as
-single parsed SQL strings (one py4j round trip instead of dozens) on the
-claim that the parsed tree matches the Column build node for node.  The
-originals are kept in the modules; these tests evaluate BOTH forms over
-the same data and require exact equality, so a future edit to either
-twin that silently diverges the values fails here first.
+Several higher-order fold expressions are built as single parsed SQL
+strings (one py4j round trip instead of dozens through the Column API).
+Where a Column-API form of the same expression still exists in the
+package (query literal, marker count), the test evaluates BOTH forms over
+the same data and requires exact equality, so an edit to either side that
+silently diverges the values fails here first.  Where the SQL fragment is
+the only implementation (OPH densification, cosine, signature estimate),
+the test pins its known answers instead.  The OPH dedup pipeline itself
+has one implementation, the operator chain; the last test ties bench.py's
+q29 path to the oracle-certified q29 result.
 """
 
 from __future__ import annotations
@@ -21,51 +24,56 @@ def test_oph_densify_twins_bit_identical(spark):
     # aggregation produces; include a single-bin doc (max densification
     # borrowing) and a full map (no borrowing)
     n_bins = 8
-    rows = [
-        (1, {0: 11, 3: -7, 7: 5}),
-        (2, {4: 123456789}),
-        (3, {b: (b * 7919) - 4000 for b in range(n_bins)}),
-    ]
+    full = {b: (b * 7919) - 4000 for b in range(n_bins)}
+    rows = [(1, {0: 11, 3: -7, 7: 5}), (2, {4: 123456789}), (3, full)]
     df = spark.createDataFrame(rows, "sid INT, m MAP<INT, BIGINT>")
-    sparse = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bins - 1)),
-        lambda j: F.element_at(F.col("m"), j.cast("int")),
-    )
-    col_out = {
-        r["sid"]: r["sig"]
-        for r in df.select(
-            "sid", dedup._oph_densify(sparse, n_bins).alias("sig")
-        ).collect()
-    }
-    sql_out = {
+    out = {
         r["sid"]: r["sig"]
         for r in df.select(
             "sid", F.expr(dedup._oph_densify_sql("m", n_bins)).alias("sig")
         ).collect()
     }
-    assert col_out == sql_out
-    assert all(len(sig) == n_bins and None not in sig for sig in sql_out.values())
+    assert all(len(sig) == n_bins and None not in sig for sig in out.values())
+    # non-empty bins keep their own minimum; only holes are filled
+    assert [out[1][b] for b in (0, 3, 7)] == [11, -7, 5]
+    assert out[3] == [full[b] for b in range(n_bins)]
+    # the single-bin doc borrows its one value at 7 distinct distances
+    assert out[2][4] == 123456789
+    assert len(set(out[2])) == n_bins
 
 
 def test_cosine_twins_bit_identical(spark):
+    """_cosine_sql against a pure-Python reference with the same IEEE op
+    sequence: double casts, left-fold sums from 0.0, sqrt, one division."""
+    import math
+
     rows = [
         (1, [0.1, -0.25, 3.5], [1.0, 2.0, -0.5]),
         (2, [1e-8, 7.75, -2.125], [-0.3, 0.0, 9.5]),
         (3, [5.0, 5.0, 5.0], [5.0, 5.0, 5.0]),
+        (4, [3.0, 4.0], [-6.0, -8.0]),
     ]
     df = spark.createDataFrame(rows, "id INT, a ARRAY<DOUBLE>, b ARRAY<DOUBLE>")
-    col_cos = (
-        similarity._dot(F.col("a"), F.col("b"))
-        / (similarity._norm(F.col("a")) * similarity._norm(F.col("b")))
-    )
-    got_col = {r["id"]: r["c"] for r in df.select("id", col_cos.alias("c")).collect()}
-    got_sql = {
+    got = {
         r["id"]: r["c"]
         for r in df.select(
             "id", F.expr(similarity._cosine_sql("a", "b")).alias("c")
         ).collect()
     }
-    assert got_col == got_sql  # exact float equality: same fold, same order
+
+    def fold(xs):
+        acc = 0.0
+        for x in xs:
+            acc = acc + x
+        return acc
+
+    want = {
+        i: fold(x * y for x, y in zip(a, b))
+        / (math.sqrt(fold(x * x for x in a)) * math.sqrt(fold(y * y for y in b)))
+        for i, a, b in rows
+    }
+    assert got == want  # exact float equality: same fold, same order
+    assert got[4] == -1.0
 
 
 def test_query_literal_twin_bit_identical(spark):
@@ -87,20 +95,12 @@ def test_sig_estimate_twin_bit_identical(spark):
         (3, [1, 2, 3, 4], [5, 6, 7, 8]),
     ]
     df = spark.createDataFrame(rows, "id INT, __sa ARRAY<BIGINT>, __sb ARRAY<BIGINT>")
-    agree = F.aggregate(
-        F.zip_with("__sa", "__sb", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    got_col = {
-        r["id"]: r["e"]
-        for r in df.select("id", (agree / F.size("__sa")).alias("e")).collect()
-    }
-    got_sql = {
+    got = {
         r["id"]: r["e"]
         for r in df.select("id", F.expr(dedup._sig_estimate_sql()).alias("e")).collect()
     }
-    assert got_col == got_sql
+    assert got == {1: 0.5, 2: 1.0, 3: 0.0}
+    assert all(isinstance(v, float) for v in got.values())  # INT/INT -> DOUBLE
 
 
 def test_marker_count_twin_bit_identical(spark):
@@ -122,130 +122,22 @@ def test_marker_count_twin_bit_identical(spark):
     assert got_col == got_sql == {1: 3, 2: 1, 3: 0}
 
 
-def test_oph_pipeline_sql_twin_row_identical(spark, sf_dir):
-    """The two-statement SQL composition of the OPH pipeline (profile ->
-    banded candidates -> fused prefilter+verify) must reproduce the
-    operator chain row for row — it is what q29's oph variant and the
-    bench's LSH path now execute."""
-    from shardpack_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.char_shingles(docs, k=5, hashed=True)
-
-    # operator chain (library surface, unchanged)
-    prof_ops = dedup.minhash_oph_profiles(sh, n_bins=64, seed=42).persist()
-    cand = dedup.minhash_lsh_candidates(
-        prof_ops.select("sid", "sig"), bands=16, rows_per_band=4
-    )
-    ops_rows = sorted(
-        tuple(r)
-        for r in dedup.verify_candidates_with_profiles(
-            cand, prof_ops, threshold=0.8, min_estimate=0.6
-        ).collect()
-    )
-
-    # SQL composition
-    sh.createOrReplaceTempView("__twin_shingles")
-    prof_sql = spark.sql(dedup.oph_profile_sql("__twin_shingles", n_bins=64, seed=42))
-    prof_sql.createOrReplaceTempView("__twin_prof")
-    sql_rows = sorted(
-        tuple(r)
-        for r in spark.sql(
-            dedup.oph_verify_sql(
-                "__twin_prof", bands=16, rows_per_band=4,
-                threshold=0.8, min_estimate=0.6,
-            )
-        ).collect()
-    )
-
-    prof_ops.unpersist()
-    assert ops_rows == sql_rows
-    assert len(sql_rows) > 0  # non-vacuous at the oracle scale factors
-
-
-def test_shingles_sql_twin_row_identical(spark, sf_dir):
-    """shingles_sql must reproduce char_shingles(hashed=True) row for row
-    (same row-local array_distinct + explode + xxhash64), with and
-    without the round-robin REPARTITION hint (partitioning cannot change
-    the multiset of rows)."""
-    from shardpack_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    ops_rows = sorted(
-        tuple(r) for r in dedup.char_shingles(docs, k=5, hashed=True).collect()
-    )
-    docs.createOrReplaceTempView("__twin_docs")
-    plain = sorted(
-        tuple(r) for r in spark.sql(dedup.shingles_sql("__twin_docs", k=5)).collect()
-    )
-    spread = sorted(
-        tuple(r)
-        for r in spark.sql(
-            dedup.shingles_sql("__twin_docs", k=5, repartition=8)
-        ).collect()
-    )
-    assert ops_rows == plain == spread
-    assert len(plain) > 0
-
-
-def test_oph_profile_from_docs_sql_twin_row_identical(spark, sf_dir):
-    """The fully-folded docs -> shingles -> profile statement (what the
-    bench's LSH path now parses) must reproduce the two-step
-    shingle-view composition bit for bit: same signatures, same shingle
-    sets (order-canonicalized — collect_list order inside one row is not
-    a contract), same counts."""
-    from shardpack_spark.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = dedup.char_shingles(docs, k=5, hashed=True)
-    sh.createOrReplaceTempView("__twin_shingles2")
-    two_step = {
-        r["sid"]: (tuple(r["sig"]), tuple(sorted(r["shset"])), r["n"])
-        for r in spark.sql(
-            dedup.oph_profile_sql("__twin_shingles2", n_bins=64, seed=42)
-        ).collect()
-    }
-    docs.createOrReplaceTempView("__twin_docs2")
-    folded = {
-        r["sid"]: (tuple(r["sig"]), tuple(sorted(r["shset"])), r["n"])
-        for r in spark.sql(
-            dedup.oph_profile_from_docs_sql(
-                "__twin_docs2", k=5, n_bins=64, seed=42, repartition=8
-            )
-        ).collect()
-    }
-    assert two_step == folded
-    assert len(folded) > 0
-
-
 def test_fuzzy_dedup_lsh_matches_operator_chain(spark, sf_dir):
-    """bench.py's q29 path (fully-folded SQL, round4d as selectExpr) must
-    reproduce the operator-chain oph pipeline + Column round4d row for
-    row — the certification that the bench times the same computation
-    q29's oracle certifies.  The comparand is built DIRECTLY from the
-    operator chain (minhash_oph_profiles -> minhash_lsh_candidates ->
-    verify_candidates_with_profiles), not from _lsh_pairs — which is
-    itself the two-statement SQL form since r9 — so this stays a true
-    end-to-end operator-chain anchor."""
-    from shardpack_spark.queries.canon import round4d
-    from shardpack_spark.queries.llm import _shingles, fuzzy_dedup_lsh
+    """bench.py's q29 path (round4d as one selectExpr) must reproduce the
+    'oph' rows of the registered q29 query row for row — the
+    certification that the bench times the same computation q29's
+    oracle certifies."""
+    from shardpack_spark.queries import load_all
+    from shardpack_spark.queries.llm import fuzzy_dedup_lsh
 
-    prof = dedup.minhash_oph_profiles(
-        _shingles(spark, sf_dir), n_bins=64, seed=42
-    ).persist()
-    cand = dedup.minhash_lsh_candidates(
-        prof.select("sid", "sig"), bands=16, rows_per_band=4
-    )
-    chain = sorted(
-        tuple(r)
-        for r in dedup.verify_candidates_with_profiles(
-            cand, prof, threshold=0.8, min_estimate=0.6
-        )
-        .select("sid_a", "sid_b", round4d(F.col("jac")).alias("jac"))
-        .collect()
+    spark.catalog.clearCache()
+    q29 = sorted(
+        (r["sid_a"], r["sid_b"], r["jac"])
+        for r in load_all()["q29_fuzzy_dedup"].builder(spark, sf_dir).collect()
+        if r["variant"] == "oph"
     )
     spark.catalog.clearCache()
-    folded = sorted(tuple(r) for r in fuzzy_dedup_lsh(spark, sf_dir).collect())
+    bench = sorted(tuple(r) for r in fuzzy_dedup_lsh(spark, sf_dir).collect())
     spark.catalog.clearCache()
-    assert chain == folded
-    assert len(folded) > 0
+    assert q29 == bench
+    assert len(bench) > 0

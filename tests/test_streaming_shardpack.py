@@ -359,3 +359,24 @@ def test_stream_starting_position_latest(spark, tmp_path):
 
     with pytest.raises(Exception, match="earliest\\|latest"):
         ShardPackStreamReader({"path": src, "starting_position": "now"})
+
+
+def test_stream_latest_capped_offset_never_regresses(tmp_path):
+    """starting_position=latest with a cap: the latestOffset that follows
+    initialOffset must not sort below it.  The engine logs that end
+    offset, so a regressed one would make a restart re-deliver history
+    committed before the query started, which 'latest' promises to skip."""
+    from shardpack_spark.format.datasource import ShardPackStreamReader
+    from shardpack_spark.format.writer import write_records
+
+    src = str(tmp_path / "src")
+    entry = codec.FileEntry("d.bin", "application/octet-stream", b"x")
+    for i in range(3):
+        write_records(src, [codec.Record(key=f"k{i}", entries=[entry])], mode="append")
+    reader = ShardPackStreamReader(
+        {"path": src, "starting_position": "latest", "max_shards_per_batch": "1"}
+    )
+    initial = reader.initialOffset()["last"]
+    latest = reader.latestOffset()["last"]
+    assert initial.startswith("c00000003-")
+    assert latest >= initial
