@@ -128,7 +128,6 @@ Options:
 
 from __future__ import annotations
 
-import base64
 import hashlib
 import json
 import os
@@ -198,6 +197,7 @@ from shardpack_spark.format.manifest import (  # noqa: F401  (re-exported:
     MANIFEST_PARTS_DIR,
     _META_VALUES_CAP,
     _UNSET,
+    _bloom_bits,
     _bloom_build,
     _bloom_key_hashes,
     _bloom_maybe_contains,
@@ -257,7 +257,9 @@ class ShardPartition(InputPartition):
     # shard whole (path == group[0]).  The inverse of record-range
     # splitting — _plan_partitions packs shards up to its bytes-per-core
     # max_split, so 20 ~1 MB shards cost ~parallelism Python-worker task
-    # launches per scan, not 20 (each launch costs ~0.4 s on a 4-core host).
+    # launches per scan, not 20 (a launch reaches Python code after ~25 ms
+    # on a 4-core host with a reused, zip-guarded worker, ~0.3 s unguarded;
+    # tools/worker_floor_probe.py measures both).
     group: list[str] | None = None
 
 
@@ -622,9 +624,7 @@ class ShardPackReader(DataSourceReader):
                 st = stats.get(name)
                 if st:
                     bloom = st.get("bloom")
-                    bloom_bits = (
-                        base64.b64decode(bloom["bits"]) if bloom and "bits" in bloom else b""
-                    )
+                    bloom_bits = _bloom_bits(bloom) if bloom else b""
 
                     def may_hold(k: str) -> bool:
                         if "min_key" in st and not (st["min_key"] <= k <= st["max_key"]):
@@ -714,6 +714,7 @@ class ShardPackReader(DataSourceReader):
         ]
 
     def read(self, partition: ShardPartition):
+        storage.guard_zip_directory_reloads()
         if partition is None or not partition.path:
             return  # empty-delta sentinel
         yield from _arrow_batches(
@@ -897,6 +898,7 @@ class ShardPackWriter(DataSourceArrowWriter):
     def write(self, iterator) -> ShardCommitMessage:
         """One task -> one sequence of shards named with a task-unique
         basename (no cross-task coordination needed at any scale)."""
+        storage.guard_zip_directory_reloads()
         from pyspark import TaskContext
 
         tc = TaskContext.get()
@@ -942,6 +944,7 @@ class ShardPackWriter(DataSourceArrowWriter):
         docstring for the safety model.  ``_CommitLock`` /
         ``_write_manifest`` resolve through this module's globals so
         fault-injection tests can monkeypatch them here."""
+        storage.guard_zip_directory_reloads()
         new_shards = [s for m in messages if m is not None for s in m.shards]
         for s in new_shards:
             s["compression"] = self.compression
@@ -1071,6 +1074,7 @@ class ShardPackStreamReader(DataSourceStreamReader):
         self._offsets.commit(end)
 
     def read(self, partition: ShardPartition):
+        storage.guard_zip_directory_reloads()
         # schema() advertises _shard for streams too — batches must match
         yield from _arrow_batches(partition, self.verify, shard_column=self.shard_column)
 
@@ -1125,6 +1129,7 @@ class ShardPackStreamWriter(DataSourceStreamArrowWriter):
         self.max_partition_writers = int(options.get("max_partition_writers", 64))
 
     def write(self, iterator) -> ShardCommitMessage:
+        storage.guard_zip_directory_reloads()
         from pyspark import TaskContext
 
         tc = TaskContext.get()
@@ -1173,6 +1178,7 @@ class ShardPackStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (Spark API)
+        storage.guard_zip_directory_reloads()
         be = storage.for_path(self.path)
         marker = os.path.join(self.path, f"_batch_{batchId:08d}.json")
         staged = [s for m in messages if m is not None for s in m.shards]
@@ -1228,11 +1234,13 @@ class ShardPackDataSource(DataSource):
         return "shardpack"
 
     def schema(self) -> StructType:
+        storage.guard_zip_directory_reloads()
         if str(self.options.get("with_shard_column", "false")).lower() == "true":
             return StructType(SCHEMA.fields + [StructField("_shard", StringType())])
         return SCHEMA
 
     def reader(self, schema: StructType) -> ShardPackReader:
+        storage.guard_zip_directory_reloads()
         # reader() runs in a planning worker with no SparkSession, so the
         # pruning variant (which requires the filterPushdown conf) is
         # selected via an explicit option; read_shardpack() sets it
@@ -1242,12 +1250,15 @@ class ShardPackDataSource(DataSource):
         return cls(self.options, self.parallelism)
 
     def writer(self, schema: StructType, overwrite: bool) -> ShardPackWriter:
+        storage.guard_zip_directory_reloads()
         return ShardPackWriter(self.options, overwrite)
 
     def streamReader(self, schema: StructType) -> ShardPackStreamReader:  # noqa: N802
+        storage.guard_zip_directory_reloads()
         return ShardPackStreamReader(self.options, self.parallelism)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> ShardPackStreamWriter:  # noqa: N802
+        storage.guard_zip_directory_reloads()
         return ShardPackStreamWriter(self.options)
 
 

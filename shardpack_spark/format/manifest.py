@@ -305,6 +305,15 @@ def _bloom_build(hash_pairs: list[tuple[int, int]]) -> dict | None:
     }
 
 
+def _bloom_bits(bloom: dict) -> bytes:
+    """A filter's decoded bit array; b"" when its ``bits`` are missing or
+    undecodable, which _bloom_maybe_contains answers True for."""
+    try:
+        return base64.b64decode(bloom.get("bits", ""))
+    except (AttributeError, TypeError, ValueError):
+        return b""
+
+
 def _bloom_maybe_contains(
     bloom: dict, bits: bytes, key: str, hashes: tuple[int, int] | None = None
 ) -> bool:

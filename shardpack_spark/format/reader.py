@@ -40,7 +40,6 @@ refuses datasets where that assumption broke.
 
 from __future__ import annotations
 
-import base64
 import hashlib
 import os
 from bisect import bisect_right
@@ -530,11 +529,7 @@ class Dataset:
             bloom = s.get("bloom")
             bits = self._bloom_bits.get(name)
             if bloom and bits is None:  # base64-decoded once per Dataset
-                try:
-                    bits = base64.b64decode(bloom.get("bits", ""))
-                except (AttributeError, TypeError, ValueError):
-                    bits = b""  # undecodable: the probe answers True
-                self._bloom_bits[name] = bits
+                bits = self._bloom_bits[name] = manifest._bloom_bits(bloom)
             cand = {
                 k
                 for k in keys

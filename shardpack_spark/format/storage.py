@@ -49,6 +49,27 @@ Registering a custom backend (e.g. a real conditional-put S3 client)::
 
     from shardpack_spark.format import storage
     storage.register_backend("s3", lambda: MyS3Backend())
+
+Python worker floor (``guard_zip_directory_reloads``): every call into a
+Spark Python worker — each executor task and each DataSource planner
+call — ends its set-up with ``importlib.invalidate_caches()``.  On
+CPython 3.11/3.12, ``zipimport.zipimporter.invalidate_caches`` re-parses
+an archive's central directory for every importer cached for it, and
+Spark puts ``pyspark.zip`` (~1,300 entries) and the py4j zip on each
+worker's path.  A PySpark 4.1 worker holds ~16 such importers (one per
+package path imported from a zip): ~100-350 ms per call on a 4-core
+host, most of a trivial task.  Each worker-side entry point of the
+shardpack and WARC sources installs a wrapper that re-reads an archive
+only when its ``os.stat`` signature (mtime_ns, size, inode) changed
+since that importer's last read, and calls the original method when the
+stat fails.  Semantics kept: an unchanged file has an unchanged
+directory; a rewritten zip changes its signature and is re-read as
+before; an importer without a recorded signature (a new ``addPyFile``
+path) is re-read on its first call.  Installing reads every zip on the
+path once to record the signatures, so a worker pays one extra read in
+its first shardpack call and none from its second on (Spark reuses
+workers).  On 3.13, where the method only drops a cache entry, the
+guard skips that drop.
 """
 
 from __future__ import annotations
@@ -57,10 +78,12 @@ import fnmatch
 import io
 import os
 import shutil
+import sys
 import tempfile
 import threading
 import time
 import uuid
+import zipimport
 from typing import TYPE_CHECKING
 
 if TYPE_CHECKING:
@@ -906,3 +929,36 @@ def reset_memory() -> None:
     """Drop every memory:// object (test isolation)."""
     with _memory._lock:
         _memory._objects.clear()
+
+
+def guard_zip_directory_reloads() -> None:
+    """Make ``zipimporter.invalidate_caches`` skip unchanged archives (see
+    the module doc).  Idempotent across by-value copies of this module:
+    the installed wrapper marks itself, so a second install is a no-op."""
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stat_guarded", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except (OSError, ValueError):
+            self.__dict__.pop("_stat_signature", None)
+            original(self)
+            return
+        signature = (st.st_mtime_ns, st.st_size, st.st_ino)
+        if self.__dict__.get("_stat_signature") == signature:
+            return
+        # stat BEFORE the read: a rewrite racing the read leaves the old
+        # signature, so the next call reads again
+        original(self)
+        self._stat_signature = signature
+
+    invalidate_caches._stat_guarded = True
+    invalidate_caches.__wrapped__ = original
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    # read each archive once more to record its signature: the directory
+    # in memory may predate a rewrite, so skipping needs a read of our own
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder.invalidate_caches()

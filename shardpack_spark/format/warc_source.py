@@ -513,6 +513,7 @@ class WarcReader(DataSourceReader):
         )
 
     def read(self, partition: WarcFilePartition):
+        storage.guard_zip_directory_reloads()
         import pyarrow as pa
 
         be = storage.for_path(partition.path)
@@ -721,9 +722,11 @@ class WarcDataSource(DataSource):
         return "warc"
 
     def schema(self) -> StructType:
+        storage.guard_zip_directory_reloads()
         return WARC_SCHEMA
 
     def reader(self, schema: StructType) -> WarcReader:
+        storage.guard_zip_directory_reloads()
         # reader() runs in a planning worker with no SparkSession, so the
         # pruning variant (which requires the filterPushdown conf) is
         # selected via an explicit option; read_warc() sets it
@@ -733,6 +736,7 @@ class WarcDataSource(DataSource):
         return cls(self.options)
 
     def streamReader(self, schema: StructType) -> WarcStreamReader:  # noqa: N802
+        storage.guard_zip_directory_reloads()
         return WarcStreamReader(self.options)
 
 

@@ -739,6 +739,55 @@ def test_bloom_malformed_never_prunes():
     assert _bloom_maybe_contains({"m": 1024, "k": 7}, b"\x00", "k") is True  # short bits
 
 
+def test_undecodable_bloom_bits_never_prune(spark_ds, tmp_path):
+    """Pruning stays a pure optimization on both read paths: with every
+    manifest Bloom filter's bits undecodable base64, the facade lookup,
+    the DSv2 planner and a key-filtered read_shardpack all still find the
+    record (the planner used to raise binascii.Error)."""
+    from pyspark.sql.datasource import EqualTo
+
+    from shardpack_spark.format.datasource import ShardPackPruningReader, read_shardpack
+    from shardpack_spark.format.reader import open_dataset
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "badbloom")
+    for s in range(11):  # one commit, one shard each
+        write_records(
+            out,
+            [codec.Record(key=f"k{1000 + 10 * s + i}", entries=[], metadata={}) for i in range(10)],
+        )
+
+    def spoil(node) -> int:
+        if isinstance(node, dict):
+            n = 0
+            if isinstance(node.get("bloom"), dict):
+                node["bloom"]["bits"] = "abc"
+                n = 1
+            return n + sum(spoil(v) for k, v in node.items() if k != "bloom")
+        if isinstance(node, list):
+            return sum(spoil(v) for v in node)
+        return 0
+
+    spoiled = 0
+    for root, _, files in os.walk(out):
+        for f in files:
+            if f.endswith(".json"):
+                p = os.path.join(root, f)
+                with open(p) as fh:
+                    doc = json.load(fh)
+                spoiled += spoil(doc)
+                with open(p, "w") as fh:
+                    json.dump(doc, fh)
+    assert spoiled >= 11
+
+    assert [r.key for r in open_dataset(out).lookup("k1007")] == ["k1007"]
+    reader = ShardPackPruningReader({"path": out, "prune_by_key": "true"})
+    reader.pushFilters([EqualTo(("key",), "k1007")])
+    assert len(_planned_shards(reader.partitions())) == 1  # the [min,max] range still prunes
+    rows = read_shardpack(spark_ds, out).filter(F.col("key") == "k1007").collect()
+    assert [r["key"] for r in rows] == ["k1007"]
+
+
 def test_commit_lock_exclusive_and_stale_breaking(tmp_path):
     import threading
     import time
@@ -1653,6 +1702,61 @@ spark.stop()
     )
     assert r.returncode == 0, r.stderr[-3000:]
     assert r.stdout.split()[-2:] == [str(n), str(len(codec.list_shards(out)))]
+
+
+def test_reused_worker_skips_zip_directory_reloads(tmp_path):
+    """After a shardpack write and read, the reused executor worker of a
+    vanilla local[1] session (started outside the repo, so its workers
+    import nothing from the package) no longer re-reads the zips on its
+    path: importlib.invalidate_caches() there calls
+    zipimport._read_directory zero times."""
+    import subprocess
+    import sys
+
+    out = str(tmp_path / "tiny")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from shardpack_spark.format.datasource import SCHEMA, register
+
+def probe(batches):
+    import importlib, sys, zipimport
+    import pyarrow as pa
+    for _ in batches:
+        pass
+    real, reads = zipimport._read_directory, []
+    zipimport._read_directory = lambda p: reads.append(p) or real(p)
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = real
+    zips = sum(isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values())
+    yield pa.RecordBatch.from_pydict({{"zips": [zips], "reads": [len(reads)]}})
+
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+register(spark)
+spark.createDataFrame([("k1", {{"m": "v"}}, [])], SCHEMA).write.format("shardpack").mode("append").save({out!r})
+assert spark.read.format("shardpack").load({out!r}).count() == 1
+row = spark.range(1, numPartitions=1).mapInArrow(probe, "zips long, reads long").collect()[0]
+print(row["zips"], row["reads"])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    zips, reads = map(int, r.stdout.split()[-2:])
+    if zips == 0:
+        pytest.skip("no zipimporter on the worker's path (pyspark without zips)")
+    assert reads == 0
 
 
 def test_shard_sample_deterministic_fraction(spark_ds, tmp_path):

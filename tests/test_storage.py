@@ -1203,3 +1203,53 @@ def test_observe_latest_bounded_listing_and_pointer_lag():
         be.glob_names_after = real
     assert vid2 == 6 and m2["version_id"] == 6
     assert seen == ["root-00000005.json"], "listing must start after the pointer"
+
+
+# --- Python worker start-up: the zip directory guard ---------------------------
+
+
+def test_zip_directory_guard_rereads_only_changed_archives(tmp_path, monkeypatch, request):
+    """guard_zip_directory_reloads: an unchanged zip on sys.path is not
+    re-read by importlib.invalidate_caches(), a rewritten one is re-read
+    once and serves its new modules, a deleted one falls back to the
+    stdlib method without raising, and a second install wraps nothing."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    installed = zipimport.zipimporter.invalidate_caches
+    stdlib = getattr(installed, "__wrapped__", installed)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    monkeypatch.setattr(sys, "path_importer_cache", dict(sys.path_importer_cache))
+    request.addfinalizer(lambda: [sys.modules.pop(n, None) for n in ("zipguard_m1", "zipguard_m2")])
+
+    archive = str(tmp_path / "mods.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipguard_m1.py", "X = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    assert importlib.import_module("zipguard_m1").X == 1
+    reads: list[str] = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory", lambda p: reads.append(p) or real(p))
+
+    storage.guard_zip_directory_reloads()
+    storage.guard_zip_directory_reloads()
+    assert zipimport.zipimporter.invalidate_caches.__wrapped__ is stdlib
+    assert reads.count(archive) == 1  # the install records the signature
+
+    reads.clear()
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert archive not in reads
+
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zipguard_m1.py", "X = 1\n")
+        z.writestr("zipguard_m2.py", "Y = 2\n")
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1
+    assert importlib.import_module("zipguard_m2").Y == 2
+
+    os.remove(archive)
+    importlib.invalidate_caches()  # stat fails: the stdlib method runs
+    assert reads.count(archive) == 2
