@@ -49,7 +49,7 @@ import urllib.parse
 
 from pyspark.sql import functions as F
 
-from shardpack_spark.format import codec, storage
+from shardpack_spark.format import codec, manifest, storage
 from shardpack_spark.format.datasource import (
     _load_manifest,
     _write_manifest,  # noqa: F401  (re-exported for maintenance jobs)
@@ -300,17 +300,24 @@ def read_columnar_zipped(
             hi = None if i == len(driving) - 1 else driving[i + 1]["min_key"]
             bounds.append((lo, hi))
 
+    views = {
+        name: manifest.ShardView(
+            None, [s["path"] for s in shards], {s["path"]: s for s in shards}
+        )
+        for name, shards in per_col.items()
+    }
     plan_rows = []
     for lo, hi in bounds:
-        cols_shards = {}
-        for name in columns:
-            keep = [
-                s["path"]
-                for s in per_col[name]
-                if (hi is None or s["min_key"] < hi)
-                and (lo is None or s["max_key"] >= lo)
-            ]
-            cols_shards[name] = keep
+        # a column shard belongs to the slice [lo, hi) iff its key range
+        # intersects it: the shard predicate with an exclusive upper bound
+        cols_shards = {
+            name: views[name].prune(
+                views[name].names,
+                lo=None if lo is None else (lo, True),
+                hi=None if hi is None else (hi, False),
+            )
+            for name in columns
+        }
         plan_rows.append((lo, hi, json.dumps(cols_shards)))
 
     _pickle_by_value()

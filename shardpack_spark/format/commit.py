@@ -37,9 +37,10 @@ from shardpack_spark.format.manifest import (
     _META_VALUES_CAP,
     _bloom_build,
     _bloom_key_hashes,
+    _marker_entries,
     _observe_latest,
-    _visible_shards,
     list_patches,
+    live_view,
 )
 
 if TYPE_CHECKING:
@@ -505,9 +506,9 @@ def commit_attempt(
         path,
         # append needs only parts+totals; spec naming needs the
         # prior shard COUNT, dynamic partition overwrite needs the
-        # per-shard partition values, and full overwrite re-reads via
-        # _visible_shards anyway
-        flatten=bool(spec_basename) or dynamic_overwrite,
+        # per-shard partition values, and full overwrite the live
+        # shard names it deletes
+        flatten=bool(spec_basename) or overwrite or dynamic_overwrite,
     )
     spec_trash: list[str] = []
     if spec_basename and not state["spec_done"]:
@@ -545,7 +546,7 @@ def commit_attempt(
     new_part = state["new_part"]
     dropped: list[str] = []
     if overwrite and not (dynamic_overwrite and prior is not None):
-        old_names = set(_visible_shards(path)) - {s["path"] for s in new_shards}
+        old_names = set(live_view(path, prior).names) - {s["path"] for s in new_shards}
         if prior:
             # shards dropped by earlier dynamic overwrites are absent
             # from the visible (filtered) view but their files remain
@@ -582,7 +583,7 @@ def commit_attempt(
         committish = re.compile(r"c\d{8}-part-")
         adhoc = [
             n
-            for n in _visible_shards(path, None)
+            for n in live_view(path, None).names
             if n not in new_names and not committish.match(n)
         ]
         old_names = set()
@@ -625,17 +626,9 @@ def commit_attempt(
         # way) but NOT the record arithmetic — marker records were
         # never part of the manifest's total.
         already_dropped = set(prior.get("dropped") or ())
-        marker_stats: list[dict] = []
-        for f in be.glob_names(path, "_batch_*.json"):
-            try:
-                mk = json.loads(be.read_bytes(os.path.join(path, f)))
-            except (OSError, json.JSONDecodeError):
-                continue  # a torn marker commits nothing
-            marker_stats.extend(
-                s
-                for s in mk.get("shards", [])
-                if s["path"] not in already_dropped
-            )
+        marker_stats = [
+            s for s in _marker_entries(path) if s["path"] not in already_dropped
+        ]
         for s, counted in [(s, True) for s in prior.get("shards", [])] + [
             (s, False) for s in marker_stats
         ]:

@@ -173,14 +173,12 @@ from shardpack_spark.format.commit import (  # noqa: F401  (re-exported:
     _CommitLock,
     _META_RANGE_MAX_ABS,
     _META_STR_RANGE_MAX_LEN,
-    _StatsTracker,
     _meta_range_add,
     _meta_ranges_kept,
     _next_commit_seq,
     _write_manifest,
     _write_manifest_part,
     commit_attempt,
-    commit_shards,
     fold_manifest_parts,
     route_partitioned_records,
     write_records_with_stats,
@@ -196,23 +194,20 @@ from shardpack_spark.format.manifest import (  # noqa: F401  (re-exported:
     MANIFEST_NAME,
     MANIFEST_PARTS_DIR,
     _META_VALUES_CAP,
-    _UNSET,
-    _bloom_bits,
     _bloom_build,
     _bloom_key_hashes,
-    _bloom_maybe_contains,
     _load_latest_manifest,
     _load_manifest,
-    _manifest_stats,
-    _marker_shards,
+    _marker_entries,
     _names_matching_meta,
     _norm_path,
     _observe_latest,
-    _pruning_stats,
     _root_ids,
-    _visible_shards,
+    ShardView,
     dataset_partitions,
     list_versions,
+    live_view,
+    snapshot_view,
     version_at,
 )
 
@@ -558,20 +553,17 @@ class ShardPackReader(DataSourceReader):
 
     def partitions(self) -> Sequence[ShardPartition]:
         if self.version is not None:
-            # pinned snapshot: exactly the archived root's shard set
-            # (batch commits only — stream-marker shards have no snapshot)
-            manifest = _load_manifest(self.path, self.version)
-            names = sorted(s["path"] for s in manifest.get("shards", []))
+            view = snapshot_view(self.path, self.version)
             present = set(storage.for_path(self.path).listdir(self.path))
-            missing = [n for n in names if n not in present]
+            missing = [n for n in view.names if n not in present]
             if missing:
                 raise codec.ShardPackIOError(
                     f"version {self.version}: shard(s) {missing[:3]} removed "
                     "by a later overwrite/compaction"
                 )
         else:
-            manifest = _load_latest_manifest(self.path)
-            names = _visible_shards(self.path, manifest)
+            view = live_view(self.path)
+        names = view.names
         if self.only_shards is not None:
             names = [n for n in names if n in self.only_shards]
         if self.shard_sample is not None and self.shard_sample < 1.0:
@@ -585,21 +577,12 @@ class ShardPackReader(DataSourceReader):
                 % 1_000_000
                 < cut
             ]
-        # one stats view serves every pruning family below; built lazily
-        # (costs a marker glob) and ONCE per plan
-        _pstats_memo: list[dict | None] = [None]
-
-        def _stats_view() -> dict[str, dict]:
-            if _pstats_memo[0] is None:
-                _pstats_memo[0] = _pruning_stats(self.path, manifest)
-            return _pstats_memo[0]
-
         if self.where_meta or self.where_meta_range:
             names = _names_matching_meta(
-                names, _stats_view(), self.where_meta, self.where_meta_range
+                names, view.stats, self.where_meta, self.where_meta_range
             )
         if not names:
-            if manifest is not None or self.only_shards is not None:
+            if view.manifest is not None or self.only_shards is not None:
                 # a committed-but-empty dataset (all rows tombstoned and
                 # compacted, a columnar column with no records, an empty
                 # delta) is a valid EMPTY relation, not an error; Spark
@@ -607,74 +590,10 @@ class ShardPackReader(DataSourceReader):
                 # empty plan), so hand back a sentinel read() drops
                 return [ShardPartition("", [])]
             raise codec.ShardPackIOError(f"no .shardpack files under {self.path}")
-
-        if (
-            self._key_filters
-            or self._prefix_filters
-            or self._range_lo is not None
-            or self._range_hi is not None
-        ):
-            stats = _stats_view()
-            # hoist the (shard-independent) bloom hashes: planning cost is
-            # O(shards x keys) bit probes, not O(shards x keys) sha256es
-            key_hashes = {k: _bloom_key_hashes(k) for k in self._key_filters}
-            range_lo, range_hi = self._range_lo, self._range_hi
-            kept = []
-            for name in names:
-                st = stats.get(name)
-                if st:
-                    bloom = st.get("bloom")
-                    bloom_bits = _bloom_bits(bloom) if bloom else b""
-
-                    def may_hold(k: str) -> bool:
-                        if "min_key" in st and not (st["min_key"] <= k <= st["max_key"]):
-                            return False
-                        if bloom is not None and not _bloom_maybe_contains(
-                            bloom, bloom_bits, k, key_hashes[k]
-                        ):
-                            return False
-                        return True
-
-                    def may_hold_prefix(p: str) -> bool:
-                        # keys with prefix p live in [p, p + U+10FFFF...);
-                        # overlap with [min_key, max_key] iff max_key >= p
-                        # and min_key has no greater prefix.  Blooms hash
-                        # whole keys — no help for prefixes.
-                        if "min_key" not in st:
-                            return True
-                        return st["max_key"] >= p and st["min_key"][: len(p)] <= p
-
-                    def range_overlaps() -> bool:
-                        # shard survives iff [min_key, max_key] intersects
-                        # the pushed (lo, hi) interval; bound exclusivity
-                        # prunes the exactly-touching shard too
-                        if "min_key" not in st:
-                            return True  # unstatted shard: conservative
-                        if range_lo is not None:
-                            v, incl = range_lo
-                            if st["max_key"] < v or (st["max_key"] == v and not incl):
-                                return False
-                        if range_hi is not None:
-                            v, incl = range_hi
-                            if st["min_key"] > v or (st["min_key"] == v and not incl):
-                                return False
-                        return True
-
-                    # values/prefixes are probed as a union — conservative
-                    # (never prunes a shard any one of them could touch),
-                    # matching parquet partition pruning; the range bound
-                    # is a separate CONJUNCT (Spark pushes AND-ed filters)
-                    point_ok = (
-                        not self._key_filters and not self._prefix_filters
-                    ) or (
-                        any(may_hold(k) for k in self._key_filters)
-                        or any(may_hold_prefix(p) for p in self._prefix_filters)
-                    )
-                    if not (point_ok and range_overlaps()):
-                        continue  # pruned: no requested key can live here
-                kept.append(name)
-            names = kept
-        mstats = _manifest_stats(self.path, manifest)
+        names = view.prune(
+            names, self._key_filters, self._prefix_filters, self._range_lo, self._range_hi
+        )
+        mstats = view.sizes(names)
         tail_k: int | None = None  # records the last kept shard is cut to
         if self.limit_records and self.limit_records > 0 and names:
             # truncate planning at the first prefix of the (pruned,
@@ -1037,9 +956,14 @@ class ShardPackStreamReader(DataSourceStreamReader):
             )
         # offset/floor/admission-control discipline shared with the WARC
         # stream source (see stream_offsets module doc)
-        self._offsets = CappedListingOffsets(
-            lambda: _visible_shards(self.path), max_shards, sp
-        )
+        self._offsets = CappedListingOffsets(self._visible_names, max_shards, sp)
+        self._view: ShardView | None = None
+
+    def _visible_names(self) -> list[str]:
+        # one live view per offset query; partitions() plans the batch it
+        # bounded from the same view instead of reading the log again
+        self._view = live_view(self.path)
+        return self._view.names
 
     def initialOffset(self) -> dict:  # noqa: N802
         return self._offsets.initial()
@@ -1049,25 +973,16 @@ class ShardPackStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> Sequence[ShardPartition]:
         lo, hi = self._offsets.advance(start, end)
-        manifest = _load_manifest(self.path)
-        names = [
-            n
-            for n in _visible_shards(self.path, manifest)
-            if lo < n <= hi
-        ]
+        view = self._view
+        if view is None or not view.names or view.names[-1] < hi:
+            view = live_view(self.path)  # a restart, or an end this view never saw
+        names = [n for n in view.names if lo < n <= hi]
         if self.where_meta or self.where_meta_range:
             names = _names_matching_meta(
-                names,
-                _pruning_stats(self.path, manifest),
-                self.where_meta,
-                self.where_meta_range,
+                names, view.stats, self.where_meta, self.where_meta_range
             )
         return _plan_partitions(
-            self.path,
-            names,
-            self.split_target,
-            _manifest_stats(self.path, manifest),
-            self.parallelism,
+            self.path, names, self.split_target, view.sizes(names), self.parallelism
         )
 
     def commit(self, end: dict) -> None:
@@ -1344,7 +1259,8 @@ def compact_dataset(
     standard sort-compaction trade.
     """
     register(spark)
-    manifest = _load_manifest(path) or {}
+    view = live_view(path)
+    manifest = view.manifest or {}
     comp = compression or manifest.get("compression", "none")
     df = read_shardpack(spark, path)
     # size the write parallelism to the target: one task per output shard
@@ -1352,10 +1268,10 @@ def compact_dataset(
     # output inherits one shard per input partition); manifest-recorded
     # sizes first, stat only for log-less ad-hoc dirs
     be = storage.for_path(path)
-    stats = _manifest_stats(path, manifest)
+    sizes = view.sizes(view.names)
     total_bytes = sum(
-        (stats.get(n) or (None,))[0] or be.getsize(os.path.join(path, n))
-        for n in _visible_shards(path, manifest or None)
+        (sizes.get(n) or (None,))[0] or be.getsize(os.path.join(path, n))
+        for n in view.names
     )
     n_parts = max(1, -(-total_bytes // target_shard_bytes))
     pb = manifest.get("partition_by") or []
@@ -1436,12 +1352,12 @@ def convert_to_dataset(
     ad-hoc files; convert aborts and removes its orphan part).
     """
     register(spark)  # ensures by-value pickling for the closure below
-    if _load_latest_manifest(path) is not None or _marker_shards(path):
+    if _load_latest_manifest(path) is not None or _marker_entries(path):
         raise codec.ShardPackIOError(
             f"{path} already has a commit log; convert_to_dataset adopts "
             "log-less directories only"
         )
-    names = _visible_shards(path, None)
+    names = live_view(path, None).names
     if not names:
         raise codec.ShardPackIOError(f"{path}: no shard files to adopt")
     root = path
@@ -1968,7 +1884,7 @@ def vacuum(
             referenced_shards.update(s["path"] for s in snap.get("shards", []))
             referenced_parts.update(os.path.basename(p) for p in snap.get("parts", []))
             referenced_coverage |= {_cov_ref(snap)} - {None}
-        referenced_shards.update(_marker_shards(path))
+        referenced_shards.update(s["path"] for s in _marker_entries(path))
 
         # 1) expired snapshot roots — commit-atomic, no age gate needed
         for rf in roots[:-keep_versions]:

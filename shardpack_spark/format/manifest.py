@@ -13,6 +13,17 @@ writer-side protocol): a live root pointer `_shardpack_manifest.json`,
 immutable part files + archived snapshot roots under `_manifest/`,
 streaming micro-batch markers `_batch_*.json`, and a root-level
 `dropped` list for logical deletes (dynamic partition overwrite).
+
+Every read path answers two questions here, once.  Which shards does
+the commit log make visible?  ``live_view`` resolves the newest
+committed state (pointer plus newer archived roots) and reads each
+stream marker once through ``_marker_entries``; ``snapshot_view`` pins
+an archived version.  Which of them could hold the probed keys?  The
+resulting ``ShardView`` carries the per-shard stats and the one shard
+predicate: ``prune`` for the DSv2 planner's keys, prefixes and key
+range, ``candidates`` for the facade's ``lookup_many``.  The DSv2 batch
+planner, the stream planner and the facade ``Dataset`` all consume a
+``ShardView``, so visibility and pruning cannot drift between them.
 """
 
 from __future__ import annotations
@@ -22,8 +33,12 @@ import hashlib
 import json
 import os
 import re
+from typing import TYPE_CHECKING
 
 from shardpack_spark.format import codec, storage
+
+if TYPE_CHECKING:
+    from collections.abc import Iterator
 
 MANIFEST_NAME = "_shardpack_manifest.json"
 MANIFEST_PARTS_DIR = "_manifest"
@@ -232,19 +247,8 @@ def dataset_partitions(path: str, version: int | None = None) -> list[dict]:
     The live view (``version=None``) includes not-yet-folded stream-batch
     marker shards — the same visibility readers have.  A ``version``
     pins the archived snapshot exactly (markers are unversioned)."""
-    m = _load_manifest(path, version) or {}
-    shard_list = list(m.get("shards", []))
-    if version is None:
-        hidden = {s["path"] for s in shard_list} | set(m.get("dropped") or ())
-        be = storage.for_path(path)
-        for f in be.glob_names(path, "_batch_*.json"):
-            try:
-                mk = json.loads(be.read_bytes(os.path.join(path, f)))
-            except (OSError, json.JSONDecodeError):
-                continue
-            shard_list.extend(
-                s for s in mk.get("shards", []) if s["path"] not in hidden
-            )
+    view = live_view(path) if version is None else snapshot_view(path, version)
+    shard_list = [view.stats[n] for n in view.names if n in view.stats]
     agg: dict[tuple | None, dict] = {}
     for s in shard_list:
         part = s.get("partition")
@@ -335,43 +339,54 @@ def _bloom_maybe_contains(
     return True
 
 
-def _marker_shards(path: str) -> list[str]:
-    """Shard names committed by streaming micro-batches (`_batch_*.json`)."""
+def _marker_entries(path: str) -> list[dict]:
+    """Shard entries of the stream-batch markers (`_batch_*.json`), in
+    marker order — the one tolerant marker reader.  A torn or malformed
+    marker (unreadable, not JSON, an entry without a ``path``) commits
+    nothing and is skipped whole.  Only the strict maintenance readers,
+    ``verify_dataset`` (an auditor) and ``fold_stream_markers`` (deletes
+    markers under the commit lock), parse markers themselves and raise."""
     be = storage.for_path(path)
-    names: list[str] = []
+    out: list[dict] = []
     for f in be.glob_names(path, "_batch_*.json"):
         try:
-            data = json.loads(be.read_bytes(os.path.join(path, f)))
-            names.extend(s["path"] for s in data.get("shards", []))
-        except (OSError, json.JSONDecodeError, KeyError, TypeError):
+            shards = json.loads(be.read_bytes(os.path.join(path, f))).get("shards", [])
+            if not all(isinstance(s["path"], str) for s in shards):
+                continue
+        except (OSError, ValueError, KeyError, TypeError, AttributeError):
             continue  # a torn marker commits nothing
-    return names
+        out.extend(shards)
+    return out
 
 
 _UNSET = object()
 
 
-def _visible_shards(path: str, manifest=_UNSET) -> list[str]:
-    """Sorted shard *names* a reader may consume.
+def live_view(path: str, manifest=_UNSET) -> ShardView:
+    """The live view every reader plans from: ONE manifest resolution
+    (the newest committed state, see _observe_latest) and ONE marker read.
 
     When a commit log exists (manifest and/or stream markers), only files
     it names are visible — files from failed or in-flight jobs are not.
     Ad-hoc directories without any commit log fall back to listing.
-    Pass an already-loaded ``manifest`` (possibly None) to avoid
-    re-opening every manifest part on long commit chains."""
+    Pass an already-observed ``manifest`` (possibly None) to avoid
+    resolving it again.  Markers record the same per-shard stats the
+    manifest does (the stream sink carries them through the commit
+    rename), so an always-on ingest prunes exactly like a batch-written
+    directory; a marker entry wins over a manifest entry of the same
+    name (they cannot coexist in correct histories; markers are newer
+    when they do)."""
     if manifest is _UNSET:
-        manifest = _load_manifest(path)
-    names = set()
-    if manifest is not None:
-        names.update(s["path"] for s in manifest.get("shards", []))
-    names.update(_marker_shards(path))
+        manifest = _load_latest_manifest(path)
+    stats = {s["path"]: s for s in (manifest or {}).get("shards", [])}
+    stats.update((s["path"], s) for s in _marker_entries(path))
+    names = set(stats)
     if manifest is not None:
         # the root's logical-delete list applies to MARKER shards too: a
         # dynamic partition overwrite replaces not-yet-folded stream
         # shards by dropping their names while the marker file stays (it
         # remains the stream writer's replay guard).  Manifest shards
-        # were already filtered during the flatten; subtracting here
-        # covers the marker-sourced names.
+        # were already filtered during the flatten.
         names -= set(manifest.get("dropped") or ())
     if not names and manifest is None:
         # ad-hoc directory (codec-written, no commit log): plain listing,
@@ -381,37 +396,27 @@ def _visible_shards(path: str, manifest=_UNSET) -> list[str]:
         # log write they are uncommitted orphans, not data (the same rule
         # the first-commit ad-hoc adoption applies)
         committish = re.compile(r"c\d{8}-part-")
-        return [
+        listed = [
             n
             for p in codec.list_shards(path)
             if not committish.match(n := os.path.basename(p))
         ]
+        return ShardView(None, listed, {})
     # existence filter (tolerates vacuumed/rolled-back stragglers in old
     # logs) via ONE directory listing, not O(shards) stat round-trips —
     # at 400k shards on an object store per-name stats would dominate
     # planning
     present = set(storage.for_path(path).listdir(path))
-    return sorted(n for n in names if n in present)
+    return ShardView(manifest, sorted(n for n in names if n in present), stats)
 
 
-def _pruning_stats(path: str, manifest: dict | None) -> dict[str, dict]:
-    """name -> full per-shard stats entry (min/max key, bloom,
-    meta_values, meta_ranges, partition) from the manifest AND from
-    stream-batch markers.  Markers record the same stats the manifest
-    does (the stream sink carries them through the commit rename), so an
-    always-on ingest directory prunes exactly like a batch-written one —
-    without waiting for fold_stream_markers.  Marker entries win over a
-    stale manifest entry of the same name (they cannot coexist in
-    correct histories; markers are newer when they do)."""
-    stats = {s["path"]: s for s in (manifest or {}).get("shards", [])}
-    be = storage.for_path(path)
-    for f in be.glob_names(path, "_batch_*.json"):
-        try:
-            for s in json.loads(be.read_bytes(os.path.join(path, f))).get("shards", []):
-                stats[s["path"]] = s
-        except (OSError, json.JSONDecodeError, TypeError):
-            continue
-    return stats
+def snapshot_view(path: str, version: int) -> ShardView:
+    """A pinned snapshot: exactly the archived root's shard set (batch
+    commits only — stream-marker shards are unversioned).  Raises
+    ShardPackIOError when the version is not available."""
+    m = _load_manifest(path, version)
+    shards = m.get("shards", [])
+    return ShardView(m, sorted(s["path"] for s in shards), {s["path"]: s for s in shards})
 
 
 def _names_matching_meta(
@@ -488,27 +493,98 @@ def _names_matching_meta(
     return names
 
 
-def _manifest_stats(path: str, manifest: dict | None) -> dict[str, tuple[int, int | None]]:
-    """name -> (bytes, records|None) for every shard the commit log
-    records (manifest entries and stream-batch markers both carry
-    both)."""
-    stats: dict[str, tuple[int, int | None]] = {}
+class ShardView:
+    """What a reader sees and which shards it may skip.
 
-    def _take(s: dict) -> None:
-        if isinstance(s.get("bytes"), int):
-            rec = s.get("records")
-            stats[s["path"]] = (s["bytes"], rec if isinstance(rec, int) else None)
+    ``names`` are the sorted visible shard names, ``stats`` maps a name
+    to its per-shard manifest/marker entry (bytes, records, key range,
+    Bloom filter, meta value sets and ranges, partition values) and
+    ``manifest`` is the root they were resolved from (None without one).
+    Build it with ``live_view`` or ``snapshot_view``; the DSv2 batch and
+    stream planners build one per planning call, a facade ``Dataset``
+    one per open, and each Bloom filter's bits are decoded at most once
+    per view.
 
-    for s in (manifest or {}).get("shards", []):
-        _take(s)
-    be = storage.for_path(path)
-    for f in be.glob_names(path, "_batch_*.json"):
-        try:
-            for s in json.loads(be.read_bytes(os.path.join(path, f))).get("shards", []):
-                _take(s)
-        except (OSError, json.JSONDecodeError, TypeError):
-            continue
-    return stats
+    Key pruning (``prune``, ``candidates``) is a PURE optimization:
+    shards without stats, without a key range, or with a malformed or
+    undecodable filter keep every key."""
+
+    def __init__(self, manifest: dict | None, names: list[str], stats: dict[str, dict]):
+        self.manifest = manifest
+        self.names = names
+        self.stats = stats
+        self._bits: dict[str, bytes] = {}
+
+    def sizes(self, names) -> dict[str, tuple[int, int | None]]:
+        """name -> (bytes, records|None) for each of ``names`` whose
+        entry records its byte size."""
+        out: dict[str, tuple[int, int | None]] = {}
+        for n in names:
+            s = self.stats.get(n) or {}
+            if isinstance(s.get("bytes"), int):
+                rec = s.get("records")
+                out[n] = (s["bytes"], rec if isinstance(rec, int) else None)
+        return out
+
+    def prune(self, names, keys=(), prefixes=(), lo=None, hi=None) -> list[str]:
+        """``names`` whose shards may hold a record the key predicate
+        accepts.  ``keys`` and ``prefixes`` form a UNION — never prune a
+        shard any one of them could touch, matching parquet partition
+        pruning — and the key range is a separate CONJUNCT (Spark pushes
+        AND-ed filters): ``lo`` / ``hi`` are ``(bound, inclusive)`` or
+        None, and a shard survives iff [min_key, max_key] intersects
+        them; bound exclusivity prunes the exactly-touching shard too."""
+        if not keys and not prefixes and lo is None and hi is None:
+            return list(names)
+        # hoisted: a plan costs O(shards x keys) bit probes, not sha256es
+        hashes = {k: _bloom_key_hashes(k) for k in keys}
+        kept = []
+        for name in names:
+            st = self.stats.get(name)
+            if not st:
+                kept.append(name)  # unstatted shard: conservative
+                continue
+            kmin, kmax = st.get("min_key"), st.get("max_key")
+            ranged = kmin is not None and kmax is not None
+            # keys with prefix p live in [p, p + U+10FFFF...); overlap
+            # with [min_key, max_key] iff max_key >= p and min_key has
+            # no greater prefix.  Blooms hash whole keys — no help here.
+            point_ok = (
+                (not keys and not prefixes)
+                or any(self._may_hold(name, st, k, hashes[k]) for k in keys)
+                or any(not ranged or (kmax >= p and kmin[: len(p)] <= p) for p in prefixes)
+            )
+            if not point_ok:
+                continue
+            if ranged and lo is not None and (kmax < lo[0] or (kmax == lo[0] and not lo[1])):
+                continue
+            if ranged and hi is not None and (kmin > hi[0] or (kmin == hi[0] and not hi[1])):
+                continue
+            kept.append(name)
+        return kept
+
+    def candidates(self, names, keys) -> Iterator[tuple[str, set[str]]]:
+        """(name, the subset of ``keys`` its shard may hold) for each of
+        ``names``, in order, whose subset is not empty."""
+        hashes = {k: _bloom_key_hashes(k) for k in keys}
+        for name in names:
+            st = self.stats.get(name) or {}
+            cand = {k for k in keys if self._may_hold(name, st, k, hashes[k])}
+            if cand:
+                yield name, cand
+
+    def _may_hold(self, name: str, st: dict, key: str, hashes: tuple[int, int]) -> bool:
+        """The one per-key probe: [min_key, max_key] range, then Bloom."""
+        kmin, kmax = st.get("min_key"), st.get("max_key")
+        if kmin is not None and kmax is not None and not kmin <= key <= kmax:
+            return False
+        bloom = st.get("bloom")
+        if not bloom:
+            return True
+        bits = self._bits.get(name)
+        if bits is None:
+            bits = self._bits[name] = _bloom_bits(bloom)
+        return _bloom_maybe_contains(bloom, bits, key, hashes)
 
 
 # --- patches (side-car layout resolution; pyspark-free) ---------------------

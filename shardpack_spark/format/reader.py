@@ -108,14 +108,13 @@ class Dataset:
         self.entry_names: "frozenset[str] | None" = (
             frozenset(entry_names) if entry_names is not None else None
         )
-        if version is not None:
-            self.manifest = manifest._load_manifest(self.path, version)
-            names = sorted(s["path"] for s in self.manifest.get("shards", []))
-        else:
-            self.manifest = manifest._load_latest_manifest(self.path)
-            names = manifest._visible_shards(self.path, self.manifest)
-        self._names = names
-        self._stats = manifest._pruning_stats(self.path, self.manifest)
+        self._view = (
+            manifest.live_view(self.path)
+            if version is None
+            else manifest.snapshot_view(self.path, version)
+        )
+        self.manifest = self._view.manifest
+        self._names = self._view.names
         self._patch_names = (
             [] if patches == "ignore" else manifest.list_patches(self.path)
         )
@@ -126,7 +125,6 @@ class Dataset:
             )
         self._overlay: dict[str, object] | None = None  # lazy {key: Record|_TOMBSTONE}
         self._cum_counts: list[int] | None = None  # lazy, for __getitem__
-        self._bloom_bits: dict[str, bytes] = {}  # lazy, for _candidate_shards
         self._base_presence: dict[str, bool] = {}  # lazy, for _key_has_base_row
 
     # --- shard-level surface ------------------------------------------------
@@ -184,7 +182,7 @@ class Dataset:
         decompression; unselected entries come back header-only with
         their true declared sizes)."""
         names = manifest._names_matching_meta(
-            list(self._names), self._stats, where_meta, where_meta_range
+            list(self._names), self._view.stats, where_meta, where_meta_range
         )
 
         def row_ok(rec: codec.Record) -> bool:
@@ -264,8 +262,7 @@ class Dataset:
         seen: set[str] = set()
 
         def visible_now() -> list[str]:
-            m = manifest._load_latest_manifest(self.path)
-            return manifest._visible_shards(self.path, m)
+            return manifest.live_view(self.path).names
 
         if from_now:
             seen.update(visible_now())
@@ -520,27 +517,10 @@ class Dataset:
         """(shard path, candidate keys) for every visible shard, in name
         order, whose manifest stats may hold any of ``keys``: a shard is
         skipped for a key outside its [min,max] range or vetoed by its
-        Bloom filter.  Pruning is a pure optimization — shards without
-        stats, or with malformed filters, keep every key."""
-        hashes = {k: manifest._bloom_key_hashes(k) for k in keys}
-        for name in self._names:
-            s = self._stats.get(name, {})
-            kmin, kmax = s.get("min_key"), s.get("max_key")
-            bloom = s.get("bloom")
-            bits = self._bloom_bits.get(name)
-            if bloom and bits is None:  # base64-decoded once per Dataset
-                bits = self._bloom_bits[name] = manifest._bloom_bits(bloom)
-            cand = {
-                k
-                for k in keys
-                if (kmin is None or kmax is None or kmin <= k <= kmax)
-                and not (
-                    bloom
-                    and not manifest._bloom_maybe_contains(bloom, bits, k, hashes[k])
-                )
-            }
-            if cand:
-                yield os.path.join(self.path, name), cand
+        Bloom filter (manifest.ShardView.candidates, the predicate the
+        DSv2 planner prunes with)."""
+        for name, cand in self._view.candidates(self._names, keys):
+            yield os.path.join(self.path, name), cand
 
     # --- loader ergonomics ---------------------------------------------------
 
@@ -594,7 +574,7 @@ class Dataset:
     def _ensure_counts(self) -> None:
         if self._cum_counts is not None:
             return
-        stats = manifest._manifest_stats(self.path, self.manifest)
+        stats = self._view.sizes(self._names)
         cum: list[int] = []
         total = 0
         for name in self._names:
@@ -612,7 +592,7 @@ class Dataset:
         overlay: dict[str, object] = {}
         for pname in self._patch_names:
             pdir = manifest.patch_path(self.path, pname)
-            for name in manifest._visible_shards(pdir):
+            for name in manifest.live_view(pdir).names:
                 for rec in codec.iter_records(
                     os.path.join(pdir, name),
                     verify_checksums=self.verify_checksums,

@@ -707,7 +707,7 @@ def test_bloom_no_false_negatives_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from shardpack_spark.format.datasource import (
+    from shardpack_spark.format.manifest import (
         _bloom_build,
         _bloom_key_hashes,
         _bloom_maybe_contains,
@@ -732,7 +732,7 @@ def test_bloom_no_false_negatives_property():
 
 
 def test_bloom_malformed_never_prunes():
-    from shardpack_spark.format.datasource import _bloom_maybe_contains
+    from shardpack_spark.format.manifest import _bloom_maybe_contains
 
     assert _bloom_maybe_contains({}, b"", "k") is True
     assert _bloom_maybe_contains({"m": "x", "k": 7}, b"", "k") is True
@@ -786,6 +786,167 @@ def test_undecodable_bloom_bits_never_prune(spark_ds, tmp_path):
     assert len(_planned_shards(reader.partitions())) == 1  # the [min,max] range still prunes
     rows = read_shardpack(spark_ds, out).filter(F.col("key") == "k1007").collect()
     assert [r["key"] for r in rows] == ["k1007"]
+
+
+def _land_stream_batch(root: str, batch_id: int, keys) -> None:
+    """Commit ``keys`` as stream-sink micro-batch ``batch_id``: shards
+    staged with their pruning stats, as a sink task stages them."""
+    from shardpack_spark.format import storage
+    from shardpack_spark.format.datasource import (
+        STAGING_DIR,
+        ShardCommitMessage,
+        ShardPackStreamWriter,
+        write_records_with_stats,
+    )
+
+    task_dir = os.path.join(root, STAGING_DIR, f"task-{batch_id:05d}")
+    results, stats = write_records_with_stats(
+        codec.DatasetWriter(task_dir, basename=f"part-{batch_id:05d}"),
+        [codec.Record(key=k, entries=[], metadata={"lang": "en"}) for k in keys],
+    )
+    staged = [
+        {
+            "path": os.path.basename(r["path"]),
+            "staging": storage.relpath(task_dir, root),
+            "records": r["records"],
+            "bytes": r["bytes"],
+            **stats.get(os.path.basename(r["path"]), {}),
+        }
+        for r in results
+    ]
+    ShardPackStreamWriter({"path": root}).commit(
+        [ShardCommitMessage(shards=staged)], batchId=batch_id
+    )
+
+
+def test_each_plan_parses_each_stream_marker_once(tmp_path, monkeypatch):
+    """A planning call (or an opened facade Dataset) builds ONE live view:
+    every `_batch_*.json` marker is read once, not once per question
+    (visible names, pruning stats, sizes) as it was when each question
+    had its own marker loop."""
+    from collections import Counter
+
+    from pyspark.sql.datasource import EqualTo
+
+    from shardpack_spark.format import storage
+    from shardpack_spark.format.datasource import (
+        ShardPackPruningReader,
+        ShardPackReader,
+        ShardPackStreamReader,
+    )
+    from shardpack_spark.format.reader import open_dataset
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "markers")
+    write_records(
+        out, [codec.Record(key=f"k{i}", entries=[], metadata={"lang": "en"}) for i in range(4)]
+    )
+    _land_stream_batch(out, 5, ["s5"])
+    _land_stream_batch(out, 6, ["s6"])
+
+    reads: Counter = Counter()
+    real_read_bytes = storage.StorageBackend.read_bytes
+
+    def counting_read_bytes(self, path, *args, **kwargs):
+        if os.path.basename(path).startswith("_batch_"):
+            reads[os.path.basename(path)] += 1
+        return real_read_bytes(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(storage.StorageBackend, "read_bytes", counting_read_bytes)
+
+    def pruned_batch_plan():
+        r = ShardPackPruningReader({"path": out, "where_meta": json.dumps({"lang": "en"})})
+        r.pushFilters([EqualTo(("key",), "s5")])
+        assert len(_planned_shards(r.partitions())) == 1
+
+    def plain_batch_plan():
+        assert len(_planned_shards(ShardPackReader({"path": out}).partitions())) == 3
+
+    stream = ShardPackStreamReader({"path": out})
+    start = stream.initialOffset()
+
+    def stream_batch():
+        assert len(_planned_shards(stream.partitions(start, stream.latestOffset()))) == 3
+
+    def facade_open_len_lookup():
+        d = open_dataset(out)
+        assert len(d) == 6
+        assert [r.key for r in d.lookup("s6")] == ["s6"]
+
+    for case in (pruned_batch_plan, plain_batch_plan, stream_batch, facade_open_len_lookup):
+        reads.clear()
+        case()
+        assert reads == {"_batch_00000005.json": 1, "_batch_00000006.json": 1}, case.__name__
+
+
+def test_facade_and_planner_keep_the_same_shards(tmp_path):
+    """One shard predicate: for random per-shard key sets, with Bloom
+    bits spoiled or key-range bounds dropped at random, the facade's
+    lookup candidates and the DSv2 planner's pushed `key IN (...)` keep
+    exactly the same shards, and neither drops a shard that holds a
+    probed key."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+    from pyspark.sql.datasource import In
+
+    from shardpack_spark.format.datasource import ShardPackPruningReader
+    from shardpack_spark.format.reader import open_dataset
+    from shardpack_spark.format.writer import write_records
+
+    keys = st.text(alphabet="abcd", min_size=1, max_size=3)
+    spoils = st.sampled_from(["none", "bits", "min_key", "max_key", "range"])
+    runs = iter(range(1 << 30))
+
+    def spoil(node, how: dict) -> int:
+        """Apply ``how`` ({shard name: mode}) to the shard entries under
+        ``node``; returns how many entries it spoiled."""
+        if isinstance(node, list):
+            return sum(spoil(v, how) for v in node)
+        if not isinstance(node, dict):
+            return 0
+        mode = how.get(node.get("path"), "none")
+        if mode == "bits":
+            node["bloom"]["bits"] = "abc"
+        if mode in ("min_key", "range"):
+            del node["min_key"]
+        if mode in ("max_key", "range"):
+            del node["max_key"]
+        return (mode != "none") + sum(spoil(v, how) for v in node.values())
+
+    @settings(max_examples=25, deadline=None)
+    @given(
+        st.lists(st.tuples(st.sets(keys, min_size=1, max_size=8), spoils), min_size=1, max_size=5),
+        st.sets(keys, min_size=1, max_size=6),
+    )
+    def check(shards, probes):
+        out = str(tmp_path / f"d{next(runs)}")
+        for held, _ in shards:  # one commit, one shard each
+            write_records(out, [codec.Record(key=k, entries=[], metadata={}) for k in sorted(held)])
+        names = [os.path.basename(p) for p in open_dataset(out).shards()]
+        assert len(names) == len(shards)
+        how = {n: mode for n, (_, mode) in zip(names, shards)}
+        spoiled = 0
+        for root, _, files in os.walk(out):
+            for f in files:
+                if f.endswith(".json"):
+                    p = os.path.join(root, f)
+                    with open(p) as fh:
+                        doc = json.load(fh)
+                    spoiled += spoil(doc, how)
+                    with open(p, "w") as fh:
+                        json.dump(doc, fh)
+        assert spoiled == sum(mode != "none" for _, mode in shards)
+
+        facade = {
+            os.path.basename(sp) for sp, _ in open_dataset(out)._candidate_shards(probes)
+        }
+        reader = ShardPackPruningReader({"path": out})
+        reader.pushFilters([In(("key",), tuple(sorted(probes)))])
+        assert facade == _planned_shards(reader.partitions())
+        holders = {n for n, (held, _) in zip(names, shards) if held & probes}
+        assert holders <= facade
+
+    check()
 
 
 def test_commit_lock_exclusive_and_stale_breaking(tmp_path):

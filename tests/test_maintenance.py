@@ -79,10 +79,10 @@ def test_compaction_crash_windows_leave_readable_dataset(spark, sf_dir, tmp_path
     from tests.test_datasource import _docs_as_records
     from shardpack_spark.format.datasource import (
         _load_manifest,
-        _visible_shards,
         _write_manifest,
         read_shardpack,
     )
+    from shardpack_spark.format.manifest import live_view
 
     register(spark)
     out = str(tmp_path / "ds")
@@ -108,7 +108,7 @@ def test_compaction_crash_windows_leave_readable_dataset(spark, sf_dir, tmp_path
     with open(os.path.join(out, "manifest.json.tmp-dead0000"), "w") as f:
         f.write('{"shards": [{"pa')  # torn JSON
     assert {r["key"] for r in read_shardpack(spark, out).select("key").collect()} == old_keys
-    assert set(_visible_shards(out)) == {s["path"] for s in old_manifest["shards"]}
+    assert set(live_view(out).names) == {s["path"] for s in old_manifest["shards"]}
 
     # Window B: swap the manifest to the new shard list; old files remain.
     # The hand-built root uses the v2 inline form (still supported) — the
@@ -120,7 +120,7 @@ def test_compaction_crash_windows_leave_readable_dataset(spark, sf_dir, tmp_path
     ]
     _write_manifest(out, swapped)
     assert {r["key"] for r in read_shardpack(spark, out).select("key").collect()} == old_keys
-    visible = set(_visible_shards(out))
+    visible = set(live_view(out).names)
     assert visible == {s["path"] for s in swapped["shards"]}
     # old shard files are still on disk (deletion never happened) but invisible
     leftovers = {os.path.basename(p) for p in codec.list_shards(out)} - visible

@@ -519,6 +519,79 @@ def test_batch_commit_crash_before_pointer_write(tmp_path, monkeypatch):
     assert ds._load_latest_manifest(root)["total_records"] == 3
 
 
+def _drain_stream(reader, start, delivered):
+    """One micro-batch through the DataSourceStreamReader protocol."""
+    end = reader.latestOffset()
+    if end != start:
+        for part in reader.partitions(start, end):
+            for batch in reader.read(part):
+                delivered.extend(batch.column("key").to_pylist())
+        reader.commit(end)
+    return end
+
+
+def test_stream_delivers_commit_whose_pointer_write_failed(tmp_path, monkeypatch):
+    """A batch commit whose root CAS succeeded but whose live-pointer
+    write failed is durable, so the stream source must deliver it too.
+    The stream planner used to read only the pointer: a later stream
+    batch moved its watermark past the commit's `c00000002-` name before
+    the healing commit made it visible, and its records were never
+    delivered while batch reads returned them."""
+    from shardpack_spark.format.reader import open_dataset
+
+    root = str(tmp_path / "lag")
+    be = storage.for_path(root)
+    be.makedirs(root)
+    _mk_commit_writer(root).commit([_stage_shards(root, ["base"], seq=1)])
+    reader = ds.ShardPackStreamReader({"path": root})
+    delivered: list[str] = []
+    offset = _drain_stream(reader, reader.initialOffset(), delivered)
+
+    class _Boom(RuntimeError):
+        pass
+
+    monkeypatch.setattr(
+        ds, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
+    )
+    with pytest.raises(_Boom):
+        _mk_commit_writer(root).commit([_stage_shards(root, ["k2"], seq=2)])
+    monkeypatch.undo()
+    offset = _drain_stream(reader, offset, delivered)
+
+    # stream-sink micro-batch 5 lands (staged the way a sink task does)
+    task_dir = os.path.join(root, ds.STAGING_DIR, "task-00000-m5")
+    w = codec.DatasetWriter(task_dir, basename="part-00000-m5")
+    w.write(codec.Record(key="m5", entries=[], metadata={}))
+    staged = [
+        {
+            "path": os.path.basename(r["path"]),
+            "staging": storage.relpath(task_dir, root),
+            "records": r["records"],
+            "bytes": r["bytes"],
+        }
+        for r in w.close()
+    ]
+    ds.ShardPackStreamWriter({"path": root}).commit(
+        [ds.ShardCommitMessage(shards=staged)], batchId=5
+    )
+    offset = _drain_stream(reader, offset, delivered)
+
+    # a healing batch commit advances the pointer past version 2
+    _mk_commit_writer(root).commit([_stage_shards(root, ["k9"], seq=9)])
+    _drain_stream(reader, offset, delivered)
+
+    assert sorted(delivered) == ["base", "k2", "k9", "m5"]
+    assert sorted(r.key for r in open_dataset(root).records()) == sorted(delivered)
+    batch = ds.ShardPackReader({"path": root})
+    keys = [
+        k
+        for p in batch.partitions()
+        for b in batch.read(p)
+        for k in b.column("key").to_pylist()
+    ]
+    assert sorted(keys) == sorted(delivered)
+
+
 # --- stream sink crash injection (VERDICT r2 item 6) --------------------------
 
 
@@ -564,18 +637,18 @@ def test_stream_sink_crash_between_move_and_marker(tmp_path):
         storage.LocalBackend.write_atomic = real_write_atomic
 
     # no marker -> nothing visible (the moved files are orphans)
-    assert ds._visible_shards(root) == []
+    assert ds.live_view(root).names == []
 
     # engine replays batch 0 with a fresh task attempt
     writer.commit([stage(["k1", "k2"])], batchId=0)
-    vis = ds._visible_shards(root)
+    vis = ds.live_view(root).names
     assert len(vis) == 1
     keys = [r.key for r in codec.iter_records(os.path.join(root, vis[0]))]
     assert keys == ["k1", "k2"]
 
     # a second replay of the committed batch is a no-op
     writer.commit([stage(["k1", "k2"])], batchId=0)
-    assert ds._visible_shards(root) == vis
+    assert ds.live_view(root).names == vis
 
     # the crashed attempt's shards are unreferenced -> vacuum reclaims
     rep = ds.vacuum(root, grace_seconds=0, dry_run=True)
