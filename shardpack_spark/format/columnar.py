@@ -49,9 +49,9 @@ import urllib.parse
 
 from pyspark.sql import functions as F
 
+from shardpack_spark import ship_by_value
 from shardpack_spark.format import codec, manifest, storage
 from shardpack_spark.format.datasource import (
-    _load_manifest,
     _write_manifest,  # noqa: F401  (re-exported for maintenance jobs)
     read_shardpack,
     register,
@@ -139,7 +139,8 @@ def write_columnar(
                 .mode("overwrite")
                 .save(sub)
             )
-            counts[name] = (_load_manifest(sub) or {}).get("total_records", 0)
+            committed = manifest._load_latest_manifest(sub) or {}
+            counts[name] = committed.get("total_records", 0)
         # commit point for the column map (written last: readers that find
         # the map can trust every listed dataset is fully committed).
         # MERGED with any existing map: writing a subset of columns
@@ -250,44 +251,30 @@ def read_columnar_zipped(
     """
     import pandas as _pd
 
-    from shardpack_spark.format.datasource import _load_manifest, _pickle_by_value
-
-    # the merge closure references THIS module (_col_dir); ship it by
-    # value like the format modules, or executors that cannot import
-    # shardpack_spark (vanilla driver sessions) fail to unpickle
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    try:
-        _cp.register_pickle_by_value(_sys.modules[__name__])
-    except Exception:
-        pass
-
     columns = _resolve_read_args(path, columns, how)
 
+    views: dict[str, manifest.ShardView] = {}
     per_col: dict[str, list[dict]] = {}
     for name in columns:
         cdir = os.path.join(path, _col_dir(name))
-        m = _load_manifest(cdir)
-        if m is None:
+        view = manifest.live_view(cdir)
+        if view.names and not view.stats:
             # ad-hoc shards (written through the codec, no manifest) are
             # readable by read_columnar's listing fallback, but a zipped
             # read has no key ranges to slice by — raise, as documented,
             # instead of silently treating the column as empty
-            if codec.list_shards(cdir):
-                raise codec.ShardPackIOError(
-                    f"column {name!r} has shards but no manifest — "
-                    "zipped reads need write_columnar's sorted layout"
-                )
-            m = {}
-        shards = sorted(m.get("shards", []), key=lambda s: s.get("min_key", ""))
+            raise codec.ShardPackIOError(
+                f"column {name!r} has shards but no manifest — "
+                "zipped reads need write_columnar's sorted layout"
+            )
+        shards = [view.stats[n] for n in view.names]
         if any("min_key" not in s for s in shards):
             raise codec.ShardPackIOError(
                 f"column {name!r} has shards without key ranges — "
                 "zipped reads need write_columnar's sorted layout"
             )
-        per_col[name] = shards
+        views[name] = view
+        per_col[name] = sorted(shards, key=lambda s: s["min_key"])
 
     # keyspace slices from the driving column's shard boundaries
     driving = per_col[columns[0]]
@@ -300,19 +287,13 @@ def read_columnar_zipped(
             hi = None if i == len(driving) - 1 else driving[i + 1]["min_key"]
             bounds.append((lo, hi))
 
-    views = {
-        name: manifest.ShardView(
-            None, [s["path"] for s in shards], {s["path"]: s for s in shards}
-        )
-        for name, shards in per_col.items()
-    }
     plan_rows = []
     for lo, hi in bounds:
         # a column shard belongs to the slice [lo, hi) iff its key range
         # intersects it: the shard predicate with an exclusive upper bound
         cols_shards = {
             name: views[name].prune(
-                views[name].names,
+                [s["path"] for s in per_col[name]],
                 lo=None if lo is None else (lo, True),
                 hi=None if hi is None else (hi, False),
             )
@@ -320,7 +301,7 @@ def read_columnar_zipped(
         }
         plan_rows.append((lo, hi, json.dumps(cols_shards)))
 
-    _pickle_by_value()
+    ship_by_value()
     base = path
     col_order = list(columns)
     want_all = how == "full"

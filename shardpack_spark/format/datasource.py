@@ -162,6 +162,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from shardpack_spark import ship_by_value
 from shardpack_spark.format import codec, storage
 from shardpack_spark.format.stream_offsets import CappedListingOffsets
 from shardpack_spark.format.commit import (  # noqa: F401  (re-exported:
@@ -1177,45 +1178,6 @@ class ShardPackDataSource(DataSource):
         return ShardPackStreamWriter(self.options)
 
 
-def _pickle_by_value() -> None:
-    """Ship the format code inside the pickled plan.
-
-    Spark serializes the DataSource class with cloudpickle; by default
-    that is a by-reference pickle, which breaks when executor Python
-    workers cannot import shardpack_spark (e.g. the driver added the repo
-    to sys.path manually).  Registering the modules for by-value pickling
-    makes every plan self-contained.
-    """
-    import sys
-
-    from pyspark import cloudpickle
-
-    from shardpack_spark.format import codec as codec_mod
-    from shardpack_spark.format import commit as commit_mod
-    from shardpack_spark.format import manifest as manifest_mod
-    from shardpack_spark.format import storage as storage_mod
-    from shardpack_spark.format import stream_offsets as offsets_mod
-    from shardpack_spark.format import writer as writer_mod
-
-    # order matters only in that EVERY module codec references at module
-    # level must be registered too — by-value registration is not
-    # recursive, so a new intra-package import that is missed here
-    # surfaces as executor-side ModuleNotFoundError in vanilla sessions
-    for mod in (
-        storage_mod,
-        codec_mod,
-        manifest_mod,
-        commit_mod,
-        writer_mod,
-        offsets_mod,
-        sys.modules[__name__],
-    ):
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
 def register(spark) -> None:
     # Idempotent per session: re-registering emits a JVM-side "data source
     # shardpack replaced a previously registered data source" warning that
@@ -1224,7 +1186,7 @@ def register(spark) -> None:
     # register() defensively, so dedupe here.
     if getattr(spark, "_shardpack_registered", False):
         return
-    _pickle_by_value()
+    ship_by_value()
     ShardPackDataSource.parallelism = spark.sparkContext.defaultParallelism
     spark.dataSource.register(ShardPackDataSource)
     spark._shardpack_registered = True
@@ -1315,7 +1277,7 @@ def compact_dataset(
         # metadata survives the full-overwrite commit
         w = w.option("dataset_metadata", json.dumps(manifest["user_metadata"]))
     w.mode("overwrite").save(path)
-    new_manifest = _load_manifest(path) or {}
+    new_manifest = _load_latest_manifest(path) or {}
     return {
         "shards": len(new_manifest.get("shards", [])),
         "records": new_manifest.get("total_records", 0),
@@ -1512,7 +1474,11 @@ def read_version_delta(
         base = {
             s["path"] for s in _load_manifest(path, since_version).get("shards", [])
         }
-    cur = _load_manifest(path, to_version) if to_version is not None else _load_manifest(path)
+    cur = (
+        _load_manifest(path, to_version)
+        if to_version is not None
+        else _load_latest_manifest(path)
+    )
     if cur is None:
         raise codec.ShardPackIOError(f"no manifest under {path}")
     new = [s["path"] for s in cur.get("shards", []) if s["path"] not in base]
@@ -1535,7 +1501,7 @@ def verify_dataset(spark, path: str) -> dict:
     "corrupt": [...], "missing": [...], "orphans": [...]}.
     """
     be = storage.for_path(path)
-    manifest = _load_manifest(path) or {"shards": []}
+    manifest = _load_latest_manifest(path) or {"shards": []}
     expected = {s["path"]: s.get("records") for s in manifest.get("shards", [])}
     for f in be.glob_names(path, "_batch_*.json"):
         for s in json.loads(be.read_bytes(os.path.join(path, f))).get("shards", []):
@@ -1560,7 +1526,7 @@ def verify_dataset(spark, path: str) -> dict:
             "orphans": orphans,
         }
 
-    _pickle_by_value()
+    ship_by_value()
     base = path
 
     def check(batches):
@@ -1838,6 +1804,10 @@ def vacuum(
     }
     be = storage.for_path(path)
     with _CommitLock(path):
+        # the live POINTER, not _load_latest_manifest: _observe_latest
+        # flattens the pointer's parts before it looks for newer roots,
+        # so those parts must stay referenced even when a newer root
+        # exists (and any newer root is retained below)
         manifest = _load_manifest(path)
         has_markers = bool(be.glob_names(path, "_batch_*.json"))
         if manifest is None and not has_markers:

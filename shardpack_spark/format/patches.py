@@ -56,6 +56,7 @@ from shardpack_spark.format.datasource import (
 from shardpack_spark.format.manifest import (  # noqa: E402, F401
     PATCH_DIR,
     TOMBSTONE_KEY,
+    _load_manifest,
     list_patches,
     patch_path,
 )
@@ -242,8 +243,6 @@ def read_with_patches(spark, base: str, **reader_options):
     # force-broadcasting those would OOM the driver, so past the cap the
     # plan falls back to a shuffle join (AQE may still pick broadcast if
     # the post-agg key set turns out small).
-    from shardpack_spark.format.datasource import _load_manifest
-
     total_patch_rows = 0
     for d in patches:
         m = _load_manifest(patch_path(base, d))
@@ -262,8 +261,6 @@ def compact_patches(spark, base: str, compression: str | None = None) -> dict:
     if not patches:
         return {"patches_folded": 0}
     merged = read_with_patches(spark, base)
-    from shardpack_spark.format.datasource import _load_manifest
-
     comp = compression or (_load_manifest(base) or {}).get("compression", "none")
     n_parts = max(1, spark.sparkContext.defaultParallelism // 2)
     (

@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from shardpack_spark import ship_by_value
 from shardpack_spark.format import (
     cdx_public,
     manifest,
@@ -740,38 +741,11 @@ class WarcDataSource(DataSource):
         return WarcStreamReader(self.options)
 
 
-def _pickle_by_value() -> None:
-    """Same contract as datasource._pickle_by_value: executor Python
-    workers may not be able to import shardpack_spark, so every module
-    this source touches at runtime ships inside the pickled plan."""
-    from pyspark import cloudpickle
-
-    import sys
-
-    from shardpack_spark.format import cdx_public as cdx_mod
-    from shardpack_spark.format import codec as codec_mod
-    from shardpack_spark.format import manifest as manifest_mod
-    from shardpack_spark.format import reader as reader_mod
-    from shardpack_spark.format import storage as storage_mod
-    from shardpack_spark.format import stream_offsets as offsets_mod
-    from shardpack_spark.format import warc as warc_mod
-    from shardpack_spark.format import warc_index as warc_index_mod
-
-    # manifest + reader: the planning worker resolves dump_index locator
-    # lookups (_locator_partitions); cdx_public: public-CDX pushdown
-    # (_public_cdx_partitions) — all pyspark-free
-    for mod in (storage_mod, codec_mod, manifest_mod, reader_mod, warc_mod, warc_index_mod, cdx_mod, offsets_mod, sys.modules[__name__]):
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
-
-
 def register_warc(spark) -> None:
     """Idempotent per session (mirrors datasource.register)."""
     if getattr(spark, "_shardpack_warc_registered", False):
         return
-    _pickle_by_value()
+    ship_by_value()
     # NOTE: a sibling spark.newSession() cannot register OR use a Python
     # data source its parent registered (Spark checks name existence
     # globally but resolves per-session) — run per-session conf

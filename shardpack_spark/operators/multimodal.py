@@ -39,11 +39,6 @@ from pyspark.sql.types import (
 # package (caught by the /verify vanilla-session simulation)
 from shardpack_spark.operators import imagecodec
 
-# Pixel decoding is real (pure Python) for PNG + baseline/progressive
-# JPEG + GIF via operators.imagecodec; formats beyond those still need
-# PIL/libav and degrade to tagged marker bytes without it.
-_DECODE_STUBBED = False
-
 
 def parse_image_dims(b: bytes) -> tuple[int | None, int | None]:
     """True (width, height) from PNG IHDR / JPEG SOFn / GIF headers.
@@ -81,25 +76,6 @@ def parse_image_dims(b: bytes) -> tuple[int | None, int | None]:
     if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
         return int.from_bytes(b[6:8], "little"), int.from_bytes(b[8:10], "little")
     return None, None
-
-
-def _self_pickle_by_value() -> None:
-    """mapInPandas closures from this module must travel by value so
-    executors need no importable copy of shardpack_spark (see
-    format.datasource._pickle_by_value).  format.msgpack is registered
-    too: decode_msgpack_entries closes over its unpackb."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from shardpack_spark.format import msgpack as msgpack_mod
-    from shardpack_spark.operators import imagecodec as imagecodec_mod
-
-    for mod in (msgpack_mod, imagecodec_mod, sys.modules[__name__]):
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
 
 
 def _check_decoder(decoder: str) -> None:
@@ -209,7 +185,6 @@ def image_features(df: DataFrame) -> DataFrame:
     (full decode, costlier); this pass stays header-only so a corpus-wide
     inventory never decompresses a pixel.
     """
-    _self_pickle_by_value()
     imgs = explode_entries(df).filter(F.col("content_type").startswith("image/")).select(
         "key", "file_name", "data"
     )
@@ -277,7 +252,6 @@ def image_pixel_features(df: DataFrame, decoder: str = "pure") -> DataFrame:
     this output then reports the true surrogate fraction — a dropped
     row would hide exactly the degradation the telemetry alerts on."""
     _check_decoder(decoder)
-    _self_pickle_by_value()
     imgs = explode_entries(df).filter(
         F.col("content_type").startswith("image/")
     ).select("key", "file_name", "data")
@@ -432,7 +406,6 @@ def resize_images(
     ('pure'/'pil'/'surrogate') feeds ``perceptual.decode_path_rollup``,
     the corpus-level alert on silently-degraded thumbnails."""
     _check_decoder(decoder)
-    _self_pickle_by_value()
     imgs = explode_entries(df).filter(
         F.col("content_type").startswith("image/")
     ).select("key", "file_name", "content_type", "data")
@@ -533,7 +506,6 @@ def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
     rows inside the executor batch — no shuffle; downstream per-frame
     work repartitions if a single video's frames should spread.
     """
-    _self_pickle_by_value()
     vids = explode_entries(df).filter(F.col("content_type").startswith("video/")).select(
         "key", "file_name", "data"
     )
@@ -616,7 +588,6 @@ def audio_features(df: DataFrame) -> DataFrame:
     sample_video_frames), same mapInPandas batch shape throughout.
     Non-WAV or corrupt payloads are dropped (count them upstream via
     sniffing if needed)."""
-    _self_pickle_by_value()
     auds = explode_entries(df).filter(F.col("content_type").startswith("audio/")).select(
         "key", "file_name", "data"
     )
@@ -664,7 +635,6 @@ def decode_npy_entries(df: DataFrame) -> DataFrame:
     Arrow-batched mapInPandas — the same shape as every other decoder
     here, linear in payload bytes.
     """
-    _self_pickle_by_value()
     tensors = explode_entries(df).filter(
         F.col("content_type").isin("application/x-npy", "application/x-npz")
     ).select("key", "file_name", "content_type", "data")
@@ -726,7 +696,6 @@ def decode_msgpack_entries(df: DataFrame) -> DataFrame:
     as deterministic JSON (sorted keys; bin values base64) so downstream
     extraction is the exact same ``from_json`` path the JSON entries use.
     """
-    _self_pickle_by_value()
     packed = explode_entries(df).filter(
         F.col("content_type") == "application/msgpack"
     ).select("key", "file_name", "data")

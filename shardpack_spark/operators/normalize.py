@@ -24,7 +24,6 @@ work), deterministic for a fixed level.
 
 from __future__ import annotations
 
-import sys
 import unicodedata
 
 from pyspark.sql import Column, DataFrame
@@ -113,17 +112,6 @@ def python_clean_text(s: str) -> str:
     return s.strip()
 
 
-def _self_pickle_by_value() -> None:
-    """compression_signals ships a closure over this module; register it
-    by value so executors need no importable shardpack_spark copy."""
-    from pyspark import cloudpickle
-
-    try:
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-
 def compression_signals(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", level: int = 6
 ) -> DataFrame:
@@ -135,7 +123,6 @@ def compression_signals(
     heavy boilerplate or repetition.  Empty text gets ratio NULL.
     Arrow-batched mapInPandas; zlib is a C call per row.
     """
-    _self_pickle_by_value()
     schema = StructType(
         [
             StructField(id_col, LongType()),

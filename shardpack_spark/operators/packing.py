@@ -29,20 +29,6 @@ from pyspark.sql import functions as F
 _GROUP_STRIDE = 1 << 40
 
 
-def _self_pickle_by_value() -> None:
-    """applyInPandas closures from this module must travel by value so
-    executors need no importable copy of shardpack_spark (see
-    format.datasource._pickle_by_value)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    try:
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-
 def ffd_assign(tokens: list[int], budget: int) -> list[int]:
     """First-fit-decreasing bin assignment for one packer group.
 
@@ -95,7 +81,6 @@ def pack_sequences(
     the low millions of docs, which also caps the pandas batch one
     executor materializes.
     """
-    _self_pickle_by_value()
     grp = F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(num_groups))
     slim = df.select(
         grp.alias("__grp"),

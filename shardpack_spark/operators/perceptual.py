@@ -52,29 +52,16 @@ from pyspark.sql.types import (
 # them — a runtime `from shardpack_spark...` inside a UDF body dies with
 # ModuleNotFoundError on vanilla executors that can't import the package
 from shardpack_spark.operators import imagecodec
-from shardpack_spark.operators.multimodal import explode_entries, parse_wav_header
+from shardpack_spark.operators.multimodal import (
+    _check_decoder,
+    explode_entries,
+    parse_wav_header,
+)
 
 if TYPE_CHECKING:
     from collections.abc import Iterator
 
     import pandas as pd
-
-
-def _self_pickle_by_value() -> None:
-    """mapInPandas closures travel by value: executors have no
-    importable shardpack_spark (driver adds it via sys.path only)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from shardpack_spark.operators import imagecodec as ic_mod
-    from shardpack_spark.operators import multimodal as mm_mod
-
-    for mod in (ic_mod, mm_mod, sys.modules[__name__]):
-        try:
-            cloudpickle.register_pickle_by_value(mod)
-        except Exception:
-            pass
 
 
 SIGNATURE_SCHEMA = StructType(
@@ -156,11 +143,6 @@ def _gray_with_path(data: bytes, decoder: str, pil_image):
     return _surrogate_gray(data), "surrogate"
 
 
-def _check_decoder(decoder: str) -> None:
-    if decoder not in ("pure", "auto"):
-        raise ValueError(f"decoder must be 'pure' or 'auto', got {decoder!r}")
-
-
 def _pack_bits(bits) -> tuple[int, int]:
     """64 bools (bit 0 first) -> (hi, lo) unsigned 32-bit halves.
 
@@ -215,7 +197,6 @@ def dhash_tensors(df: DataFrame) -> DataFrame:
     branch exists) so the whole signature family — text SimHash aside —
     stays union-compatible with ``dhash_images``/``video_fingerprint``.
     """
-    _self_pickle_by_value()
     tensors = explode_entries(df).filter(
         F.col("content_type").isin("application/x-npy", "application/x-npz")
     ).select("key", "file_name", "content_type", "data")
@@ -290,7 +271,6 @@ def dhash_images(df: DataFrame, decoder: str = "pure") -> DataFrame:
     per row so a pipeline can measure its real-perceptual fraction.
     """
     _check_decoder(decoder)
-    _self_pickle_by_value()
     imgs = explode_entries(df).filter(
         F.col("content_type").startswith("image/")
     ).select("key", "file_name", "data")
@@ -394,7 +374,6 @@ def audio_fingerprint(df: DataFrame) -> DataFrame:
     stays union-compatible with ``dhash_images``/``video_fingerprint``.
     Pair finding is ``hamming_near_pairs`` — identical plumbing to the
     image path."""
-    _self_pickle_by_value()
     auds = explode_entries(df).filter(
         F.col("content_type").startswith("audio/")
     ).select("key", "file_name", "data")
@@ -495,7 +474,6 @@ def video_fingerprint(
     """
     from shardpack_spark.operators.multimodal import parse_avi
 
-    _self_pickle_by_value()
     vids = explode_entries(df).filter(
         F.col("content_type").startswith("video/")
     ).select("key", "file_name", "data")

@@ -42,20 +42,6 @@ from pyspark.sql.types import (
 END = "</w>"
 
 
-def _self_pickle_by_value() -> None:
-    """bpe_encode's closure calls encode_word/_merge_word from this
-    module; register it by value so executors need no importable copy of
-    shardpack_spark (see format.datasource._pickle_by_value)."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    try:
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass
-
-
 # one whitespace definition for BOTH train and encode: an explicit ASCII
 # class evaluated identically by Java regex (train, executor-side split)
 # and Python re (encode).  str.split() / \s would disagree between the
@@ -163,7 +149,6 @@ def bpe_encode(
     Output token order is the document's word order with per-word BPE
     symbols flattened (word boundaries remain recoverable from ``</w>``).
     """
-    _self_pickle_by_value()
     ranks = {tuple(p): i for i, p in enumerate(merges)}
     id_field = df.schema[id_col]
     schema = StructType(

@@ -338,8 +338,6 @@ def _export_warc_partitions(
     files."""
     from shardpack_spark.format import storage, warc, warc_index
 
-    _register_modules_for_pickle()
-
     def write_part(batches):
         import pandas as pd
         from pyspark import TaskContext
@@ -654,7 +652,6 @@ def index_warc_archives(spark, path: str, tasks: int = 512) -> DataFrame:
     from shardpack_spark.format import warc_index
     from shardpack_spark.format.warc import list_warc_files
 
-    _register_modules_for_pickle()
     files = list_warc_files(path)
 
     def build(batches):
@@ -730,7 +727,6 @@ def warc_dump_index(
         raise ValueError(f"key must be record_id|target_uri, got {key!r}")
     if mode not in ("overwrite", "append", "sync"):
         raise ValueError(f"mode must be overwrite|append|sync, got {mode!r}")
-    _register_modules_for_pickle()
     register(spark)
     files = list(files) if files is not None else warc.list_warc_files(path)
     if mode == "sync":
@@ -856,7 +852,6 @@ def cdx_to_sidecars(
     would reject a size-mismatched one anyway)."""
     from shardpack_spark.format import cdx_public, storage, warc_index
 
-    _register_modules_for_pickle()
     shards = cdx_public._list_cdx_shards(cdx_path, storage.for_path(cdx_path))
     root = warc_dir.rstrip("/")
 
@@ -952,7 +947,6 @@ def export_public_cdx(
 
     from shardpack_spark.format import cdx_public, storage, warc
 
-    _register_modules_for_pickle()
     files = warc.list_warc_files(path)
     base = path.rstrip("/")
 
@@ -1214,24 +1208,6 @@ def wat_links(df: DataFrame, host_level: bool = False) -> DataFrame:
             F.lower(F.parse_url("dst", F.lit("HOST"))).alias("dst"),
         ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
     return edges.filter(F.col("src") != F.col("dst")).distinct()
-
-
-def _register_modules_for_pickle() -> None:
-    """Executor workers may not be able to import shardpack_spark — ship
-    the modules the write path touches inside the pickled closure.  The
-    format-module list is OWNED by warc_source._pickle_by_value (one
-    place to extend when the WARC runtime path grows a dependency); this
-    only adds the operator module itself."""
-    from pyspark import cloudpickle
-
-    import shardpack_spark.operators.webcorpus as self_mod
-    from shardpack_spark.format.warc_source import _pickle_by_value
-
-    _pickle_by_value()
-    try:
-        cloudpickle.register_pickle_by_value(self_mod)
-    except Exception:
-        pass
 
 
 def warc_error_rollup(df: DataFrame, group_cols=("file",)) -> DataFrame:

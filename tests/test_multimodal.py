@@ -200,8 +200,6 @@ def test_resize_images_plumbing_and_determinism(spark):
     assert (out["img/1"]["src_width"], out["img/1"]["src_height"]) == (100, 80)
     assert (out["img/2"]["src_width"], out["img/2"]["src_height"]) == (640, 480)
     assert all(r["width"] == 64 and r["height"] == 64 for r in out.values())
-    if mm._DECODE_STUBBED:
-        assert all(bytes(r["data"]).startswith(b"STUB-RESIZE:64x64:") for r in out.values())
     # deterministic across runs
     again = {r["key"]: bytes(r["data"]) for r in mm.resize_images(df, 64, 64).collect()}
     assert {k: bytes(v["data"]) for k, v in out.items()} == again

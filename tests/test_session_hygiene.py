@@ -1,6 +1,7 @@
 """Session hygiene of the fuzzy-dedup library calls: building and running
 q29 or the bench's LSH path must not leave temp views in the session, and
-the package source must not register session-global ``__``-named views."""
+the package source must not register session-global ``__``-named views
+nor grow per-module pickle-by-value registrations."""
 
 from __future__ import annotations
 
@@ -49,3 +50,15 @@ def test_package_registers_no_dunder_temp_views():
         if pat.search(p.read_text(encoding="utf-8"))
     ]
     assert offenders == []
+
+
+def test_package_registers_pickle_by_value_once():
+    """One by-value registration of the whole package (cloudpickle covers
+    every submodule of a registered package), not per-module lists."""
+    pkg = pathlib.Path(shardpack_spark.__file__).parent
+    calls = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        for _ in re.finditer(r"register_pickle_by_value\(", p.read_text(encoding="utf-8"))
+    ]
+    assert calls == ["__init__.py"]

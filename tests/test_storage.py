@@ -530,6 +530,22 @@ def _drain_stream(reader, start, delivered):
     return end
 
 
+def _commit_losing_pointer_write(root, monkeypatch, key, seq):
+    """Commit one record whose root CAS succeeds but whose live-pointer
+    write fails: the commit is durable, the pointer still names the
+    previous version."""
+
+    class _Boom(RuntimeError):
+        pass
+
+    monkeypatch.setattr(
+        ds, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
+    )
+    with pytest.raises(_Boom):
+        _mk_commit_writer(root).commit([_stage_shards(root, [key], seq=seq)])
+    monkeypatch.undo()
+
+
 def test_stream_delivers_commit_whose_pointer_write_failed(tmp_path, monkeypatch):
     """A batch commit whose root CAS succeeded but whose live-pointer
     write failed is durable, so the stream source must deliver it too.
@@ -546,16 +562,7 @@ def test_stream_delivers_commit_whose_pointer_write_failed(tmp_path, monkeypatch
     reader = ds.ShardPackStreamReader({"path": root})
     delivered: list[str] = []
     offset = _drain_stream(reader, reader.initialOffset(), delivered)
-
-    class _Boom(RuntimeError):
-        pass
-
-    monkeypatch.setattr(
-        ds, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
-    )
-    with pytest.raises(_Boom):
-        _mk_commit_writer(root).commit([_stage_shards(root, ["k2"], seq=2)])
-    monkeypatch.undo()
+    _commit_losing_pointer_write(root, monkeypatch, "k2", seq=2)
     offset = _drain_stream(reader, offset, delivered)
 
     # stream-sink micro-batch 5 lands (staged the way a sink task does)
@@ -590,6 +597,22 @@ def test_stream_delivers_commit_whose_pointer_write_failed(tmp_path, monkeypatch
         for k in b.column("key").to_pylist()
     ]
     assert sorted(keys) == sorted(delivered)
+
+
+def test_audits_see_commit_whose_pointer_write_failed(spark, tmp_path, monkeypatch):
+    """The fsck and the version delta resolve the newest committed state,
+    not the live pointer: after a commit whose pointer write failed,
+    `verify_dataset` audits both shards and reports no orphan, and the
+    delta since version 1 is that commit's record."""
+    root = str(tmp_path / "lag")
+    storage.for_path(root).makedirs(root)
+    _mk_commit_writer(root).commit([_stage_shards(root, ["base"], seq=1)])
+    _commit_losing_pointer_write(root, monkeypatch, "k2", seq=2)
+
+    report = ds.verify_dataset(spark, root)
+    assert (report["ok"], report["shards_ok"], report["orphans"]) == (True, 2, [])
+    delta = ds.read_version_delta(spark, root, since_version=1)
+    assert [r.key for r in delta.collect()] == ["k2"]
 
 
 # --- stream sink crash injection (VERDICT r2 item 6) --------------------------
