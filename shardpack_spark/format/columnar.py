@@ -51,11 +51,7 @@ from pyspark.sql import functions as F
 
 from shardpack_spark import ship_by_value
 from shardpack_spark.format import codec, manifest, storage
-from shardpack_spark.format.datasource import (
-    _write_manifest,  # noqa: F401  (re-exported for maintenance jobs)
-    read_shardpack,
-    register,
-)
+from shardpack_spark.format.datasource import read_shardpack, register
 
 COLUMNS_FILE = "_columnar.json"
 

@@ -4,10 +4,19 @@ The read-side metadata layer lives in ``format.manifest``; this module
 is its writer-side twin — everything a COMMITTER needs to publish
 shards atomically (commit lock, per-shard pruning stats, manifest
 parts, the CAS snapshot claim) importable without a JVM or pyspark on
-the path.  ``format.datasource`` re-imports these exact functions for
-the Spark DataSource writer (ONE source of truth for the commit
-protocol), and ``format.writer`` builds the Spark-free writer facade
-on the same functions.
+the path.  There is one write path:
+
+- ``ShardSink`` writes every shard file — the DataSource batch writer's
+  tasks, the stream sink's tasks and the Spark-free ``format.writer``
+  facade push records into it and get manifest entries (counts plus
+  ``_StatsTracker`` pruning stats) back; ``sink_options`` parses its
+  options on the driver.  ``convert_to_dataset`` feeds existing shards
+  through the same ``_StatsTracker``.
+- ``publish_root`` is the one publication step of every manifest
+  commit: ``commit_attempt`` (under ``commit_shards``' lock and CAS
+  retry loop, which every writer uses), ``fold_manifest_parts``,
+  ``datasource.fold_stream_markers`` and
+  ``datasource.convert_to_dataset``.
 
 Safety model (object-store-correct; see ``commit_shards``):
 - the commit CLAIMS its snapshot id by conditionally creating
@@ -26,8 +35,8 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
 import uuid
-from typing import TYPE_CHECKING
 
 from shardpack_spark.format import codec, storage
 from shardpack_spark.format.manifest import (
@@ -42,9 +51,6 @@ from shardpack_spark.format.manifest import (
     list_patches,
     live_view,
 )
-
-if TYPE_CHECKING:
-    from collections.abc import Iterable
 
 STAGING_DIR = "_staging"
 
@@ -113,8 +119,6 @@ class _CommitLock:
         self._token = f"{os.getpid()}-{uuid.uuid4().hex}"
 
     def __enter__(self):
-        import time
-
         deadline = time.monotonic() + self.timeout
         while True:
             try:
@@ -326,25 +330,50 @@ class _StatsTracker:
         return self.stats
 
 
-def write_records_with_stats(
-    writer: "codec.DatasetWriter", records: "Iterable[codec.Record]"
-):
-    """Drain a record stream into a DatasetWriter, collecting per-shard
-    pruning stats (see _StatsTracker)."""
-    tracker = _StatsTracker()
-    for rec in records:
-        writer.write(rec)
-        tracker.add(rec, os.path.basename(writer._writer.path))
-    return writer.close(), tracker.finish()
+def sink_options(options: dict) -> dict:
+    """The shard sink's options, parsed and validated once on the driver:
+    the DataSource writers pass their string options, the facade its
+    typed arguments.  Returns ShardSink's keyword arguments."""
+    compression = options.get("compression", "none")
+    if compression not in codec._CODECS:
+        raise codec.ShardPackCodecError(
+            f"compression '{compression}' not available (have {sorted(codec._CODECS)})"
+        )
+
+    def opt_int(name: str) -> int | None:
+        v = options.get(name)
+        return int(v) if v not in (None, "") else None
+
+    pb = options.get("partition_by") or []
+    if isinstance(pb, str):
+        pb = [k.strip() for k in pb.split(",") if k.strip()]
+    return {
+        "compression": compression,
+        "target_shard_bytes": int(
+            options.get("target_shard_bytes", codec.DEFAULT_TARGET_SHARD_BYTES)
+        ),
+        "max_record_bytes": opt_int("max_record_bytes"),
+        "max_entry_bytes": opt_int("max_entry_bytes"),
+        # chunk-level compression (draft.md:144-148): entries larger than
+        # this compress in independently-decodable chunks so ranged reads
+        # into one huge entry touch O(chunk) bytes (codec.read_entry_slice)
+        "chunk_bytes": opt_int("chunk_bytes"),
+        "partition_by": list(pb),
+        "max_partition_writers": int(options.get("max_partition_writers", 64)),
+    }
 
 
-class PartitionRouter:
-    """Push-style router: one DatasetWriter per distinct partition-value
-    tuple, so every output shard is partition-PURE (one value per
-    partition key) and the manifest/marker can prune and replace by
-    exact partition match.  Shared by the batch writer, the stream sink
-    (which routes into its task staging dir), and the Spark-free writer
-    facade.
+class ShardSink:
+    """THE write path for shard files: push records in, get manifest
+    entries (name, counts, pruning stats) out.  The DataSource batch
+    writer, the stream sink (into its task staging dir) and the
+    Spark-free writer facade all write through it.
+
+    Unpartitioned, it is one DatasetWriter plus one _StatsTracker under
+    ``basename``.  With ``partition_by`` it routes: one writer per
+    distinct partition-value tuple (``{basename}-p{i:04d}``), so every
+    output shard is partition-PURE (one value per partition key) and
+    the manifest/marker can prune and replace by exact partition match.
 
     Memory stays bounded: each open writer buffers one compression
     stream and its _StatsTracker holds one shard's key hashes; the
@@ -358,10 +387,10 @@ class PartitionRouter:
         self,
         out_dir: str,
         basename: str,
-        partition_by: list[str],
         *,
-        compression: str,
-        target_shard_bytes: int,
+        partition_by: list[str] | None = None,
+        compression: str = "none",
+        target_shard_bytes: int = codec.DEFAULT_TARGET_SHARD_BYTES,
         max_record_bytes: int | None = None,
         max_entry_bytes: int | None = None,
         max_partition_writers: int = 64,
@@ -369,13 +398,15 @@ class PartitionRouter:
     ):
         self.out_dir = out_dir
         self.basename = basename
-        self.partition_by = partition_by
-        self.compression = compression
-        self.target_shard_bytes = target_shard_bytes
-        self.max_record_bytes = max_record_bytes
-        self.max_entry_bytes = max_entry_bytes
+        self.partition_by = partition_by or []
         self.max_partition_writers = max_partition_writers
-        self.chunk_bytes = chunk_bytes
+        self._writer_kw = dict(
+            compression=compression,
+            target_shard_bytes=target_shard_bytes,
+            max_record_bytes=max_record_bytes,
+            max_entry_bytes=max_entry_bytes,
+            chunk_bytes=chunk_bytes,
+        )
         self._writers: dict[tuple, tuple[codec.DatasetWriter, _StatsTracker]] = {}
 
     def write(self, rec: "codec.Record") -> None:
@@ -383,70 +414,55 @@ class PartitionRouter:
         pv = tuple(md.get(k) for k in self.partition_by)
         ent = self._writers.get(pv)
         if ent is None:
-            if len(self._writers) >= self.max_partition_writers:
-                raise codec.ShardPackIOError(
-                    f"task saw more than max_partition_writers="
-                    f"{self.max_partition_writers} distinct values of "
-                    f"partition_by={self.partition_by}; repartition the "
-                    "input by the partition keys first "
-                    "(df.repartition(F.element_at('metadata', lit(k)))) "
-                    "or raise the option"
-                )
-            w = codec.DatasetWriter(
-                self.out_dir,
-                basename=f"{self.basename}-p{len(self._writers):04d}",
-                compression=self.compression,
-                target_shard_bytes=self.target_shard_bytes,
-                max_record_bytes=self.max_record_bytes,
-                max_entry_bytes=self.max_entry_bytes,
-                chunk_bytes=self.chunk_bytes,
-            )
+            basename = self.basename
+            if self.partition_by:
+                if len(self._writers) >= self.max_partition_writers:
+                    raise codec.ShardPackIOError(
+                        f"task saw more than max_partition_writers="
+                        f"{self.max_partition_writers} distinct values of "
+                        f"partition_by={self.partition_by}; repartition the "
+                        "input by the partition keys first "
+                        "(df.repartition(F.element_at('metadata', lit(k)))) "
+                        "or raise the option"
+                    )
+                basename = f"{basename}-p{len(self._writers):04d}"
+            w = codec.DatasetWriter(self.out_dir, basename=basename, **self._writer_kw)
             ent = self._writers[pv] = (w, _StatsTracker())
         w, tracker = ent
         w.write(rec)
         tracker.add(rec, os.path.basename(w._writer.path))
 
     def close(self) -> list[dict]:
+        """Finish every shard; one manifest entry per shard."""
         shards: list[dict] = []
         for pv, (w, tracker) in self._writers.items():
             stats = tracker.finish()
-            pdict = dict(zip(self.partition_by, pv))
             for r in w.close():
                 name = os.path.basename(r["path"])
-                shards.append(
-                    {
-                        "path": name,
-                        "records": r["records"],
-                        "bytes": r["bytes"],
-                        "partition": pdict,
-                        **stats.get(name, {}),
-                    }
-                )
+                entry = {"path": name, "records": r["records"], "bytes": r["bytes"]}
+                if self.partition_by:
+                    entry["partition"] = dict(zip(self.partition_by, pv))
+                shards.append({**entry, **stats.get(name, {})})
         return shards
 
-    def written_paths(self) -> list[str]:
-        """Absolute paths of every shard file opened so far (abort
-        cleanup — includes the in-progress one)."""
-        out = []
+    def abort(self) -> None:
+        """Close open handles and remove every shard file written so far
+        (the in-progress one included); nothing is published."""
+        be = storage.for_path(self.out_dir)
+        paths: list[str] = []
         for w, _ in self._writers.values():
-            out.extend(r["path"] for r in w.results)
+            paths.extend(r["path"] for r in w.results)
             if w._writer is not None:
-                out.append(w._writer.path)
-        return out
-
-
-def route_partitioned_records(
-    records: "Iterable[codec.Record]",
-    out_dir: str,
-    basename: str,
-    partition_by: list[str],
-    **kwargs,
-) -> list[dict]:
-    """Pull-style adapter over PartitionRouter (see its docstring)."""
-    router = PartitionRouter(out_dir, basename, partition_by, **kwargs)
-    for rec in records:
-        router.write(rec)
-    return router.close()
+                paths.append(w._writer.path)
+                try:
+                    w._writer.close()
+                except Exception:
+                    pass
+        for p in paths:
+            try:
+                be.remove(p)
+            except (FileNotFoundError, OSError):
+                pass
 
 
 # --- the commit itself -------------------------------------------------------
@@ -475,6 +491,54 @@ def _flatten_root_parts(path: str, be, root: dict) -> list[dict]:
     return shards
 
 
+def _prior_parts(path: str, prior: dict | None) -> list[str]:
+    """The part list a new root builds on: the prior root's parts.  A v2
+    inline manifest is migrated here: its shard list becomes the first
+    part, once, and is never rewritten again."""
+    parts = list((prior or {}).get("parts", []))
+    if not parts and (prior or {}).get("shards"):
+        parts = [_write_manifest_part(path, prior["shards"])]
+    return parts
+
+
+def publish_root(path: str, be, vid: int, **fields) -> dict | None:
+    """THE publication step of every manifest commit (writers, folds,
+    convert): stamp ``fields`` as snapshot ``vid``, claim
+    ``_manifest/root-{vid}.json``, then write the live pointer.
+    Returns the published manifest, or None when a concurrent commit
+    already owns ``vid`` (each caller decides: retry, or raise).
+
+    Archiving the root BEFORE the live swap means the root replays this
+    commit's exact view forever (shard files and parts are immutable,
+    until an overwrite deletes the data files and resets history).
+    put_if_absent is the commit's SERIALIZATION POINT: claiming
+    root-{vid} atomically makes this commit version vid.  A backend
+    with no conditional create (whose lock is at best advisory) gets a
+    plain atomic put — single-writer deployments only, as documented.
+    Empty optional keys (``dropped``, ``partition_by``,
+    ``user_metadata``) are left out of the root."""
+    manifest = {
+        "version": 3,
+        "version_id": vid,
+        "committed_at": round(time.time(), 3),
+        **{
+            k: v
+            for k, v in fields.items()
+            if v or k not in ("dropped", "partition_by", "user_metadata")
+        },
+    }
+    arch = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{vid:08d}.json")
+    be.makedirs(os.path.dirname(arch))
+    payload = json.dumps(manifest, indent=1, sort_keys=True).encode()
+    try:
+        if not be.put_if_absent(arch, payload):
+            return None
+    except storage.UnsupportedOperation:
+        be.write_atomic(arch, payload)
+    _write_manifest(path, manifest)
+    return manifest
+
+
 def commit_attempt(
     path: str,
     be,
@@ -489,19 +553,14 @@ def commit_attempt(
     target_shard_bytes: int = codec.DEFAULT_TARGET_SHARD_BYTES,
     dataset_metadata: dict | None = None,
     manifest_checkpoint_parts: int = DEFAULT_MANIFEST_CHECKPOINT_PARTS,
-    write_manifest=None,
 ) -> dict | None:
     """One CAS attempt; returns the committed manifest or None to retry.
 
     ``state`` carries the attempt-invariant work across retries
     ({"new_part": None, "spec_done": False}): the manifest part is
     content-stable so it is written once, and spec renames move real
-    files so they must never re-run.  ``write_manifest`` injects the
-    live-pointer writer (fault-injection seam; defaults to
-    _write_manifest)."""
+    files so they must never re-run."""
     partition_by = partition_by or []
-    if write_manifest is None:
-        write_manifest = _write_manifest
     prior, prior_vid = _observe_latest(
         path,
         # append needs only parts+totals; spec naming needs the
@@ -645,10 +704,7 @@ def commit_attempt(
                 replaced.append(s["path"])
                 if counted:
                     replaced_records += s.get("records", 0)
-        parts = list(prior.get("parts", []))
-        if not parts and prior.get("shards"):
-            parts = [_write_manifest_part(path, prior["shards"])]
-        parts.append(new_part)
+        parts = _prior_parts(path, prior) + [new_part]
         dropped = sorted(set(prior.get("dropped") or ()) | set(replaced))
         total = (
             prior.get("total_records", 0)
@@ -663,12 +719,7 @@ def commit_attempt(
             parts = [_write_manifest_part(path, base), new_part]
     else:
         old_names = set()
-        parts = list(prior.get("parts", []))
-        if not parts and prior.get("shards"):
-            # migrate a v2 inline manifest: its shard list becomes the
-            # first part, once, and is never rewritten again
-            parts = [_write_manifest_part(path, prior["shards"])]
-        parts.append(new_part)
+        parts = _prior_parts(path, prior) + [new_part]
         dropped = list(prior.get("dropped") or ())
         total = prior.get("total_records", 0) + sum(s["records"] for s in new_shards)
         if manifest_checkpoint_parts and len(parts) > manifest_checkpoint_parts:
@@ -677,58 +728,35 @@ def commit_attempt(
             # retry cache (state["new_part"]) stays valid
             base = _flatten_root_parts(path, be, prior)
             parts = [_write_manifest_part(path, base), new_part]
-    # next snapshot id: strictly 1 + the id floor from the SAME
-    # observation that produced `prior` (never a fresh listing — see
-    # _observe_latest for why that would lose commits)
-    vid = 1 + prior_vid
-    import time as _time
-
-    manifest = {
-        "version": 3,
-        "version_id": vid,
-        "committed_at": round(_time.time(), 3),
-        "compression": compression,
-        "target_shard_bytes": target_shard_bytes,
-        "parts": parts,
-        "total_records": total,
-    }
-    if dropped:
-        manifest["dropped"] = dropped
     # informational layout record (compaction reads it to preserve
     # partition purity); a full overwrite RESETS it to this commit's
     # layout, append/dynamic carry the prior keys forward
     full_reset = overwrite and not (dynamic_overwrite and prior is not None)
-    pb = partition_by or (
-        [] if full_reset else (prior or {}).get("partition_by") or []
-    )
-    if pb:
-        manifest["partition_by"] = pb
     # dataset-level custom metadata: merge over the prior commit's
     # (this commit's keys win); full overwrite starts fresh
     um = {} if full_reset else dict((prior or {}).get("user_metadata") or {})
-    if dataset_metadata:
-        um.update(dataset_metadata)
-    if um:
-        manifest["user_metadata"] = um
-    # Archive the root BEFORE the live swap: shard files and parts are
-    # immutable, so this root replays this commit's exact view forever
-    # (until an overwrite deletes the data files and resets history).
-    # put_if_absent is the commit's SERIALIZATION POINT: claiming
-    # root-{vid} atomically makes this commit version vid; losing the
-    # claim means a concurrent commit owns vid — return None and the
+    um.update(dataset_metadata or {})
+    # next snapshot id: strictly 1 + the id floor from the SAME
+    # observation that produced `prior` (never a fresh listing — see
+    # _observe_latest for why that would lose commits).  Losing the
+    # claim means a concurrent commit owns vid: return None and the
     # caller re-reads (now seeing the winner's root) and retries.
-    arch = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{vid:08d}.json")
-    be.makedirs(os.path.dirname(arch))
-    payload = json.dumps(manifest, indent=1, sort_keys=True).encode()
-    try:
-        if not be.put_if_absent(arch, payload):
-            return None  # lost the CAS: re-merge on the winner's state
-    except storage.UnsupportedOperation:
-        # backend has no conditional create (and its lock is at best
-        # advisory): plain atomic put — single-writer deployments only,
-        # as documented
-        be.write_atomic(arch, payload)
-    write_manifest(path, manifest)
+    vid = 1 + prior_vid
+    manifest = publish_root(
+        path,
+        be,
+        vid,
+        compression=compression,
+        target_shard_bytes=target_shard_bytes,
+        parts=parts,
+        total_records=total,
+        dropped=dropped,
+        partition_by=partition_by
+        or ([] if full_reset else (prior or {}).get("partition_by")),
+        user_metadata=um,
+    )
+    if manifest is None:
+        return None
     for t in spec_trash:
         # displaced spec-named files die only after the new manifest
         # is durable (same rule as overwrite's old-file deletion)
@@ -794,9 +822,7 @@ def publish_patch(base: str, hidden: str) -> str:
                 seq += 1
             else:
                 raise codec.ShardPackIOError(f"patch commit contention under {base}")
-        import time as _time
-
-        cutoff = _time.time() - 3600
+        cutoff = time.time() - 3600
         referenced = set()
         for d in be.listdir(proot):
             if d.endswith(".ptr"):
@@ -852,37 +878,26 @@ def fold_manifest_parts(path: str, max_parts: int = 1) -> dict:
             return {"folded_parts": 0}
         new_part = _write_manifest_part(path, prior.get("shards", []))
         vid = 1 + prior_vid
-        import time as _time
-
-        manifest = {
-            "version": 3,
-            "version_id": vid,
-            "committed_at": round(_time.time(), 3),
-            "compression": prior.get("compression", "none"),
-            "target_shard_bytes": prior.get(
+        # a lost claim under a broken/advisory lock means a concurrent
+        # commit landed — rerun the fold then
+        if publish_root(
+            path,
+            be,
+            vid,
+            compression=prior.get("compression", "none"),
+            target_shard_bytes=prior.get(
                 "target_shard_bytes", codec.DEFAULT_TARGET_SHARD_BYTES
             ),
-            "parts": [new_part],
-            "total_records": prior.get("total_records", 0),
-        }
-        for carry in ("dropped", "partition_by", "user_metadata"):
-            if prior.get(carry):
-                manifest[carry] = prior[carry]
-        # same CAS publication as every commit: claiming root-{vid} is
-        # the serialization point; a lost claim under a broken/advisory
-        # lock means a concurrent commit landed — rerun the fold then
-        arch = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{vid:08d}.json")
-        be.makedirs(os.path.dirname(arch))
-        payload = json.dumps(manifest, indent=1, sort_keys=True).encode()
-        try:
-            if not be.put_if_absent(arch, payload):
-                raise codec.ShardPackIOError(
-                    f"fold_manifest_parts lost the commit race on {path}; "
-                    "rerun after the concurrent commit finishes"
-                )
-        except storage.UnsupportedOperation:
-            be.write_atomic(arch, payload)
-        _write_manifest(path, manifest)
+            parts=[new_part],
+            total_records=prior.get("total_records", 0),
+            dropped=prior.get("dropped"),
+            partition_by=prior.get("partition_by"),
+            user_metadata=prior.get("user_metadata"),
+        ) is None:
+            raise codec.ShardPackIOError(
+                f"fold_manifest_parts lost the commit race on {path}; "
+                "rerun after the concurrent commit finishes"
+            )
         return {"folded_parts": len(parts), "version": vid}
 
 
@@ -898,20 +913,19 @@ def commit_shards(
     target_shard_bytes: int = codec.DEFAULT_TARGET_SHARD_BYTES,
     dataset_metadata: dict | None = None,
     manifest_checkpoint_parts: int = DEFAULT_MANIFEST_CHECKPOINT_PARTS,
-    lock_cls=None,
-    write_manifest=None,
 ) -> dict:
     """Publish already-written shards as one atomic commit (the full
     protocol: liveness lock around a CAS-retried commit_attempt).
-    Returns the committed manifest.  ``lock_cls`` / ``write_manifest``
-    are fault-injection seams (default _CommitLock / _write_manifest).
+    Returns the committed manifest.  Every writer commits through here:
+    the facade ``Writer``, the DataSource batch writer, and so
+    ``compact_dataset``.
 
     Every entry of ``new_shards`` is stamped with ``compression`` —
     shards in one commit share a codec by construction."""
     for s in new_shards:
         s["compression"] = compression
     be = storage.for_path(path)
-    with (lock_cls or _CommitLock)(path):
+    with _CommitLock(path):
         state = {"new_part": None, "spec_done": False}
         for _ in range(64):
             manifest = commit_attempt(
@@ -927,7 +941,6 @@ def commit_shards(
                 target_shard_bytes=target_shard_bytes,
                 dataset_metadata=dataset_metadata,
                 manifest_checkpoint_parts=manifest_checkpoint_parts,
-                write_manifest=write_manifest,
             )
             if manifest is not None:
                 return manifest

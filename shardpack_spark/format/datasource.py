@@ -167,22 +167,19 @@ from shardpack_spark.format import codec, storage
 from shardpack_spark.format.stream_offsets import CappedListingOffsets
 from shardpack_spark.format.commit import (  # noqa: F401  (re-exported:
     # the writer-side commit protocol lives pyspark-free in format.commit
-    # so the Spark-free writer facade shares ONE implementation; existing
-    # callers keep importing these names from here)
+    # so the Spark-free writer facade shares ONE implementation)
     DEFAULT_MANIFEST_CHECKPOINT_PARTS,
     STAGING_DIR,
+    ShardSink,
     _CommitLock,
-    _META_RANGE_MAX_ABS,
-    _META_STR_RANGE_MAX_LEN,
-    _meta_range_add,
-    _meta_ranges_kept,
+    _StatsTracker,
     _next_commit_seq,
-    _write_manifest,
+    _prior_parts,
     _write_manifest_part,
-    commit_attempt,
+    commit_shards,
     fold_manifest_parts,
-    route_partitioned_records,
-    write_records_with_stats,
+    publish_root,
+    sink_options,
 )
 from shardpack_spark.format.writer import (  # noqa: F401
     # extension -> MIME map shared with the Spark-free pack_files facade
@@ -194,9 +191,6 @@ from shardpack_spark.format.manifest import (  # noqa: F401  (re-exported:
     # keep importing these names from here)
     MANIFEST_NAME,
     MANIFEST_PARTS_DIR,
-    _META_VALUES_CAP,
-    _bloom_build,
-    _bloom_key_hashes,
     _load_latest_manifest,
     _load_manifest,
     _marker_entries,
@@ -724,24 +718,21 @@ def _batches_to_records(iterator) -> Iterator[codec.Record]:
             )
 
 
-def _write_with_stats(writer: "codec.DatasetWriter", iterator):
-    """Drain an Arrow-batch iterator into a DatasetWriter, collecting
-    per-shard pruning stats (commit.write_records_with_stats)."""
-    return write_records_with_stats(writer, _batches_to_records(iterator))
-
-
 class ShardPackWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, overwrite: bool):
         self.path = _norm_path(options.get("path"))
         if not self.path:
             raise codec.ShardPackIOError("shardpack writer requires a path")
         self.overwrite = overwrite
-        self.compression = options.get("compression", "none")
-        if self.compression not in codec._CODECS:
-            raise codec.ShardPackCodecError(
-                f"compression '{self.compression}' not available (have {sorted(codec._CODECS)})"
-            )
-        self.target = int(options.get("target_shard_bytes", codec.DEFAULT_TARGET_SHARD_BYTES))
+        # Partitioned layout (``partition_by``): route records to
+        # partition-pure shards keyed by these METADATA keys (the
+        # hive-partitioning analog for a key/metadata/entries record
+        # model).  Shards stay in ONE flat directory — partition values
+        # ride in the manifest, where exact planning-time pruning and
+        # dynamic overwrite read them — so every flat-layout code path
+        # (listing, vacuum, streaming watermarks) keeps working.
+        self.sink_options = sink_options(options)
+        self.partition_by: list[str] = self.sink_options["partition_by"]
         # Spec-parity naming (reference draft.md:23-30): commit() renames
         # this job's shards to sequential `{spec_basename}-{seq:06d}.shardpack`.
         # The rename happens driver-side at commit, where a global sequence
@@ -750,26 +741,6 @@ class ShardPackWriter(DataSourceArrowWriter):
         # default `c{seq}-` names in a directory consumed as a STREAM — the
         # watermark assumes one naming mode's sort order.
         self.spec_basename = options.get("spec_naming")
-        mrb = options.get("max_record_bytes")
-        meb = options.get("max_entry_bytes")
-        self.max_record_bytes = int(mrb) if mrb is not None else None
-        self.max_entry_bytes = int(meb) if meb is not None else None
-        # chunk-level compression (draft.md:144-148): entries larger than
-        # this compress in independently-decodable chunks so ranged reads
-        # into one huge entry touch O(chunk) bytes (codec.read_entry_slice)
-        cbytes = options.get("chunk_bytes")
-        self.chunk_bytes = int(cbytes) if cbytes not in (None, "") else None
-        # Partitioned layout: route records to partition-pure shards keyed
-        # by these METADATA keys (the hive-partitioning analog for a
-        # key/metadata/entries record model).  Shards stay in ONE flat
-        # directory — partition values ride in the manifest, where exact
-        # planning-time pruning and dynamic overwrite read them — so
-        # every flat-layout code path (listing, vacuum, streaming
-        # watermarks, spec naming collisions aside) keeps working.
-        pb = options.get("partition_by")
-        self.partition_by: list[str] = (
-            [k.strip() for k in pb.split(",") if k.strip()] if pb else []
-        )
         if self.partition_by and self.spec_basename:
             raise codec.ShardPackIOError(
                 "partition_by and spec_naming cannot combine: spec renames "
@@ -789,7 +760,6 @@ class ShardPackWriter(DataSourceArrowWriter):
             raise codec.ShardPackIOError(
                 "partition_overwrite_mode=dynamic requires partition_by"
             )
-        self.max_partition_writers = int(options.get("max_partition_writers", 64))
         # dataset-level custom metadata (the spec's `--metadata k=v`
         # shard-level fields, docs/draft.md:136-148, lifted to the
         # dataset where our commit log lives): a JSON object recorded in
@@ -823,81 +793,28 @@ class ShardPackWriter(DataSourceArrowWriter):
 
         tc = TaskContext.get()
         basename = f"c{self.commit_seq:08d}-part-{tc.partitionId():05d}-{uuid.uuid4().hex[:8]}"
-        if self.partition_by:
-            return ShardCommitMessage(shards=self._write_partitioned(iterator, basename))
-        writer = codec.DatasetWriter(
-            self.path,
-            basename=basename,
-            compression=self.compression,
-            target_shard_bytes=self.target,
-            max_record_bytes=self.max_record_bytes,
-            max_entry_bytes=self.max_entry_bytes,
-            chunk_bytes=self.chunk_bytes,
-        )
-        results, stats = _write_with_stats(writer, iterator)
-        shards = []
-        for r in results:
-            name = os.path.basename(r["path"])
-            shards.append(
-                {"path": name, "records": r["records"], "bytes": r["bytes"], **stats.get(name, {})}
-            )
-        return ShardCommitMessage(shards=shards)
-
-    def _write_partitioned(self, iterator, basename: str) -> list[dict]:
-        return _route_partitioned(
-            iterator,
-            self.path,
-            basename,
-            self.partition_by,
-            compression=self.compression,
-            target_shard_bytes=self.target,
-            max_record_bytes=self.max_record_bytes,
-            max_entry_bytes=self.max_entry_bytes,
-            max_partition_writers=self.max_partition_writers,
-            chunk_bytes=self.chunk_bytes,
-        )
+        sink = ShardSink(self.path, basename, **self.sink_options)
+        for rec in _batches_to_records(iterator):
+            sink.write(rec)
+        return ShardCommitMessage(shards=sink.close())
 
     def commit(self, messages) -> None:
         """Publish this job's shards as one atomic commit — the full
         protocol (CAS-claimed snapshot roots, liveness lock, pointer
         cache) lives pyspark-free in commit.commit_shards; see its
-        docstring for the safety model.  ``_CommitLock`` /
-        ``_write_manifest`` resolve through this module's globals so
-        fault-injection tests can monkeypatch them here."""
+        docstring for the safety model."""
         storage.guard_zip_directory_reloads()
-        new_shards = [s for m in messages if m is not None for s in m.shards]
-        for s in new_shards:
-            s["compression"] = self.compression
-        be = storage.for_path(self.path)
-        with _CommitLock(self.path):
-            state = {"new_part": None, "spec_done": False}
-            for _ in range(64):
-                manifest = self._commit_attempt(be, new_shards, state)
-                if manifest is not None:
-                    return
-            raise codec.ShardPackIOError(
-                f"commit contention on {self.path}: could not claim a "
-                "snapshot id in 64 attempts"
-            )
-
-    def _commit_attempt(self, be, new_shards: list[dict], state: dict) -> dict | None:
-        """One CAS attempt (commit.commit_attempt with this writer's
-        options) — kept as a method so fault-injection tests can pause
-        a SPECIFIC writer instance mid-commit."""
-        return commit_attempt(
+        commit_shards(
             self.path,
-            be,
-            new_shards,
-            state,
+            [s for m in messages if m is not None for s in m.shards],
             overwrite=self.overwrite,
             dynamic_overwrite=self.dynamic_overwrite,
             spec_basename=self.spec_basename,
             partition_by=self.partition_by,
-            compression=self.compression,
-            target_shard_bytes=self.target,
+            compression=self.sink_options["compression"],
+            target_shard_bytes=self.sink_options["target_shard_bytes"],
             dataset_metadata=self.dataset_metadata,
             manifest_checkpoint_parts=self.manifest_checkpoint_parts,
-            write_manifest=_write_manifest,
         )
 
     def abort(self, messages) -> None:
@@ -996,21 +913,6 @@ class ShardPackStreamReader(DataSourceStreamReader):
 
 
 
-def _route_partitioned(
-    iterator,
-    out_dir: str,
-    basename: str,
-    partition_by: list[str],
-    **kwargs,
-) -> list[dict]:
-    """Arrow-batch adapter over commit.route_partitioned_records (one
-    DatasetWriter per distinct partition-value tuple -> partition-PURE
-    shards); shared by the batch writer and the stream sink."""
-    return route_partitioned_records(
-        _batches_to_records(iterator), out_dir, basename, partition_by, **kwargs
-    )
-
-
 class ShardPackStreamWriter(DataSourceStreamArrowWriter):
     """Streaming sink with batch-commit visibility.
 
@@ -1026,23 +928,16 @@ class ShardPackStreamWriter(DataSourceStreamArrowWriter):
         self.path = _norm_path(options.get("path"))
         if not self.path:
             raise codec.ShardPackIOError("shardpack stream writer requires a path")
-        self.compression = options.get("compression", "none")
-        self.target = int(options.get("target_shard_bytes", codec.DEFAULT_TARGET_SHARD_BYTES))
-        mrb = options.get("max_record_bytes")
-        meb = options.get("max_entry_bytes")
-        self.max_record_bytes = int(mrb) if mrb is not None else None
-        self.max_entry_bytes = int(meb) if meb is not None else None
-        cbytes = options.get("chunk_bytes")
-        self.chunk_bytes = int(cbytes) if cbytes not in (None, "") else None
-        # partition-pure streamed shards (same layout + same manifest
-        # semantics as the batch writer's partition_by; values ride in
+        # validated here, on the driver, as the batch writer's are;
+        # partition_by gives partition-pure streamed shards (same layout
+        # and manifest semantics as the batch writer's; values ride in
         # the batch MARKER until fold_stream_markers moves them into the
         # manifest — pruning reads both)
-        pb = options.get("partition_by")
-        self.partition_by: list[str] = (
-            [k.strip() for k in pb.split(",") if k.strip()] if pb else []
-        )
-        self.max_partition_writers = int(options.get("max_partition_writers", 64))
+        self.sink_options = sink_options(options)
+        self.partition_by: list[str] = self.sink_options["partition_by"]
+        # the marker of a batch whose tasks wrote no shard needs the
+        # directory too (a sink creates its task dir on the first record)
+        storage.for_path(self.path).makedirs(self.path)
 
     def write(self, iterator) -> ShardCommitMessage:
         storage.guard_zip_directory_reloads()
@@ -1052,46 +947,15 @@ class ShardPackStreamWriter(DataSourceStreamArrowWriter):
         task_dir = os.path.join(
             self.path, STAGING_DIR, f"task-{tc.partitionId():05d}-{uuid.uuid4().hex[:8]}"
         )
-        basename = f"part-{tc.partitionId():05d}-{uuid.uuid4().hex[:8]}"
-        staging_rel = storage.relpath(task_dir, self.path)
-        if self.partition_by:
-            shards = _route_partitioned(
-                iterator,
-                task_dir,
-                basename,
-                self.partition_by,
-                compression=self.compression,
-                target_shard_bytes=self.target,
-                max_record_bytes=self.max_record_bytes,
-                max_entry_bytes=self.max_entry_bytes,
-                max_partition_writers=self.max_partition_writers,
-                chunk_bytes=self.chunk_bytes,
-            )
-            return ShardCommitMessage(
-                shards=[{**s, "staging": staging_rel} for s in shards]
-            )
-        writer = codec.DatasetWriter(
+        sink = ShardSink(
             task_dir,
-            basename=basename,
-            compression=self.compression,
-            target_shard_bytes=self.target,
-            max_record_bytes=self.max_record_bytes,
-            max_entry_bytes=self.max_entry_bytes,
-            chunk_bytes=self.chunk_bytes,
+            f"part-{tc.partitionId():05d}-{uuid.uuid4().hex[:8]}",
+            **self.sink_options,
         )
-        results, stats = _write_with_stats(writer, iterator)
-        return ShardCommitMessage(
-            shards=[
-                {
-                    "path": os.path.basename(r["path"]),
-                    "staging": storage.relpath(os.path.dirname(r["path"]), self.path),
-                    "records": r["records"],
-                    "bytes": r["bytes"],
-                    **stats.get(os.path.basename(r["path"]), {}),
-                }
-                for r in results
-            ]
-        )
+        for rec in _batches_to_records(iterator):
+            sink.write(rec)
+        staging = storage.relpath(task_dir, self.path)
+        return ShardCommitMessage(shards=[{**s, "staging": staging} for s in sink.close()])
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 (Spark API)
         storage.guard_zip_directory_reloads()
@@ -1307,8 +1171,8 @@ def convert_to_dataset(
     every scan plans from pure metadata with the same bloom / min-max /
     meta-value pruning as DataSource-written datasets.
 
-    The stats rows mirror ``_write_with_stats`` exactly, so an adopted
-    dataset is indistinguishable from a written one.  Returns the
+    Each shard's stats come from the writers' own ``_StatsTracker``, so
+    an adopted dataset is indistinguishable from a written one.  Returns the
     committed manifest.  Raises if a commit log already exists (nothing
     to convert) or appears concurrently (that writer already adopted the
     ad-hoc files; convert aborts and removes its orphan part).
@@ -1333,21 +1197,8 @@ def convert_to_dataset(
             for name in pdf["name"]:
                 full = os.path.join(root, name)
                 idx = codec.read_index(full)  # validates magic + offsets
-                entry = {
-                    "name": name,
-                    "records": len(idx.offsets),
-                    "bytes": storage.for_path(full).getsize(full),
-                    "min_key": None,
-                    "max_key": None,
-                    "bloom": None,
-                    "meta_values": None,
-                    "meta_ranges": None,
-                }
+                tracker = _StatsTracker()
                 if want_keys and idx.offsets:
-                    hashes: list[tuple[int, int]] = []
-                    mv: dict[str, set] = {}
-                    mr: dict = {}
-                    mn = mx = None
                     # offsets=None lets iter_records' header-seek fast
                     # path engage on payload-heavy shards (key+metadata
                     # reads only, payload bytes never leave the store)
@@ -1357,54 +1208,24 @@ def convert_to_dataset(
                         skip_payload=True,
                         skip_entries=True,
                     ):
-                        mn = rec.key if mn is None else min(mn, rec.key)
-                        mx = rec.key if mx is None else max(mx, rec.key)
-                        hashes.append(_bloom_key_hashes(rec.key))
-                        for mk, v in (rec.metadata or {}).items():
-                            vs = mv.setdefault(mk, set())
-                            if len(vs) <= _META_VALUES_CAP:
-                                vs.add(v)
-                            _meta_range_add(mr, mk, v)
-                    entry["min_key"], entry["max_key"] = mn, mx
-                    bloom = _bloom_build(hashes)
-                    if bloom is not None:
-                        entry["bloom"] = json.dumps(bloom)
-                    kept = {
-                        mk: sorted(vs)
-                        for mk, vs in mv.items()
-                        if len(vs) <= _META_VALUES_CAP
-                    }
-                    if kept:
-                        entry["meta_values"] = json.dumps(kept)
-                    kept_r = _meta_ranges_kept(mr)
-                    if kept_r:
-                        entry["meta_ranges"] = json.dumps(kept_r)
-                rows.append(entry)
-            yield pd.DataFrame(rows)
+                        tracker.add(rec, name)
+                entry = {
+                    "path": name,
+                    "records": len(idx.offsets),
+                    "bytes": storage.for_path(full).getsize(full),
+                    **tracker.finish().get(name, {}),
+                }
+                rows.append(json.dumps(entry))
+            yield pd.DataFrame({"entry": rows})
 
-    schema = (
-        "name string, records long, bytes long, min_key string, "
-        "max_key string, bloom string, meta_values string, meta_ranges string"
-    )
     n_tasks = max(1, min(len(names), spark.sparkContext.defaultParallelism * 4))
     stat_rows = (
         spark.createDataFrame([(n,) for n in names], "name string")
         .repartition(n_tasks)
-        .mapInPandas(_scan, schema)
+        .mapInPandas(_scan, "entry string")
         .collect()  # bounded: one manifest-entry-sized row per shard
     )
-    entries: list[dict] = []
-    for r in sorted(stat_rows, key=lambda r: r["name"]):
-        e: dict = {"path": r["name"], "records": r["records"], "bytes": r["bytes"]}
-        if r["min_key"] is not None:
-            e["min_key"], e["max_key"] = r["min_key"], r["max_key"]
-        if r["bloom"] is not None:
-            e["bloom"] = json.loads(r["bloom"])
-        if r["meta_values"] is not None:
-            e["meta_values"] = json.loads(r["meta_values"])
-        if r["meta_ranges"] is not None:
-            e["meta_ranges"] = json.loads(r["meta_ranges"])
-        entries.append(e)
+    entries = [json.loads(r["entry"]) for r in stat_rows]
 
     be = storage.for_path(path)
     part: str | None = None
@@ -1422,28 +1243,16 @@ def convert_to_dataset(
                 )
             if part is None:
                 part = _write_manifest_part(path, entries)
-            vid = 1 + prior_vid
-            import time as _time
-
-            manifest = {
-                "version": 3,
-                "version_id": vid,
-                "committed_at": round(_time.time(), 3),
-                "compression": compression,
-                "target_shard_bytes": codec.DEFAULT_TARGET_SHARD_BYTES,
-                "parts": [part],
-                "total_records": sum(e["records"] for e in entries),
-            }
-            arch = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{vid:08d}.json")
-            be.makedirs(os.path.dirname(arch))
-            payload = json.dumps(manifest, indent=1, sort_keys=True).encode()
-            try:
-                claimed = be.put_if_absent(arch, payload)
-            except storage.UnsupportedOperation:
-                be.write_atomic(arch, payload)
-                claimed = True
-            if claimed:
-                _write_manifest(path, manifest)
+            manifest = publish_root(
+                path,
+                be,
+                1 + prior_vid,
+                compression=compression,
+                target_shard_bytes=codec.DEFAULT_TARGET_SHARD_BYTES,
+                parts=[part],
+                total_records=sum(e["records"] for e in entries),
+            )
+            if manifest is not None:
                 return manifest
         raise codec.ShardPackIOError(
             f"convert contention on {path}: could not claim a snapshot id"
@@ -1615,66 +1424,44 @@ def fold_stream_markers(path: str, keep_last: int = 100) -> dict:
             shards.extend(m.get("shards", []))
             marker_pb = m.get("partition_by") or marker_pb  # newest wins
         prior, prior_vid0 = _observe_latest(path, flatten=False)
+        prior = prior or {}
         # marker shards a dynamic overwrite logically dropped must not
         # fold back in (their files await vacuum, not resurrection)
-        prior_dropped = set((prior or {}).get("dropped") or ())
+        prior_dropped = set(prior.get("dropped") or ())
         if prior_dropped:
             shards = [s for s in shards if s["path"] not in prior_dropped]
-        if prior is None:
-            parts, total = [], 0
-            comp, target = "none", codec.DEFAULT_TARGET_SHARD_BYTES
-        else:
-            parts = list(prior.get("parts", []))
-            if not parts and prior.get("shards"):
-                parts = [_write_manifest_part(path, prior["shards"])]
-            total = prior.get("total_records", 0)
-            comp = prior.get("compression", "none")
-            target = prior.get("target_shard_bytes", codec.DEFAULT_TARGET_SHARD_BYTES)
-        parts.append(_write_manifest_part(path, shards))
         # A fold is a COMMIT like any other: archive its root so every
         # live-manifest state is a named snapshot.  Without this,
         # rollback() to any archived version would silently drop the
         # folded stream entries (their markers are deleted below, and no
-        # root references their part).
-        vid = 1 + prior_vid0  # same-observation floor, as in batch commit
-        import time as _time
-
-        manifest = {
-            "version": 3,
-            "version_id": vid,
-            "committed_at": round(_time.time(), 3),
-            "compression": comp,
-            "target_shard_bytes": target,
-            "parts": parts,
-            "total_records": total + sum(s["records"] for s in shards),
-        }
-        # layout record: keep the prior manifest's, else adopt the
-        # (newest) folded marker's — compaction reads it to preserve
-        # partition purity of a stream-partitioned ingest
-        pb = (prior or {}).get("partition_by") or marker_pb
-        if pb:
-            manifest["partition_by"] = pb
-        # a fold must not resurrect shards a dynamic overwrite dropped:
-        # the prior root's exclusion list rides along (its parts do too)
-        if (prior or {}).get("dropped"):
-            manifest["dropped"] = prior["dropped"]
-        if (prior or {}).get("user_metadata"):
-            manifest["user_metadata"] = prior["user_metadata"]
-        # same CAS publication as the batch commit: claiming root-{vid}
-        # is the serialization point; a lost claim under a broken lock
-        # would mean a concurrent commit — rerun fold in that case
-        arch = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{vid:08d}.json")
-        be.makedirs(os.path.dirname(arch))
-        payload = json.dumps(manifest, indent=1, sort_keys=True).encode()
-        try:
-            if not be.put_if_absent(arch, payload):
-                raise codec.ShardPackIOError(
-                    f"fold_stream_markers lost the commit race on {path} "
-                    f"(version {vid} claimed concurrently); re-run"
-                )
-        except storage.UnsupportedOperation:
-            be.write_atomic(arch, payload)
-        _write_manifest(path, manifest)
+        # root references their part).  Same-observation version floor,
+        # as in batch commit; a lost claim under a broken lock means a
+        # concurrent commit — rerun the fold then.
+        vid = 1 + prior_vid0
+        if publish_root(
+            path,
+            be,
+            vid,
+            compression=prior.get("compression", "none"),
+            target_shard_bytes=prior.get(
+                "target_shard_bytes", codec.DEFAULT_TARGET_SHARD_BYTES
+            ),
+            parts=_prior_parts(path, prior) + [_write_manifest_part(path, shards)],
+            total_records=prior.get("total_records", 0)
+            + sum(s["records"] for s in shards),
+            # layout record: keep the prior manifest's, else adopt the
+            # (newest) folded marker's — compaction reads it to preserve
+            # partition purity of a stream-partitioned ingest
+            partition_by=prior.get("partition_by") or marker_pb,
+            # a fold must not resurrect shards a dynamic overwrite
+            # dropped: the prior root's exclusion list rides along
+            dropped=prior.get("dropped"),
+            user_metadata=prior.get("user_metadata"),
+        ) is None:
+            raise codec.ShardPackIOError(
+                f"fold_stream_markers lost the commit race on {path} "
+                f"(version {vid} claimed concurrently); re-run"
+            )
         for mp in to_fold:  # only after the new root is durable
             be.remove(mp)
         return {"folded": len(to_fold), "shards": len(shards), "version": vid}

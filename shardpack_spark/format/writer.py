@@ -97,19 +97,22 @@ class Writer:
     ):
         if mode not in _MODES:
             raise codec.ShardPackIOError(f"mode must be one of {_MODES}, got {mode!r}")
-        if compression not in codec._CODECS:
-            raise codec.ShardPackCodecError(
-                f"compression '{compression}' not available "
-                f"(have {sorted(codec._CODECS)})"
-            )
+        opts = commit.sink_options(
+            {
+                "compression": compression,
+                "target_shard_bytes": target_shard_bytes,
+                "max_record_bytes": max_record_bytes,
+                "max_entry_bytes": max_entry_bytes,
+                "chunk_bytes": chunk_bytes,
+                "partition_by": partition_by,
+            }
+        )
         if partition_overwrite_mode not in ("static", "dynamic"):
             raise codec.ShardPackIOError(
                 "partition_overwrite_mode must be static|dynamic, "
                 f"got {partition_overwrite_mode!r}"
             )
-        if isinstance(partition_by, str):
-            partition_by = [k.strip() for k in partition_by.split(",") if k.strip()]
-        self.partition_by: list[str] = partition_by or []
+        self.partition_by: list[str] = opts["partition_by"]
         self.dynamic_overwrite = (
             mode == "overwrite" and partition_overwrite_mode == "dynamic"
         )
@@ -127,7 +130,7 @@ class Writer:
         self.path = _norm_path(path)
         self.mode = mode
         self.compression = compression
-        self.target = int(target_shard_bytes)
+        self.target = opts["target_shard_bytes"]
         self.dataset_metadata = dataset_metadata
         self.manifest_checkpoint_parts = int(manifest_checkpoint_parts)
         self.manifest: dict | None = None  # set by close()
@@ -137,23 +140,9 @@ class Writer:
         # c{seq}-part- prefix keeps these files out of ad-hoc listings
         # and first-commit adoption until OUR commit publishes them
         seq = commit._next_commit_seq(self.path)
-        basename = f"c{seq:08d}-part-00000-{uuid.uuid4().hex[:8]}"
-        wkw = dict(
-            compression=compression,
-            target_shard_bytes=self.target,
-            max_record_bytes=max_record_bytes,
-            max_entry_bytes=max_entry_bytes,
-            chunk_bytes=chunk_bytes,
+        self._sink = commit.ShardSink(
+            self.path, f"c{seq:08d}-part-00000-{uuid.uuid4().hex[:8]}", **opts
         )
-        if self.partition_by:
-            self._router = commit.PartitionRouter(
-                self.path, basename, self.partition_by, **wkw
-            )
-            self._writer = self._tracker = None
-        else:
-            self._router = None
-            self._writer = codec.DatasetWriter(self.path, basename=basename, **wkw)
-            self._tracker = commit._StatsTracker()
 
     # --- writing -------------------------------------------------------------
 
@@ -207,10 +196,7 @@ class Writer:
                     f"record {record.key!r} lacks partition_by metadata "
                     f"keys {missing}"
                 )
-            self._router.write(record)
-        else:
-            self._writer.write(record)
-            self._tracker.add(record, os.path.basename(self._writer._writer.path))
+        self._sink.write(record)
 
     def write_all(self, records: "Iterable[codec.Record]") -> None:
         for rec in records:
@@ -226,24 +212,9 @@ class Writer:
         if self._closed:
             return self.manifest
         self._closed = True
-        if self._router is not None:
-            shards = self._router.close()
-        else:
-            results, stats = self._writer.close(), self._tracker.finish()
-            shards = []
-            for r in results:
-                name = os.path.basename(r["path"])
-                shards.append(
-                    {
-                        "path": name,
-                        "records": r["records"],
-                        "bytes": r["bytes"],
-                        **stats.get(name, {}),
-                    }
-                )
         self.manifest = commit.commit_shards(
             self.path,
-            shards,
+            self._sink.close(),
             overwrite=self.mode == "overwrite",
             dynamic_overwrite=self.dynamic_overwrite,
             partition_by=self.partition_by,
@@ -260,28 +231,7 @@ class Writer:
         if self._closed:
             return
         self._closed = True
-        be = storage.for_path(self.path)
-        if self._router is not None:
-            paths = self._router.written_paths()
-            for w, _ in self._router._writers.values():
-                if w._writer is not None:
-                    try:
-                        w._writer.close()
-                    except Exception:
-                        pass
-        else:
-            paths = [r["path"] for r in self._writer.results]
-            if self._writer._writer is not None:
-                paths.append(self._writer._writer.path)
-                try:
-                    self._writer._writer.close()
-                except Exception:
-                    pass
-        for p in paths:
-            try:
-                be.remove(p)
-            except (FileNotFoundError, OSError):
-                pass
+        self._sink.abort()
 
     def __enter__(self) -> "Writer":
         return self

@@ -796,24 +796,15 @@ def _land_stream_batch(root: str, batch_id: int, keys) -> None:
         STAGING_DIR,
         ShardCommitMessage,
         ShardPackStreamWriter,
-        write_records_with_stats,
+        ShardSink,
     )
 
     task_dir = os.path.join(root, STAGING_DIR, f"task-{batch_id:05d}")
-    results, stats = write_records_with_stats(
-        codec.DatasetWriter(task_dir, basename=f"part-{batch_id:05d}"),
-        [codec.Record(key=k, entries=[], metadata={"lang": "en"}) for k in keys],
-    )
-    staged = [
-        {
-            "path": os.path.basename(r["path"]),
-            "staging": storage.relpath(task_dir, root),
-            "records": r["records"],
-            "bytes": r["bytes"],
-            **stats.get(os.path.basename(r["path"]), {}),
-        }
-        for r in results
-    ]
+    sink = ShardSink(task_dir, f"part-{batch_id:05d}")
+    for k in keys:
+        sink.write(codec.Record(key=k, entries=[], metadata={"lang": "en"}))
+    staging = storage.relpath(task_dir, root)
+    staged = [{**s, "staging": staging} for s in sink.close()]
     ShardPackStreamWriter({"path": root}).commit(
         [ShardCommitMessage(shards=staged)], batchId=batch_id
     )
@@ -2011,8 +2002,9 @@ def test_zone_map_fold_soundness_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from shardpack_spark.format.datasource import (
+    from shardpack_spark.format.commit import (
         _META_RANGE_MAX_ABS,
+        _META_STR_RANGE_MAX_LEN,
         _meta_range_add,
         _meta_ranges_kept,
     )
@@ -2023,8 +2015,6 @@ def test_zone_map_fold_soundness_property():
         st.sampled_from(["", "x", "nan", "inf", "-inf", "1e400", " 12 ", "1_0", "0x1A"]),
         st.text(max_size=8),
     )
-
-    from shardpack_spark.format.datasource import _META_STR_RANGE_MAX_LEN
 
     def domain(v):
         """Mirror of the implementation's domain law: numeric iff float()

@@ -77,11 +77,8 @@ def test_compaction_crash_windows_leave_readable_dataset(spark, sf_dir, tmp_path
     import shutil as _shutil
 
     from tests.test_datasource import _docs_as_records
-    from shardpack_spark.format.datasource import (
-        _load_manifest,
-        _write_manifest,
-        read_shardpack,
-    )
+    from shardpack_spark.format.commit import _write_manifest
+    from shardpack_spark.format.datasource import _load_manifest, read_shardpack
     from shardpack_spark.format.manifest import live_view
 
     register(spark)

@@ -1,10 +1,12 @@
 """Session hygiene of the fuzzy-dedup library calls: building and running
 q29 or the bench's LSH path must not leave temp views in the session, and
-the package source must not register session-global ``__``-named views
-nor grow per-module pickle-by-value registrations."""
+the package source must not register session-global ``__``-named views,
+grow per-module pickle-by-value registrations, nor grow a second place
+that publishes snapshot roots."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -62,3 +64,48 @@ def test_package_registers_pickle_by_value_once():
         for _ in re.finditer(r"register_pickle_by_value\(", p.read_text(encoding="utf-8"))
     ]
     assert calls == ["__init__.py"]
+
+
+def _enclosing_functions(pattern: str) -> list[tuple[str, str, str]]:
+    """(module, innermost enclosing function, its source) for every line
+    of the package source matching ``pattern``."""
+    pkg = pathlib.Path(shardpack_spark.__file__).parent
+    hits = []
+    for p in sorted(pkg.rglob("*.py")):
+        text = p.read_text(encoding="utf-8")
+        funcs = [
+            n
+            for n in ast.walk(ast.parse(text))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for lineno, line in enumerate(text.splitlines(), 1):
+            if not re.search(pattern, line):
+                continue
+            inner = max(
+                (f for f in funcs if f.lineno <= lineno <= f.end_lineno),
+                key=lambda f: f.lineno,
+                default=None,
+            )
+            name = inner.name if inner else "<module>"
+            src = ast.get_source_segment(text, inner) if inner else text
+            hits.append((str(p.relative_to(pkg)), name, src))
+    return hits
+
+
+def test_one_place_publishes_snapshot_roots():
+    """Every manifest commit (writers, folds, convert) claims its
+    `_manifest/root-{vid}.json` through commit.publish_root: no other
+    function calls put_if_absent on a root archive path or builds a
+    version-3 root dict."""
+    claims = sorted(
+        {
+            (mod, name)
+            for mod, name, src in _enclosing_functions(r"\.put_if_absent\(")
+            if "root-" in src
+        }
+    )
+    assert claims == [("format/commit.py", "publish_root")]
+    roots = sorted(
+        {(mod, name) for mod, name, _ in _enclosing_functions(r"""["']version["']\s*:\s*3\b""")}
+    )
+    assert roots == [("format/commit.py", "publish_root")]

@@ -17,7 +17,7 @@ import uuid
 
 import pytest
 
-from shardpack_spark.format import codec, storage
+from shardpack_spark.format import codec, commit, storage
 from shardpack_spark.format import datasource as ds
 
 
@@ -299,22 +299,32 @@ def _stage_shards(path, keys, seq):
     )
 
 
-def test_concurrent_appends_no_lost_commits(tmp_path, monkeypatch):
-    """VERDICT r2 item 2: concurrent appends must not lose commits even
-    with the lock DISABLED — the conditional-put on root-{vid}.json is
-    the serialization point, and CAS losers re-merge and retry."""
+def _disable_commit_lock(monkeypatch) -> list:
+    """Replace the commit lock every writer takes (commit.commit_shards'
+    _CommitLock) with a no-op; returns the list of entered locks, so a
+    test can show the patched seam actually ran."""
+    entered = []
 
     class _NoLock:
         def __init__(self, *a, **k):
             pass
 
         def __enter__(self):
+            entered.append(self)
             return self
 
         def __exit__(self, *exc):
             return False
 
-    monkeypatch.setattr(ds, "_CommitLock", _NoLock)
+    monkeypatch.setattr(commit, "_CommitLock", _NoLock)
+    return entered
+
+
+def test_concurrent_appends_no_lost_commits(tmp_path, monkeypatch):
+    """VERDICT r2 item 2: concurrent appends must not lose commits even
+    with the lock DISABLED — the conditional-put on root-{vid}.json is
+    the serialization point, and CAS losers re-merge and retry."""
+    entered = _disable_commit_lock(monkeypatch)
 
     for root in [str(tmp_path / "loc"), "sim://" + str(tmp_path / "obj")]:
         be = storage.for_path(root)
@@ -342,6 +352,7 @@ def test_concurrent_appends_no_lost_commits(tmp_path, monkeypatch):
         assert len(names) == n_writers, root  # every writer's shard listed
         # version chain is dense: one root per commit
         assert ds._root_ids(root) == list(range(1, n_writers + 1)), root
+    assert len(entered) == 2 * n_writers  # every commit ran the no-op lock
 
 
 def _process_appender(root: str, writer_id: int, n_commits: int) -> None:
@@ -403,18 +414,7 @@ def test_commit_cas_loser_remerges(tmp_path, monkeypatch):
     """Deterministic two-writer interleaving: B reads the manifest, A
     commits, then B commits — B's CAS for A's vid must fail and B must
     re-merge on top of A's state."""
-
-    class _NoLock:
-        def __init__(self, *a, **k):
-            pass
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *exc):
-            return False
-
-    monkeypatch.setattr(ds, "_CommitLock", _NoLock)
+    entered = _disable_commit_lock(monkeypatch)
     root = str(tmp_path / "cas")
     storage.for_path(root).makedirs(root)
 
@@ -423,18 +423,23 @@ def test_commit_cas_loser_remerges(tmp_path, monkeypatch):
 
     wa, wb = _mk_commit_writer(root), _mk_commit_writer(root)
     # B performs its first attempt against the EMPTY prior state but is
-    # paused before the CAS; A commits fully in between.
-    orig_attempt = ds.ShardPackWriter._commit_attempt
-    state_b = {"paused_once": False}
+    # paused at its root claim; A commits fully in between.
+    orig_publish = commit.publish_root
+    paused, claims = [], []
 
-    def attempt_with_pause(self, be, new_shards, state):
-        if self is wb and not state_b["paused_once"]:
-            state_b["paused_once"] = True
+    def publish_with_pause(path, be, vid, **fields):
+        if not paused:
+            paused.append(vid)
             wa.commit([msg_a])  # A wins vid=1 while B is mid-flight
-        return orig_attempt(self, be, new_shards, state)
+        published = orig_publish(path, be, vid, **fields)
+        claims.append((vid, published is not None))
+        return published
 
-    monkeypatch.setattr(ds.ShardPackWriter, "_commit_attempt", attempt_with_pause)
+    monkeypatch.setattr(commit, "publish_root", publish_with_pause)
     wb.commit([msg_b])
+    # A claims vid 1; B loses its claim of vid 1, re-merges, claims vid 2
+    assert claims == [(1, True), (1, False), (2, True)]
+    assert len(entered) == 2
 
     m = ds._load_latest_manifest(root)
     assert m["version_id"] == 2
@@ -443,6 +448,77 @@ def test_commit_cas_loser_remerges(tmp_path, monkeypatch):
     for s in m["shards"]:
         keys.update(r.key for r in codec.iter_records(os.path.join(root, s["path"])))
     assert keys == {"a1", "a2", "b1"}
+
+
+def test_renameless_lock_release_race_loses_no_commit(tmp_path, monkeypatch):
+    """The rename-less lock release (_CommitLock.__exit__ on stores
+    without atomic rename) reads its token, then removes the lock — a
+    window in which a stale-breaker can take the lock and have it
+    deleted.  Force that window on sim://: while A's release reads its
+    own token, B breaks A's lock as stale (tiny stale_after) and
+    acquires it; A then deletes B's fresh lock, and C commits while B is
+    still mid-commit.  All three commits must land: the lock is
+    liveness-only, the root claim decides."""
+    root = "sim://" + str(tmp_path / "obj")
+    storage.for_path(root).makedirs(root)
+    lock_path = os.path.join(root, "_commit.lock")
+    real_lock = commit._CommitLock
+
+    def lock_for(path, **kw):
+        if threading.current_thread().name == "B":
+            kw["stale_after"] = 1e-6  # B breaks any lock it finds
+        return real_lock(path, **kw)
+
+    monkeypatch.setattr(commit, "_CommitLock", lock_for)
+    b_holds, c_done, seen = threading.Event(), threading.Event(), []
+    real_read = storage.SimObjectBackend.read_bytes
+
+    def read_during_release(self, path, *a, **k):
+        data = real_read(self, path, *a, **k)
+        if path == lock_path and threading.current_thread().name == "A" and not seen:
+            # A's __exit__ read its own token; B breaks in before A removes
+            seen.append(data)
+            b.start()
+            assert b_holds.wait(30)
+            assert real_read(self, lock_path) != data  # B's fresh lock
+        return data
+
+    orig_publish = commit.publish_root
+
+    def publish_pausing_b(path, be, vid, **fields):
+        if threading.current_thread().name == "B" and not b_holds.is_set():
+            b_holds.set()  # B holds the lock and observed A's commit
+            assert c_done.wait(30)
+        return orig_publish(path, be, vid, **fields)
+
+    monkeypatch.setattr(storage.SimObjectBackend, "read_bytes", read_during_release)
+    monkeypatch.setattr(commit, "publish_root", publish_pausing_b)
+    errors = []
+
+    def run(name, keys, seq):
+        try:
+            commit.commit_shards(root, _stage_shards(root, keys, seq=seq).shards)
+        except Exception as e:  # surface in main thread
+            errors.append((name, e))
+
+    b = threading.Thread(target=run, args=("B", ["b1", "b2"], 2), name="B")
+    a = threading.Thread(target=run, args=("A", ["a1"], 1), name="A")
+    a.start()
+    a.join(60)
+    assert not a.is_alive() and seen and b_holds.is_set()
+    assert not storage.for_path(root).exists(lock_path)  # A deleted B's lock
+    run("C", ["c1"], 3)  # takes the free lock while B is mid-commit
+    c_done.set()
+    b.join(60)
+    assert not b.is_alive()
+    assert not errors, errors
+    m = ds._load_latest_manifest(root)
+    assert ds._root_ids(root) == [1, 2, 3]  # dense: A, C, then B re-merged
+    assert m["total_records"] == 4
+    keys = set()
+    for s in m["shards"]:
+        keys.update(r.key for r in codec.iter_records(os.path.join(root, s["path"])))
+    assert keys == {"a1", "b1", "b2", "c1"}
 
 
 # --- batch commit crash injection ---------------------------------------------
@@ -497,8 +573,11 @@ def test_batch_commit_crash_before_pointer_write(tmp_path, monkeypatch):
     class _Boom(RuntimeError):
         pass
 
+    # the pointer write of the one publication step (commit.publish_root);
+    # _Boom can only come from the patched seam, so raising it proves
+    # the seam ran
     monkeypatch.setattr(
-        ds, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
+        commit, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
     )
     w1 = _mk_commit_writer(root)
     with pytest.raises(_Boom):
@@ -539,9 +618,9 @@ def _commit_losing_pointer_write(root, monkeypatch, key, seq):
         pass
 
     monkeypatch.setattr(
-        ds, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
+        commit, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
     )
-    with pytest.raises(_Boom):
+    with pytest.raises(_Boom):  # only the patched seam raises _Boom
         _mk_commit_writer(root).commit([_stage_shards(root, [key], seq=seq)])
     monkeypatch.undo()
 
@@ -852,19 +931,21 @@ def test_convert_aborts_cleanly_when_log_appears(spark, tmp_path, monkeypatch):
     calls = {"n": 0}
 
     def raced_observe(path, flatten=True):
-        # call 1: pre-check (no log); call 2: first commit attempt (still
-        # none — convert writes its part and tries the CAS, which the
-        # patched put_if_absent loses); call 3+: the winner's log is
-        # visible, so convert must clean its orphan part and raise
+        # calls 1-2: commit attempts that see no log (convert writes its
+        # part once and tries the CAS, which the patched put_if_absent
+        # loses); call 3+: the winner's log is visible, so convert must
+        # clean its orphan part and raise
         calls["n"] += 1
         if calls["n"] <= 2:
             return None, 0
         return {"version_id": 1, "parts": [], "total_records": 1}, 1
 
     real_pia = storage.LocalBackend.put_if_absent
+    lost = []
 
     def lose_root_cas(self, path, data):
         if "root-" in os.path.basename(path):
+            lost.append(path)
             return False  # concurrent commit owns the vid
         return real_pia(self, path, data)
 
@@ -873,6 +954,8 @@ def test_convert_aborts_cleanly_when_log_appears(spark, tmp_path, monkeypatch):
     with pytest.raises(codec.ShardPackIOError, match="appeared during convert"):
         ds.convert_to_dataset(spark, root)
     monkeypatch.setattr(ds, "_observe_latest", real_observe)
+    # both seams ran: two lost root claims, then the log "appeared"
+    assert calls["n"] == 3 and len(lost) == 2
     # no orphan parts: the _manifest dir holds nothing convert created
     be = storage.for_path(root)
     md = os.path.join(root, "_manifest")
@@ -1071,18 +1154,7 @@ def test_registered_backend_raced_commits_no_lost_snapshot(tmp_path, monkeypatch
     interleaved commits THROUGH A register_backend-installed backend
     whose conditional put is atomic but raced, lock DISABLED — every
     commit must land, version chain dense, no snapshot lost."""
-
-    class _NoLock:
-        def __init__(self, *a, **k):
-            pass
-
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *exc):
-            return False
-
-    monkeypatch.setattr(ds, "_CommitLock", _NoLock)
+    entered = _disable_commit_lock(monkeypatch)
     try:
         storage.register_backend("raced", lambda scheme, uri: _RacedBackend())
         root = "raced://" + str(tmp_path / "obj")
@@ -1114,6 +1186,7 @@ def test_registered_backend_raced_commits_no_lost_snapshot(tmp_path, monkeypatch
         for s in m["shards"]:
             keys.update(r.key for r in codec.iter_records(os.path.join(root, s["path"])))
         assert len(keys) == n_writers * per * 3
+        assert len(entered) == n_writers * per
     finally:
         storage._factories.pop("raced", None)
         for k in [k for k in storage._remote_cache if k.startswith("raced://")]:
