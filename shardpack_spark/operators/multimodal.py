@@ -8,10 +8,10 @@ JPEGs).  Pixel decoding is REAL wheel-free for the spec's first-class
 image types (draft.md:185-190): `operators.imagecodec` decodes PNG,
 baseline + progressive JPEG, and GIF in pure Python/numpy, so
 `resize_images` produces true PNG thumbnails with no image library
-installed.  PIL, when importable, extends coverage to other containers
-(and `decoder='auto'` prefers its C decoders for bulk throughput);
-payloads neither path decodes degrade to deterministic tagged marker
-bytes per record (never a job abort).
+installed.  Payloads the codec cannot decode (WebP, AVIF, corrupt or
+over-budget images) degrade per record to tagged marker bytes or a
+null-statistics row with ``decode_path='surrogate'`` — never a job
+abort.
 """
 
 from __future__ import annotations
@@ -75,52 +75,6 @@ def parse_image_dims(b: bytes) -> tuple[int | None, int | None]:
     # GIF: logical screen descriptor right after the version tag (LE)
     if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
         return int.from_bytes(b[6:8], "little"), int.from_bytes(b[8:10], "little")
-    return None, None
-
-
-def _check_decoder(decoder: str) -> None:
-    if decoder not in ("pure", "auto"):
-        raise ValueError(f"decoder must be 'pure' or 'auto', got {decoder!r}")
-
-
-def _decode_pixels(data: bytes, decoder: str, pil_image):
-    """(pixel array, decode_path) for one payload, or (None, None) when
-    undecodable.  ``decoder='pure'`` runs the wheel-free codec first
-    (bit-identical results everywhere); ``'auto'`` prefers PIL's C
-    decoders when importable (bulk-throughput deployments — identical
-    to 'pure' on a PIL-less cluster).  ``decode_path`` ('pure'/'pil')
-    is the same telemetry vocabulary the perceptual signatures carry,
-    so ``perceptual.decode_path_rollup`` covers these ops too."""
-    import io
-
-    import numpy as np
-
-    def pure():
-        return imagecodec.decode_image(data)
-
-    def pil():
-        if pil_image is None:
-            raise ValueError("PIL not importable")
-        im = pil_image.open(io.BytesIO(data))
-        # preserve band count so feature semantics (channels, luma stats)
-        # match the pure decoder: grayscale stays 1-channel instead of
-        # being force-converted to RGB; only modes outside the pure
-        # decoder's output space (palette, bilevel, CMYK...) convert
-        if im.mode == "P":
-            im = im.convert("RGBA" if "transparency" in im.info else "RGB")
-        elif im.mode == "1":
-            im = im.convert("L")
-        elif im.mode not in ("L", "LA", "RGB", "RGBA", "I;16"):
-            im = im.convert("RGB")
-        return np.asarray(im)
-
-    order = ((pil, "pil"), (pure, "pure")) if decoder == "auto" else (
-        (pure, "pure"), (pil, "pil"))
-    for fn, path in order:
-        try:
-            return fn(), path
-        except Exception:
-            continue
     return None, None
 
 
@@ -230,13 +184,10 @@ PIXEL_FEATURE_SCHEMA = StructType(
 )
 
 
-def image_pixel_features(df: DataFrame, decoder: str = "pure") -> DataFrame:
+def image_pixel_features(df: DataFrame) -> DataFrame:
     """REAL pixel statistics over image/* entries (PNG / baseline +
-    progressive JPEG / GIF via the pure-Python ``operators.imagecodec``;
-    PIL extends coverage when importable — ``decoder='auto'`` prefers
-    PIL's C decoders for bulk throughput, ``'pure'`` (default) keeps
-    results bit-identical on every cluster; undecodable payloads yield
-    no row rather than aborting the corpus job).
+    progressive JPEG / GIF via the pure-Python ``operators.imagecodec``,
+    bit-identical on every cluster).
 
     Per image: true (height, width, channels) from decoded pixels,
     mean/std of BT.601 luma, the 256-bin luma histogram's Shannon
@@ -251,7 +202,6 @@ def image_pixel_features(df: DataFrame, decoder: str = "pure") -> DataFrame:
     when readable) instead of vanishing: ``decode_path_rollup`` over
     this output then reports the true surrogate fraction — a dropped
     row would hide exactly the degradation the telemetry alerts on."""
-    _check_decoder(decoder)
     imgs = explode_entries(df).filter(
         F.col("content_type").startswith("image/")
     ).select("key", "file_name", "data")
@@ -260,17 +210,13 @@ def image_pixel_features(df: DataFrame, decoder: str = "pure") -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        try:
-            from PIL import Image
-        except ImportError:
-            Image = None
-
         for pdf in batches:
             rows = []
             for key, fname, data in zip(pdf["key"], pdf["file_name"], pdf["data"]):
                 data = bytes(data)
-                arr, dpath = _decode_pixels(data, decoder, Image)
-                if arr is None:
+                try:
+                    arr = imagecodec.decode_image(data)
+                except Exception:  # a corrupt image must never abort the job
                     w, h = parse_image_dims(data)
                     rows.append(
                         {
@@ -307,7 +253,7 @@ def image_pixel_features(df: DataFrame, decoder: str = "pure") -> DataFrame:
                         "std_luma": float(luma.std()),
                         "entropy_bits": float(-(nz * np.log2(nz)).sum()),
                         "extreme_frac": float(((q <= 2) | (q >= 253)).mean()),
-                        "decode_path": dpath,
+                        "decode_path": "pure",
                     }
                 )
             yield pd.DataFrame(
@@ -322,66 +268,30 @@ def image_pixel_features(df: DataFrame, decoder: str = "pure") -> DataFrame:
     return imgs.mapInPandas(stats_batch, PIXEL_FEATURE_SCHEMA)
 
 
-def _resize_pixels(
-    data: bytes, width: int, height: int, decoder: str = "pure"
-) -> tuple[bytes, str]:
+def _resize_pixels(data: bytes, width: int, height: int) -> tuple[bytes, str]:
     """Pixel-level resize -> (payload bytes, decode_path).  REAL
     wheel-free for PNG, baseline + progressive JPEG, and GIF:
     `operators.imagecodec` decodes pixels in pure Python/numpy, bilinear
     resampling runs in float64, and the thumbnail re-encodes as PNG
     (lossless, self-describing — output payloads always start with the
-    PNG signature).  With ``decoder='pure'`` (default) the pure path
-    runs FIRST so outputs are bit-identical on every cluster; ``'auto'``
-    prefers PIL's C decoders when importable.  Payloads neither path
-    decodes return a deterministic tagged marker (target dims + a digest
-    of the source bytes) — per-record degradation, never a job abort,
-    and clearly non-image so it can't be mistaken for a real thumbnail.
-    ``decode_path`` is 'pure'/'pil' for real thumbnails and 'surrogate'
-    for marker bytes — the perceptual telemetry vocabulary, so
+    PNG signature), so outputs are bit-identical on every cluster.
+    Payloads the codec cannot decode return a deterministic
+    ``DECODE-ERROR:`` marker (target dims + a digest of the source
+    bytes) — per-record degradation, never a job abort, and clearly
+    non-image so it can't be mistaken for a real thumbnail.
+    ``decode_path`` is 'pure' for real thumbnails and 'surrogate' for
+    marker bytes — the perceptual telemetry vocabulary, so
     ``perceptual.decode_path_rollup`` covers resize output too."""
     import hashlib
 
-    def pure() -> bytes:
+    try:
         arr = imagecodec.decode_image(data)
         if str(arr.dtype) == "uint16":
             arr = arr / 257.0  # 16-bit channels -> 8-bit thumbnail range
-        return imagecodec.encode_png(imagecodec.resize_array(arr, width, height))
-
-    def pil() -> bytes:  # pragma: no cover - PIL absent in this environment
-        import io
-
-        from PIL import Image  # noqa: PLC0415
-
-        im = Image.open(io.BytesIO(data))
-        out = io.BytesIO()
-        # always PNG, whatever the source format: the docstring contract
-        # ("output payloads start with the PNG signature") must hold on
-        # PIL-equipped clusters under decoder='auto' too
-        thumb = im.resize((width, height))
-        # catch-all: any mode PNG can't encode (F, LAB, HSV, CMYK...)
-        # converts rather than raising into the surrogate path — palette
-        # included, since a resized palette image has interpolated pixels
-        if thumb.mode not in ("1", "L", "LA", "RGB", "RGBA", "I;16"):
-            thumb = thumb.convert("RGB")
-        thumb.save(out, format="PNG")
-        return out.getvalue()
-
-    order = ((pil, "pil"), (pure, "pure")) if decoder == "auto" else (
-        (pure, "pure"), (pil, "pil"))
-    errors = []
-    for fn, path in order:
-        try:
-            return fn(), path
-        except ImportError:
-            errors.append("no-wheel")
-        except Exception:
-            errors.append("decode")
-    digest = hashlib.sha256(data).hexdigest()[:16].encode()
-    if "no-wheel" in errors:  # a wheel MIGHT have decoded it
-        return b"STUB-RESIZE:%dx%d:" % (width, height) + digest, "surrogate"
-    # one corrupt/undecodable image must not abort a corpus-wide job:
-    # per-record error marker, same tagged-bytes contract as the stub
-    return b"DECODE-ERROR:%dx%d:" % (width, height) + digest, "surrogate"
+        return imagecodec.encode_png(imagecodec.resize_array(arr, width, height)), "pure"
+    except Exception:  # a corrupt image must never abort the job
+        digest = hashlib.sha256(data).hexdigest()[:16].encode()
+        return b"DECODE-ERROR:%dx%d:" % (width, height) + digest, "surrogate"
 
 
 RESIZED_SCHEMA = (
@@ -391,21 +301,20 @@ RESIZED_SCHEMA = (
 )
 
 
-def resize_images(
-    df: DataFrame, width: int, height: int, decoder: str = "pure"
-) -> DataFrame:
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     """Thumbnail/resize pass over image/* entries (shardpack row input).
 
     The Spark-side plumbing is real and scale-shaped: explode to one row
     per image entry, Arrow-batched mapInPandas, binary in / binary out,
-    source dims from the pure-Python header parsers.  ``decoder='auto'``
-    prefers PIL's C decoders when importable (bulk throughput);
-    ``'pure'`` (default) keeps thumbnails bit-identical on every
-    cluster.  Output rows: (key, file_name, content_type, src_width,
-    src_height, width, height, data, decode_path) — decode_path
-    ('pure'/'pil'/'surrogate') feeds ``perceptual.decode_path_rollup``,
-    the corpus-level alert on silently-degraded thumbnails."""
-    _check_decoder(decoder)
+    source dims from the pure-Python header parsers.  Output rows: (key,
+    file_name, content_type, src_width, src_height, width, height, data,
+    decode_path) — decode_path ('pure'/'surrogate') feeds
+    ``perceptual.decode_path_rollup``, the corpus-level alert on
+    silently-degraded thumbnails.  A thumbnail smaller than 1x1 raises
+    ValueError here, before any job runs, rather than turning every
+    image into a decode-error marker."""
+    if width < 1 or height < 1:
+        raise ValueError(f"thumbnail size must be at least 1x1, got {width}x{height}")
     imgs = explode_entries(df).filter(
         F.col("content_type").startswith("image/")
     ).select("key", "file_name", "content_type", "data")
@@ -414,7 +323,7 @@ def resize_images(
         for pdf in batches:
             datas = [bytes(b) for b in pdf["data"]]
             dims = [parse_image_dims(b) for b in datas]
-            resized = [_resize_pixels(b, width, height, decoder) for b in datas]
+            resized = [_resize_pixels(b, width, height) for b in datas]
             out = [o for o, _ in resized]
             yield pd.DataFrame(
                 {

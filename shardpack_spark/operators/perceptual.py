@@ -25,14 +25,12 @@ Real-vs-stub boundary (same contract as ``operators.multimodal``):
 - ``dhash_images`` is REAL for PNG, baseline AND progressive JPEG, and
   GIF payloads with no wheel installed: ``operators.imagecodec``
   decodes pixels in pure Python/numpy, so the hash is a true dHash on
-  the formats the spec names first-class (draft.md:185-190).  PIL,
-  when importable, extends coverage to other containers (webp,
-  tiff...); only payloads neither path can decode fall back to the
+  the formats the spec names first-class (draft.md:185-190).  Payloads
+  the codec cannot decode (WebP, AVIF, corrupt images) fall back to the
   deterministic byte-digest surrogate (exact-duplicate semantics), so
   a corrupt image never aborts a job.  Every image/video signature
   row carries a ``decode_path`` telemetry column saying which path it
-  took, and a ``decoder='auto'`` knob flips the try-order to prefer
-  PIL's C decoders for bulk-throughput deployments.
+  took.
 """
 
 from __future__ import annotations
@@ -52,11 +50,7 @@ from pyspark.sql.types import (
 # them — a runtime `from shardpack_spark...` inside a UDF body dies with
 # ModuleNotFoundError on vanilla executors that can't import the package
 from shardpack_spark.operators import imagecodec
-from shardpack_spark.operators.multimodal import (
-    _check_decoder,
-    explode_entries,
-    parse_wav_header,
-)
+from shardpack_spark.operators.multimodal import explode_entries, parse_wav_header
 
 if TYPE_CHECKING:
     from collections.abc import Iterator
@@ -73,28 +67,27 @@ SIGNATURE_SCHEMA = StructType(
 )
 
 # image/video signatures also carry HOW each payload decoded —
-# 'pure' (wheel-free codec, real pixels), 'pil' (wheel-extended, real
-# pixels), 'surrogate' (byte-digest: exact-dup semantics only), or
-# 'mixed' (video whose sampled frames took different paths).  Without
-# this a pipeline cannot measure what fraction of its near-dup signal
-# is perceptual vs byte-exact.
+# 'pure' (wheel-free codec, real pixels), 'surrogate' (byte-digest:
+# exact-dup semantics only), or 'mixed' (video whose sampled frames
+# took different paths).  Without this a pipeline cannot measure what
+# fraction of its near-dup signal is perceptual vs byte-exact.
 TELEMETRY_SIGNATURE_SCHEMA = StructType(
     list(SIGNATURE_SCHEMA.fields) + [StructField("decode_path", StringType())]
 )
 
 #: decode_path values in severity order; the rollup emits one count per value.
-DECODE_PATHS = ("pure", "pil", "surrogate", "mixed")
+DECODE_PATHS = ("pure", "surrogate", "mixed")
 
 
 def decode_path_rollup(df: DataFrame, group_cols=()) -> DataFrame:
     """Corpus-level decode telemetry: fold the per-row ``decode_path``
     column any signature/feature operator emits into
-    ``(group_cols..., n_rows, n_pure, n_pil, n_surrogate, n_mixed,
+    ``(group_cols..., n_rows, n_pure, n_surrogate, n_mixed,
     surrogate_frac)`` — the number a pipeline ALERTS on.  A rising
     ``surrogate_frac`` means near-dup signal is silently degrading from
-    perceptual to byte-exact (new image formats in the crawl, hostile
-    payloads tripping the decode budget, a cluster missing PIL where
-    'auto' expected it).
+    perceptual to byte-exact (WebP/AVIF or other formats the pure codec
+    does not decode arriving in the crawl, hostile payloads tripping the
+    decode budget).
 
     ``group_cols`` picks the alert granularity — e.g. a crawl-source or
     date column joined in upstream, or empty for one corpus-wide row.
@@ -113,34 +106,14 @@ def decode_path_rollup(df: DataFrame, group_cols=()) -> DataFrame:
     )
 
 
-def _gray_with_path(data: bytes, decoder: str, pil_image):
-    """(luma grid, decode_path) for one image payload.  ``decoder``:
-    'pure' runs the wheel-free codec FIRST (bit-identical results on
-    every cluster); 'auto' prefers PIL's C decoders when importable
-    (bulk-throughput deployments).  Either way undecodable payloads
-    degrade to the deterministic byte-digest surrogate."""
-    import io
-
-    import numpy as np
-
-    def pure():
-        return imagecodec.to_gray(imagecodec.decode_image(data))
-
-    def pil():
-        if pil_image is None:
-            raise ValueError("PIL not importable")
-        im = pil_image.open(io.BytesIO(data)).convert("L")
-        return np.asarray(im, dtype="float64")
-
-    order = (("pil", pil), ("pure", pure)) if decoder == "auto" else (
-        ("pure", pure), ("pil", pil)
-    )
-    for path, fn in order:
-        try:
-            return fn(), path
-        except Exception:
-            continue
-    return _surrogate_gray(data), "surrogate"
+def _gray_with_path(data: bytes):
+    """(luma grid, decode_path) for one image payload: real pixels from
+    the wheel-free codec ('pure', bit-identical on every cluster), else
+    the deterministic byte-digest surrogate ('surrogate')."""
+    try:
+        return imagecodec.to_gray(imagecodec.decode_image(data)), "pure"
+    except Exception:  # a corrupt image must never abort the job
+        return _surrogate_gray(data), "surrogate"
 
 
 def _pack_bits(bits) -> tuple[int, int]:
@@ -193,7 +166,7 @@ def dhash_tensors(df: DataFrame) -> DataFrame:
     linear in payload bytes; pair finding is ``hamming_near_pairs``.
 
     Emits the 4-column ``TELEMETRY_SIGNATURE_SCHEMA`` with a constant
-    ``decode_path='pure'`` (tensors arrive pre-decoded; no PIL/surrogate
+    ``decode_path='pure'`` (tensors arrive pre-decoded; no surrogate
     branch exists) so the whole signature family — text SimHash aside —
     stays union-compatible with ``dhash_images``/``video_fingerprint``.
     """
@@ -241,7 +214,7 @@ def dhash_tensors(df: DataFrame) -> DataFrame:
 
 
 def _surrogate_gray(data: bytes):
-    """Deterministic pseudo-pixel grid for the no-PIL stub path: 64
+    """Deterministic pseudo-pixel grid for undecodable payloads: 64
     bytes of sha256 keystream reshaped 8x8.  Identical payloads map to
     identical grids (and nothing else does, up to hash collision), so
     the stub degrades dHash to exact-duplicate semantics."""
@@ -254,23 +227,19 @@ def _surrogate_gray(data: bytes):
     return np.frombuffer(h0 + h1, dtype="uint8").astype("float64").reshape(8, 8)
 
 
-def dhash_images(df: DataFrame, decoder: str = "pure") -> DataFrame:
+def dhash_images(df: DataFrame) -> DataFrame:
     """Perceptual dHash over ``image/*`` entries -> ``(sid, sim_hi,
     sim_lo, decode_path)``; ``sid`` is ``key/file_name``.
 
     REAL wheel-free for PNG, baseline AND progressive JPEG, and GIF:
     pixels decode through ``operators.imagecodec`` (pure Python/numpy),
-    then the same block-mean dHash as ``dhash_tensors``.  With
-    ``decoder='pure'`` (default) the pure path runs FIRST so hashes are
-    bit-identical on every cluster regardless of installed wheels;
-    ``decoder='auto'`` prefers PIL's C decoders when importable (bulk
-    throughput over reproducibility — on a PIL-less cluster auto ==
-    pure).  Only payloads neither path can decode fall back to the
-    byte-digest surrogate (exact-dup semantics) rather than aborting
-    the job; ``decode_path`` ('pure'/'pil'/'surrogate') reports which
-    per row so a pipeline can measure its real-perceptual fraction.
+    then the same block-mean dHash as ``dhash_tensors``, so hashes are
+    bit-identical on every cluster.  Payloads the codec cannot decode
+    fall back to the byte-digest surrogate (exact-dup semantics) rather
+    than aborting the job; ``decode_path`` ('pure'/'surrogate') reports
+    which per row so a pipeline can measure its real-perceptual
+    fraction.
     """
-    _check_decoder(decoder)
     imgs = explode_entries(df).filter(
         F.col("content_type").startswith("image/")
     ).select("key", "file_name", "data")
@@ -278,14 +247,8 @@ def dhash_images(df: DataFrame, decoder: str = "pure") -> DataFrame:
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as pd
 
-        try:
-            from PIL import Image
-        except ImportError:
-            Image = None
-
         for pdf in batches:
-            datas = [bytes(b) for b in pdf["data"]]
-            grays = [_gray_with_path(b, decoder, Image) for b in datas]
+            grays = [_gray_with_path(bytes(b)) for b in pdf["data"]]
             packed = [_pack_bits(_dhash_bits(g)) for g, _ in grays]
             yield pd.DataFrame(
                 {
@@ -370,7 +333,7 @@ def audio_fingerprint(df: DataFrame) -> DataFrame:
     ``(sid, sim_hi, sim_lo, decode_path)``; ``sid`` is
     ``key/file_name``.  Non-WAV, compressed, or too-short payloads are
     skipped.  ``decode_path`` is constant 'pure' (the WAV parse is
-    wheel-free with no PIL/surrogate branch) so the signature family
+    wheel-free with no surrogate branch) so the signature family
     stays union-compatible with ``dhash_images``/``video_fingerprint``.
     Pair finding is ``hamming_near_pairs`` — identical plumbing to the
     image path."""
@@ -403,26 +366,20 @@ def audio_fingerprint(df: DataFrame) -> DataFrame:
     return auds.mapInPandas(hash_batch, TELEMETRY_SIGNATURE_SCHEMA)
 
 
-def _frame_gray(frame: bytes, width: int | None, height: int | None):
-    """Grayscale pixel grid for one AVI video frame, REAL when possible:
+def _frame_gray_path(frame: bytes, width: int | None, height: int | None):
+    """(gray grid, decode_path) for one AVI video frame, REAL when
+    possible:
 
     - uncompressed DIB payloads ('##db' chunks, BI_RGB) are raw pixel
       rows — byte length identifies 8/24/32 bpp exactly, numpy reshapes
       them with zero media libraries (rows are stored bottom-up; flip
-      keeps hashes orientation-consistent with decoded images);
-    - compressed frames (MJPEG '##dc' JPEGs, or PNG payloads) decode
-      through the pure-Python ``operators.imagecodec`` first (real
-      wheel-free pixels for baseline JPEG/PNG), then PIL when
-      importable;
-    - otherwise the deterministic byte-digest surrogate (exact-dup
-      semantics, same contract as dhash_images).
+      keeps hashes orientation-consistent with decoded images) and
+      count as 'pure';
+    - anything else (MJPEG '##dc' JPEGs, PNG payloads) goes through
+      ``_gray_with_path``, the same decode as ``dhash_images``: the
+      pure-Python ``operators.imagecodec``, else the deterministic
+      byte-digest surrogate (exact-dup semantics).
     """
-    return _frame_gray_path(frame, width, height)[0]
-
-
-def _frame_gray_path(frame: bytes, width: int | None, height: int | None):
-    """(gray grid, decode_path) — see ``_frame_gray``; raw-DIB reshapes
-    count as 'pure' (real pixels, no library)."""
     import numpy as np
 
     if width and height and width >= 2 and height >= 2:
@@ -437,36 +394,23 @@ def _frame_gray_path(frame: bytes, width: int | None, height: int | None):
                     px = rows[:, : width * ch].reshape(height, width, ch)
                     g = px[:, :, :3].astype("float64").mean(axis=2)
                 return g[::-1], "pure"  # bottom-up storage -> top-down grid
-    try:
-        return imagecodec.to_gray(imagecodec.decode_image(frame)), "pure"
-    except Exception:
-        pass
-    try:
-        from PIL import Image  # pragma: no cover - absent in this environment
-
-        import io
-
-        return np.asarray(
-            Image.open(io.BytesIO(frame)).convert("L"), dtype="float64"
-        ), "pil"
-    except Exception:
-        return _surrogate_gray(frame), "surrogate"
+    return _gray_with_path(frame)
 
 
 def video_fingerprint(
     df: DataFrame, every_n: int = 30, max_frames: int = 64
 ) -> DataFrame:
     """64-bit perceptual video signatures over ``video/*`` AVI entries ->
-    ``(sid, sim_hi, sim_lo)``; ``sid`` is ``key/file_name``.
+    ``(sid, sim_hi, sim_lo, decode_path)``; ``sid`` is ``key/file_name``.
 
     Every ``every_n``-th stream-0 frame (capped at ``max_frames`` — the
     sampled head is plenty of signal and bounds per-record cost) is
     grayscaled (REAL for uncompressed DIB frames via raw numpy reshape
     and for MJPEG/PNG frames via the pure codecs, surrogate otherwise —
-    see ``_frame_gray``) and dHashed; the video's signature is the
+    see ``_frame_gray_path``) and dHashed; the video's signature is the
     per-bit MAJORITY across sampled frames, so a re-encode or a few
     corrupted frames move few bits while different footage lands far.
-    ``decode_path`` reports 'pure'/'pil'/'surrogate' when every sampled
+    ``decode_path`` reports 'pure'/'surrogate' when every sampled
     frame took that path, else 'mixed' — the telemetry a pipeline needs
     to know how much of the signal is real pixels.  Non-AVI containers
     yield no row (mp4/mkv need a real demuxer — same boundary as

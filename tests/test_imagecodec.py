@@ -1,4 +1,6 @@
-"""Pure-Python image codecs: PNG (full) + baseline JPEG, no wheels.
+"""Pure-Python image codecs: PNG (full), baseline + progressive JPEG and
+GIF decode, no wheels.  JPEG and GIF streams come from the fixture
+encoders in ``tests/imagefixtures.py``.
 
 Round trips alone could hide a symmetric encoder/decoder bug, so the
 decoders are also checked against hand-built byte fixtures (a PNG
@@ -9,6 +11,7 @@ reference.
 
 from __future__ import annotations
 
+import hashlib
 import struct
 import zlib
 
@@ -16,6 +19,7 @@ import numpy as np
 import pytest
 
 from shardpack_spark.operators import imagecodec as ic
+from tests.imagefixtures import _mk_gif, encode_jpeg
 
 
 # --- PNG round trips ---------------------------------------------------------
@@ -162,14 +166,14 @@ def _smooth_rgb(h, w, seed=0):
 
 def test_jpeg_solid_color_roundtrip():
     solid = np.full((24, 24, 3), [200, 60, 120], dtype=np.uint8)
-    out = ic.decode_jpeg(ic.encode_jpeg(solid, quality=90))
+    out = ic.decode_jpeg(encode_jpeg(solid, quality=90))
     assert out.shape == (24, 24, 3)
     assert np.abs(out.astype(int) - solid.astype(int)).max() <= 4
 
 
 def test_jpeg_gray_roundtrip():
     grad = np.tile(np.linspace(0, 255, 64), (48, 1)).astype(np.uint8)
-    out = ic.decode_jpeg(ic.encode_jpeg(grad, quality=90))
+    out = ic.decode_jpeg(encode_jpeg(grad, quality=90))
     assert out.shape == (48, 64)
     assert np.abs(out.astype(int) - grad.astype(int)).max() <= 6
 
@@ -178,7 +182,7 @@ def test_jpeg_gray_roundtrip():
 @pytest.mark.parametrize("restart_interval", [0, 2])
 def test_jpeg_smooth_image_psnr(subsampling, restart_interval):
     img = _smooth_rgb(37, 53)
-    enc = ic.encode_jpeg(
+    enc = encode_jpeg(
         img, quality=90, subsampling=subsampling, restart_interval=restart_interval
     )
     dec = ic.decode_jpeg(enc)
@@ -190,10 +194,38 @@ def test_jpeg_smooth_image_psnr(subsampling, restart_interval):
 
 def test_jpeg_odd_dimensions_and_determinism():
     img = _smooth_rgb(17, 19, seed=1)
-    e1 = ic.encode_jpeg(img, quality=80, subsampling="420")
-    e2 = ic.encode_jpeg(img, quality=80, subsampling="420")
+    e1 = encode_jpeg(img, quality=80, subsampling="420")
+    e2 = encode_jpeg(img, quality=80, subsampling="420")
     assert e1 == e2, "encoder must be bit-deterministic"
     assert ic.decode_jpeg(e1).shape == (17, 19, 3)
+
+
+# sha256 of encode_jpeg output, pinned when the encoder moved from the
+# package into tests/imagefixtures.py: every JPEG decoder test above and
+# below decodes these fixture streams, so a drift here would silently
+# change what they check.
+_GOLDEN_JPEG_SHA256 = {
+    "gray": "f097432fcca71a83f6b831ebc164639637bfbf24d9adcd8808867a4167fec228",
+    "rgb420_restart": "395a2712ab751bdfef1306de9ffd31b6c8a9634f009c62421572b2683727e518",
+    "progressive_gray": "423f6178e333966b185a33597e68fca49e587ee00ff991a75974c1badf5b392f",
+    "progressive_rgb420_restart": "a4bcffb8cb1e5f40e27400a135c249c5820b00bc980ae0decb26220b4ee07514",
+}
+
+
+def test_jpeg_encoder_golden_bytes():
+    grad = np.tile(np.linspace(0, 255, 64), (48, 1)).astype(np.uint8)
+    streams = {
+        "gray": encode_jpeg(grad, quality=90),
+        "rgb420_restart": encode_jpeg(
+            _smooth_rgb(37, 53), quality=90, subsampling="420", restart_interval=2
+        ),
+        "progressive_gray": encode_jpeg(grad, progressive=True),
+        "progressive_rgb420_restart": encode_jpeg(
+            _smooth_rgb(40, 56), progressive=True, subsampling="420", restart_interval=3
+        ),
+    }
+    got = {k: hashlib.sha256(v).hexdigest() for k, v in streams.items()}
+    assert got == _GOLDEN_JPEG_SHA256
 
 
 def test_jpeg_hand_built_single_block():
@@ -215,14 +247,14 @@ def test_jpeg_hand_built_single_block():
 def test_jpeg_rejects_lossless_arithmetic_and_garbage():
     img = _smooth_rgb(16, 16)
     for sof_marker, name in ((0xC3, "SOF3"), (0xC9, "SOF9"), (0xCB, "SOF11")):
-        enc = bytearray(ic.encode_jpeg(img))
+        enc = bytearray(encode_jpeg(img))
         sof = enc.find(b"\xff\xc0")
         enc[sof + 1] = sof_marker  # masquerade as lossless / arithmetic
         with pytest.raises(ValueError, match=name):
             ic.decode_jpeg(bytes(enc))
     # a baseline stream relabeled SOF2 is structurally invalid progressive
     # (its single scan claims the full 0..63 band in a "DC" scan)
-    enc = bytearray(ic.encode_jpeg(img))
+    enc = bytearray(encode_jpeg(img))
     enc[enc.find(b"\xff\xc0") + 1] = 0xC2
     with pytest.raises(ValueError):
         ic.decode_jpeg(bytes(enc))
@@ -253,10 +285,10 @@ def test_jpeg_progressive_roundtrip_equals_baseline(shape, kw):
     img = _smooth_rgb(*shape[:2]) if len(shape) == 3 else np.tile(
         np.linspace(0, 255, shape[1]), (shape[0], 1)
     ).astype(np.uint8)
-    enc = ic.encode_jpeg(img, progressive=True, **kw)
+    enc = encode_jpeg(img, progressive=True, **kw)
     # really a SOF2 multi-scan file, not a relabeled baseline
     assert b"\xff\xc2" in enc and enc.count(b"\xff\xda") >= 6
-    assert np.array_equal(ic.decode_jpeg(enc), ic.decode_jpeg(ic.encode_jpeg(img, **kw)))
+    assert np.array_equal(ic.decode_jpeg(enc), ic.decode_jpeg(encode_jpeg(img, **kw)))
 
 
 def test_jpeg_progressive_noise_flat_and_checkerboard():
@@ -271,14 +303,14 @@ def test_jpeg_progressive_noise_flat_and_checkerboard():
         ((np.indices((40, 40)).sum(0) % 2 * 255).astype(np.uint8), {"quality": 95}),
     ]
     for img, kw in cases:
-        prog = ic.decode_jpeg(ic.encode_jpeg(img, progressive=True, **kw))
-        base = ic.decode_jpeg(ic.encode_jpeg(img, **kw))
+        prog = ic.decode_jpeg(encode_jpeg(img, progressive=True, **kw))
+        base = ic.decode_jpeg(encode_jpeg(img, **kw))
         assert np.array_equal(prog, base), (img.shape, kw)
 
 
 def test_jpeg_progressive_psnr_bound():
     img = _smooth_rgb(37, 53)
-    dec = ic.decode_jpeg(ic.encode_jpeg(img, quality=90, progressive=True))
+    dec = ic.decode_jpeg(encode_jpeg(img, quality=90, progressive=True))
     mse = ((dec.astype(float) - img.astype(float)) ** 2).mean()
     psnr = 10 * np.log10(255**2 / mse)
     assert psnr > 30, f"psnr {psnr:.1f} dB too low for a smooth image at q90"
@@ -346,7 +378,7 @@ def test_jpeg_progressive_hand_built_fixture():
 
 def test_jpeg_truncated_scan_raises():
     img = _smooth_rgb(24, 24)
-    enc = ic.encode_jpeg(img)
+    enc = encode_jpeg(img)
     with pytest.raises(ValueError):
         ic.decode_jpeg(enc[: len(enc) // 2])
 
@@ -357,7 +389,7 @@ def test_jpeg_truncated_scan_raises():
 def test_decode_image_dispatch():
     a = np.arange(64, dtype=np.uint8).reshape(8, 8)
     assert np.array_equal(ic.decode_image(ic.encode_png(a)), a)
-    assert ic.decode_image(ic.encode_jpeg(a)).shape == (8, 8)
+    assert ic.decode_image(encode_jpeg(a)).shape == (8, 8)
     with pytest.raises(ValueError):
         ic.decode_image(b"GIF89a\x01\x00\x01\x00")  # real format, no pure decoder
 
@@ -384,76 +416,6 @@ def test_resize_array_identity_and_interp():
 
 
 # --- GIF ---------------------------------------------------------------------
-
-
-def _lzw_encode(indices, min_code_size):
-    """Reference GIF-LZW encoder (test-side, written against the spec
-    independently of the decoder): growing dictionary, variable width,
-    clear + EOI codes."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    code_size = min_code_size + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    w = b""
-    for px in bytes(indices):
-        wk = w + bytes([px])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        table[wk] = next_code
-        next_code += 1
-        if next_code > (1 << code_size) and code_size < 12:
-            code_size += 1
-        w = bytes([px])
-    if w:
-        emit(table[w])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _mk_gif(idx, palette, transparent=None, interlace=False):
-    h, w = idx.shape
-    ncol = len(palette)
-    bits = max(1, (ncol - 1).bit_length())
-    size_field = max(0, bits - 1)
-    table = bytearray()
-    for r, g, b in palette:
-        table += bytes([r, g, b])
-    table += b"\x00" * (3 * ((2 << size_field) - ncol))
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | size_field, 0, 0)
-    out += table
-    if transparent is not None:
-        out += bytes([0x21, 0xF9, 4, 0x01, 0, 0, transparent, 0])
-    rows = idx
-    if interlace:
-        order = list(range(0, h, 8)) + list(range(4, h, 8)) + list(range(2, h, 4)) + list(range(1, h, 2))
-        rows = idx[order]
-    out += struct.pack("<BHHHHB", 0x2C, 0, 0, w, h, 0x40 if interlace else 0)
-    mcs = max(2, bits)
-    out += bytes([mcs])
-    payload = _lzw_encode(rows.tobytes(), mcs)
-    for i in range(0, len(payload), 200):
-        blk = payload[i : i + 200]
-        out += bytes([len(blk)]) + blk
-    out += b"\x00\x3b"
-    return bytes(out)
 
 
 @pytest.mark.parametrize("interlace", [False, True])

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from shardpack_spark.operators import multimodal as mm
+from tests.imagefixtures import encode_jpeg
 
 
 def mk_jpeg(w: int, h: int) -> bytes:
@@ -219,7 +220,7 @@ def test_resize_images_real_pixels_no_wheel(spark):
     rgb = np.dstack([img, 255 - img, np.roll(img, 5, axis=1)])
     rows = [
         ("img/png", "a.png", "image/png", ic.encode_png(rgb)),
-        ("img/jpg", "b.jpg", "image/jpeg", ic.encode_jpeg(rgb, quality=90)),
+        ("img/jpg", "b.jpg", "image/jpeg", encode_jpeg(rgb, quality=90)),
     ]
     df = spark.createDataFrame(
         [
@@ -246,11 +247,32 @@ def test_resize_images_real_pixels_no_wheel(spark):
 
 
 def test_resize_error_marker_not_job_abort():
-    """Per-record decode failures yield tagged error bytes, never raise
-    (only relevant when PIL is installed, but the contract holds)."""
+    """Per-record decode failures yield tagged error bytes, never raise."""
     out, path = mm._resize_pixels(b"\xff\xd8 not a real jpeg", 32, 32)
-    assert out.startswith((b"STUB-RESIZE:32x32:", b"DECODE-ERROR:32x32:"))
+    assert out.startswith(b"DECODE-ERROR:32x32:")
     assert path == "surrogate", "marker bytes must report as surrogate"
+
+
+def test_resize_images_rejects_empty_thumbnail_size(spark):
+    """A thumbnail under 1x1 is the caller's error, raised on the driver
+    before any job runs — not a decode-error marker on every valid image
+    that inflates the surrogate fraction."""
+    import numpy as np
+
+    from shardpack_spark.operators import imagecodec as ic
+
+    png = ic.encode_png(np.arange(64, dtype=np.uint8).reshape(8, 8))
+    df = spark.createDataFrame(
+        [("img/0", {}, [("a.png", "image/png", "none", len(png), bytearray(png))])],
+        "key string, metadata map<string,string>, entries array<struct<"
+        "file_name:string,content_type:string,encoding:string,size:long,data:binary>>",
+    )
+    for width, height in ((0, 16), (16, 0), (-1, 4)):
+        with pytest.raises(ValueError, match="at least 1x1"):
+            mm.resize_images(df, width, height)
+    (row,) = mm.resize_images(df, 1, 1).collect()
+    assert row.decode_path == "pure"
+    assert ic.decode_png(bytes(row.data)).shape == (1, 1)
 
 
 def test_image_pixel_features_real_stats(spark):
@@ -268,7 +290,7 @@ def test_image_pixel_features_real_stats(spark):
     dark = np.zeros((10, 10), np.uint8)  # all-extreme
     rows = [
         ("i/flat", "f.png", "image/png", ic.encode_png(flat)),
-        ("i/noisy", "n.jpg", "image/jpeg", ic.encode_jpeg(noisy, quality=95)),
+        ("i/noisy", "n.jpg", "image/jpeg", encode_jpeg(noisy, quality=95)),
         ("i/dark", "d.png", "image/png", ic.encode_png(dark)),
         ("i/bad", "x.png", "image/png", b"\x89PNG\r\n\x1a\nnope"),
     ]
@@ -320,11 +342,7 @@ def test_multimodal_decode_path_telemetry_and_rollup(spark):
     assert rs["a"].decode_path == "pure"
     assert bytes(rs["a"].data)[:8] == b"\x89PNG\r\n\x1a\n"
     assert rs["junk"].decode_path == "surrogate"
-    # PIL-less cluster: STUB-RESIZE (a wheel might have decoded it);
-    # PIL-equipped: DECODE-ERROR (both decoders really failed)
-    assert bytes(rs["junk"].data).startswith(
-        (b"STUB-RESIZE:4x4:", b"DECODE-ERROR:4x4:")
-    )
+    assert bytes(rs["junk"].data).startswith(b"DECODE-ERROR:4x4:")
     roll = decode_path_rollup(mm.resize_images(df, 4, 4)).collect()[0]
     assert (roll.n_rows, roll.n_pure, roll.n_surrogate) == (2, 1, 1)
     assert abs(roll.surrogate_frac - 0.5) < 1e-12

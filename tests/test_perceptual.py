@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from shardpack_spark.operators import perceptual
+from shardpack_spark.operators.imagecodec import encode_png
 from shardpack_spark.operators.perceptual import (
     _block_mean_grid,
     _dhash_bits,
@@ -23,6 +24,7 @@ from shardpack_spark.operators.perceptual import (
     dhash_tensors,
     hamming_near_pairs,
 )
+from tests.imagefixtures import _mk_gif, encode_jpeg
 
 ENTRY_SCHEMA = (
     "key string, metadata map<string,string>, "
@@ -246,10 +248,8 @@ def _hamming64(p: tuple[int, int], q: tuple[int, int]) -> int:
 
 
 def test_dhash_images_real_png_near_far(spark):
-    """The judge's gate: REAL PNG payloads, no PIL installed — a
-    perturbed copy hashes near, unrelated content hashes far."""
-    from shardpack_spark.operators.imagecodec import encode_jpeg, encode_png
-
+    """REAL PNG payloads, no image wheel installed — a perturbed copy
+    hashes near, unrelated content hashes far."""
     base = _smooth_gray(7)
     rng = np.random.default_rng(8)
     noisy = np.clip(
@@ -279,8 +279,6 @@ def test_dhash_images_real_png_near_far(spark):
 
 
 def test_dhash_images_rgb_png_and_pair_finder(spark):
-    from shardpack_spark.operators.imagecodec import encode_png
-
     g = _smooth_gray(3)
     rgb = np.dstack([g, np.roll(g, 2, axis=1), 255 - g])
     rng = np.random.default_rng(4)
@@ -322,13 +320,9 @@ def test_dhash_images_undecodable_falls_back_to_surrogate(spark):
 
 
 def test_dhash_images_decode_path_telemetry_and_decoder_knob(spark):
-    """Every signature row reports HOW it decoded: real pixels (pure /
-    pil) vs byte-digest surrogate — the fraction a pipeline must watch.
-    Progressive JPEG now decodes wheel-free, so it reports 'pure'.  With
-    no PIL installed, decoder='auto' must produce identical rows to
-    'pure' (auto == pure on a bare cluster)."""
-    from shardpack_spark.operators.imagecodec import encode_jpeg, encode_png
-
+    """Every signature row reports HOW it decoded: real pixels ('pure')
+    vs byte-digest surrogate — the fraction a pipeline must watch.
+    Progressive JPEG decodes wheel-free, so it reports 'pure'."""
     base = _smooth_gray(7)
     df = _rows_df(
         spark,
@@ -350,14 +344,6 @@ def test_dhash_images_decode_path_telemetry_and_decoder_knob(spark):
     sig = lambda r: (r.sim_hi, r.sim_lo)  # noqa: E731
     assert _hamming64(sig(rows["prog/i.jpg"]), sig(rows["jpg/i.jpg"])) <= 4
     assert _hamming64(sig(rows["junk/i.png"]), sig(rows["png/i.png"])) >= 10
-
-    auto = {r.sid: r for r in dhash_images(df, decoder="auto").collect()}
-    for sid in rows:
-        assert sig(auto[sid]) == sig(rows[sid])
-        assert auto[sid].decode_path == rows[sid].decode_path
-
-    with pytest.raises(ValueError, match="decoder"):
-        dhash_images(df, decoder="fast")
 
 
 def test_video_fingerprint_decode_path(spark):
@@ -468,7 +454,7 @@ def test_hamming_near_pairs_plan_has_no_cartesian(spark):
 
 from test_multimodal import mk_avi  # minimal RIFF/AVI builder
 
-from shardpack_spark.operators.perceptual import _frame_gray, video_fingerprint
+from shardpack_spark.operators.perceptual import _frame_gray_path, video_fingerprint
 
 
 def _dib_frame(gray_img: np.ndarray) -> bytes:
@@ -486,10 +472,10 @@ def test_frame_gray_raw_dib_decode():
     img = (rng.random((12, 18)) * 255).astype("u1").astype("float64")
     frame = _dib_frame(img)  # w=18 -> 54-byte rows pad to 56
     assert len(frame) == 56 * 12
-    got = _frame_gray(frame, 18, 12)
-    assert np.allclose(got, img)
-    # wrong-size payload (not a raw DIB, no PIL here) -> surrogate 8x8
-    assert _frame_gray(b"\xff\xd8jpegish", 18, 12).shape == (8, 8)
+    got, path = _frame_gray_path(frame, 18, 12)
+    assert np.allclose(got, img) and path == "pure"
+    # wrong-size payload (not a raw DIB, not a decodable image) -> surrogate 8x8
+    assert _frame_gray_path(b"\xff\xd8jpegish", 18, 12)[0].shape == (8, 8)
 
 
 def test_video_fingerprint_majority_and_pairs(spark):
@@ -768,7 +754,7 @@ def test_simhash_near_pairs_cap_passthrough(spark):
         sim.unpersist()
 
 
-# --- decode telemetry rollup + PIL-present certification -------------------------
+# --- decode telemetry rollup ------------------------------------------------------
 
 from shardpack_spark.operators.perceptual import decode_path_rollup
 
@@ -776,8 +762,6 @@ from shardpack_spark.operators.perceptual import decode_path_rollup
 def test_decode_path_rollup_fractions(spark):
     """The per-row decode_path telemetry folds to the corpus-level
     alert number: surrogate_frac per group, one partial-agg shuffle."""
-    from shardpack_spark.operators.imagecodec import encode_png
-
     base = _smooth_gray(3)
     df = _rows_df(
         spark,
@@ -791,7 +775,7 @@ def test_decode_path_rollup_fractions(spark):
     total = decode_path_rollup(sig).collect()
     assert len(total) == 1
     r = total[0]
-    assert (r.n_rows, r.n_pure, r.n_pil, r.n_surrogate, r.n_mixed) == (3, 2, 0, 1, 0)
+    assert (r.n_rows, r.n_pure, r.n_surrogate, r.n_mixed) == (3, 2, 1, 0)
     assert abs(r.surrogate_frac - 1 / 3) < 1e-12
 
     # grouped: alert granularity rides any upstream column
@@ -811,64 +795,6 @@ def test_decode_path_rollup_fractions(spark):
     assert decode_path_rollup(fam).collect()[0].n_rows == 4
 
 
-def test_decode_path_pil_parity_when_installed(spark):
-    """PIL-present certification for decoder='auto' (skipped where PIL is
-    absent — there 'auto' == 'pure' trivially, covered above): the PIL
-    branch must actually run (decode_path='pil') and land within a small
-    Hamming distance of the pure path on real PNG/JPEG payloads.  Expect
-    several-x bulk-decode throughput from PIL's C loops; hashes may
-    differ by a few bits from resampling differences."""
-    pytest.importorskip("PIL")
-    from shardpack_spark.operators.imagecodec import encode_jpeg, encode_png
-
-    base = _smooth_gray(9)
-    df = _rows_df(
-        spark,
-        [
-            ("png", [_entry("i.png", "image/png", encode_png(base))]),
-            ("jpg", [_entry("i.jpg", "image/jpeg", encode_jpeg(base))]),
-        ],
-    )
-    pure = {r.sid: r for r in dhash_images(df, decoder="pure").collect()}
-    auto = {r.sid: r for r in dhash_images(df, decoder="auto").collect()}
-    for sid in pure:
-        assert pure[sid].decode_path == "pure"
-        assert auto[sid].decode_path == "pil"
-        d = _hamming64(
-            (pure[sid].sim_hi, pure[sid].sim_lo),
-            (auto[sid].sim_hi, auto[sid].sim_lo),
-        )
-        assert d <= 6, f"{sid}: pure/pil dHash diverged by {d} bits"
-
-
-def test_resize_and_pixel_features_pil_contract_when_installed(spark):
-    """PIL-present certification of the decoder='auto' output contracts
-    (advice r5): thumbnails must start with the PNG signature whatever
-    the source format, and grayscale sources must keep channels=1."""
-    pytest.importorskip("PIL")
-    from shardpack_spark.operators.imagecodec import encode_jpeg, encode_png
-    from shardpack_spark.operators.multimodal import (
-        image_pixel_features,
-        resize_images,
-    )
-
-    base = _smooth_gray(10)
-    df = _rows_df(
-        spark,
-        [
-            ("g", [_entry("g.png", "image/png", encode_png(base))]),
-            ("j", [_entry("j.jpg", "image/jpeg", encode_jpeg(base))]),
-        ],
-    )
-    for r in resize_images(df, 16, 16, decoder="auto").collect():
-        assert bytes(r.data)[:8] == b"\x89PNG\r\n\x1a\n", r.file_name
-    feats = {r.key: r for r in image_pixel_features(df, decoder="auto").collect()}
-    assert feats["g"].channels == 1, "grayscale must not be force-RGB'd under auto"
-    assert {r.decode_path for r in feats.values()} == {"pil"}
-    pure = {r.key: r for r in image_pixel_features(df, decoder="pure").collect()}
-    assert abs(feats["g"].mean_luma - pure["g"].mean_luma) < 2.0
-
-
 def test_surrogate_fraction_web_frequency_mix(spark):
     """The r5/r6 'implement SOF9/WebP?' question, answered with a number
     (README 'Wheel-free codec coverage decision').
@@ -877,13 +803,9 @@ def test_surrogate_fraction_web_frequency_mix(spark):
     Archive / Web Almanac media chapters, 2022-2024: JPEG ~40%, PNG
     ~27%, GIF ~14%, WebP ~9%, AVIF <1%; arithmetic-coded JPEG ~0% — no
     browser ever shipped SOF9/SOF11 decode, so the web does not serve
-    it).  On a PIL-less cluster the wheel-free decoders cover everything
-    but WebP/AVIF: surrogate_frac == exactly the WebP+AVIF share (~10%),
-    and decode_path_rollup is the alert that reports it.  With PIL
-    installed (decoder='auto', the documented production path) the same
-    mix decodes fully."""
-    from shardpack_spark.operators.imagecodec import encode_jpeg, encode_png
-    from shardpack_spark.operators.perceptual import decode_path_rollup
+    it).  The wheel-free decoders cover everything but WebP/AVIF, which
+    stay surrogate by design: surrogate_frac == exactly the WebP+AVIF
+    share (~10%), and decode_path_rollup is the alert that reports it."""
 
     rows = []
     k = 0
@@ -897,14 +819,12 @@ def test_surrogate_fraction_web_frequency_mix(spark):
     g = _smooth_gray(3, 16, 16)
     add("jpg", "image/jpeg", encode_jpeg(g), 40)
     add("png", "image/png", encode_png(g), 27)
-    # GIF payload via the spec-written test encoder in test_imagecodec
-    from tests.test_imagecodec import _mk_gif
-
+    # GIF payload via the spec-written fixture encoder
     pal = [(i, i, i) for i in range(4)]
     idx = (np.arange(64).reshape(8, 8) % 4).astype(np.uint8)
     add("gif", "image/gif", bytes(_mk_gif(idx, pal)), 14)
     # WebP (RIFF container) and AVIF (ISO-BMFF ftyp) headers: REAL format
-    # magics the pure decoders typed-reject -> surrogate on PIL-less
+    # magics the pure decoders typed-reject -> surrogate
     webp = b"RIFF" + (32).to_bytes(4, "little") + b"WEBPVP8 " + bytes(24)
     avif = (28).to_bytes(4, "big") + b"ftypavif" + bytes(16)
     add("webp", "image/webp", webp, 9)
@@ -912,18 +832,9 @@ def test_surrogate_fraction_web_frequency_mix(spark):
     # remainder: more JPEG to reach 100 (SVG et al. are not raster inputs)
     add("jpg", "image/jpeg", encode_jpeg(_smooth_gray(5, 16, 16)), 9)
 
-    sig = dhash_images(_rows_df(spark, rows), decoder="auto")
+    sig = dhash_images(_rows_df(spark, rows))
     roll = decode_path_rollup(sig).collect()[0]
     assert roll.n_rows == 100
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if has_pil:  # pragma: no cover - container has no PIL
-        assert roll.surrogate_frac == 0.0
-    else:
-        # the recorded number: WebP+AVIF share, nothing else degrades
-        assert roll.n_surrogate == 10 and abs(roll.surrogate_frac - 0.10) < 1e-9
-        assert roll.n_pure == 90
+    # the recorded number: WebP+AVIF share, nothing else degrades
+    assert roll.n_surrogate == 10 and abs(roll.surrogate_frac - 0.10) < 1e-9
+    assert roll.n_pure == 90

@@ -2,7 +2,7 @@
 q29 or the bench's LSH path must not leave temp views in the session, and
 the package source must not register session-global ``__``-named views,
 grow per-module pickle-by-value registrations, nor grow a second place
-that publishes snapshot roots."""
+that publishes snapshot roots or a second image decode path."""
 
 from __future__ import annotations
 
@@ -109,3 +109,14 @@ def test_one_place_publishes_snapshot_roots():
         {(mod, name) for mod, name, _ in _enclosing_functions(r"""["']version["']\s*:\s*3\b""")}
     )
     assert roots == [("format/commit.py", "publish_root")]
+
+
+def test_one_image_decode_path():
+    """Image payloads decode through operators.imagecodec alone: the
+    package imports no PIL, takes no `decoder=` knob, and carries no JPEG
+    encoder (the tests' fixture encoder lives in tests/imagefixtures.py)."""
+    patterns = (r"\bPIL\b", r"\bdecoder\s*(:\s*\w+\s*)?=", r"\bencode_jpeg\b")
+    offenders = sorted(
+        {(mod, name, pat) for pat in patterns for mod, name, _ in _enclosing_functions(pat)}
+    )
+    assert offenders == []
