@@ -200,7 +200,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "ls":
         from shardpack_spark.format import manifest as mf
 
-        m = mf._load_latest_manifest(args.dataset) or {}
+        m = mf._load_manifest(args.dataset) or {}
         report = {
             "dataset": args.dataset,
             "version": m.get("version_id"),
@@ -299,22 +299,12 @@ def main(argv: list[str] | None = None) -> int:
             # uses, so both produce equivalently honest coverage
             rows.extend(warc_index.locator_rows_for_archive(path, key=args.key))
         rows.sort(key=lambda t: t[0])  # key-sorted shards -> tight min/max
-        # same coverage + key metadata as the Spark builder: without it a
-        # CLI-built locator cannot serve format('warc') dump_index
-        # pushdown (_locator_partitions bails on a missing warc_key)
-        covered = set(files)
-        if args.mode == "append":
-            from shardpack_spark.format import manifest as mf
-
-            man = mf._load_manifest(args.dataset) or {}
-            covered |= (
-                warc_index.read_warc_coverage(args.dataset, man.get("user_metadata"))
-                or set()
-            )
-        meta = {
-            "warc_key": args.key,
-            **warc_index.write_warc_coverage(args.dataset, covered),
-        }
+        # key + coverage metadata: without it a CLI-built locator cannot
+        # serve format('warc') dump_index pushdown (_locator_partitions
+        # bails on a missing warc_key)
+        meta = warc_index.locator_metadata(
+            args.dataset, args.key, files, args.mode == "append"
+        )
         with open_writer(
             args.dataset, mode=args.mode, dataset_metadata=meta
         ) as w:
@@ -482,7 +472,7 @@ def main(argv: list[str] | None = None) -> int:
             mode=args.mode,
             **opts,
         )
-        m = mf._load_latest_manifest(args.dataset) or {}
+        m = mf._load_manifest(args.dataset) or {}
         report = {
             "dataset": args.dataset,
             "version": m.get("version_id"),

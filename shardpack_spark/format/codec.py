@@ -779,6 +779,93 @@ def iter_records(
             yield decode_record(buf, off, *opts)[0]
 
 
+# --- Arrow export ------------------------------------------------------------
+
+
+def arrow_batches(
+    records: Iterable[Record],
+    skip_payload: bool = False,
+    metadata_only: bool = False,
+    shard: str | None = None,
+    entry_names: frozenset[str] | None = None,
+    batch_size: int = 1024,
+) -> Iterator[pa.RecordBatch]:
+    """``records`` as Arrow RecordBatches in the DataSource row schema:
+    ``key``, ``metadata`` (a map, items sorted) and ``entries`` (a list
+    of file_name/content_type/encoding/size/data structs), plus a
+    constant ``_shard`` column when ``shard`` names the source shard
+    file.  A payload that was never read (``skip_payload``, or an entry
+    outside ``entry_names``) is NULL ``data``, distinct from an empty
+    b"" payload; ``metadata_only`` makes ``entries`` NULL.  The Spark
+    reader and the facade's ``Dataset.to_batches`` both build here."""
+    entry_struct = pa.struct(
+        [
+            pa.field("file_name", pa.string()),
+            pa.field("content_type", pa.string()),
+            pa.field("encoding", pa.string()),
+            pa.field("size", pa.int64()),
+            pa.field("data", pa.binary()),
+        ]
+    )
+    entry_type = pa.list_(entry_struct)
+    meta_type = pa.map_(pa.string(), pa.string())
+    batch_keys: list[str] = []
+    batch_meta: list[list[tuple[str, str]]] = []
+    batch_entries: list[list[dict] | None] = []
+
+    def flush():
+        if metadata_only:
+            entries_arr = pa.nulls(len(batch_keys), entry_type)
+        else:
+            entries_arr = pa.array(batch_entries, entry_type)
+        arrays = [
+            pa.array(batch_keys, pa.string()),
+            pa.array(batch_meta, meta_type),
+            entries_arr,
+        ]
+        names = ["key", "metadata", "entries"]
+        if shard is not None:
+            # row provenance: which shard file a record came from (the
+            # Arrow analog of parquet's _metadata.file_path) — a constant
+            # per partition, so the column costs one repeated string
+            arrays.append(pa.array([shard] * len(batch_keys), pa.string()))
+            names.append("_shard")
+        return pa.RecordBatch.from_arrays(arrays, names=names)
+
+    for rec in records:
+        batch_keys.append(rec.key)
+        batch_meta.append(sorted((rec.metadata or {}).items()))
+        if not metadata_only:
+            batch_entries.append(
+                [
+                    {
+                        "file_name": e.file_name,
+                        "content_type": e.content_type,
+                        "encoding": e.encoding,
+                        "size": e.size,
+                        # NULL for never-read payloads (skip_payload or an
+                        # unselected entry under entry_names) — distinct
+                        # from an actually-empty b"" payload
+                        "data": None
+                        if (
+                            skip_payload
+                            or (
+                                entry_names is not None
+                                and e.file_name not in entry_names
+                            )
+                        )
+                        else e.data,
+                    }
+                    for e in rec.entries
+                ]
+            )
+        if len(batch_keys) >= batch_size:
+            yield flush()
+            batch_keys, batch_meta, batch_entries = [], [], []
+    if batch_keys:
+        yield flush()
+
+
 # --- dataset (bucket of sequentially numbered shards) -----------------------
 
 def shard_name(basename: str, shard_id: int) -> str:

@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from shardpack_spark import ship_by_value
 from shardpack_spark.format import codec, manifest, storage
-from shardpack_spark.format.datasource import read_shardpack, register
+from shardpack_spark.format.datasource import SCHEMA, read_shardpack, register
 
 COLUMNS_FILE = "_columnar.json"
 
@@ -135,7 +135,7 @@ def write_columnar(
                 .mode("overwrite")
                 .save(sub)
             )
-            committed = manifest._load_latest_manifest(sub) or {}
+            committed = manifest._load_manifest(sub) or {}
             counts[name] = committed.get("total_records", 0)
         # commit point for the column map (written last: readers that find
         # the map can trust every listed dataset is fully committed).
@@ -207,17 +207,11 @@ def read_columnar(
     meta = F.coalesce(*[F.col(f"__m{i}") for i in range(len(columns))])
     ents = F.concat(
         *[
-            F.coalesce(F.col(f"__e{i}"), F.array().cast(_ENTRIES_TYPE))
+            F.coalesce(F.col(f"__e{i}"), F.array().cast(SCHEMA["entries"].dataType))
             for i in range(len(columns))
         ]
     )
     return out.select("key", meta.alias("metadata"), ents.alias("entries"))
-
-
-_ENTRIES_TYPE = (
-    "array<struct<file_name:string,content_type:string,encoding:string,"
-    "size:bigint,data:binary>>"
-)
 
 
 def read_columnar_zipped(
@@ -372,7 +366,4 @@ def read_columnar_zipped(
     plan_df = spark.createDataFrame(
         plan_rows, "lo string, hi string, shards string"
     ).repartition(max(1, len(plan_rows)))
-    out_schema = (
-        "key string, metadata map<string,string>, " + f"entries {_ENTRIES_TYPE}"
-    )
-    return plan_df.mapInPandas(merge, out_schema)
+    return plan_df.mapInPandas(merge, SCHEMA)

@@ -27,7 +27,7 @@ Safety model (object-store-correct; see ``commit_shards``):
   lock or no lock.
 - the ``_commit.lock`` file is liveness-only (avoids wasted retries).
 - the live MANIFEST pointer is a cache written last;
-  manifest._load_latest_manifest resolves pointer-vs-roots races.
+  manifest._observe_latest resolves pointer-vs-roots races.
 """
 
 from __future__ import annotations
@@ -76,7 +76,7 @@ def _write_manifest(path: str, manifest: dict) -> None:
 
     The pointer is a read-optimization cache of the newest archived
     root; under concurrent commits it may briefly point one version
-    back (see manifest._load_latest_manifest), so it is written only if
+    back (see manifest._observe_latest), so it is written only if
     not already newer."""
     be = storage.for_path(path)
     mp = os.path.join(path, MANIFEST_NAME)

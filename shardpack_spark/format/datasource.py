@@ -191,13 +191,14 @@ from shardpack_spark.format.manifest import (  # noqa: F401  (re-exported:
     # keep importing these names from here)
     MANIFEST_NAME,
     MANIFEST_PARTS_DIR,
-    _load_latest_manifest,
     _load_manifest,
     _marker_entries,
     _names_matching_meta,
     _norm_path,
     _observe_latest,
+    _read_pointer,
     _root_ids,
+    _str_range,
     ShardView,
     dataset_partitions,
     list_versions,
@@ -375,44 +376,6 @@ def _arrow_batches(
                 entry_names,
             )
         return
-    import pyarrow as pa
-
-    entry_struct = pa.struct(
-        [
-            pa.field("file_name", pa.string()),
-            pa.field("content_type", pa.string()),
-            pa.field("encoding", pa.string()),
-            pa.field("size", pa.int64()),
-            pa.field("data", pa.binary()),
-        ]
-    )
-    entry_type = pa.list_(entry_struct)
-    meta_type = pa.map_(pa.string(), pa.string())
-    batch_keys: list[str] = []
-    batch_meta: list[list[tuple[str, str]]] = []
-    batch_entries: list[list[dict] | None] = []
-
-    shard_name = os.path.basename(partition.path)
-
-    def flush():
-        if metadata_only:
-            entries_arr = pa.nulls(len(batch_keys), entry_type)
-        else:
-            entries_arr = pa.array(batch_entries, entry_type)
-        arrays = [
-            pa.array(batch_keys, pa.string()),
-            pa.array(batch_meta, meta_type),
-            entries_arr,
-        ]
-        names = ["key", "metadata", "entries"]
-        if shard_column:
-            # row provenance: which shard file a record came from (the
-            # Arrow analog of parquet's _metadata.file_path) — a constant
-            # per partition, so the column costs one repeated string
-            arrays.append(pa.array([shard_name] * len(batch_keys), pa.string()))
-            names.append("_shard")
-        return pa.RecordBatch.from_arrays(arrays, names=names)
-
     if partition.offsets is None and partition.rec_range is not None:
         # record-range split planned from manifest metadata alone: THIS
         # task resolves its range with one EOF-index read of the shard
@@ -444,38 +407,13 @@ def _arrow_batches(
             skip_entries=metadata_only,
             entry_names=entry_names,
         )
-    for rec in record_iter:
-        batch_keys.append(rec.key)
-        batch_meta.append(sorted((rec.metadata or {}).items()))
-        if not metadata_only:
-            batch_entries.append(
-                [
-                    {
-                        "file_name": e.file_name,
-                        "content_type": e.content_type,
-                        "encoding": e.encoding,
-                        "size": e.size,
-                        # NULL for never-read payloads (skip_payload or an
-                        # unselected entry under entry_names) — distinct
-                        # from an actually-empty b"" payload
-                        "data": None
-                        if (
-                            skip_payload
-                            or (
-                                entry_names is not None
-                                and e.file_name not in entry_names
-                            )
-                        )
-                        else e.data,
-                    }
-                    for e in rec.entries
-                ]
-            )
-        if len(batch_keys) >= 1024:
-            yield flush()
-            batch_keys, batch_meta, batch_entries = [], [], []
-    if batch_keys:
-        yield flush()
+    yield from codec.arrow_batches(
+        record_iter,
+        skip_payload,
+        metadata_only,
+        os.path.basename(partition.path) if shard_column else None,
+        entry_names,
+    )
 
 
 class ShardPackReader(DataSourceReader):
@@ -1141,7 +1079,7 @@ def compact_dataset(
         # metadata survives the full-overwrite commit
         w = w.option("dataset_metadata", json.dumps(manifest["user_metadata"]))
     w.mode("overwrite").save(path)
-    new_manifest = _load_latest_manifest(path) or {}
+    new_manifest = _load_manifest(path) or {}
     return {
         "shards": len(new_manifest.get("shards", [])),
         "records": new_manifest.get("total_records", 0),
@@ -1178,7 +1116,7 @@ def convert_to_dataset(
     ad-hoc files; convert aborts and removes its orphan part).
     """
     register(spark)  # ensures by-value pickling for the closure below
-    if _load_latest_manifest(path) is not None or _marker_entries(path):
+    if _load_manifest(path) is not None or _marker_entries(path):
         raise codec.ShardPackIOError(
             f"{path} already has a commit log; convert_to_dataset adopts "
             "log-less directories only"
@@ -1283,11 +1221,7 @@ def read_version_delta(
         base = {
             s["path"] for s in _load_manifest(path, since_version).get("shards", [])
         }
-    cur = (
-        _load_manifest(path, to_version)
-        if to_version is not None
-        else _load_latest_manifest(path)
-    )
+    cur = _load_manifest(path, to_version)
     if cur is None:
         raise codec.ShardPackIOError(f"no manifest under {path}")
     new = [s["path"] for s in cur.get("shards", []) if s["path"] not in base]
@@ -1310,7 +1244,7 @@ def verify_dataset(spark, path: str) -> dict:
     "corrupt": [...], "missing": [...], "orphans": [...]}.
     """
     be = storage.for_path(path)
-    manifest = _load_latest_manifest(path) or {"shards": []}
+    manifest = _load_manifest(path) or {"shards": []}
     expected = {s["path"]: s.get("records") for s in manifest.get("shards", [])}
     for f in be.glob_names(path, "_batch_*.json"):
         for s in json.loads(be.read_bytes(os.path.join(path, f))).get("shards", []):
@@ -1504,8 +1438,8 @@ def rollback(path: str, to_version: int) -> dict:
             if f[5:13].isdigit() and int(f[5:13]) > to_version
         )
         # Drop newer roots FIRST, then swap the live pointer — the
-        # reverse order broke once _load_latest_manifest started
-        # preferring the max archived root: a pointer at to_version with
+        # reverse order broke once _load_manifest started preferring
+        # the max archived root: a pointer at to_version with
         # newer roots still present would read as "pointer lagging a
         # concurrent commit" and resolve to the very state being undone.
         # Crash safety: a crash mid-deletion leaves a PREFIX of the
@@ -1591,11 +1525,11 @@ def vacuum(
     }
     be = storage.for_path(path)
     with _CommitLock(path):
-        # the live POINTER, not _load_latest_manifest: _observe_latest
+        # the live POINTER, not _load_manifest: _observe_latest
         # flattens the pointer's parts before it looks for newer roots,
         # so those parts must stay referenced even when a newer root
         # exists (and any newer root is retained below)
-        manifest = _load_manifest(path)
+        manifest = _read_pointer(path)
         has_markers = bool(be.glob_names(path, "_batch_*.json"))
         if manifest is None and not has_markers:
             # no commit log of any kind (ad-hoc codec output): nothing is
@@ -1867,20 +1801,6 @@ def write_partitioned(
     w.mode(mode).save(path)
 
 
-def _is_str_bound(b) -> bool:
-    """A where_meta_range probe bound is in the STRING (lexicographic)
-    domain when it is a str that does not parse as a float — ISO dates
-    and timestamps, sortable ids.  Numeric strings stay numeric for
-    back-compatibility with existing numeric zone-map probes."""
-    if not isinstance(b, str):
-        return False
-    try:
-        float(b)
-        return False
-    except ValueError:
-        return True
-
-
 def read_shardpack(
     spark,
     path: str,
@@ -2005,19 +1925,8 @@ def read_shardpack(
             # cast the value to double (non-numeric rows drop); STRING
             # bounds compare lexicographically on the raw value (the
             # ISO-date/timestamp tailing cut — correct because ISO-8601
-            # orders lexicographically).  Mixing domains in one key's
-            # bounds is ambiguous and rejected.
-            domains = {
-                ("str" if _is_str_bound(b) else "num")
-                for b in (lo, hi)
-                if b is not None
-            }
-            if len(domains) > 1:
-                raise codec.ShardPackIOError(
-                    f"where_meta_range[{k!r}]: bounds mix numeric and "
-                    f"string domains ({lo!r}, {hi!r})"
-                )
-            if domains == {"str"}:
+            # orders lexicographically).  Mixed domains raise.
+            if _str_range(k, lo, hi):
                 val = F.element_at("metadata", F.lit(k))
                 if lo is not None:
                     df = df.filter(val >= lo)
@@ -2072,13 +1981,12 @@ def publish_checked(
 
     spark = df.sparkSession
     register(spark)
-    versions = list_versions(path) if storage.for_path(path).isdir(path) else []
-    prior_version = versions[-1]["version"] if versions else 0
+    prior_version = _observe_latest(path, flatten=False)[1]
     writer = df.write.format("shardpack").mode("append")
     for k, v in write_options.items():
         writer = writer.option(k, v)
     writer.save(path)
-    new_version = list_versions(path)[-1]["version"]
+    new_version = _observe_latest(path, flatten=False)[1]
     delta = read_version_delta(spark, path, prior_version, to_version=new_version)
     report = _check(delta, rules) if rules else {"passed": True, "rules": []}
     ok = report["passed"] and (audit is None or bool(audit(delta)))

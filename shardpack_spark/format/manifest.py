@@ -59,13 +59,14 @@ def _norm_path(p: str | None) -> str | None:
 def _load_manifest(
     path: str, version: int | None = None, flatten: bool = True
 ) -> dict | None:
-    """Load the commit manifest, resolving log-structured roots.
+    """The commit manifest as a flat {"shards": [...]} view: the newest
+    committed state (``_observe_latest``; None when nothing is
+    committed), or with ``version`` that archived snapshot.
 
     v2 roots inline the full shard list.  v3 roots (log-structured) list
     immutable part files under `_manifest/`, each holding the shards of
     ONE commit — appends then cost O(new shards), not O(dataset), which
-    is what keeps commit time flat at 100 TB / 400k shards.  Either way
-    callers receive the flat {"shards": [...]} view.
+    is what keeps commit time flat at 100 TB / 400k shards.
 
     ``version`` pins a snapshot: every batch commit archives its root as
     `_manifest/root-{id:08d}.json`, and because shard files and manifest
@@ -73,18 +74,33 @@ def _load_manifest(
     commit's view (time travel).  History spans appends since the last
     overwrite/compaction — overwrite deletes the old data files, so it
     resets the version chain too."""
+    if version is None:
+        return _observe_latest(path, flatten)[0]
     be = storage.for_path(path)
-    if version is not None:
-        mp = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{version:08d}.json")
-        if not be.exists(mp):
-            raise codec.ShardPackIOError(
-                f"version {version} not available under {path} "
-                "(never committed, or removed by a later overwrite)"
-            )
-    else:
-        mp = os.path.join(path, MANIFEST_NAME)
-        if not be.exists(mp):
-            return None
+    mp = os.path.join(path, MANIFEST_PARTS_DIR, f"root-{version:08d}.json")
+    if not be.exists(mp):
+        raise codec.ShardPackIOError(
+            f"version {version} not available under {path} "
+            "(never committed, or removed by a later overwrite)"
+        )
+    return _read_root(be, path, mp, flatten)
+
+
+def _read_pointer(path: str, flatten: bool = True) -> dict | None:
+    """The live pointer `_shardpack_manifest.json` as written — only a
+    cache of the newest snapshot root, which may lag a commit whose
+    pointer write failed after its root CAS.  Readers want
+    ``_load_manifest``; ``_observe_latest`` and ``vacuum`` read this."""
+    be = storage.for_path(path)
+    mp = os.path.join(path, MANIFEST_NAME)
+    if not be.exists(mp):
+        return None
+    return _read_root(be, path, mp, flatten)
+
+
+def _read_root(be, path: str, mp: str, flatten: bool) -> dict:
+    """One root file ``mp`` of the dataset at ``path``, its v3 parts
+    flattened unless ``flatten`` is False."""
     root = json.loads(be.read_bytes(mp))
     if root.get("version", 2) >= 3 and "parts" in root:
         if not flatten:
@@ -153,7 +169,7 @@ def _observe_latest(path: str, flatten: bool = True) -> tuple[dict | None, int]:
 
     ``flatten=False`` returns the metadata-only view (no part files
     opened) — sufficient for append commits."""
-    m = _load_manifest(path, flatten=flatten)
+    m = _read_pointer(path, flatten)
     ptr = (m or {}).get("version_id", 0)
     be = storage.for_path(path)
     newer = be.glob_names_after(
@@ -166,11 +182,6 @@ def _observe_latest(path: str, flatten: bool = True) -> tuple[dict | None, int]:
     if top > ptr:
         m = _load_manifest(path, top, flatten=flatten)
     return m, max(top, ptr)
-
-
-def _load_latest_manifest(path: str) -> dict | None:
-    """Newest committed state — see _observe_latest."""
-    return _observe_latest(path)[0]
 
 
 def version_at(path: str, ts) -> int:
@@ -377,7 +388,7 @@ def live_view(path: str, manifest=_UNSET) -> ShardView:
     name (they cannot coexist in correct histories; markers are newer
     when they do)."""
     if manifest is _UNSET:
-        manifest = _load_latest_manifest(path)
+        manifest = _load_manifest(path)
     stats = {s["path"]: s for s in (manifest or {}).get("shards", [])}
     stats.update((s["path"], s) for s in _marker_entries(path))
     names = set(stats)
@@ -491,6 +502,29 @@ def _names_matching_meta(
 
         names = [n for n in names if range_may_match(n)]
     return names
+
+
+def _str_range(key: str, lo, hi) -> bool:
+    """Does the ``where_meta_range`` probe ``key: (lo, hi)`` compare
+    lexicographically?  A bound is in the STRING domain when it is a str
+    that does not parse as a float — ISO dates and timestamps, sortable
+    ids; numeric strings stay numeric for back-compatibility with
+    numeric zone-map probes.  Bounds that mix the two domains are
+    ambiguous and raise ShardPackIOError."""
+    domains = set()
+    for b in (lo, hi):
+        if b is not None:
+            try:
+                float(b)
+                domains.add(False)
+            except (TypeError, ValueError):
+                domains.add(isinstance(b, str))
+    if len(domains) > 1:
+        raise codec.ShardPackIOError(
+            f"where_meta_range[{key!r}]: bounds mix numeric and "
+            f"string domains ({lo!r}, {hi!r})"
+        )
+    return domains == {True}
 
 
 class ShardView:

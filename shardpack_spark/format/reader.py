@@ -53,14 +53,6 @@ if TYPE_CHECKING:
 _TOMBSTONE = object()
 
 
-def _floatable(b) -> bool:
-    try:
-        float(b)
-        return True
-    except (TypeError, ValueError):
-        return False
-
-
 def _select_entries(rec: "codec.Record", sel: "frozenset[str] | None") -> "codec.Record":
     """Apply an entry_names selection to an already-decoded record (the
     patch-overlay rows): unselected entries become header-only copies,
@@ -181,6 +173,13 @@ class Dataset:
         loader over caption+image records pays zero image
         decompression; unselected entries come back header-only with
         their true declared sizes)."""
+        # string bounds compare lexicographically (ISO dates order
+        # correctly); numeric bounds cast the value; mixed domains raise —
+        # the same dispatch as read_shardpack's row filter
+        str_range = {
+            k: manifest._str_range(k, lo, hi)
+            for k, (lo, hi) in (where_meta_range or {}).items()
+        }
         names = manifest._names_matching_meta(
             list(self._names), self._view.stats, where_meta, where_meta_range
         )
@@ -195,15 +194,7 @@ class Dataset:
                     v = rec.metadata.get(k)
                     if v is None:
                         return False
-                    # string bounds compare lexicographically (ISO dates
-                    # order correctly); numeric bounds cast the value —
-                    # same dispatch as read_shardpack's row filter
-                    str_bounds = any(
-                        isinstance(b, str) and not _floatable(b)
-                        for b in (lo, hi)
-                        if b is not None
-                    )
-                    if str_bounds:
+                    if str_range[k]:
                         if lo is not None and v < str(lo):
                             return False
                         if hi is not None and v > str(hi):
@@ -366,71 +357,25 @@ class Dataset:
         where_meta_range: dict | None = None,
         entry_names: "list[str] | set[str] | None" = None,
     ):
-        """Stream pyarrow RecordBatches of the live records — the same
-        (key, metadata, entries) schema the Spark DataSource exposes, so
-        a loader can go straight into Arrow/pandas/torch collation
-        without pyspark.  pyarrow imports lazily (the facade's module
-        graph stays pyspark-free AND pyarrow-free until this is
-        called).  Batches respect ``records()`` order and patch/pruning
-        semantics."""
-        import pyarrow as pa
-
-        schema = pa.schema(
-            [
-                pa.field("key", pa.string()),
-                pa.field("metadata", pa.map_(pa.string(), pa.string())),
-                pa.field(
-                    "entries",
-                    pa.list_(
-                        pa.struct(
-                            [
-                                pa.field("file_name", pa.string()),
-                                pa.field("content_type", pa.string()),
-                                pa.field("encoding", pa.string()),
-                                pa.field("size", pa.int64()),
-                                pa.field("data", pa.binary()),
-                            ]
-                        )
-                    ),
-                ),
-            ]
-        )
-
-        def flush(buf):
-            return pa.RecordBatch.from_pydict(
-                {
-                    "key": [r.key for r in buf],
-                    "metadata": [list((r.metadata or {}).items()) for r in buf],
-                    "entries": [
-                        [
-                            {
-                                "file_name": e.file_name,
-                                "content_type": e.content_type,
-                                "encoding": e.encoding,
-                                "size": e.size,
-                                "data": e.data,
-                            }
-                            for e in r.entries
-                        ]
-                        for r in buf
-                    ],
-                },
-                schema=schema,
-            )
-
-        buf: list[codec.Record] = []
-        for rec in self.records(
+        """Stream pyarrow RecordBatches of the live records in the row
+        schema the Spark DataSource exposes, so a loader can go straight
+        into Arrow/pandas/torch collation without pyspark.  Batches
+        respect ``records()`` order and patch/pruning semantics and share
+        the DataSource's row contract: a payload never read
+        (``skip_payload``, or an entry outside ``entry_names``) is NULL
+        ``data``, distinct from an empty b"" payload."""
+        sel = frozenset(entry_names) if entry_names is not None else self.entry_names
+        return codec.arrow_batches(
+            self.records(
+                skip_payload=skip_payload,
+                where_meta=where_meta,
+                where_meta_range=where_meta_range,
+                entry_names=sel,
+            ),
             skip_payload=skip_payload,
-            where_meta=where_meta,
-            where_meta_range=where_meta_range,
-            entry_names=entry_names,
-        ):
-            buf.append(rec)
-            if len(buf) >= batch_size:
-                yield flush(buf)
-                buf = []
-        if buf:
-            yield flush(buf)
+            entry_names=sel,
+            batch_size=batch_size,
+        )
 
     def keys(self) -> Iterator[str]:
         """Every live record key (payloads never decoded)."""

@@ -43,7 +43,7 @@ import hashlib
 import json
 from dataclasses import dataclass
 
-from shardpack_spark.format import storage
+from shardpack_spark.format import manifest, storage
 from shardpack_spark.format.codec import ShardPackIOError
 from shardpack_spark.format.warc import WarcRecord, iter_warc_records
 
@@ -630,6 +630,21 @@ def read_warc_coverage(
         except Exception:
             return None
     return None
+
+
+def locator_metadata(
+    dataset_path: str, key: str, files: list[str], append: bool
+) -> dict:
+    """The user_metadata a dump-locator build commits: its key kind and
+    the archives it covers, ``files`` plus, for an append, the coverage
+    of the newest committed locator state.  The Spark builder
+    (``operators.webcorpus.warc_dump_index``) and the CLI
+    ``warc-dump-index`` both commit this."""
+    covered = set(files)
+    if append:
+        um = (manifest._load_manifest(dataset_path) or {}).get("user_metadata")
+        covered |= read_warc_coverage(dataset_path, um) or set()
+    return {"warc_key": key, **write_warc_coverage(dataset_path, covered)}
 
 
 def locator_rows_for_archive(

@@ -237,8 +237,8 @@ def _lsh_banded_rows(
     signatures: DataFrame, bands: int, rows_per_band: int
 ) -> DataFrame:
     """(sid, band, bh) banded rows — the LSH shuffle key.  Shared by
-    candidate generation and the skew report so both see the SAME
-    buckets.
+    within- and cross-corpus candidate generation and the skew report so
+    all see the SAME buckets.
 
     Built as ONE parsed SQL expression: the former per-band Column
     listcomp cost ~70 py4j round trips (~0.3 s of driver latency on
@@ -366,26 +366,14 @@ def minhash_lsh_candidates_against(
     on the corpus signatures at ``threshold=max_bucket_size``.
     """
 
-    def banded(sigs: DataFrame, out: str) -> DataFrame:
-        return sigs.select(
-            F.col("sid").alias(out),
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band)
-                        ).alias("bh"),
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("bb"),
-        ).select(out, "bb.band", "bb.bh")
-
-    new_banded = banded(new_signatures, "sid_new")
+    new_banded = _lsh_banded_rows(
+        new_signatures, bands, rows_per_band
+    ).withColumnRenamed("sid", "sid_new")
     if broadcast_new:
         new_banded = F.broadcast(new_banded)
-    corpus_banded = banded(corpus_signatures, "sid_corpus")
+    corpus_banded = _lsh_banded_rows(
+        corpus_signatures, bands, rows_per_band
+    ).withColumnRenamed("sid", "sid_corpus")
     if max_bucket_size is not None:
         from shardpack_spark.operators.skew import drop_hot_buckets
 

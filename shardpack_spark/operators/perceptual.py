@@ -133,17 +133,28 @@ def _block_mean_grid(arr, rows: int, cols: int):
     Every source pixel contributes to exactly one output cell (cell
     boundaries from integer bucket assignment, so uneven divisions are
     handled without interpolation libraries); deterministic in float64.
+    A source smaller than the grid leaves cells without a pixel: each
+    takes the pixel under its centre (nearest neighbour), so a flat
+    image gives a flat grid at every size.
     """
     import numpy as np
 
     a = np.asarray(arr, dtype="float64")
-    r_idx = (np.arange(a.shape[0]) * rows) // a.shape[0]
-    c_idx = (np.arange(a.shape[1]) * cols) // a.shape[1]
+    h, w = a.shape
+    r_idx = (np.arange(h) * rows) // h
+    c_idx = (np.arange(w) * cols) // w
     out = np.zeros((rows, cols))
     cnt = np.zeros((rows, cols))
     np.add.at(out, (r_idx[:, None], c_idx[None, :]), a)
     np.add.at(cnt, (r_idx[:, None], c_idx[None, :]), 1.0)
-    return out / np.maximum(cnt, 1.0)
+    out /= np.maximum(cnt, 1.0)
+    if h < rows or w < cols:
+        near = a[
+            ((2 * np.arange(rows) + 1) * h // (2 * rows))[:, None],
+            ((2 * np.arange(cols) + 1) * w // (2 * cols))[None, :],
+        ]
+        out = np.where(cnt > 0, out, near)
+    return out
 
 
 def _dhash_bits(gray) -> list[bool]:

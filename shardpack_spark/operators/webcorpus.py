@@ -797,18 +797,7 @@ def warc_dump_index(
     # old manifest versions keep referencing their own objects).
     import json as _json
 
-    covered = set(files)
-    if mode != "overwrite":
-        try:
-            from shardpack_spark.format import manifest as _manifest
-
-            man = _manifest._load_manifest(out) or {}
-            covered |= (
-                warc_index.read_warc_coverage(out, man.get("user_metadata")) or set()
-            )
-        except Exception:
-            pass  # no locator yet: coverage starts at this build's files
-    meta = {"warc_key": key, **warc_index.write_warc_coverage(out, covered)}
+    meta = warc_index.locator_metadata(out, key, files, mode == "append")
     w = (
         rows.orderBy("key")
         .write.format("shardpack")
@@ -924,28 +913,23 @@ def export_public_cdx(
 ):
     """Distributed twin of ``cdx_public.build_public_cdx``: one task per
     archive emits its CDXJ lines (``cdx_lines_for_archive``), ONE range
-    shuffle key-sorts them globally, and the zipnum pair (block-gzip
-    ``cdx-*.gz`` + ``cluster.idx``) is assembled.
+    shuffle key-sorts them globally into ``shards`` executor-written
+    ``cdx-{part:05d}.gz`` files (each task gzips its own blocks straight
+    to storage), and the driver assembles only ``cluster.idx`` from the
+    per-block fragment rows — O(total_lines / block_lines) driver work
+    and memory, independent of index bytes, so a real dump's ~100s-of-GB
+    index never flows through one driver.  Range partition ids rise with
+    the key order, so shard names sort in key order and the two-level
+    lookup bisects the cluster the same way for any shard count.
 
-    ``shards=1`` (default): the driver assembles one ``cdx-00000.gz``
-    BLOCK-bounded (one ~3000-line block at a time via toLocalIterator) —
-    right for small/medium dumps where one index file is the convenient
-    artifact.
-
-    ``shards=N``: the crawl-scale path — a real dump's index is ~100s of
-    GB and must never flow through one driver.  The key-sorted lines
-    range-partition into N EXECUTOR-WRITTEN ``cdx-{part:05d}.gz`` shards
-    (each task gzips its own blocks straight to storage), and the driver
-    assembles only ``cluster.idx`` from the per-block fragment rows —
-    O(total_lines / block_lines) driver work and memory, independent of
-    index bytes.  Range partition ids rise with the key order, so shard
-    names sort in key order and the two-level lookup bisects the
-    cluster exactly as in the single-shard layout.
+    ``shards=1`` (default) writes the single ``cdx-00000.gz``, the
+    convenient artifact for small and medium dumps.  A dump without any
+    indexable record writes no ``cdx-*.gz`` file, only an empty
+    ``cluster.idx`` and ``_cdx_meta.json``, which lookups answer with
+    no rows.
 
     Returns the :func:`cdx_public.build_public_cdx`-shaped report."""
-    import gzip as _gzip
-
-    from shardpack_spark.format import cdx_public, storage, warc
+    from shardpack_spark.format import cdx_public, warc
 
     files = warc.list_warc_files(path)
     base = path.rstrip("/")
@@ -965,59 +949,15 @@ def export_public_cdx(
     lines_raw = sdf.repartition(min(max(len(files), 1), 512)).mapInPandas(
         emit, "line string"
     )
-    if shards > 1:
-        return _export_public_cdx_sharded(
-            lines_raw, out_dir, block_lines, shards, len(files)
-        )
-    lines_df = lines_raw.orderBy("line")
-    obe = storage.for_path(out_dir)
-    obe.makedirs(out_dir)
-    shard_name = "cdx-00000.gz"
-    cluster_lines: list[str] = []
-    handle = obe.create(f"{out_dir.rstrip('/')}/{shard_name}")  # streamed,
-    # publish-on-close: the shard never buffers whole driver-side
-    pos = n = 0
-    block: list[str] = []
-
-    def flush_block():
-        nonlocal pos
-        member = _gzip.compress(("\n".join(block) + "\n").encode(), mtime=0)
-        cluster_lines.append(
-            f"{block[0].split(' {', 1)[0]}\t{shard_name}\t{pos}\t{len(member)}\t{n - len(block)}"
-        )
-        handle.write(member)
-        pos += len(member)
-
-    try:
-        for row in lines_df.toLocalIterator():  # block-bounded driver memory
-            block.append(row.line)
-            n += 1
-            if len(block) >= block_lines:
-                flush_block()
-                block = []
-        if block:
-            flush_block()
-        handle.close()
-    except BaseException:
-        handle.abort()
-        raise
-    obe.write_atomic(
-        f"{out_dir.rstrip('/')}/{cdx_public.CLUSTER_IDX}",
-        ("\n".join(cluster_lines) + "\n").encode() if cluster_lines else b"",
+    return _export_public_cdx_sharded(
+        lines_raw, out_dir, block_lines, shards, len(files)
     )
-    cdx_public.write_cdx_meta(out_dir, be=obe)
-    return {
-        "out": out_dir,
-        "files": len(files),
-        "records": n,
-        "blocks": len(cluster_lines),
-    }
 
 
 def _export_public_cdx_sharded(
     lines_raw: DataFrame, out_dir: str, block_lines: int, shards: int, n_files: int
 ) -> dict:
-    """Crawl-scale half of :func:`export_public_cdx` (``shards>1``): the
+    """The assembly half of :func:`export_public_cdx`: the
     key-sorted lines land as N executor-written ``cdx-{part:05d}.gz``
     shard files; the driver sees only one fragment row per gzip BLOCK
     (first key, byte offset/length, local line number, shard line count)

@@ -314,6 +314,37 @@ def test_export_public_cdx_spark_parity(spark, tmp_path):
         assert a == b and len(a) == 1
 
 
+def test_export_public_cdx_single_shard_layout(spark, tmp_path):
+    """``shards=1`` writes exactly the Spark-free twin's bytes: one
+    ``cdx-00000.gz`` and its ``cluster.idx``.  A dump without an
+    indexable record writes no ``cdx-*.gz`` file and an empty
+    ``cluster.idx``, which lookups answer with no rows."""
+    from shardpack_spark.operators.webcorpus import export_public_cdx
+
+    d, _ = _write_dump(tmp_path, n_files=3, n=7)
+    for block_lines in (3, 4):
+        out_cli = str(tmp_path / f"cli{block_lines}")
+        out_spark = str(tmp_path / f"spark{block_lines}")
+        rep_cli = CP.build_public_cdx(d, out_cli, block_lines=block_lines)
+        rep_spark = export_public_cdx(spark, d, out_spark, block_lines=block_lines)
+        assert {**rep_spark, "out": None} == {**rep_cli, "out": None}
+        assert sorted(os.listdir(out_spark)) == sorted(os.listdir(out_cli))
+        for f in os.listdir(out_cli):
+            with open(os.path.join(out_cli, f), "rb") as a, open(
+                os.path.join(out_spark, f), "rb"
+            ) as b:
+                assert a.read() == b.read(), f
+
+    empty = tmp_path / "empty_dump"
+    empty.mkdir()
+    W.write_warc(str(empty / "e.warc.gz"), [])
+    out = str(tmp_path / "idx_empty")
+    rep = export_public_cdx(spark, str(empty), out)
+    assert (rep["files"], rep["records"], rep["blocks"]) == (1, 0, 0)
+    assert sorted(os.listdir(out)) == [CP.CDX_META, CP.CLUSTER_IDX]
+    assert CP.lookup_public_cdx(out, url="http://h0.ex.com/page/0") == []
+
+
 # --- property fuzz -------------------------------------------------------------
 
 from hypothesis import HealthCheck, given, settings

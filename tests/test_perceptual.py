@@ -111,6 +111,47 @@ def test_dhash_bits_known_gradient():
     assert _dhash_bits(inc[:, ::-1]) == [True] * 64
 
 
+def test_dhash_flat_images_of_every_small_size_hash_to_zero():
+    """A source smaller than the 8x9 grid used to leave cells at 0, and
+    the hash then encoded the empty-cell pattern: flat 5x5 PNGs of gray
+    100 and gray 200 hashed alike, to a non-zero hash.  Every cell is
+    now filled, so a flat image hashes to zero at every size."""
+    for h in range(1, 17):
+        for w in range(1, 17):
+            for v in (100, 200):
+                png = encode_png(np.full((h, w), v, dtype=np.uint8))
+                gray, path = perceptual._gray_with_path(png)
+                assert path == "pure"
+                assert _pack_bits(_dhash_bits(gray)) == (0, 0), (h, w, v)
+
+
+def test_dhash_unchanged_for_images_at_least_grid_size():
+    """Images of 9x8 pixels and larger fill every grid cell, so their
+    hashes are pinned to the values computed before small images got
+    their empty cells filled."""
+    rng = np.random.default_rng(7)
+    golden = {
+        (8, 9): (2729347931, 3629402569),
+        (8, 16): (3390493783, 3030799141),
+        (9, 9): (3528897398, 3587391890),
+        (16, 16): (3399185297, 745819050),
+        (17, 33): (4064834441, 1968744773),
+        (64, 48): (3567692459, 3444233132),
+        (100, 9): (1370739020, 153786805),
+    }
+    for (h, w), want in golden.items():
+        a = rng.integers(0, 256, size=(h, w)).astype("float64")
+        assert _pack_bits(_dhash_bits(a)) == want, (h, w)
+    rng = np.random.default_rng(11)
+    for (h, w), want in {
+        (8, 9): (1871293865, 2555796298),
+        (20, 30): (1487579764, 2863421095),
+    }.items():
+        png = encode_png(rng.integers(0, 256, size=(h, w, 3)).astype("uint8"))
+        gray, _ = perceptual._gray_with_path(png)
+        assert _pack_bits(_dhash_bits(gray)) == want, (h, w)
+
+
 # --- hamming_near_pairs: completeness vs brute force ---------------------------
 
 

@@ -382,9 +382,54 @@ def test_shard_records_partitions_exactly(spark, tmp_path):
         list(ds.shard_records(3, 3))
 
 
+def test_to_batches_payload_contract_matches_datasource(tmp_path):
+    """Facade Arrow batches follow the DataSource row contract: a payload
+    that was never read (skip_payload, or an entry outside entry_names)
+    is NULL, an actually-empty payload is b""."""
+    from shardpack_spark.format.writer import write_records
+
+    root = str(tmp_path / "nulls")
+    write_records(
+        root,
+        [
+            codec.Record(
+                key="k",
+                entries=[
+                    codec.FileEntry("a.bin", "application/octet-stream", b"12345"),
+                    codec.FileEntry("e.bin", "application/octet-stream", b""),
+                ],
+            )
+        ],
+    )
+    ds = open_dataset(root)
+
+    def data(**kw):
+        (batch,) = ds.to_batches(**kw)
+        return {e["file_name"]: e["data"] for e in batch.to_pylist()[0]["entries"]}
+
+    assert data() == {"a.bin": b"12345", "e.bin": b""}
+    assert data(skip_payload=True) == {"a.bin": None, "e.bin": None}
+    assert data(entry_names=["e.bin"]) == {"a.bin": None, "e.bin": b""}
+
+
+def test_records_reject_mixed_domain_range_bounds(tmp_path):
+    """where_meta_range bounds mixing a number and a non-numeric string
+    raise, as read_shardpack does, instead of silently matching nothing."""
+    from shardpack_spark.format.writer import write_records
+
+    root = str(tmp_path / "mixed")
+    write_records(
+        root, [codec.Record(key="k", entries=[], metadata={"d": "2026-01-15"})]
+    )
+    ds = open_dataset(root)
+    with pytest.raises(codec.ShardPackIOError, match="mix numeric and string"):
+        list(ds.records(where_meta_range={"d": (5, "2026-01-31")}))
+    got = ds.records(where_meta_range={"d": ("2026-01-01", "2026-01-31")})
+    assert [r.key for r in got] == ["k"]
+
+
 def test_to_batches_arrow_parity(spark, tmp_path):
-    """Arrow-batch export matches records() content; module graph stays
-    pyarrow-lazy (imported only on call)."""
+    """Arrow-batch export matches records() content."""
     import pyarrow as pa
 
     base = str(tmp_path / "arrow")

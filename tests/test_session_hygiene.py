@@ -111,6 +111,22 @@ def test_one_place_publishes_snapshot_roots():
     assert roots == [("format/commit.py", "publish_root")]
 
 
+def test_one_way_to_read_latest():
+    """Readers resolve the newest committed state through
+    manifest._load_manifest (or live_view on top of it).  The raw
+    live-pointer read is reached only by the resolution itself and by
+    vacuum, which keeps the pointer's parts referenced on purpose; the
+    second "latest" name is gone."""
+    pointer_reads = sorted(
+        {(mod, name) for mod, name, _ in _enclosing_functions(r"(?<!def )\b_read_pointer\(")}
+    )
+    assert pointer_reads == [
+        ("format/datasource.py", "vacuum"),
+        ("format/manifest.py", "_observe_latest"),
+    ]
+    assert _enclosing_functions(r"_load_latest_manifest") == []
+
+
 def test_one_image_decode_path():
     """Image payloads decode through operators.imagecodec alone: the
     package imports no PIL, takes no `decoder=` knob, and carries no JPEG

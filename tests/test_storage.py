@@ -346,7 +346,7 @@ def test_concurrent_appends_no_lost_commits(tmp_path, monkeypatch):
         for t in threads:
             t.join()
         assert not errors, errors
-        m = ds._load_latest_manifest(root)
+        m = ds._load_manifest(root)
         assert m["total_records"] == n_writers * per, root
         names = {s["path"] for s in m["shards"]}
         assert len(names) == n_writers, root  # every writer's shard listed
@@ -399,7 +399,7 @@ def test_concurrent_appends_across_processes(tmp_path):
         for p in procs:
             p.join(120)
         assert all(p.exitcode == 0 for p in procs), [p.exitcode for p in procs]
-        m = ds._load_latest_manifest(root)
+        m = ds._load_manifest(root)
         assert m["total_records"] == n_procs * per * 3, root
         # every committed shard is present and readable
         keys = set()
@@ -441,7 +441,7 @@ def test_commit_cas_loser_remerges(tmp_path, monkeypatch):
     assert claims == [(1, True), (1, False), (2, True)]
     assert len(entered) == 2
 
-    m = ds._load_latest_manifest(root)
+    m = ds._load_manifest(root)
     assert m["version_id"] == 2
     assert m["total_records"] == 3
     keys = set()
@@ -512,7 +512,7 @@ def test_renameless_lock_release_race_loses_no_commit(tmp_path, monkeypatch):
     b.join(60)
     assert not b.is_alive()
     assert not errors, errors
-    m = ds._load_latest_manifest(root)
+    m = ds._load_manifest(root)
     assert ds._root_ids(root) == [1, 2, 3]  # dense: A, C, then B re-merged
     assert m["total_records"] == 4
     keys = set()
@@ -550,7 +550,7 @@ def test_batch_commit_crash_before_root_claim(tmp_path, monkeypatch):
         w1.commit([msg])
     monkeypatch.setattr(storage.LocalBackend, "put_if_absent", real)
 
-    m = ds._load_latest_manifest(root)
+    m = ds._load_manifest(root)
     assert m["total_records"] == 1  # crashed commit invisible
     # orphan part from the crashed commit is vacuumable
     rep = ds.vacuum(root, grace_seconds=0, dry_run=True)
@@ -558,7 +558,7 @@ def test_batch_commit_crash_before_root_claim(tmp_path, monkeypatch):
     # recovery: a fresh commit of the same staged shards lands
     w2 = _mk_commit_writer(root)
     w2.commit([msg])
-    assert ds._load_latest_manifest(root)["total_records"] == 3
+    assert ds._load_manifest(root)["total_records"] == 3
 
 
 def test_batch_commit_crash_before_pointer_write(tmp_path, monkeypatch):
@@ -585,8 +585,8 @@ def test_batch_commit_crash_before_pointer_write(tmp_path, monkeypatch):
     monkeypatch.undo()
 
     # pointer lags; latest-resolution still sees the committed root
-    assert ds._load_manifest(root)["version_id"] == 1
-    m = ds._load_latest_manifest(root)
+    assert ds._read_pointer(root)["version_id"] == 1
+    m = ds._load_manifest(root)
     assert m["version_id"] == 2 and m["total_records"] == 2
     # the reader plans against the committed state
     reader = ds.ShardPackReader({"path": root})
@@ -594,8 +594,8 @@ def test_batch_commit_crash_before_pointer_write(tmp_path, monkeypatch):
     # next commit heals the pointer
     w2 = _mk_commit_writer(root)
     w2.commit([_stage_shards(root, ["k3"], seq=3)])
-    assert ds._load_manifest(root)["version_id"] == 3
-    assert ds._load_latest_manifest(root)["total_records"] == 3
+    assert ds._read_pointer(root)["version_id"] == 3
+    assert ds._load_manifest(root)["total_records"] == 3
 
 
 def _drain_stream(reader, start, delivered):
@@ -609,10 +609,11 @@ def _drain_stream(reader, start, delivered):
     return end
 
 
-def _commit_losing_pointer_write(root, monkeypatch, key, seq):
+def _commit_losing_pointer_write(root, monkeypatch, key, seq, **opts):
     """Commit one record whose root CAS succeeds but whose live-pointer
     write fails: the commit is durable, the pointer still names the
-    previous version."""
+    previous version.  ``opts`` are writer options (compression,
+    dataset_metadata)."""
 
     class _Boom(RuntimeError):
         pass
@@ -621,7 +622,7 @@ def _commit_losing_pointer_write(root, monkeypatch, key, seq):
         commit, "_write_manifest", lambda *a: (_ for _ in ()).throw(_Boom())
     )
     with pytest.raises(_Boom):  # only the patched seam raises _Boom
-        _mk_commit_writer(root).commit([_stage_shards(root, [key], seq=seq)])
+        _mk_commit_writer(root, **opts).commit([_stage_shards(root, [key], seq=seq)])
     monkeypatch.undo()
 
 
@@ -692,6 +693,157 @@ def test_audits_see_commit_whose_pointer_write_failed(spark, tmp_path, monkeypat
     assert (report["ok"], report["shards_ok"], report["orphans"]) == (True, 2, [])
     delta = ds.read_version_delta(spark, root, since_version=1)
     assert [r.key for r in delta.collect()] == ["k2"]
+
+
+def test_patch_merge_sees_commit_whose_pointer_write_failed(
+    spark, tmp_path, monkeypatch
+):
+    """The patch merge resolves the newest committed state of the base
+    and of each patch, not their live pointers.  The broadcast hint
+    counts the patch rows of a lost-pointer commit, and the compaction
+    keeps the compression of the base's newest commit.  The record count
+    compact_patches reports was right either way: the compaction's own
+    commit rewrites the pointer before the count is read."""
+    from shardpack_spark.format.patches import (
+        compact_patches,
+        list_patches,
+        patch_path,
+        read_with_patches,
+        write_patch,
+    )
+
+    base = str(tmp_path / "base")
+    storage.for_path(base).makedirs(base)
+    _mk_commit_writer(base).commit([_stage_shards(base, ["a"], seq=1)])
+    _commit_losing_pointer_write(base, monkeypatch, "b", seq=2, compression="gzip")
+    write_patch(spark.createDataFrame([("c", {}, [])], ds.SCHEMA), base)
+    patch = patch_path(base, list_patches(base)[0])
+    _commit_losing_pointer_write(patch, monkeypatch, "d", seq=2)
+
+    def broadcasts(max_rows: str) -> bool:
+        spark.conf.set("shardpack.patches.broadcastMaxRows", max_rows)
+        try:
+            plan = read_with_patches(spark, base)._jdf.queryExecution()
+            return "strategy=broadcast" in plan.optimizedPlan().toString()
+        finally:
+            spark.conf.unset("shardpack.patches.broadcastMaxRows")
+
+    assert (broadcasts("1"), broadcasts("2")) == (False, True)
+    assert sorted(r.key for r in read_with_patches(spark, base).collect()) == [
+        "a",
+        "b",
+        "c",
+        "d",
+    ]
+    assert compact_patches(spark, base) == {"patches_folded": 1, "records": 4}
+    assert ds._load_manifest(base)["compression"] == "gzip"
+
+
+def _locator_with_lost_append(tmp_path, monkeypatch):
+    """A CLI-built dump locator over archive A, then an append whose
+    commit covers archive B but loses its pointer write.  Returns
+    (dump dir, locator, A, B)."""
+    from shardpack_spark.__main__ import main
+    from shardpack_spark.format import warc as W
+    from shardpack_spark.format import warc_index as WI
+
+    def archive(name, ids):
+        p = str(tmp_path / "dump" / name)
+        W.write_warc(
+            p,
+            [
+                W.warc_record_bytes(
+                    "response",
+                    W.http_response_block(b"payload"),
+                    target_uri=f"http://ex.com/{i}",
+                    record_id=i,
+                )
+                for i in ids
+            ],
+        )
+        WI.build_warc_index(p)
+        return p
+
+    (tmp_path / "dump").mkdir()
+    a = archive("a.warc.gz", ["<urn:a:0>", "<urn:a:1>"])
+    loc = str(tmp_path / "locator")
+    assert main(["warc-dump-index", str(tmp_path / "dump"), loc]) == 0
+    b = archive("b.warc.gz", ["<urn:b:0>"])
+    meta = {"warc_key": "record_id", **WI.write_warc_coverage(loc, {a, b})}
+    _commit_losing_pointer_write(
+        loc, monkeypatch, "<urn:b:0>", seq=2, dataset_metadata=json.dumps(meta)
+    )
+    return str(tmp_path / "dump"), loc, a, b
+
+
+def test_locator_pushdown_sees_coverage_whose_pointer_write_failed(
+    tmp_path, monkeypatch, capsys
+):
+    """The WARC locator planner reads coverage from the newest committed
+    state: archive B, covered only by a commit whose pointer write
+    failed, prunes to zero on a miss instead of taking a whole-file
+    scan.  The stale coverage cost pruning, never records."""
+    from shardpack_spark.format.warc_source import _locator_partitions
+
+    _, loc, a, b = _locator_with_lost_append(tmp_path, monkeypatch)
+    capsys.readouterr()
+    parts = _locator_partitions(loc, [a, b], ["<urn:a:1>"], [])
+    assert [p.path for p in parts] == [a]
+
+
+@pytest.mark.parametrize("builder", ["cli", "spark"])
+def test_locator_append_keeps_coverage_whose_pointer_write_failed(
+    request, tmp_path, monkeypatch, capsys, builder
+):
+    """Append-mode locator builds merge the coverage of the newest
+    committed state: an append after a lost-pointer commit keeps that
+    commit's archive covered.  Merging the pointer's coverage dropped
+    it, so its lookups fell back to whole-file scans."""
+    from shardpack_spark.__main__ import main
+    from shardpack_spark.format import warc_index as WI
+
+    dump, loc, a, b = _locator_with_lost_append(tmp_path, monkeypatch)
+    c = str(tmp_path / "dump" / "c.warc.gz")
+    os.link(a, c)
+    if builder == "cli":
+        os.remove(a)
+        os.remove(b)  # the CLI appends the whole listing: leave only C
+        assert main(["warc-dump-index", dump, loc, "--mode", "append"]) == 0
+    else:
+        from shardpack_spark.operators.webcorpus import warc_dump_index
+
+        warc_dump_index(
+            request.getfixturevalue("spark"), dump, loc, mode="append", files=[c]
+        )
+    capsys.readouterr()
+    um = ds._load_manifest(loc)["user_metadata"]
+    assert WI.read_warc_coverage(loc, um) == {a, b, c}
+
+
+def test_cli_reports_commit_after_lost_pointer_write(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`pack` and `import` report the version and record count of the
+    commit they just made.  That commit merges on the newest committed
+    state and rewrites the pointer, so the reports were right even when
+    they read the pointer; they now read the newest committed state."""
+    from shardpack_spark.__main__ import main
+
+    root = str(tmp_path / "cli")
+    storage.for_path(root).makedirs(root)
+    _mk_commit_writer(root).commit([_stage_shards(root, ["base"], seq=1)])
+    _commit_losing_pointer_write(root, monkeypatch, "k2", seq=2)
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "a.txt").write_bytes(b"a")
+    assert main(["pack", str(src), root, "--mode", "append"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (rep["version"], rep["records"]) == (3, 3)
+    pq = str(tmp_path / "pq")
+    assert main(["export", root, pq]) == 0
+    assert main(["import", pq, root, "--mode", "append"]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert (rep["version"], rep["records"]) == (4, 4)
 
 
 # --- stream sink crash injection (VERDICT r2 item 6) --------------------------
@@ -1177,7 +1329,7 @@ def test_registered_backend_raced_commits_no_lost_snapshot(tmp_path, monkeypatch
         for t in threads:
             t.join()
         assert not errors, errors
-        m = ds._load_latest_manifest(root)
+        m = ds._load_manifest(root)
         assert m["total_records"] == n_writers * per * 3
         assert len(m["shards"]) == n_writers * per
         assert ds._root_ids(root) == list(range(1, n_writers * per + 1))

@@ -15,7 +15,7 @@ from shardpack_spark.format import codec
 from shardpack_spark.format.datasource import (
     ShardPackStreamWriter,
     ShardPackWriter,
-    _load_latest_manifest,
+    _load_manifest,
     convert_to_dataset,
     register,
 )
@@ -118,9 +118,9 @@ def test_shard_stats_match_across_write_paths(spark, sp_rows, tmp_path, monkeypa
     w.close()
     convert_to_dataset(spark, adhoc)
 
-    expected = _shard_stats(_load_latest_manifest(facade)["shards"])
+    expected = _shard_stats(_load_manifest(facade)["shards"])
     assert len(expected) > 3
     assert all(e["bloom"] and e["meta_values"] and e["meta_ranges"] for e in expected)
-    assert _shard_stats(_load_latest_manifest(batch)["shards"]) == expected
+    assert _shard_stats(_load_manifest(batch)["shards"]) == expected
     assert _shard_stats(streamed) == expected
-    assert _shard_stats(_load_latest_manifest(adhoc)["shards"]) == expected
+    assert _shard_stats(_load_manifest(adhoc)["shards"]) == expected

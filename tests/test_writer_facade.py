@@ -11,7 +11,7 @@ import sys
 import pytest
 
 from shardpack_spark.format import codec
-from shardpack_spark.format.manifest import _load_latest_manifest, list_versions
+from shardpack_spark.format.manifest import _load_manifest, list_versions
 from shardpack_spark.format.reader import open_dataset
 from shardpack_spark.format.writer import open_writer, write_records
 
@@ -75,7 +75,7 @@ def test_roundtrip_with_stats(tmp_path):
     assert len(st) == 20
     assert st["a/0003"] == ({"tag": "a", "n_chars": "7", "day": "2026-08-15"}, b"a-3")
     # stats recorded like a Spark commit's
-    (shard,) = _load_latest_manifest(root)["shards"]
+    (shard,) = _load_manifest(root)["shards"]
     assert shard["min_key"] == "a/0000" and shard["max_key"] == "a/0019"
     assert "bloom" in shard
     assert shard["meta_values"]["tag"] == ["a"]
@@ -176,7 +176,7 @@ def test_abort_on_exception(tmp_path):
         with open_writer(root) as w:
             w.write(key="doomed", data=b"x" * 100)
             raise RuntimeError("boom")
-    m = _load_latest_manifest(root)
+    m = _load_manifest(root)
     assert m["version_id"] == 1 and m["total_records"] == 4
     assert set(_state(open_dataset(root))) == {f"base/{i:04d}" for i in range(4)}
     # no stray shard files beyond the committed one
@@ -312,16 +312,15 @@ def test_fold_manifest_parts(tmp_path):
     publishes a metadata-only commit whose live root lists ONE part,
     with shards, records, time travel, and dropped lists intact."""
     from shardpack_spark.format.commit import fold_manifest_parts
-    from shardpack_spark.format.manifest import _load_manifest
 
     root = str(tmp_path / "fp")
     for i in range(4):
         write_records(root, _recs(f"c{i}", 3))
-    live = _load_latest_manifest(root)
+    live = _load_manifest(root)
     assert len(live["parts"]) == 4
     rep = fold_manifest_parts(root)
     assert rep == {"folded_parts": 4, "version": 5}
-    live = _load_latest_manifest(root)
+    live = _load_manifest(root)
     assert len(live["parts"]) == 1
     assert live["total_records"] == 12
     assert len(_state(open_dataset(root))) == 12
@@ -331,7 +330,7 @@ def test_fold_manifest_parts(tmp_path):
     assert fold_manifest_parts(root) == {"folded_parts": 0}
     # appends continue on top of the folded root
     write_records(root, _recs("c9", 2))
-    live = _load_latest_manifest(root)
+    live = _load_manifest(root)
     assert len(live["parts"]) == 2 and live["total_records"] == 14
 
 
@@ -342,7 +341,7 @@ def test_manifest_checkpointing_bounds_parts(tmp_path):
     root = str(tmp_path / "ckpt")
     for i in range(10):
         write_records(root, _recs(f"c{i}", 2), manifest_checkpoint_parts=3)
-        live = _load_latest_manifest(root)
+        live = _load_manifest(root)
         assert len(live["parts"]) <= 4, f"commit {i}: {live['parts']}"
     assert live["total_records"] == 20
     assert len(_state(open_dataset(root))) == 20
@@ -691,7 +690,7 @@ def test_rollover_and_chunked_slice(tmp_path):
         compression="gzip",
         chunk_bytes=1024,
     )
-    assert len(_load_latest_manifest(root)["shards"]) > 1  # rolled over
+    assert len(_load_manifest(root)["shards"]) > 1  # rolled over
     ds = open_dataset(root)
     # locate r/3 and slice bytes 1000..1100 of its entry without a full read
     for shard in ds.shards():
