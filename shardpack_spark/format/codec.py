@@ -60,7 +60,8 @@ from shardpack_spark.format import storage
 MAGIC = b"SHARDPK1"
 DEFAULT_TARGET_SHARD_BYTES = 256 * 1024 * 1024  # reference src/shard/config.rs:1
 # NOTE: no precompiled struct.Struct objects at module level — the
-# whole module is cloudpickled by value into Spark plans and Struct
+# whole module can be cloudpickled by value into Spark plans (before
+# shardpack_spark.ship_package reaches the context) and Struct
 # instances are not picklable.
 
 

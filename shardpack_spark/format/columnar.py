@@ -49,7 +49,7 @@ import urllib.parse
 
 from pyspark.sql import functions as F
 
-from shardpack_spark import ship_by_value
+from shardpack_spark import ship_package
 from shardpack_spark.format import codec, manifest, storage
 from shardpack_spark.format.datasource import SCHEMA, read_shardpack, register
 
@@ -291,7 +291,7 @@ def read_columnar_zipped(
         }
         plan_rows.append((lo, hi, json.dumps(cols_shards)))
 
-    ship_by_value()
+    ship_package(spark)
     base = path
     col_order = list(columns)
     want_all = how == "full"

@@ -21,8 +21,10 @@ Scale mapping (reference semantics -> Spark execution):
   core, not one Python worker launch each, and a 1000-executor cluster
   gets even work regardless of shard sizing.  defaultParallelism is the
   one of the session that ran register(spark), for batch and stream
-  reads alike; a class registered directly with spark.dataSource.register
-  plans for the planning worker's CPUs instead
+  reads alike.  A class registered directly with spark.dataSource.register
+  plans for the planning worker's CPUs instead, and reaches workers that
+  cannot import the package only after shardpack_spark.ship_package(spark)
+  has shipped it to the context; register(spark) does both
 - key filters prune partitions BEFORE any shard is opened (the bucket
   index access path, src/bucket.rs:147-169, as partition pruning) using
   two manifest stats per shard: the [min,max] key range (decisive when
@@ -162,7 +164,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from shardpack_spark import ship_by_value
+from shardpack_spark import ship_package
 from shardpack_spark.format import codec, storage
 from shardpack_spark.format.stream_offsets import CappedListingOffsets
 from shardpack_spark.format.commit import (  # noqa: F401  (re-exported:
@@ -941,10 +943,10 @@ class ShardPackStreamWriter(DataSourceStreamArrowWriter):
 class ShardPackDataSource(DataSource):
     """format("shardpack") — register with register(spark)."""
 
-    # the registering session's defaultParallelism: register() sets it
-    # before the class is pickled by value, so batch loads, read_shardpack
-    # and readStream all size read tasks for the session's cores rather
-    # than the planning worker's CPUs
+    # the registering session's defaultParallelism: register() registers
+    # a subclass that sets it, so batch loads, read_shardpack and
+    # readStream all size read tasks for the session's cores rather than
+    # the planning worker's CPUs
     parallelism: int | None = None
 
     @classmethod
@@ -983,14 +985,22 @@ class ShardPackDataSource(DataSource):
 def register(spark) -> None:
     # Idempotent per session: re-registering emits a JVM-side "data source
     # shardpack replaced a previously registered data source" warning that
-    # drowns real signal in bench/driver logs, and every registration
-    # re-ships the pickled class. Callers (queries, bench, CLI) all call
-    # register() defensively, so dedupe here.
+    # drowns real signal in bench/driver logs. Callers (queries, bench,
+    # CLI) all call register() defensively, so dedupe here.
     if getattr(spark, "_shardpack_registered", False):
         return
-    ship_by_value()
-    ShardPackDataSource.parallelism = spark.sparkContext.defaultParallelism
-    spark.dataSource.register(ShardPackDataSource)
+    # the package zip must reach the context before the class is
+    # registered: registration captures the context's Python includes
+    ship_package(spark)
+    # ShardPackDataSource pickles by reference, so a class attribute set
+    # here would not reach the planning workers; a subclass made here
+    # pickles by value (a few hundred bytes) and carries the core count
+    source = type(
+        ShardPackDataSource.__name__,
+        (ShardPackDataSource,),
+        {"parallelism": spark.sparkContext.defaultParallelism},
+    )
+    spark.dataSource.register(source)
     spark._shardpack_registered = True
 
 
@@ -1115,7 +1125,7 @@ def convert_to_dataset(
     to convert) or appears concurrently (that writer already adopted the
     ad-hoc files; convert aborts and removes its orphan part).
     """
-    register(spark)  # ensures by-value pickling for the closure below
+    register(spark)  # ships the package for the closure below
     if _load_manifest(path) is not None or _marker_entries(path):
         raise codec.ShardPackIOError(
             f"{path} already has a commit log; convert_to_dataset adopts "
@@ -1269,7 +1279,7 @@ def verify_dataset(spark, path: str) -> dict:
             "orphans": orphans,
         }
 
-    ship_by_value()
+    ship_package(spark)
     base = path
 
     def check(batches):

@@ -398,8 +398,9 @@ class MemoryBackend(StorageBackend):
         self._objects: dict[str, tuple[bytes, float]] = {}
         self._lock = threading.Lock()
 
-    # The whole module travels into Spark plans via cloudpickle-by-value,
-    # and locks are not picklable: ship the object dict, rebuild the lock.
+    # The whole module can travel into Spark plans via cloudpickle-by-value
+    # (before shardpack_spark.ship_package reaches the context), and locks
+    # are not picklable: ship the object dict, rebuild the lock.
     # Each worker process then holds its OWN copy — which is the
     # documented MemoryBackend contract (process-local, codec tests only).
     def __getstate__(self):
@@ -888,8 +889,8 @@ _memory = MemoryBackend()
 _sim = SimObjectBackend()
 _factories: dict[str, Callable[[str, str], StorageBackend]] = {}
 _remote_cache: dict[str, StorageBackend] = {}
-# NOTE: no module-level threading.Lock — this module is cloudpickled by
-# value into Spark plans and locks are unpicklable.  GIL-atomic dict
+# NOTE: no module-level threading.Lock — this module can be cloudpickled
+# by value into Spark plans and locks are unpicklable.  GIL-atomic dict
 # get/set suffices here: the worst race builds one extra backend
 # instance, which the dict assignment simply discards.
 

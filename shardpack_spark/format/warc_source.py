@@ -54,7 +54,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from shardpack_spark import ship_by_value
+from shardpack_spark import ship_package
 from shardpack_spark.format import (
     cdx_public,
     manifest,
@@ -745,7 +745,7 @@ def register_warc(spark) -> None:
     """Idempotent per session (mirrors datasource.register)."""
     if getattr(spark, "_shardpack_warc_registered", False):
         return
-    ship_by_value()
+    ship_package(spark)
     # NOTE: a sibling spark.newSession() cannot register OR use a Python
     # data source its parent registered (Spark checks name existence
     # globally but resolves per-session) — run per-session conf

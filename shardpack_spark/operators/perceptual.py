@@ -225,8 +225,9 @@ def dhash_tensors(df: DataFrame) -> DataFrame:
 
 
 def _surrogate_gray(data: bytes):
-    """Deterministic pseudo-pixel grid for undecodable payloads: 64
-    bytes of sha256 keystream reshaped 8x8.  Identical payloads map to
+    """Deterministic pseudo-pixel grid for undecodable payloads: 72
+    bytes of sha256 keystream reshaped to the 8x9 dHash grid, so every
+    one of the 64 bits is digest-driven.  Identical payloads map to
     identical grids (and nothing else does, up to hash collision), so
     the stub degrades dHash to exact-duplicate semantics."""
     import hashlib
@@ -235,7 +236,9 @@ def _surrogate_gray(data: bytes):
 
     h0 = hashlib.sha256(data).digest()
     h1 = hashlib.sha256(h0).digest()
-    return np.frombuffer(h0 + h1, dtype="uint8").astype("float64").reshape(8, 8)
+    h2 = hashlib.sha256(h1).digest()
+    stream = (h0 + h1 + h2)[:72]
+    return np.frombuffer(stream, dtype="uint8").astype("float64").reshape(8, 9)
 
 
 def dhash_images(df: DataFrame) -> DataFrame:

@@ -1856,6 +1856,20 @@ spark.stop()
     assert r.stdout.split()[-2:] == [str(n), str(len(codec.list_shards(out)))]
 
 
+def test_registered_source_and_reader_pickle_by_reference(spark_ds, tmp_path):
+    """After register(spark) the package reaches workers as a zip, so
+    plans pickle package code by reference: a source and a pruning reader
+    are names plus options (a by-value copy of the package is ~260 KB,
+    and the planner re-pickles both on every call)."""
+    from pyspark import cloudpickle
+
+    from shardpack_spark.format.datasource import ShardPackDataSource, ShardPackPruningReader
+
+    opts = {"path": str(tmp_path / "ds"), "prune_by_key": "true"}
+    assert len(cloudpickle.dumps(ShardPackDataSource(opts))) < 4096
+    assert len(cloudpickle.dumps(ShardPackPruningReader(opts, 2))) < 4096
+
+
 def test_reused_worker_skips_zip_directory_reloads(tmp_path):
     """After a shardpack write and read, the reused executor worker of a
     vanilla local[1] session (started outside the repo, so its workers

@@ -152,6 +152,20 @@ def test_dhash_unchanged_for_images_at_least_grid_size():
         assert _pack_bits(_dhash_bits(gray)) == want, (h, w)
 
 
+def test_surrogate_signature_bits_all_vary():
+    """Every one of the byte-digest surrogate's 64 dHash bits is
+    digest-driven: over 200 distinct undecodable payloads each bit takes
+    both values (an 8x8 keystream grid left a column of constant bits)."""
+    seen = np.zeros((2, 64), dtype=bool)
+    for i in range(200):
+        gray, path = perceptual._gray_with_path(b"not an image %d" % i)
+        assert path == "surrogate"
+        bits = np.array(_dhash_bits(gray), dtype=bool)
+        seen[0] |= ~bits
+        seen[1] |= bits
+    assert seen.all(), np.flatnonzero(~seen.all(axis=0)).tolist()
+
+
 # --- hamming_near_pairs: completeness vs brute force ---------------------------
 
 
@@ -515,8 +529,9 @@ def test_frame_gray_raw_dib_decode():
     assert len(frame) == 56 * 12
     got, path = _frame_gray_path(frame, 18, 12)
     assert np.allclose(got, img) and path == "pure"
-    # wrong-size payload (not a raw DIB, not a decodable image) -> surrogate 8x8
-    assert _frame_gray_path(b"\xff\xd8jpegish", 18, 12)[0].shape == (8, 8)
+    # wrong-size payload (not a raw DIB, not a decodable image) -> the
+    # surrogate, on the 8x9 dHash grid
+    assert _frame_gray_path(b"\xff\xd8jpegish", 18, 12)[0].shape == (8, 9)
 
 
 def test_video_fingerprint_majority_and_pairs(spark):

@@ -1,14 +1,17 @@
 """Session hygiene of the fuzzy-dedup library calls: building and running
 q29 or the bench's LSH path must not leave temp views in the session, and
 the package source must not register session-global ``__``-named views,
-grow per-module pickle-by-value registrations, nor grow a second place
-that publishes snapshot roots or a second image decode path."""
+grow per-module pickle-by-value registrations or a second place that
+ships the package to workers, nor grow a second place that publishes
+snapshot roots or a second image decode path."""
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import pkgutil
 import re
+import zipfile
 
 import shardpack_spark
 from shardpack_spark.queries import load_all
@@ -56,14 +59,59 @@ def test_package_registers_no_dunder_temp_views():
 
 def test_package_registers_pickle_by_value_once():
     """One by-value registration of the whole package (cloudpickle covers
-    every submodule of a registered package), not per-module lists."""
+    every submodule of a registered package), not per-module lists, and
+    one place that ships the package zip to a context and switches the
+    by-value registration off."""
     pkg = pathlib.Path(shardpack_spark.__file__).parent
-    calls = [
-        str(p.relative_to(pkg))
-        for p in sorted(pkg.rglob("*.py"))
-        for _ in re.finditer(r"register_pickle_by_value\(", p.read_text(encoding="utf-8"))
-    ]
-    assert calls == ["__init__.py"]
+    for call in (r"(?<!un)register_pickle_by_value\(", r"unregister_pickle_by_value\(", r"addPyFile\("):
+        calls = [
+            str(p.relative_to(pkg))
+            for p in sorted(pkg.rglob("*.py"))
+            for _ in re.finditer(call, p.read_text(encoding="utf-8"))
+        ]
+        assert calls == ["__init__.py"], call
+
+
+def test_package_zip_holds_every_module():
+    """The zip shipped to workers holds every module of the package: the
+    same list pkgutil walks, and every .py file under the package, so a
+    subpackage directory without ``__init__.py`` cannot go missing from
+    the workers' copy."""
+    pkg = pathlib.Path(shardpack_spark.__file__).parent
+    with zipfile.ZipFile(shardpack_spark._package_zip()) as zf:
+        shipped = {
+            n.removesuffix(".pyc").replace("/", ".").removesuffix(".__init__")
+            for n in zf.namelist()
+        }
+    walked = {"shardpack_spark"} | {
+        m.name for m in pkgutil.walk_packages(shardpack_spark.__path__, "shardpack_spark.")
+    }
+    on_disk = {
+        ".".join(("shardpack_spark",) + p.relative_to(pkg).with_suffix("").parts).removesuffix(
+            ".__init__"
+        )
+        for p in pkg.rglob("*.py")
+    }
+    assert shipped == walked == on_disk
+
+
+def test_package_modules_pickle_by_value():
+    """Until the zip reaches a context, plans pickle the package by value,
+    module dicts included, so the package's own globals must stay
+    picklable (no locks, no finalizers), also after the zip is built."""
+    from pyspark import cloudpickle
+
+    from shardpack_spark.format import datasource
+
+    shardpack_spark._package_zip()
+    registered = "shardpack_spark" in cloudpickle.list_registry_pickle_by_value()
+    if not registered:
+        cloudpickle.register_pickle_by_value(shardpack_spark)
+    try:
+        cloudpickle.dumps(datasource)
+    finally:
+        if not registered:
+            cloudpickle.unregister_pickle_by_value(shardpack_spark)
 
 
 def _enclosing_functions(pattern: str) -> list[tuple[str, str, str]]:

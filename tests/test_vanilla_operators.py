@@ -1,6 +1,9 @@
-"""The package ships by value: operator UDFs, the DataSources and the
-columnar merge run in a vanilla local[1] session started outside the
-repo, whose Python workers cannot import shardpack_spark."""
+"""Package code reaches Spark's Python workers in a vanilla local[1]
+session started outside the repo, whose workers cannot import
+shardpack_spark from any path of their own: operator UDFs run before any
+format entry point pickle the package by value, and the first format
+entry point ships the package zip to the context, after which the
+DataSources, the columnar merge and later UDFs import it from there."""
 
 from __future__ import annotations
 
@@ -100,3 +103,47 @@ spark.stop()
         "read_columnar_zipped": ["img/0", "img/1"],
         "decode_payload_text": [["héllo", "iso8859-1", True]],
     }
+
+
+def test_workers_import_package_from_shipped_zip(tmp_path):
+    """After register(spark), a worker of a vanilla session imports the
+    package from the zip in its SparkFiles directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "tiny")
+    script = f"""
+import os, sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from shardpack_spark.format.datasource import SCHEMA, register
+
+def probe(batches):
+    import pyarrow as pa
+    from pyspark import SparkFiles
+    for _ in batches:
+        pass
+    import shardpack_spark
+    zip_dir = os.path.join(SparkFiles.getRootDirectory(), "shardpack_spark.zip")
+    yield pa.RecordBatch.from_pydict(
+        {{"file": [sys.modules["shardpack_spark"].__file__], "zip": [zip_dir]}}
+    )
+
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+register(spark)
+spark.createDataFrame([("k1", {{}}, [])], SCHEMA).write.format("shardpack").mode("append").save({out!r})
+assert spark.read.format("shardpack").load({out!r}).count() == 1
+row = spark.range(1, numPartitions=1).mapInArrow(probe, "file string, zip string").collect()[0]
+print(row["file"], row["zip"])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    file, zip_dir = r.stdout.split()[-2:]
+    assert file.startswith(zip_dir + os.sep), (file, zip_dir)
