@@ -32,7 +32,10 @@ Scale mapping (reference semantics -> Spark execution):
   >/>=/</<=-comparison conjuncts of a key-range scan all prune through
   it) and a ~10-bits/key Bloom filter over the exact key set (decisive
   for hash-placed keys, where every range overlaps); filters are also
-  re-applied by Spark, so pruning is purely an optimization
+  re-applied by Spark, so pruning is purely an optimization.  A key
+  lookup (equality / IN, no prefix, no limit_records) plans one task per
+  candidate shard, never split, that carries the shard's candidate keys
+  and decodes only the matching records (codec.iter_records(keys=...))
 - write side: one DataWriter per task, rolling shards at
   `target_shard_bytes` (src/shard/config.rs:1); the driver-side commit()
   writes a dataset manifest with per-shard stats
@@ -254,6 +257,12 @@ class ShardPartition(InputPartition):
     # on a 4-core host with a reused, zip-guarded worker, ~0.3 s unguarded;
     # tools/worker_floor_probe.py measures both).
     group: list[str] | None = None
+    # Keyed plan (pushed key equality / IN): the candidate keys of this
+    # task's shard(s), read by the keyed walk, which decodes only the
+    # records whose key matches.  A keyed plan never splits a shard into
+    # record ranges: the walk decodes only the matches whichever task
+    # reads them, so a split only adds tasks.
+    keys: list[str] | None = None
 
 
 # Spark's spark.sql.files.openCostInBytes default: the bytes one more
@@ -267,6 +276,7 @@ def _plan_partitions(
     split_target: int,
     stats: dict[str, tuple[int, int | None]] | None = None,
     parallelism: int | None = None,
+    keys: dict[str, set[str]] | None = None,
 ) -> list[ShardPartition]:
     """Size read tasks by bytes per core, Spark's FilePartition rule:
     max_split = min(split_target, max(OPEN_COST, sum(size + OPEN_COST)
@@ -285,7 +295,11 @@ def _plan_partitions(
     the owning EXECUTOR resolves ranges to byte offsets with one
     EOF-index read.  The driver opens a shard only for log-less ad-hoc
     directories: one pass stats each shard and reads the offset table of
-    any large enough to split."""
+    any large enough to split.
+
+    ``keys`` (name -> candidate keys, from ``ShardView.candidates``) makes
+    a keyed plan: no shard splits, bins coalesce as above, and each
+    partition carries the union of its shards' candidate keys."""
     be = storage.for_path(path)
     stats = stats or {}
     names = sorted(names)
@@ -301,7 +315,9 @@ def _plan_partitions(
         sp = os.path.join(path, name)
         size, records = stats.get(name, (None, None))
         size = be.getsize(sp) if size is None else size
-        may_split = records is None and size > min(split_target, OPEN_COST)
+        may_split = (
+            keys is None and records is None and size > min(split_target, OPEN_COST)
+        )
         return size, codec.read_index(sp).offsets if may_split else None
 
     if needs_io and len(names) > 8:
@@ -328,7 +344,7 @@ def _plan_partitions(
             for lo, hi in zip(cuts, cuts[1:])
         ]
 
-    split = {n: ranges(n) for n in names if sizes[n] > max_split}
+    split = {n: ranges(n) for n in names if keys is None and sizes[n] > max_split}
     whole_left = len(names) - len(split)
     # bins needed so the plan has >= min(#shards, parallelism) tasks
     floor = min(whole_left, parallelism - sum(len(r) for r in split.values()))
@@ -347,10 +363,16 @@ def _plan_partitions(
         cur.append(os.path.join(path, name))
         cur_cost += cost
         whole_left -= 1
+    shard_keys = {os.path.join(path, n): ks for n, ks in (keys or {}).items()}
     return [
         s
         if isinstance(s, ShardPartition)
-        else ShardPartition(s[0], None, group=s if len(s) > 1 else None)
+        else ShardPartition(
+            s[0],
+            None,
+            group=s if len(s) > 1 else None,
+            keys=None if keys is None else sorted(set().union(*map(shard_keys.get, s))),
+        )
         for s in slots
     ]
 
@@ -370,7 +392,7 @@ def _arrow_batches(
         # coalesced small shards: one task streams each member whole
         for member in partition.group:
             yield from _arrow_batches(
-                ShardPartition(member, None),
+                ShardPartition(member, None, keys=partition.keys),
                 verify,
                 skip_payload,
                 metadata_only,
@@ -408,6 +430,7 @@ def _arrow_batches(
             skip_payload=skip_payload or metadata_only,
             skip_entries=metadata_only,
             entry_names=entry_names,
+            keys=None if partition.keys is None else frozenset(partition.keys),
         )
     yield from codec.arrow_batches(
         record_iter,
@@ -550,8 +573,17 @@ class ShardPackReader(DataSourceReader):
                     need -= rec
             names = kept_n
         if tail_k is None:
+            # a key lookup plans one keyed-walk task per candidate shard
+            # (or bin of them); a range conjunct only pruned above, and
+            # Spark re-applies every filter to the rows the walk returns
+            keyed = self._key_filters and not self._prefix_filters and not self.limit_records
             return _plan_partitions(
-                self.path, names, self.split_target, mstats, self.parallelism
+                self.path,
+                names,
+                self.split_target,
+                mstats,
+                self.parallelism,
+                dict(view.candidates(names, self._key_filters)) if keyed else None,
             )
         # the cut shard plans on its own, outside the bins, so its [0, k)
         # record range survives coalescing (its record count is known, so
@@ -1860,12 +1892,20 @@ def read_shardpack(
     without recorded counts (log-less directories) plan conservatively
     (never under-plan); the row cap stays exact.
 
+    A key lookup (``.filter(key == k)`` or ``isin``) runs one keyed-walk
+    task per candidate shard that decompresses and checksum-verifies only
+    the records it returns, ``Dataset.lookup``'s integrity contract; a
+    full scan or ``verify_dataset`` checks every record.
+
     CAVEAT (Spark 4.1 Python-DSv2): when the SAME returned DataFrame is
     branched into differently-filtered legs of one query (self-union,
     self-join), Spark deduplicates the plan-equal Python scans while
     ignoring their pushed filters — every leg then executes the
     last-planned leg's pruned partition set and the others silently
-    lose rows.  Call read_shardpack once PER differently-filtered leg
+    lose rows.  A key lookup's partitions also carry that leg's keys, so
+    a point leg that reuses another leg's DataFrame loses its rows even
+    in the shards both legs share.  Call read_shardpack once PER
+    differently-filtered leg
     (distinct relations are never deduplicated; verified by test and by
     the q53 point+range union).  Parquet/JVM sources are unaffected."""
     register(spark)

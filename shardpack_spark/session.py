@@ -6,12 +6,27 @@ skew-join splitting), UTC session timezone (deterministic date/epoch
 semantics vs the DuckDB oracle), Arrow enabled for the Pandas-UDF /
 mapInArrow paths, and a shuffle-partition default sized for local[32]
 (on a real cluster AQE coalesces from a higher initial value).
+
+Python workers talk to the JVM over a Unix domain socket, not loopback
+TCP.  Spark writes a task's pickled command and then its input batch on
+the worker socket; over TCP, with Nagle on, the batch waits for the
+ACK of the command, and the worker delays that ACK by ~40 ms (Linux
+delayed ACK).  A one-task key lookup spent most of its executor time in
+that wait.  A Unix socket has no Nagle and no delayed ACK.  The socket
+files go in the process's temp directory when the longest path Spark
+makes there fits ``sun_path`` and Spark accepts its length, else in a
+short private directory under /tmp that is removed at exit
+(``_worker_socket_dir``).  Spark 4.0 has no such conf; there the
+setting does nothing and workers stay on TCP.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import socket as _socket
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -80,6 +95,34 @@ def _patch_py4j_nodelay() -> None:
         java_gateway.GatewayConnection._shardpack_nodelay = True
 
 
+# Spark names each socket file "<dir>/.<36-char uuid>.sock" (pyspark
+# daemon.py): 43 bytes after the directory.  sun_path holds 108 bytes including the terminating NUL.
+SOCKET_NAME_BYTES = 43
+SUN_PATH_MAX = 107
+# Spark 4.1 rejects a spark.python.unix.domain.socket.dir longer than 61
+# characters when the first Python task reads it, not at session start
+SPARK_SOCKET_DIR_CHARS = 61
+_socket_dirs: dict[str, str] = {}
+
+
+def _worker_socket_dir(tmp: str | None = None) -> str:
+    """Directory for Spark's Unix-domain worker sockets: ``tmp`` (default
+    the process's temp directory) when Spark accepts it and its socket
+    paths fit ``sun_path``, else one private ``mkdtemp`` directory under
+    /tmp per ``tmp``, removed at exit.  Never a directory a socket cannot
+    bind in."""
+    tmp = os.path.abspath(tmp or tempfile.gettempdir())
+    if (
+        len(tmp) <= SPARK_SOCKET_DIR_CHARS
+        and len(os.fsencode(tmp)) + SOCKET_NAME_BYTES <= SUN_PATH_MAX
+    ):
+        return tmp
+    if tmp not in _socket_dirs:
+        d = _socket_dirs[tmp] = tempfile.mkdtemp(prefix="spark-sock-", dir="/tmp")
+        atexit.register(shutil.rmtree, d, True)
+    return _socket_dirs[tmp]
+
+
 def get_spark(app_name: str = "shardpack_spark", shuffle_partitions: int | None = None) -> SparkSession:
     # The patch is process-wide (any other py4j gateway in this
     # interpreter sees it too); embedders can opt out via the env.
@@ -121,6 +164,9 @@ def get_spark(app_name: str = "shardpack_spark", shuffle_partitions: int | None 
         # events.parquet stores TIMESTAMP(NANOS); read as long and convert
         # in tables.load_table (Spark has no nanos timestamp type).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # worker transport: a Unix domain socket (see the module doc)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _worker_socket_dir())
         # enable pushFilters() on Python data sources (shardpack key pruning)
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # PySpark 4's DataFrame debugging decorates EVERY DataFrame/Column

@@ -247,6 +247,19 @@ def test_pruned_self_union_per_leg_loads(spark_ds, sf_dir, tmp_path):
         "doc/00000102",
     ]
 
+    # two point legs on the SAME shard: each keyed partition carries only
+    # its own leg's key, so each leg needs its own read_shardpack call
+    from pyspark.sql.datasource import In
+
+    same = [In(("key",), ("doc/00000007", "doc/00000008"))]
+    assert len(_planned_shards(_keyed_reader(out, same).partitions())) == 1
+    legs = [
+        read_shardpack(spark_ds, out).filter(F.col("key") == k).select("key")
+        for k in ("doc/00000007", "doc/00000008")
+    ]
+    got = sorted(r["key"] for r in legs[0].unionAll(legs[1]).collect())
+    assert got == ["doc/00000007", "doc/00000008"]
+
 
 def test_bloom_prunes_hash_placed_keys(spark_ds, sf_dir, tmp_path):
     """Hash-placed keys overlap every shard's [min,max] range, so range
@@ -293,6 +306,153 @@ def test_bloom_prunes_hash_placed_keys(spark_ds, sf_dir, tmp_path):
 
     # pruning is an optimization only: full read still finds the record
     assert read_shardpack(spark_ds, out).filter(F.col("key") == some_key).count() == 1
+
+
+def _keyed_reader(path, filters, parallelism=4, **options):
+    from shardpack_spark.format.datasource import ShardPackPruningReader
+
+    r = ShardPackPruningReader(
+        {"path": path, "prune_by_key": "true", **options}, parallelism
+    )
+    r.pushFilters(filters)
+    return r
+
+
+def _payload_records(keys, size=2000):
+    return [
+        codec.Record(
+            key=k,
+            entries=[
+                codec.FileEntry(
+                    "b.bin", "application/octet-stream", f"{i:06d}".encode() * (size // 6)
+                )
+            ],
+            metadata={"i": str(i)},
+        )
+        for i, k in enumerate(keys)
+    ]
+
+
+def test_keyed_lookup_plans_one_task_per_candidate_shard(tmp_path, monkeypatch):
+    """A point lookup plans one keyed-walk partition for its one
+    candidate shard, however far the shard is over max_split, and
+    read() decodes only the matching record.  The same shard under a
+    scan, a key-or-prefix union or limit_records still splits into
+    record ranges."""
+    from pyspark.sql.datasource import EqualTo, StringStartsWith
+
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "big")
+    write_records(out, _payload_records([f"k{i:04d}" for i in range(400)]))
+    MiB = 1024 * 1024
+    opts = {"split_target_bytes": str(MiB // 8)}  # the ~800 KB shard is ~6x over
+
+    reader = _keyed_reader(out, [EqualTo(("key",), "k0123")], **opts)
+    [part] = reader.partitions()
+    assert part.keys == ["k0123"]
+    assert part.rec_range is None and part.offsets is None and part.group is None
+
+    calls = []
+    real = codec.decode_record
+
+    def counting(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(codec, "decode_record", counting)
+    rows = [r for b in reader.read(part) for r in b.to_pylist()]
+    assert [r["key"] for r in rows] == ["k0123"] and len(calls) == 1
+
+    for filters, extra in (
+        ([], {}),
+        ([EqualTo(("key",), "k0123"), StringStartsWith(("key",), "k03")], {}),
+        ([EqualTo(("key",), "k0123")], {"limit_records": "300"}),
+    ):
+        parts = _keyed_reader(out, filters, **opts, **extra).partitions()
+        assert len(parts) > 1 and all(p.keys is None for p in parts)
+        assert all(p.rec_range is not None for p in parts)
+
+
+def test_keyed_in_lookup_returns_every_match(spark_ds, tmp_path):
+    """key IN (...) over several shards plans one partition per candidate
+    shard, or fewer when bins coalesce, each carrying its shards'
+    candidate keys, and returns every match, duplicate keys included."""
+    from pyspark.sql.datasource import In
+
+    from shardpack_spark.format.datasource import read_shardpack
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "in")
+    keys = [f"k{i:04d}" for i in range(300)]
+    keys[11] = keys[10]  # a duplicate key inside the first shard
+    write_records(out, _payload_records(keys), target_shard_bytes=64 * 1024)
+    shards = _planned_shards(_keyed_reader(out, []).partitions())
+    assert len(shards) > 4
+    probe = ["k0010", "k0150", "k0299", "absent"]
+
+    parts = _keyed_reader(out, [In(("key",), tuple(probe))]).partitions()
+    assert len(parts) == 3 and not any(p.group for p in parts)
+    assert [p.keys for p in parts] == [["k0010"], ["k0150"], ["k0299"]]
+    reader = _keyed_reader(out, [In(("key",), tuple(probe))], 1)
+    [binned] = reader.partitions()
+    assert len(binned.group) == 3 and binned.keys == ["k0010", "k0150", "k0299"]
+    got = [r["key"] for b in reader.read(binned) for r in b.to_pylist()]
+    assert got == ["k0010", "k0010", "k0150", "k0299"]
+
+    rows = read_shardpack(spark_ds, out).filter(F.col("key").isin(probe)).collect()
+    assert sorted((r["key"], r["metadata"]["i"]) for r in rows) == [
+        ("k0010", "10"),
+        ("k0010", "11"),
+        ("k0150", "150"),
+        ("k0299", "299"),
+    ]
+
+
+def test_keyed_lookup_with_range_conjunct_matches_unpruned_read(spark_ds, tmp_path):
+    """A key lookup AND-ed with a key range returns what an unpruned read
+    with the same filter returns: the range only prunes, Spark re-applies
+    it to the keyed walk's rows."""
+    from shardpack_spark.format.datasource import read_shardpack
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "rng")
+    write_records(
+        out, _payload_records([f"k{i:04d}" for i in range(300)]), target_shard_bytes=64 * 1024
+    )
+    for cond in (
+        F.col("key").isin("k0005", "k0200") & (F.col("key") < "k0100"),
+        (F.col("key") == "k0200") & (F.col("key") >= "k0150"),
+        (F.col("key") == "k0200") & (F.col("key") > "k0250"),
+    ):
+        pruned = read_shardpack(spark_ds, out).filter(cond).select("key", "metadata")
+        plain = spark_ds.read.format("shardpack").load(out).filter(cond)
+        assert sorted(map(tuple, pruned.collect())) == sorted(
+            map(tuple, plain.select("key", "metadata").collect())
+        )
+
+
+def test_keyed_lookup_verifies_only_returned_records(spark_ds, tmp_path):
+    """A keyed DSv2 lookup has Dataset.lookup's integrity contract: it
+    verifies the records it returns.  A corrupted record next to the
+    looked-up one in the same shard does not fail the lookup; a full
+    scan of that shard still raises."""
+    from shardpack_spark.format.datasource import read_shardpack
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "corrupt")
+    write_records(out, _payload_records([f"k{i:04d}" for i in range(20)]))
+    [shard] = codec.list_shards(out)
+    with open(shard, "r+b") as f:
+        buf = f.read()
+        at = buf.index(b"000013" * 10) + 3  # inside record k0013's payload
+        f.seek(at)
+        f.write(bytes([buf[at] ^ 0xFF]))
+
+    rows = read_shardpack(spark_ds, out).filter(F.col("key") == "k0012").collect()
+    assert [r["key"] for r in rows] == ["k0012"]
+    with pytest.raises(Exception, match="checksum mismatch .* of key 'k0013'"):
+        read_shardpack(spark_ds, out).select("key").collect()
 
 
 def test_sql_access_and_file_uri_paths(spark_ds, sf_dir, tmp_path):

@@ -3,7 +3,8 @@ own code runs, before and after one shardpack read.
 
     python tools/worker_floor_probe.py [reps]
 
-Starts a fresh ``local[nproc]`` session and runs ``reps`` (default 5)
+Starts a fresh ``local[nproc]`` session on the Unix-domain worker
+transport that ``get_spark`` sets up and runs ``reps`` (default 5)
 one-task ``mapInArrow`` probes.  It then writes a small dataset with the
 Spark-free codec writer, reads it once through ``format("shardpack")``
 (one task per shard, so every pooled worker runs shardpack code), and
@@ -119,11 +120,14 @@ def main(reps: int) -> dict:
 
     from shardpack_spark.format import codec
     from shardpack_spark.format.datasource import register
+    from shardpack_spark.session import _worker_socket_dir
 
     cores = os.cpu_count() or 1
     spark = (
         SparkSession.builder.master(f"local[{cores}]")
         .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", _worker_socket_dir())
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
