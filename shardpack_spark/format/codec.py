@@ -656,55 +656,31 @@ def read_entry_slice(
     )
 
 
-def iter_records_span(
-    path: str,
-    start: int,
-    end: int,
-    n_records: int,
-    verify_checksums: bool = True,
-    skip_payload: bool = False,
-    skip_entries: bool = False,
-    entry_names: "set[str] | None" = None,
-) -> Iterator[Record]:
-    """Stream ``n_records`` record blocks from the byte span [start, end)
-    in ONE ranged read — the record-range-split read path (a split is a
-    contiguous slice of the offset table, so its bytes are contiguous
-    too; per-record seeks here would cost one I/O round trip per record
-    on an object store)."""
-    buf = storage.for_path(path).read_bytes(path, start, end - start)
-    pos = 0
-    for _ in range(n_records):
-        rec, pos = decode_record(
-            buf, pos, verify_checksums, skip_payload, skip_entries, entry_names
-        )
-        yield rec
-
-
-def _check_head(off: int, size: int, key_len: int, limit: int | None) -> None:
+def _check_head(off: int, size: int, key_len: int, limit: int) -> None:
     # smallest block: size, key, metadata length, entry count
-    if size < 20 + key_len or (limit is not None and off + size > limit):
+    if size < 20 + key_len or off + size > limit:
         raise ShardPackCodecError(
             f"record at {off}: damaged block head (size {size}, key length {key_len})"
         )
 
 
-def _key_at(buf: bytes, off: int) -> bytes:
-    """Key bytes of the block at ``off`` in an in-memory record region:
-    the keyed walk's probe reads size, key length and key, nothing else."""
-    if not 0 <= off <= len(buf) - 12:
-        raise ShardPackCodecError(f"record at {off}: offset outside the record region")
-    size, key_len = struct.unpack_from("<QI", buf, off)
-    _check_head(off, size, key_len, len(buf))
-    return buf[off + 12 : off + 12 + key_len]
+def _key_at(buf: bytes, off: int, base: int) -> bytes:
+    """Key bytes of the block at shard offset ``off``, from ``buf`` holding
+    the shard bytes from ``base`` on: the keyed walk's probe reads size,
+    key length and key, nothing else."""
+    pos = off - base
+    if not 0 <= pos <= len(buf) - 12:
+        raise ShardPackCodecError(f"record at {off}: offset outside the record span")
+    size, key_len = struct.unpack_from("<QI", buf, pos)
+    _check_head(off, size, key_len, base + len(buf))
+    return buf[pos + 12 : pos + 12 + key_len]
 
 
-def _read_head(f, off: int, limit: int | None) -> tuple[bytes, int, int]:
+def _read_head(f, off: int, limit: int) -> tuple[bytes, int, int]:
     """The same probe on an open shard: (block prefix, size, key_len).
     The prefix is the size field plus up to 4 KiB (key+metadata sit at
     the block head), extended through a longer key; ``f`` is left right
     after it."""
-    if off < 0:
-        raise ShardPackCodecError(f"record at {off}: offset outside the shard")
     f.seek(off)
     head = f.read(8)
     size = struct.unpack("<Q", head)[0] if len(head) == 8 else 0
@@ -722,14 +698,21 @@ def _read_head(f, off: int, limit: int | None) -> tuple[bytes, int, int]:
 def iter_records(
     path: str,
     verify_checksums: bool = True,
-    offsets: list[int] | None = None,
     skip_payload: bool = False,
     skip_entries: bool = False,
     entry_names: "set[str] | None" = None,
     keys: "set[str] | frozenset[str] | None" = None,
+    records: "tuple[int, int] | None" = None,
 ) -> Iterator[Record]:
-    """Sequential streaming (draft.md:213-218); with `offsets`, reads only
-    the selected record blocks (partition range / pruned access path).
+    """Sequential streaming (draft.md:213-218) of the whole shard, or,
+    with ``records=(lo, hi)``, of its records [lo, hi) only: the partial
+    read the EOF offset table addresses (draft.md:124-127).  The range
+    is clipped to the shard; its blocks are contiguous, so every strategy
+    below stays in one byte span, [offsets[lo], offsets[hi] or
+    index_start): one ranged read of it, or, for metadata-only reads of
+    payload-heavy records, block heads read by seeking through it.
+    An offset table whose range endpoints fall out of order raises
+    ShardPackIndexError.
 
     ``keys``: the keyed walk (point lookups, src/bucket.rs:147-169) —
     the unkeyed call's records whose key is in ``keys``, in shard order
@@ -740,26 +723,27 @@ def iter_records(
     ShardPackCodecError."""
     want = None if keys is None else {k.encode("utf-8") for k in keys}
     opts = (verify_checksums, skip_payload, skip_entries, entry_names)
-    if offsets is not None:
-        if want is None:
-            for off in offsets:
-                yield read_record_at(path, off, *opts)
-            return
-        with storage.for_path(path).open_read(path) as f:
-            for off in offsets:
-                head, size, key_len = _read_head(f, off, None)
-                if head[12 : 12 + key_len] in want:
-                    yield decode_record(head + f.read(size - len(head)), 0, *opts)[0]
-        return
     idx = read_index(path)
-    # Metadata-only scans of payload-heavy shards: seek from block head
+    n = len(idx.offsets)
+    lo, hi = records or (0, n)
+    lo, hi = max(0, min(lo, n)), max(0, min(hi, n))
+    offsets = idx.offsets[lo:hi]
+    if not offsets:
+        return
+    start = offsets[0]
+    end = idx.offsets[hi] if hi < n else idx.index_start
+    if not 0 <= start <= end <= idx.index_start:
+        raise ShardPackIndexError(
+            f"{path}: records [{lo}, {hi}) span bytes [{start}, {end}) outside "
+            f"the record region [0, {idx.index_start})"
+        )
+    # Metadata-only reads of payload-heavy shards: seek from block head
     # to block head and never pull the payload bytes off disk at all
     # (the index-serves-metadata access path, src/bucket.rs:185-188).
-    avg = idx.index_start / max(1, len(idx.offsets))
-    if skip_entries and avg > 64 * 1024:
+    if skip_entries and (end - start) / len(offsets) > 64 * 1024:
         with storage.for_path(path).open_read(path) as f:
-            for off in idx.offsets:
-                head, _, key_len = _read_head(f, off, idx.index_start)
+            for off in offsets:
+                head, _, key_len = _read_head(f, off, end)
                 if want is not None and head[12 : 12 + key_len] not in want:
                     continue
                 # extend the prefix through the metadata only when its
@@ -771,13 +755,18 @@ def iter_records(
                     head += f.read(16 + key_len + meta_len - len(head))
                 yield decode_record(head, 0, skip_entries=True)[0]
         return
+    # one ranged read of the span: per-record seeks would cost one I/O
+    # round trip per record on an object store
+    buf = storage.for_path(path).read_bytes(path, start, end - start)
     if want is None:
-        yield from iter_records_span(path, 0, idx.index_start, len(idx.offsets), *opts)
+        pos = 0
+        for _ in offsets:
+            rec, pos = decode_record(buf, pos, *opts)
+            yield rec
         return
-    buf = storage.for_path(path).read_bytes(path, 0, idx.index_start)
-    for off in idx.offsets:
-        if _key_at(buf, off) in want:
-            yield decode_record(buf, off, *opts)[0]
+    for off in offsets:
+        if _key_at(buf, off, start) in want:
+            yield decode_record(buf, off - start, *opts)[0]
 
 
 # --- Arrow export ------------------------------------------------------------

@@ -15,8 +15,12 @@ Scale mapping (reference semantics -> Spark execution):
 - read tasks are sized by bytes per core, Spark's FilePartition rule:
   max_split = min(split_target_bytes, max(4 MiB open cost, sum(shard
   bytes + open cost) / defaultParallelism)).  Shards over max_split split
-  into record ranges (manifest record counts, or the EOF offset table,
-  draft.md:124-127); the rest pack, in name order, into grouped
+  into [lo, hi) record ranges, committed and log-less shards alike (the
+  manifest's record count, else the EOF offset table's); the task that
+  reads a range resolves it through the offset table (draft.md:124-127)
+  to one contiguous byte span, and a metadata_only range of
+  payload-heavy records seeks past the payloads.  The rest pack, in name
+  order, into grouped
   partitions of at most max_split — so ~1 MB shards cost ~one task per
   core, not one Python worker launch each, and a 1000-executor cluster
   gets even work regardless of shard sizing.  defaultParallelism is the
@@ -240,14 +244,13 @@ SCHEMA = StructType(
 
 @dataclass
 class ShardPartition(InputPartition):
-    path: str
-    offsets: list[int] | None  # None -> whole shard (unless rec_range set)
-    # [start, end) RECORD index range, resolved to byte offsets by the
-    # EXECUTOR (one EOF-index tail read in the task that owns the shard).
-    # Planning oversized shards then needs only manifest metadata — the
-    # driver never opens a shard file, which at 400k shards on an object
-    # store is the difference between metadata-speed planning and O(n)
-    # remote reads.
+    path: str  # "" -> the empty-plan sentinel, which read() skips
+    # [start, end) RECORD index range of a split shard (None: the whole
+    # shard), the one way a task names part of a shard.  The EXECUTOR
+    # resolves it to one contiguous byte span with one EOF-index tail
+    # read of the shard it is about to consume anyway, so planning ships
+    # a record count, never an offset list: a committed dataset plans
+    # from manifest metadata alone, and a log-less shard from its count.
     rec_range: tuple[int, int] | None = None
     # Bin of small shards: when set, this ONE task reads every listed
     # shard whole (path == group[0]).  The inverse of record-range
@@ -294,7 +297,7 @@ def _plan_partitions(
     split count, record counts produce [start, end) record ranges, and
     the owning EXECUTOR resolves ranges to byte offsets with one
     EOF-index read.  The driver opens a shard only for log-less ad-hoc
-    directories: one pass stats each shard and reads the offset table of
+    directories: one pass stats each shard and counts the records of
     any large enough to split.
 
     ``keys`` (name -> candidate keys, from ``ShardView.candidates``) makes
@@ -309,16 +312,15 @@ def _plan_partitions(
     # reference's parallel index build (R8, src/index/bucket.rs:85-117)
     needs_io = any(None in stats.get(n, (None, None)) for n in names)
 
-    def probe(name: str) -> tuple[int, list[int] | None]:
+    def probe(name: str) -> tuple[int, int | None]:
         # one I/O pass: a shard with no recorded count that may split (as
-        # max_split >= min(split_target, OPEN_COST)) reads its offset table
+        # max_split >= min(split_target, OPEN_COST)) counts its offset table
         sp = os.path.join(path, name)
         size, records = stats.get(name, (None, None))
         size = be.getsize(sp) if size is None else size
-        may_split = (
-            keys is None and records is None and size > min(split_target, OPEN_COST)
-        )
-        return size, codec.read_index(sp).offsets if may_split else None
+        if keys is None and records is None and size > min(split_target, OPEN_COST):
+            records = len(codec.read_index(sp).offsets)
+        return size, records
 
     if needs_io and len(names) > 8:
         from concurrent.futures import ThreadPoolExecutor
@@ -332,17 +334,11 @@ def _plan_partitions(
     max_split = min(split_target, max(OPEN_COST, total_cost // parallelism))
 
     def ranges(name: str) -> list[ShardPartition]:
-        sp = os.path.join(path, name)
-        offsets = probed[name][1]
-        n = len(offsets) if offsets is not None else stats[name][1]
+        n = probed[name][1]
         k = min(n, -(-sizes[name] // max_split))
         cuts = [n * i // k for i in range(k + 1)] if k > 0 else []
-        return [
-            ShardPartition(sp, offsets[lo:hi])
-            if offsets is not None
-            else ShardPartition(sp, None, rec_range=(lo, hi))
-            for lo, hi in zip(cuts, cuts[1:])
-        ]
+        sp = os.path.join(path, name)
+        return [ShardPartition(sp, rec_range=r) for r in zip(cuts, cuts[1:])]
 
     split = {n: ranges(n) for n in names if keys is None and sizes[n] > max_split}
     whole_left = len(names) - len(split)
@@ -369,7 +365,6 @@ def _plan_partitions(
         if isinstance(s, ShardPartition)
         else ShardPartition(
             s[0],
-            None,
             group=s if len(s) > 1 else None,
             keys=None if keys is None else sorted(set().union(*map(shard_keys.get, s))),
         )
@@ -387,58 +382,26 @@ def _arrow_batches(
 ):
     """Yield Arrow RecordBatches (not rows): bulk columnar transfer to the
     JVM instead of per-row pickling — the difference between a Python-speed
-    scan and an Arrow-speed scan on binary-heavy data."""
-    if partition.group:
-        # coalesced small shards: one task streams each member whole
-        for member in partition.group:
-            yield from _arrow_batches(
-                ShardPartition(member, None, keys=partition.keys),
-                verify,
-                skip_payload,
-                metadata_only,
-                shard_column,
-                entry_names,
-            )
-        return
-    if partition.offsets is None and partition.rec_range is not None:
-        # record-range split planned from manifest metadata alone: THIS
-        # task resolves its range with one EOF-index read of the shard
-        # it is about to consume anyway, then streams the contiguous
-        # byte span in a single ranged read
-        lo, hi = partition.rec_range
-        idx = codec.read_index(partition.path)
-        lo, hi = min(lo, len(idx.offsets)), min(hi, len(idx.offsets))
-        record_iter = (
-            codec.iter_records_span(
-                partition.path,
-                idx.offsets[lo],
-                idx.offsets[hi] if hi < len(idx.offsets) else idx.index_start,
-                hi - lo,
-                verify_checksums=verify,
-                skip_payload=skip_payload or metadata_only,
-                skip_entries=metadata_only,
-                entry_names=entry_names,
-            )
-            if hi > lo
-            else iter(())
-        )
-    else:
-        record_iter = codec.iter_records(
-            partition.path,
+    scan and an Arrow-speed scan on binary-heavy data.  A bin streams
+    each member whole; a split streams its record range."""
+    keys = None if partition.keys is None else frozenset(partition.keys)
+    for member in partition.group or [partition.path]:
+        records = codec.iter_records(
+            member,
             verify_checksums=verify,
-            offsets=partition.offsets,
             skip_payload=skip_payload or metadata_only,
             skip_entries=metadata_only,
             entry_names=entry_names,
-            keys=None if partition.keys is None else frozenset(partition.keys),
+            keys=keys,
+            records=partition.rec_range,
         )
-    yield from codec.arrow_batches(
-        record_iter,
-        skip_payload,
-        metadata_only,
-        os.path.basename(partition.path) if shard_column else None,
-        entry_names,
-    )
+        yield from codec.arrow_batches(
+            records,
+            skip_payload,
+            metadata_only,
+            os.path.basename(member) if shard_column else None,
+            entry_names,
+        )
 
 
 class ShardPackReader(DataSourceReader):
@@ -512,13 +475,6 @@ class ShardPackReader(DataSourceReader):
     def partitions(self) -> Sequence[ShardPartition]:
         if self.version is not None:
             view = snapshot_view(self.path, self.version)
-            present = set(storage.for_path(self.path).listdir(self.path))
-            missing = [n for n in view.names if n not in present]
-            if missing:
-                raise codec.ShardPackIOError(
-                    f"version {self.version}: shard(s) {missing[:3]} removed "
-                    "by a later overwrite/compaction"
-                )
         else:
             view = live_view(self.path)
         names = view.names
@@ -546,11 +502,24 @@ class ShardPackReader(DataSourceReader):
                 # delta) is a valid EMPTY relation, not an error; Spark
                 # requires >=1 partition (it invokes read(None) on an
                 # empty plan), so hand back a sentinel read() drops
-                return [ShardPartition("", [])]
+                return [ShardPartition("")]
             raise codec.ShardPackIOError(f"no .shardpack files under {self.path}")
+        # a key lookup plans one keyed-walk task per candidate shard (or
+        # bin of them), so its keys probe each shard once, in candidates;
+        # the range conjunct only prunes, and Spark re-applies every
+        # filter to the rows the walk returns
+        keyed = self._key_filters and not self._prefix_filters and not self.limit_records
         names = view.prune(
-            names, self._key_filters, self._prefix_filters, self._range_lo, self._range_hi
+            names,
+            () if keyed else self._key_filters,
+            self._prefix_filters,
+            self._range_lo,
+            self._range_hi,
         )
+        shard_keys = None
+        if keyed:
+            shard_keys = dict(view.candidates(names, self._key_filters))
+            names = list(shard_keys)
         mstats = view.sizes(names)
         tail_k: int | None = None  # records the last kept shard is cut to
         if self.limit_records and self.limit_records > 0 and names:
@@ -573,27 +542,17 @@ class ShardPackReader(DataSourceReader):
                     need -= rec
             names = kept_n
         if tail_k is None:
-            # a key lookup plans one keyed-walk task per candidate shard
-            # (or bin of them); a range conjunct only pruned above, and
-            # Spark re-applies every filter to the rows the walk returns
-            keyed = self._key_filters and not self._prefix_filters and not self.limit_records
             return _plan_partitions(
-                self.path,
-                names,
-                self.split_target,
-                mstats,
-                self.parallelism,
-                dict(view.candidates(names, self._key_filters)) if keyed else None,
+                self.path, names, self.split_target, mstats, self.parallelism, shard_keys
             )
         # the cut shard plans on its own, outside the bins, so its [0, k)
-        # record range survives coalescing (its record count is known, so
-        # it plans whole or as record ranges, never as offsets)
+        # record range survives coalescing
         head, tail = (
             _plan_partitions(self.path, ns, self.split_target, mstats, self.parallelism)
             for ns in (names[:-1], names[-1:])
         )
         return head + [
-            ShardPartition(p.path, None, rec_range=(lo, min(hi, tail_k)))
+            ShardPartition(p.path, rec_range=(lo, min(hi, tail_k)))
             for p in tail
             for lo, hi in [p.rec_range or (0, tail_k)]
             if lo < tail_k
@@ -1179,9 +1138,9 @@ def convert_to_dataset(
                 idx = codec.read_index(full)  # validates magic + offsets
                 tracker = _StatsTracker()
                 if want_keys and idx.offsets:
-                    # offsets=None lets iter_records' header-seek fast
-                    # path engage on payload-heavy shards (key+metadata
-                    # reads only, payload bytes never leave the store)
+                    # skip_entries lets iter_records' header-seek path
+                    # engage on payload-heavy shards (key+metadata reads
+                    # only, payload bytes never leave the store)
                     for rec in codec.iter_records(
                         full,
                         verify_checksums=False,

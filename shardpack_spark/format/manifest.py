@@ -18,10 +18,11 @@ Every read path answers two questions here, once.  Which shards does
 the commit log make visible?  ``live_view`` resolves the newest
 committed state (pointer plus newer archived roots) and reads each
 stream marker once through ``_marker_entries``; ``snapshot_view`` pins
-an archived version.  Which of them could hold the probed keys?  The
-resulting ``ShardView`` carries the per-shard stats and the one shard
-predicate: ``prune`` for the DSv2 planner's keys, prefixes and key
-range, ``candidates`` for the facade's ``lookup_many``.  The DSv2 batch
+an archived version and refuses one whose shard files are gone.
+Which of them could hold the probed keys?  The resulting ``ShardView``
+carries the per-shard stats and the one shard predicate: ``prune`` for
+the DSv2 planner's keys, prefixes and key range, ``candidates`` for the
+facade's ``lookup_many``.  The DSv2 batch
 planner, the stream planner and the facade ``Dataset`` all consume a
 ``ShardView``, so visibility and pruning cannot drift between them.
 """
@@ -424,10 +425,19 @@ def live_view(path: str, manifest=_UNSET) -> ShardView:
 def snapshot_view(path: str, version: int) -> ShardView:
     """A pinned snapshot: exactly the archived root's shard set (batch
     commits only — stream-marker shards are unversioned).  Raises
-    ShardPackIOError when the version is not available."""
+    ShardPackIOError when the version is not available, or when a later
+    overwrite or compaction removed one of its shard files (checked
+    against ONE directory listing)."""
     m = _load_manifest(path, version)
-    shards = m.get("shards", [])
-    return ShardView(m, sorted(s["path"] for s in shards), {s["path"]: s for s in shards})
+    stats = {s["path"]: s for s in m.get("shards", [])}
+    present = set(storage.for_path(path).listdir(path))
+    missing = sorted(n for n in stats if n not in present)
+    if missing:
+        raise codec.ShardPackIOError(
+            f"version {version}: shard(s) {missing[:3]} removed "
+            "by a later overwrite/compaction"
+        )
+    return ShardView(m, sorted(stats), stats)
 
 
 def _names_matching_meta(

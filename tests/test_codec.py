@@ -335,24 +335,27 @@ def _keyed_shard(path, heavy: bool) -> None:
 @pytest.mark.parametrize("heavy", [False, True])
 def test_keyed_walk_parity(tmp_path, heavy):
     """iter_records(keys=K, **kw) == the filtered full iteration, across
-    every decode option and all three read branches (whole-shard buffer,
-    header seek for payload-heavy shards, explicit offsets)."""
+    every decode option, both read branches (span buffer, header seek for
+    payload-heavy shards) and record ranges, which clip to the shard."""
     path = str(tmp_path / "s.shardpack")
     _keyed_shard(path, heavy)
-    offsets = C.read_index(path).offsets
     kws = [
         {},
         {"skip_payload": True},
         {"skip_entries": True},
         {"skip_entries": True, "verify_checksums": False},
         {"entry_names": {"txt"}},
-        {"offsets": offsets[1:]},
-        {"offsets": offsets[::-1], "skip_entries": True},
+        {"records": (1, 7)},
+        {"records": (2, 5), "skip_entries": True},
+        {"records": (4, 99), "skip_entries": True, "verify_checksums": False},
     ]
     for keys in ({"a"}, {"b", "c", "L" * 5000}, {"nope"}, set()):
         for kw in kws:
             want = [r for r in C.iter_records(path, **kw) if r.key in keys]
             assert list(C.iter_records(path, keys=keys, **kw)) == want, (keys, kw)
+    whole = list(C.iter_records(path))
+    for lo, hi in ((0, 7), (1, 7), (2, 5), (4, 99), (6, 7), (3, 3), (5, 2), (9, 12)):
+        assert list(C.iter_records(path, records=(lo, hi))) == whole[lo:hi]
     assert [r.metadata["i"] for r in C.iter_records(path, keys={"a", "b"})] == [
         "0", "1", "2", "5"
     ]
@@ -372,8 +375,7 @@ def test_keyed_walk_decodes_only_matches(tmp_path, monkeypatch):
     assert [r.key for r in C.iter_records(path, keys={"b"})] == ["b", "b"]
     assert len(calls) == 2
     calls.clear()
-    offsets = C.read_index(path).offsets
-    assert [r.key for r in C.iter_records(path, offsets=offsets, keys={"c"})] == ["c"]
+    assert [r.key for r in C.iter_records(path, records=(1, 6), keys={"c"})] == ["c"]
     assert len(calls) == 1
     calls.clear()
     assert list(C.iter_records(path, keys={"nope"})) == []
@@ -391,7 +393,7 @@ def test_keyed_walk_skips_corrupt_non_matching(tmp_path):
     raw = bytearray(open(path, "rb").read())
     raw[raw.find(b"B" * 64) + 5] ^= 0xFF
     open(path, "wb").write(bytes(raw))
-    for kw in ({}, {"offsets": C.read_index(path).offsets}):
+    for kw in ({}, {"records": (0, 2)}):
         [rec] = C.iter_records(path, keys={"good"}, **kw)
         assert rec.entries[0].data == b"G" * 64
         with pytest.raises(C.ShardPackChecksumError):
@@ -403,7 +405,9 @@ def test_keyed_walk_skips_corrupt_non_matching(tmp_path):
 @pytest.mark.parametrize("heavy", [False, True])
 def test_keyed_walk_damaged_head_is_typed(tmp_path, heavy):
     """A damaged block head raises ShardPackCodecError (never struct.error
-    or IndexError) on every branch of the keyed walk."""
+    or IndexError) on every branch of the keyed walk, and a record range
+    whose offset-table endpoints fall out of order raises
+    ShardPackIndexError on every branch of the walk, keyed or not."""
     path = str(tmp_path / "s.shardpack")
     _keyed_shard(path, heavy)
     good = open(path, "rb").read()
@@ -426,10 +430,19 @@ def test_keyed_walk_damaged_head_is_typed(tmp_path, heavy):
         for kw in ({}, {"skip_entries": True}):
             with pytest.raises(C.ShardPackCodecError):
                 list(C.iter_records(path, keys={"d"}, **kw))
+    table = idx.index_start + 8  # offsets[i] is the u64 at table + 8 * i
+    endpoints = [
+        (1, idx.index_start + 4, (1, 4)),  # range start past the index start
+        (1, idx.offsets[5], (1, 4)),  # range start past the range end
+        (4, len(good) + 10, (1, 4)),  # range end past the index start
+        (4, idx.offsets[0], (1, 4)),  # range end before the range start
+    ]
+    for i, value, records in endpoints:
+        damaged(table + 8 * i, "<Q", value)
+        for kw in ({}, {"keys": {"d"}}, {"skip_entries": True}, {"skip_payload": True}):
+            with pytest.raises(C.ShardPackIndexError):
+                list(C.iter_records(path, records=records, **kw))
     open(path, "wb").write(good)
-    for offsets in ([len(good) + 10], [-1], [idx.index_start + 4]):
-        with pytest.raises(C.ShardPackCodecError):
-            list(C.iter_records(path, offsets=offsets, keys={"d"}))
 
 
 def test_inprogress_rename_crash_safety(tmp_path):

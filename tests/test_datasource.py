@@ -351,7 +351,7 @@ def test_keyed_lookup_plans_one_task_per_candidate_shard(tmp_path, monkeypatch):
     reader = _keyed_reader(out, [EqualTo(("key",), "k0123")], **opts)
     [part] = reader.partitions()
     assert part.keys == ["k0123"]
-    assert part.rec_range is None and part.offsets is None and part.group is None
+    assert part.rec_range is None and part.group is None
 
     calls = []
     real = codec.decode_record
@@ -372,6 +372,154 @@ def test_keyed_lookup_plans_one_task_per_candidate_shard(tmp_path, monkeypatch):
         parts = _keyed_reader(out, filters, **opts, **extra).partitions()
         assert len(parts) > 1 and all(p.keys is None for p in parts)
         assert all(p.rec_range is not None for p in parts)
+
+
+def _counting_reads(monkeypatch):
+    """Count shard opens (paths) and bytes read through the local
+    backend, for I/O assertions on read tasks."""
+    from shardpack_spark.format import storage
+
+    opens: list[str] = []
+    nbytes: list[int] = []
+    real = storage.LocalBackend.open_read
+
+    class Counting:
+        def __init__(self, f):
+            self._f = f
+
+        def read(self, n=-1):
+            b = self._f.read(n)
+            nbytes.append(len(b))
+            return b
+
+        def __getattr__(self, name):
+            return getattr(self._f, name)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return self._f.__exit__(*exc)
+
+    def open_read(self, path):
+        opens.append(path)
+        return Counting(real(self, path))
+
+    monkeypatch.setattr(storage.LocalBackend, "open_read", open_read)
+    return opens, nbytes
+
+
+def test_logless_split_task_opens_its_shard_at_most_twice(tmp_path, monkeypatch):
+    """A log-less shard over max_split plans record ranges from its
+    offset-table count.  Each range task opens the shard at most twice
+    (the EOF index, then one span read), and the ranges together return
+    the whole shard, in order."""
+    from shardpack_spark.format.datasource import ShardPackReader
+
+    d = str(tmp_path / "adhoc")
+    w = codec.DatasetWriter(d, basename="t", target_shard_bytes=10**9)
+    for rec in _payload_records([f"k{i:03d}" for i in range(40)], size=20_000):
+        w.write(rec)
+    w.close()
+    [shard] = codec.list_shards(d)
+    reader = ShardPackReader(
+        {"path": d, "split_target_bytes": str(os.path.getsize(shard) // 4)}, 1
+    )
+    parts = reader.partitions()
+    assert len(parts) >= 4 and all(p.rec_range is not None for p in parts)
+
+    opens, _ = _counting_reads(monkeypatch)
+    keys = []
+    for p in parts:
+        opens.clear()
+        keys += [r["key"] for b in reader.read(p) for r in b.to_pylist()]
+        assert 1 <= len(opens) <= 2, (p.rec_range, len(opens))
+    assert keys == [f"k{i:03d}" for i in range(40)]
+
+
+def test_metadata_only_range_read_seeks_past_payloads(tmp_path, monkeypatch):
+    """A metadata_only read of a record range of payload-heavy records
+    reads block heads, not the span's payload bytes."""
+    from shardpack_spark.format.datasource import ShardPackReader
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "heavy")
+    write_records(out, _payload_records([f"k{i:03d}" for i in range(40)], size=200_000))
+    [shard] = codec.list_shards(out)
+    reader = ShardPackReader(
+        {
+            "path": out,
+            "metadata_only": "true",
+            "split_target_bytes": str(os.path.getsize(shard) // 2),
+        },
+        1,
+    )
+    parts = reader.partitions()
+    assert len(parts) == 2 and all(p.rec_range is not None for p in parts)
+
+    idx = codec.read_index(shard)
+    bounds = idx.offsets + [idx.index_start]
+    _, nbytes = _counting_reads(monkeypatch)
+    rows = []
+    for p in parts:
+        nbytes.clear()
+        lo, hi = p.rec_range
+        rows += [r for b in reader.read(p) for r in b.to_pylist()]
+        assert sum(nbytes) < 0.1 * (bounds[hi] - bounds[lo]), (p.rec_range, sum(nbytes))
+    assert [r["key"] for r in rows] == [f"k{i:03d}" for i in range(40)]
+    assert [r["metadata"] for r in rows] == [[("i", str(i))] for i in range(40)]
+    assert all(r["entries"] is None for r in rows)
+
+
+def test_keyed_plan_probes_each_shard_key_once(tmp_path, monkeypatch):
+    """A keyed plan runs the per-key shard probe once per (shard, key):
+    the candidates pass, not a prune pass before it as well."""
+    from pyspark.sql.datasource import In
+
+    from shardpack_spark.format.manifest import ShardView
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "keyed")
+    write_records(
+        out,
+        _payload_records([f"k{i:03d}" for i in range(120)]),
+        target_shard_bytes=40_000,
+    )
+    n_shards = len(codec.list_shards(out))
+    assert n_shards > 3
+    probes = []
+    real = ShardView._may_hold
+
+    def counting(self, name, st, key, hashes):
+        probes.append((name, key))
+        return real(self, name, st, key, hashes)
+
+    monkeypatch.setattr(ShardView, "_may_hold", counting)
+    parts = _keyed_reader(out, [In(("key",), ("k005", "k100", "zzz"))]).partitions()
+    assert sorted(k for p in parts for k in p.keys) == ["k005", "k100"]
+    assert len(probes) == len(set(probes)) == 3 * n_shards
+
+
+def test_pinned_snapshot_with_removed_shard_is_typed(tmp_path):
+    """A version pin whose shard file a later overwrite or compaction
+    removed raises ShardPackIOError when it is opened, in the facade and
+    in the DSv2 planner alike, instead of FileNotFoundError mid-read."""
+    from shardpack_spark.format.datasource import ShardPackReader
+    from shardpack_spark.format.reader import open_dataset
+    from shardpack_spark.format.writer import write_records
+
+    out = str(tmp_path / "pinned")
+    for key in ("a", "b"):
+        write_records(out, _payload_records([key]))
+    v1 = open_dataset(out, version=1)
+    assert [r.key for r in v1.records()] == ["a"]
+    [first] = v1.shards()
+    os.remove(first)
+    with pytest.raises(codec.ShardPackIOError, match="removed"):
+        open_dataset(out, version=1)
+    with pytest.raises(codec.ShardPackIOError, match="removed"):
+        ShardPackReader({"path": out, "version": "1"}, 1).partitions()
+    assert [r.key for r in open_dataset(out).records()] == ["b"]
 
 
 def test_keyed_in_lookup_returns_every_match(spark_ds, tmp_path):
@@ -1803,7 +1951,6 @@ def test_plan_partitions_grouping_invariants(tmp_path):
         ranges: dict[str, list[tuple[int, int]]] = {}
         order: list[str] = []
         for p in parts:
-            assert p.offsets is None
             if p.rec_range is not None:
                 assert p.group is None
                 ranges.setdefault(os.path.basename(p.path), []).append(p.rec_range)
@@ -1833,8 +1980,8 @@ def test_plan_partitions_grouping_invariants(tmp_path):
 
 def test_plan_partitions_split_counts_round_up(tmp_path):
     """Oversized shards split into ceil(size / max_split) near-equal
-    pieces on both paths: record ranges from manifest counts, and offset
-    chunks from the index of a log-less shard."""
+    record ranges on both paths: from manifest counts, and from the
+    offset-table count of a log-less shard."""
     from shardpack_spark.format.datasource import _plan_partitions
 
     MiB = 1024 * 1024
@@ -1860,8 +2007,7 @@ def test_plan_partitions_split_counts_round_up(tmp_path):
     [shard] = codec.list_shards(d)
     size = os.path.getsize(shard)
     parts = _plan_partitions(d, [os.path.basename(shard)], -(-size // 3), None, 1)
-    assert [len(p.offsets) for p in parts] == [3, 3, 4]  # not 5/5 or 3/3/3/1
-    assert [o for p in parts for o in p.offsets] == codec.read_index(shard).offsets
+    assert [p.rec_range for p in parts] == [(0, 3), (3, 6), (6, 10)]  # not 5/5 or 3/3/3/1
 
 
 def test_limit_records_tail_cut_survives_binning(spark_ds, tmp_path):

@@ -3,7 +3,8 @@ q29 or the bench's LSH path must not leave temp views in the session, and
 the package source must not register session-global ``__``-named views,
 grow per-module pickle-by-value registrations or a second place that
 ships the package to workers, nor grow a second place that publishes
-snapshot roots or a second image decode path."""
+snapshot roots, a second image decode path or a second way to read part
+of a shard."""
 
 from __future__ import annotations
 
@@ -184,3 +185,28 @@ def test_one_image_decode_path():
         {(mod, name, pat) for pat in patterns for mod, name, _ in _enclosing_functions(pat)}
     )
     assert offenders == []
+
+
+def test_one_record_range_read_path():
+    """A read task names part of a shard only by record range: the
+    package has no span reader beside codec.iter_records, passes no
+    `offsets=` to it, and ShardPartition carries no offset list."""
+    import dataclasses
+
+    from shardpack_spark.format.datasource import ShardPartition
+
+    assert _enclosing_functions(r"\biter_records_span\b") == []
+    pkg = pathlib.Path(shardpack_spark.__file__).parent
+    offending = []
+    for p in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.FunctionDef) and node.name == "iter_records":
+                params = [a.arg for a in node.args.args + node.args.kwonlyargs]
+                assert "offsets" not in params and "records" in params
+            if isinstance(node, ast.Call):
+                func = node.func
+                name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+                if name == "iter_records" and any(k.arg == "offsets" for k in node.keywords):
+                    offending.append((str(p.relative_to(pkg)), node.lineno))
+    assert offending == []
+    assert "offsets" not in {f.name for f in dataclasses.fields(ShardPartition)}

@@ -953,7 +953,7 @@ def test_planning_uses_manifest_sizes_no_stats(tmp_path, monkeypatch):
         root, names[:100], split_target=128 * 1024 * 1024, stats=big
     )
     assert len(parts) == 400  # 4 range splits per shard
-    assert all(p.rec_range is not None and p.offsets is None for p in parts)
+    assert all(p.rec_range is not None for p in parts)
     ranges = [p.rec_range for p in parts if p.path.endswith(names[0])]
     assert ranges == [(0, 250), (250, 500), (500, 750), (750, 1000)]
     assert calls == []
