@@ -709,15 +709,17 @@ def iter_records(
     read the EOF offset table addresses (draft.md:124-127).  The range
     is clipped to the shard; its blocks are contiguous, so every strategy
     below stays in one byte span, [offsets[lo], offsets[hi] or
-    index_start): one ranged read of it, or, for metadata-only reads of
-    payload-heavy records, block heads read by seeking through it.
-    An offset table whose range endpoints fall out of order raises
+    index_start): one ranged read of it, or, for metadata-only or keyed
+    reads of payload-heavy records, block heads read by seeking through
+    it.  An offset table whose range endpoints fall out of order raises
     ShardPackIndexError.
 
     ``keys``: the keyed walk (point lookups, src/bucket.rs:147-169) —
-    the unkeyed call's records whose key is in ``keys``, in shard order
-    and with the same I/O, but only blocks whose probed key matches go
-    through ``decode_record``.  So only RETURNED records are
+    the unkeyed call's records whose key is in ``keys``, in shard order,
+    but only blocks whose probed key matches go through
+    ``decode_record``.  It reads the same span as the unkeyed call,
+    except over payload-heavy records, where it reads each block's head
+    and only a matching block in full.  So only RETURNED records are
     decompressed and checksum-verified; whole-shard integrity is an
     unkeyed walk or ``verify_dataset``.  A damaged block head raises
     ShardPackCodecError."""
@@ -737,23 +739,28 @@ def iter_records(
             f"{path}: records [{lo}, {hi}) span bytes [{start}, {end}) outside "
             f"the record region [0, {idx.index_start})"
         )
-    # Metadata-only reads of payload-heavy shards: seek from block head
-    # to block head and never pull the payload bytes off disk at all
-    # (the index-serves-metadata access path, src/bucket.rs:185-188).
-    if skip_entries and (end - start) / len(offsets) > 64 * 1024:
+    # Metadata-only or keyed reads of payload-heavy shards: seek from
+    # block head to block head and pull payload bytes off disk only for
+    # a returned record that decodes them (the index-serves-metadata
+    # access path, src/bucket.rs:185-188).
+    if (skip_entries or want is not None) and (end - start) / len(offsets) > 64 * 1024:
         with storage.for_path(path).open_read(path) as f:
             for off in offsets:
-                head, _, key_len = _read_head(f, off, end)
+                head, size, key_len = _read_head(f, off, end)
                 if want is not None and head[12 : 12 + key_len] not in want:
                     continue
-                # extend the prefix through the metadata only when its
-                # length demands it (f sits right after the prefix)
-                if len(head) < 16 + key_len:
-                    head += f.read(16 + key_len - len(head))
-                (meta_len,) = struct.unpack_from("<I", head, 12 + key_len)
-                if len(head) < 16 + key_len + meta_len:
-                    head += f.read(16 + key_len + meta_len - len(head))
-                yield decode_record(head, 0, skip_entries=True)[0]
+                # extend the prefix (f sits right after it) through the
+                # whole block, or, skipping entries, through the metadata
+                # only when its length demands it
+                if not skip_entries:
+                    head += f.read(size - len(head))
+                else:
+                    if len(head) < 16 + key_len:
+                        head += f.read(16 + key_len - len(head))
+                    (meta_len,) = struct.unpack_from("<I", head, 12 + key_len)
+                    if len(head) < 16 + key_len + meta_len:
+                        head += f.read(16 + key_len + meta_len - len(head))
+                yield decode_record(head, 0, *opts)[0]
         return
     # one ranged read of the span: per-record seeks would cost one I/O
     # round trip per record on an object store

@@ -363,6 +363,36 @@ def sink_options(options: dict) -> dict:
     }
 
 
+def commit_options(
+    overwrite: bool,
+    partition_overwrite_mode: str,
+    partition_by: list[str],
+    dataset_metadata: dict | None,
+) -> bool:
+    """The commit options, checked once for both writers (the DataSource
+    writer and the facade ``Writer``).  Returns whether the overwrite is
+    dynamic: it replaces ONLY the partitions present in the new data
+    (Spark's spark.sql.sources.partitionOverwriteMode=dynamic)."""
+    if partition_overwrite_mode not in ("static", "dynamic"):
+        raise codec.ShardPackIOError(
+            "partition_overwrite_mode must be static|dynamic, "
+            f"got {partition_overwrite_mode!r}"
+        )
+    dynamic = overwrite and partition_overwrite_mode == "dynamic"
+    if dynamic and not partition_by:
+        raise codec.ShardPackIOError(
+            "partition_overwrite_mode=dynamic requires partition_by"
+        )
+    if dataset_metadata is not None and (
+        not isinstance(dataset_metadata, dict)
+        or not all(isinstance(v, str) for v in dataset_metadata.values())
+    ):
+        raise codec.ShardPackIOError(
+            "dataset_metadata must be an object of string values"
+        )
+    return dynamic
+
+
 class ShardSink:
     """THE write path for shard files: push records in, get manifest
     entries (name, counts, pruning stats) out.  The DataSource batch

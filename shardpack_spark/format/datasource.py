@@ -185,6 +185,7 @@ from shardpack_spark.format.commit import (  # noqa: F401  (re-exported:
     _next_commit_seq,
     _prior_parts,
     _write_manifest_part,
+    commit_options,
     commit_shards,
     fold_manifest_parts,
     publish_root,
@@ -678,19 +679,6 @@ class ShardPackWriter(DataSourceArrowWriter):
                 "assign one global sequence, which would interleave "
                 "partitions into shared names"
             )
-        pom = str(options.get("partition_overwrite_mode", "static")).lower()
-        if pom not in ("static", "dynamic"):
-            raise codec.ShardPackIOError(
-                f"partition_overwrite_mode must be static|dynamic, got {pom!r}"
-            )
-        # dynamic overwrite == mode('overwrite') that replaces ONLY the
-        # partitions present in the new data (Spark's
-        # spark.sql.sources.partitionOverwriteMode=dynamic semantics)
-        self.dynamic_overwrite = overwrite and pom == "dynamic"
-        if self.dynamic_overwrite and not self.partition_by:
-            raise codec.ShardPackIOError(
-                "partition_overwrite_mode=dynamic requires partition_by"
-            )
         # dataset-level custom metadata (the spec's `--metadata k=v`
         # shard-level fields, docs/draft.md:136-148, lifted to the
         # dataset where our commit log lives): a JSON object recorded in
@@ -699,13 +687,12 @@ class ShardPackWriter(DataSourceArrowWriter):
         # exactly this commit's object.
         um = options.get("dataset_metadata")
         self.dataset_metadata: dict | None = json.loads(um) if um else None
-        if self.dataset_metadata is not None and (
-            not isinstance(self.dataset_metadata, dict)
-            or not all(isinstance(v, str) for v in self.dataset_metadata.values())
-        ):
-            raise codec.ShardPackIOError(
-                "dataset_metadata must be a JSON object of string values"
-            )
+        self.dynamic_overwrite = commit_options(
+            overwrite,
+            str(options.get("partition_overwrite_mode", "static")).lower(),
+            self.partition_by,
+            self.dataset_metadata,
+        )
         # manifest checkpointing: merge the parts chain into one part
         # when it exceeds this (Delta-checkpoint analog; 0 disables)
         mcp = options.get("manifest_checkpoint_parts")

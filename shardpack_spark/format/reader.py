@@ -29,7 +29,8 @@ graph is import-audited pyspark-free by tests/test_reader_facade.py.
 
 Scale shape: ``records()`` streams shard by shard (one ranged read per
 shard, constant memory); ``lookup`` costs one ranged read per shard
-that survives bloom/range pruning, plus a decode of the matching
+that survives bloom/range pruning (block heads and the matching blocks
+when records average over 64 KiB stored), plus a decode of the matching
 records only (a keyed walk: every other block is probed for its key
 and skipped); ``__getitem__`` resolves through per-shard record counts
 from the manifest (metadata-only) and one EOF-index tail read for the

@@ -107,26 +107,13 @@ class Writer:
                 "partition_by": partition_by,
             }
         )
-        if partition_overwrite_mode not in ("static", "dynamic"):
-            raise codec.ShardPackIOError(
-                "partition_overwrite_mode must be static|dynamic, "
-                f"got {partition_overwrite_mode!r}"
-            )
         self.partition_by: list[str] = opts["partition_by"]
-        self.dynamic_overwrite = (
-            mode == "overwrite" and partition_overwrite_mode == "dynamic"
+        self.dynamic_overwrite = commit.commit_options(
+            mode == "overwrite",
+            partition_overwrite_mode,
+            self.partition_by,
+            dataset_metadata,
         )
-        if self.dynamic_overwrite and not self.partition_by:
-            raise codec.ShardPackIOError(
-                "partition_overwrite_mode=dynamic requires partition_by"
-            )
-        if dataset_metadata is not None and (
-            not isinstance(dataset_metadata, dict)
-            or not all(isinstance(v, str) for v in dataset_metadata.values())
-        ):
-            raise codec.ShardPackIOError(
-                "dataset_metadata must be a dict of string values"
-            )
         self.path = _norm_path(path)
         self.mode = mode
         self.compression = compression

@@ -7,6 +7,9 @@ collects.  Scale notes per operator:
 - shingles/minhash:  explode is linear in total text size; the signature
                      aggregation is a single groupBy(doc) with N min()
                      partial aggregates (map-side combined).
+- OPH profile:       row-local — signature, shingle set and count are
+                     computed on each document's own row: no explode,
+                     no aggregate, no shuffle.
 - minhash_lsh_pairs: candidate generation shuffles on (band, band_hash) —
                      bucket sizes stay small for realistic data, and the
                      exact-Jaccard verification only touches candidates,
@@ -16,7 +19,7 @@ collects.  Scale notes per operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Odd multiplier decorrelating the per-hash-function seeds fed to xxhash64.
@@ -56,6 +59,17 @@ def exact_dedup(
     )
 
 
+def _kgrams(text_col: str, k: int) -> Column:
+    """The distinct character k-grams of ``text_col``, as an array built
+    on the row (``length >= k`` is the caller's filter)."""
+    return F.array_distinct(
+        F.expr(
+            f"transform(sequence(1, length({text_col}) - {k - 1}),"
+            f" i -> substring({text_col}, i, {k}))"
+        )
+    )
+
+
 def char_shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -79,14 +93,8 @@ def char_shingles(
     identical results up to 64-bit hash collisions (P < 1e-7 at a
     billion distinct shingles), the standard trade every production
     near-dup pipeline makes."""
-    shingle_arr = F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, length({text_col}) - {k - 1}),"
-            f" i -> substring({text_col}, i, {k}))"
-        )
-    )
     out = df.filter(F.length(text_col) >= k).select(
-        F.col(id_col).alias("sid"), F.explode(shingle_arr).alias("shingle")
+        F.col(id_col).alias("sid"), F.explode(_kgrams(text_col, k)).alias("shingle")
     )
     if hashed:
         out = out.select("sid", F.xxhash64("shingle").alias("shingle"))
@@ -113,42 +121,6 @@ def minhash_signatures(
     ]
     agged = shingled.groupBy("sid").agg(*mins)
     return agged.select("sid", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
-
-
-def minhash_signatures_oph(
-    shingled: DataFrame, n_bins: int = 64, seed: int = 42
-) -> DataFrame:
-    """(sid, sig: array<bigint>) one-permutation-hashing minhash.
-
-    Classic minhash evaluates n_hashes hash functions per shingle; OPH
-    (Li, Owen & Zhang 2012) hashes each shingle ONCE and bins it by
-    `hash mod n_bins`, taking the per-bin minimum — n_bins signature
-    slots for 1/n_bins of the hashing work, the optimization every
-    production-scale near-dup pipeline ships.  Empty bins (docs with few
-    shingles) are filled by rotation densification (Shrivastava & Li
-    2014): borrow the nearest following non-empty bin's value offset by
-    the borrow distance, so two documents agree on a filled bin exactly
-    when they borrowed equal values at equal distance — keeping the
-    collision probability an unbiased Jaccard estimate.
-
-    Output shape matches ``minhash_signatures`` — banding, candidate
-    pruning, and signature estimation compose unchanged.  Signature
-    VALUES differ (different hash family), so don't mix the two
-    functions' outputs in one index.
-
-    Plan shape: one groupBy(sid, bin) partial-agg shuffle (rows out:
-    docs x n_bins max), then a per-doc map pivot + an O(2·n_bins)
-    aggregate expression for densification — all codegen, no Python.
-    """
-    h = F.xxhash64("shingle", F.lit(seed * _SEED_MIX))
-    per_bin = (
-        shingled.groupBy("sid", F.pmod(h, F.lit(n_bins)).alias("bin"))
-        .agg(F.min(h).alias("mh"))
-    )
-    agged = per_bin.groupBy("sid").agg(
-        F.map_from_entries(F.collect_list(F.struct("bin", "mh"))).alias("m")
-    )
-    return agged.select("sid", F.expr(_oph_densify_sql("m", n_bins)).alias("sig"))
 
 
 def _oph_densify_sql(map_col: str, n_bins: int) -> str:
@@ -180,56 +152,53 @@ def _oph_densify_sql(map_col: str, n_bins: int) -> str:
 
 
 def minhash_oph_profiles(
-    shingled: DataFrame, n_bins: int = 64, seed: int = 42
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+    n_bins: int = 64,
+    seed: int = 42,
 ) -> DataFrame:
-    """One-corpus-pass per-doc dedup profile: (sid, sig, shset, n).
+    """Per-document one-permutation-hashing dedup profile
+    (sid, sig, shset, n), one row per input row.
 
-    Fuses the two corpus aggregations the LSH pipeline otherwise runs
-    separately — ``minhash_signatures_oph`` (banding/prefilter input) and
-    the per-doc shingle-set fold inside ``jaccard_pairs_exact``'s
-    candidate verify — so the shingle stream is scanned, exploded and
-    hashed ONCE instead of three times (the old plan additionally
-    recomputed the set aggregation for BOTH join sides of the verify).
+    OPH (Li, Owen & Zhang 2012) hashes each shingle ONCE and keeps the
+    minimum per ``hash mod n_bins`` bin — n_bins signature slots for
+    1/n_bins of classic minhash's hashing work; empty bins are filled by
+    rotation densification (``_oph_densify_sql``).  ``sig`` has
+    ``minhash_signatures``' shape but another hash family: don't mix the
+    two in one index.
 
-    The fusion keeps ``minhash_signatures_oph``'s two-level shape — a
-    per-(sid, bin) aggregate, then a per-sid pivot — and simply rides the
-    per-bin shingle sets and row counts through the same two exchanges:
-    level 1 adds ``collect_set(shingle)``/``count(*)`` next to the bin
-    min, level 2 flattens the bin sets (equal shingle values share a bin,
-    so cross-bin duplicates are impossible and the flattened array IS the
-    per-doc set) and sums the counts.  Do NOT "simplify" this into one
-    groupBy(sid) with n_bins conditional ``min(CASE WHEN ...)`` columns:
-    any object aggregate (collect_set) forces the whole aggregate into
-    interpreted ObjectHashAggregate, and 64 interpreted CASE+xxhash64
-    evaluations per shingle row measured ~6x SLOWER than this shape.
+    All of it is computed on the document's own row: the distinct
+    character k-grams (``n`` counts them), their xxhash64 set ``shset``
+    (the ``char_shingles(hashed=True)`` values) and the per-bin minima of
+    a seeded rehash, the first entry of each bin in the sorted
+    ``(bin, hash)`` array.  No explode, no aggregate, no shuffle — and no
+    merge of duplicate ids: give each document a unique ``id_col``.
 
-    ``sig`` is value-identical to ``minhash_signatures_oph`` (same
-    per-bin min of the same hash, same rotation densification); ``n``
-    counts shingle rows, not set size, preserving the historical
-    collision semantics of the verify aggregation.
-
-    Persist the profile, feed ``select("sid", "sig")`` to
-    ``minhash_lsh_candidates`` and verify the candidates against the
-    whole profile with ``verify_candidates_with_profiles`` — the chain
-    q29's 'oph' variant and ``queries.llm.fuzzy_dedup_lsh`` run.  (The
-    ``select("sid", "shset", "n")`` projection also serves as
-    ``jaccard_pairs_exact(sets=...)``.)"""
-    h = F.xxhash64("shingle", F.lit(seed * _SEED_MIX))
-    per_bin = (
-        shingled.groupBy("sid", F.pmod(h, F.lit(n_bins)).alias("bin"))
-        .agg(
-            F.min(h).alias("mh"),
-            F.collect_set("shingle").alias("bs"),
-            F.count(F.lit(1)).alias("bn"),
+    Persist it, band ``select("sid", "sig")`` with
+    ``minhash_lsh_candidates`` and verify with
+    ``verify_candidates_with_profiles``: the chain of q29's 'oph'
+    variant and ``queries.llm.fuzzy_dedup_lsh``."""
+    rehash = f"transform(shset, x -> xxhash64(x, {int(seed) * _SEED_MIX}L))"
+    return (
+        df.filter(F.length(text_col) >= k)
+        .select(F.col(id_col).alias("sid"), _kgrams(text_col, k).alias("g"))
+        .selectExpr(
+            "sid",
+            "CAST(size(g) AS BIGINT) AS n",
+            "array_distinct(transform(g, x -> xxhash64(x))) AS shset",
         )
-    )
-    agged = per_bin.groupBy("sid").agg(
-        F.map_from_entries(F.collect_list(F.struct("bin", "mh"))).alias("m"),
-        F.flatten(F.collect_list("bs")).alias("shset"),
-        F.sum("bn").alias("n"),
-    )
-    return agged.select(
-        "sid", F.expr(_oph_densify_sql("m", n_bins)).alias("sig"), "shset", "n"
+        .selectExpr(
+            "sid", "shset", "n",
+            f"array_sort(transform({rehash}, h -> struct("
+            f"pmod(h, {int(n_bins)}) AS bin, h AS mh))) AS s",
+        )
+        .selectExpr(
+            "sid", "shset", "n",
+            "map_from_entries(filter(s, (e, i) -> i = 0 OR s[i - 1].bin <> e.bin)) AS m",
+        )
+        .selectExpr("sid", f"{_oph_densify_sql('m', n_bins)} AS sig", "shset", "n")
     )
 
 
@@ -473,7 +442,7 @@ def verify_candidates_with_profiles(
     broadcast_candidates: bool = True,
 ) -> DataFrame:
     """Fused signature prefilter + exact-Jaccard verify against a
-    one-pass profile table ``(sid, sig, shset, n)``.
+    ``minhash_oph_profiles`` table ``(sid, sig, shset, n)``.
 
     Semantically identical to ``filter_candidates_by_signature`` followed
     by ``jaccard_pairs_exact(candidates=..., sets=...)`` — the estimate
@@ -483,7 +452,8 @@ def verify_candidates_with_profiles(
     join pair instead of two (the old chain attached signatures, filtered,
     then re-attached the sets with two more joins).  The profile side is
     streamed (candidates broadcast), so the heavier shset column costs no
-    extra shuffle.  Returns (sid_a, sid_b, jac)."""
+    extra shuffle.  Each ``sid`` must name one profile row: the profile
+    does not merge duplicate ids.  Returns (sid_a, sid_b, jac)."""
     hint = F.broadcast if broadcast_candidates else (lambda d: d)
     a = profiles.selectExpr(
         "sid AS sid_a", "sig AS __sa", "shset AS sa", "n AS na"
@@ -553,9 +523,9 @@ def jaccard_pairs_exact(
         # one pass, intersected per candidate pair.  The full shingle
         # self-join (which blows up on frequent shingles) is never built.
         # ``sets`` lets the caller hand in a precomputed (sid, shset, n)
-        # table (e.g. the fused minhash_oph_profiles aggregate, usually
-        # persisted) so the corpus is not re-aggregated here — once per
-        # join side — on top of the signature pass.
+        # table (e.g. a persisted minhash_oph_profiles projection, built
+        # on each document's row) so the corpus is not aggregated here —
+        # once per join side — on top of the signature pass.
         hint = F.broadcast if broadcast_candidates else (lambda d: d)
         if sets is None:
             sets = shingled.groupBy("sid").agg(

@@ -109,10 +109,10 @@ def q29_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     without LSH blocking, so it is quadratic in cluster size and benched
     separately (bench measures fuzzy_dedup_lsh, the OPH path you'd run
     at scale)."""
-    sh = _shingles(spark, sf_dir, persist=True)
+    sh = _shingles(spark, sf_dir)
     exact = dedup.jaccard_pairs_exact(sh, threshold=0.8)
     lsh = _lsh_pairs(sh)
-    oph = _lsh_pairs(sh, oph=True)
+    oph = _oph_pairs(_spread_docs(spark, sf_dir))
     # word-3-gram token-level pairs (the n-gram Jaccard dedup family's
     # token variant, formerly its own query q55)
     docs = load_table(spark, sf_dir, "documents")
@@ -153,56 +153,45 @@ def q29_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _shingles(spark: SparkSession, sf_dir: str, persist: bool = False) -> DataFrame:
-    """Shingle table shared by the dedup pipelines.
+def _spread_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table, spread across the cluster: the sf test tables
+    arrive as ONE parquet split, which would serialize the per-row
+    shingling and hashing (the dedup pipelines' dominant cost) onto one
+    core.  On a many-split input the guard adds no repartition."""
+    return spread_if_narrow(load_table(spark, sf_dir, "documents"))
 
-    The repartition matters: the sf test tables arrive as one small
-    parquet file = ONE input split, which would serialize the
-    explode-and-hash work (the pipeline's dominant cost) onto a single
-    core.  Spreading the documents across the cluster first costs a tiny
-    shuffle of the raw docs and buys full parallelism for everything
-    downstream — and on a real 100 TB input with many splits the guard
-    skips the repartition outright.
 
-    ``persist`` is for plans with MANY shingle consumers (the exact
-    variant's self-join side counts as two); the LSH-only path leaves it
-    off — recomputing the pure-codegen explode twice is cheaper than
-    writing a million cached rows (measured: caching costs ~0.4 s at
-    sf0.1 and saves less)."""
-    docs = spread_if_narrow(load_table(spark, sf_dir, "documents"))
+def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted shingle table of the exact-Jaccard and classic-minhash
+    pipelines, which read it many times (the exact variant's self-join
+    side counts as two)."""
     # hashed shingles: longs through every downstream hash/join (see
     # char_shingles docstring) — same pairs, ~2x less hash+shuffle work
-    sh = dedup.char_shingles(docs, k=5, hashed=True)
-    return sh.persist() if persist else sh
+    return dedup.char_shingles(_spread_docs(spark, sf_dir), k=5, hashed=True).persist()
 
 
-def _lsh_pairs(sh: DataFrame, oph: bool = False) -> DataFrame:
-    # One fused groupBy(sid) computes the signature AND the exact shingle
-    # set + row count the verify step needs (guide §2.4: operations keyed
-    # the same way share one exchange).  The old shape aggregated the
-    # corpus three times — signature pass plus a recomputed collect_set
-    # for EACH join side of the candidate verify; the profile is built
-    # once, persisted, and every consumer reads the cache.
-    if oph:
-        # one-permutation hashing: 1 hash per shingle into 64 bins —
-        # the scale path (verified pair-identical to classic on all SFs).
-        # The fused profile carries the verify-side shingle sets through
-        # the same two exchanges as the signature, so the corpus is
-        # exploded+hashed once; the fused prefilter + verify attaches the
-        # candidates to the profile ONCE, and the estimate filter still
-        # guards the array_intersect.
-        prof = dedup.minhash_oph_profiles(sh, n_bins=64, seed=42).persist()
-        cand = dedup.minhash_lsh_candidates(
-            prof.select("sid", "sig"), bands=16, rows_per_band=4
-        )
-        return dedup.verify_candidates_with_profiles(
-            cand, prof, threshold=0.8, min_estimate=0.6
-        )
-    # classic minhash's 64 codegen'd min() aggregates cannot host a
-    # collect_set without degrading the whole aggregate to interpreted
-    # ObjectHashAggregate (see minhash_oph_profiles docstring), so the set
-    # fold stays a separate pass — but built ONCE and persisted, where the
-    # old plan recomputed it for each verify join side.
+def _oph_pairs(docs: DataFrame) -> DataFrame:
+    """One-permutation-hashing near-dup pairs of ``docs`` (1 hash per
+    shingle into 64 bins: the scale path).  The profile is persisted:
+    it has four readers (both banding and both verify sides), and
+    recomputing it per reader measured over 2x slower (sf0.1, 4-core
+    host)."""
+    prof = dedup.minhash_oph_profiles(docs, k=5, n_bins=64, seed=42).persist()
+    cand = dedup.minhash_lsh_candidates(
+        prof.select("sid", "sig"), bands=16, rows_per_band=4
+    )
+    return dedup.verify_candidates_with_profiles(
+        cand, prof, threshold=0.8, min_estimate=0.6
+    )
+
+
+def _lsh_pairs(sh: DataFrame) -> DataFrame:
+    """Classic 64-hash minhash near-dup pairs of the shingle table ``sh``.
+
+    The 64 codegen'd min() aggregates cannot host a collect_set without
+    degrading the whole aggregate to interpreted ObjectHashAggregate, so
+    the set fold is a separate pass, built once and persisted for both
+    verify join sides."""
     sigs = dedup.minhash_signatures(sh, n_hashes=64, seed=42).persist()
     sets = (
         sh.groupBy("sid")
@@ -228,7 +217,7 @@ def fuzzy_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     clear it between runs — bench.py clearCache()s before every timed
     pass (r10), which also re-materializes the profile inside the
     timed region."""
-    return _lsh_pairs(_shingles(spark, sf_dir), oph=True).selectExpr(
+    return _oph_pairs(_spread_docs(spark, sf_dir)).selectExpr(
         # round4d(jac) as one selectExpr: FLOOR(double)/double — the
         # identical IEEE op sequence (D suffixes matter: un-suffixed
         # 10000.0 would parse as DECIMAL and change the arithmetic)
@@ -820,7 +809,7 @@ def q37_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation (operators/dedup.connected_components); cluster id is
     the component's minimum doc id and is_canonical marks the row a
     dedup pipeline would keep."""
-    sh = _shingles(spark, sf_dir, persist=True)
+    sh = _shingles(spark, sf_dir)
     pairs = dedup.jaccard_pairs_exact(sh, threshold=0.8)
     clusters = dedup.connected_components(pairs)
     return clusters.select(

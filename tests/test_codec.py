@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import random
 import struct
 
 import pyarrow as pa
@@ -314,7 +315,8 @@ def test_skip_entries_seek_path(tmp_path):
 def _keyed_shard(path, heavy: bool) -> None:
     """Duplicate keys within the shard, a key and metadata longer than
     the walk's 4 KiB head probe, and two entries per record; ``heavy``
-    makes the average record > 64 KiB (the header-seek branch)."""
+    makes the average STORED record > 64 KiB (the header-seek branch),
+    so its payloads are incompressible."""
     w = C.ShardWriter(path, compression="gzip")
     size = 100_000 if heavy else 50
     keys = ["a", "b", "a", "L" * 5000, "c", "b", "d"]
@@ -323,7 +325,7 @@ def _keyed_shard(path, heavy: bool) -> None:
             C.Record(
                 key=key,
                 entries=[
-                    C.FileEntry("img", "image/x", bytes([i]) * size),
+                    C.FileEntry("img", "image/x", random.Random(i).randbytes(size)),
                     C.FileEntry("txt", "text/plain", b"caption %d" % i),
                 ],
                 metadata={"i": str(i), "pad": "m" * (5000 if i == 4 else 3)},
@@ -817,6 +819,37 @@ def test_slice_of_64mib_entry_reads_o_chunk_bytes(tmp_path):
         # of this synthetic payload are ~tens of KB each)
         assert be.bytes_read < 4 * 1024 * 1024, be.bytes_read
         # raw ('none') comparison is even tighter: exact span + headers
+    finally:
+        storage._factories.pop("cnt", None)
+        for k in [k for k in storage._remote_cache if k.startswith("cnt://")]:
+            storage._remote_cache.pop(k, None)
+
+
+def test_keyed_walk_of_payload_heavy_shard_reads_heads(tmp_path):
+    """A point lookup in a shard of 200 KB records reads block heads and
+    the matching block only, not the whole record span, and still
+    returns (and checksum-verifies) what the unkeyed walk returns."""
+    be = _CountingBackend()
+    try:
+        storage.register_backend("cnt", lambda scheme, uri: be)
+        p = "cnt://" + str(tmp_path / "heavy.shardpack")
+        w = C.ShardWriter(p)
+        for i in range(20):
+            w.write_record(mk_record(f"k{i:04d}", random.Random(i).randbytes(200_000)))
+        w.close()
+        span = C.read_index(p).index_start
+        for keys, kw in (({"k0007"}, {}), ({"k0015"}, {"records": (2, 18)})):
+            be.bytes_read = 0
+            got = list(C.iter_records(p, keys=keys, **kw))
+            assert be.bytes_read < 0.1 * span, (keys, be.bytes_read)
+            assert got == [r for r in C.iter_records(p, **kw) if r.key in keys]
+            assert len(got) == 1
+        raw = bytearray(open(str(tmp_path / "heavy.shardpack"), "rb").read())
+        raw[raw.find(random.Random(7).randbytes(64)) + 5] ^= 0xFF
+        open(str(tmp_path / "heavy.shardpack"), "wb").write(bytes(raw))
+        assert [r.key for r in C.iter_records(p, keys={"k0006"})] == ["k0006"]
+        with pytest.raises(C.ShardPackChecksumError):
+            list(C.iter_records(p, keys={"k0007"}))
     finally:
         storage._factories.pop("cnt", None)
         for k in [k for k in storage._remote_cache if k.startswith("cnt://")]:

@@ -135,10 +135,7 @@ def test_oph_minhash_densification_and_agreement(spark):
     """One-permutation hashing with rotation densification: tiny docs
     (fewer shingles than bins) densify deterministically; identical docs
     agree on every slot; distinct docs don't."""
-    from shardpack_spark.operators.dedup import (
-        char_shingles,
-        minhash_signatures_oph,
-    )
+    from shardpack_spark.operators.dedup import minhash_oph_profiles
 
     rows = [
         (1, "abcdefgh"),          # 4 shingles in 64 bins: ~60 borrowed slots
@@ -147,14 +144,14 @@ def test_oph_minhash_densification_and_agreement(spark):
         (4, "the quick brown fox jumps over the lazy dog " * 30),  # dense
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = char_shingles(df, k=5, hashed=True)
-    sigs = {r["sid"]: r["sig"] for r in minhash_signatures_oph(sh, n_bins=64).collect()}
+    sigs_df = minhash_oph_profiles(df, k=5, n_bins=64).select("sid", "sig")
+    sigs = {r["sid"]: r["sig"] for r in sigs_df.collect()}
     assert all(len(s) == 64 and all(v is not None for v in s) for s in sigs.values())
     assert sigs[1] == sigs[2]                     # identical docs: full agreement
     agree_13 = sum(a == b for a, b in zip(sigs[1], sigs[3]))
     assert agree_13 <= 8                          # disjoint shingle sets
     # deterministic across recomputation
-    again = {r["sid"]: r["sig"] for r in minhash_signatures_oph(sh, n_bins=64).collect()}
+    again = {r["sid"]: r["sig"] for r in sigs_df.collect()}
     assert again == sigs
 
 
@@ -176,7 +173,7 @@ def test_oph_pairs_match_classic_on_sf(spark, sf_dir):
             }
 
         classic = pairs(dedup.minhash_signatures(sh, 64).persist())
-        oph = pairs(dedup.minhash_signatures_oph(sh, 64).persist())
+        oph = pairs(dedup.minhash_oph_profiles(docs, n_bins=64).select("sid", "sig").persist())
         assert classic == oph and len(classic) > 0
     finally:
         sh.unpersist()
@@ -425,18 +422,22 @@ def test_query_vec_literal_parity(spark, sf_dir):
 
 
 def test_minhash_oph_profile_parity(spark, sf_dir):
-    """The r9 fused one-pass profile must reproduce minhash_signatures_oph
-    signatures exactly AND the verify-side (shset, n) aggregation up to
-    set order — the equivalences the fused q29 LSH plan rests on."""
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    sh = dedup.char_shingles(docs, k=5, hashed=True).persist()
-    prof = {
-        r["sid"]: (list(r["sig"]), sorted(r["shset"]), r["n"])
-        for r in dedup.minhash_oph_profiles(sh, n_bins=64, seed=42).collect()
-    }
+    """The row-local profile must reproduce the two-level corpus
+    aggregate it replaced: per-(sid, bin) minima over the exploded
+    hashed shingles, pivoted per sid and densified, exactly; and the
+    verify-side (shset, n) fold up to set order."""
+    docs = load_table(spark, sf_dir, "documents").limit(200).persist()
+    sh = dedup.char_shingles(docs, k=5, hashed=True)
+    h = F.xxhash64("shingle", F.lit(42 * dedup._SEED_MIX))
+    per_bin = sh.groupBy("sid", F.pmod(h, F.lit(64)).alias("bin")).agg(
+        F.min(h).alias("mh")
+    )
     sigs = {
         r["sid"]: list(r["sig"])
-        for r in dedup.minhash_signatures_oph(sh, n_bins=64, seed=42).collect()
+        for r in per_bin.groupBy("sid")
+        .agg(F.map_from_entries(F.collect_list(F.struct("bin", "mh"))).alias("m"))
+        .select("sid", F.expr(dedup._oph_densify_sql("m", 64)).alias("sig"))
+        .collect()
     }
     sets = {
         r["sid"]: (sorted(r["shset"]), r["n"])
@@ -444,11 +445,27 @@ def test_minhash_oph_profile_parity(spark, sf_dir):
         .agg(F.collect_set("shingle").alias("shset"), F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    sh.unpersist()
+    prof = {
+        r["sid"]: (list(r["sig"]), sorted(r["shset"]), r["n"])
+        for r in dedup.minhash_oph_profiles(docs, k=5, n_bins=64, seed=42).collect()
+    }
+    docs.unpersist()
     assert set(prof) == set(sigs) == set(sets)
     for sid, (sig, shset, n) in prof.items():
         assert sig == sigs[sid], f"sig mismatch for {sid}"
         assert (shset, n) == sets[sid], f"set/count mismatch for {sid}"
+
+
+def test_minhash_oph_profile_has_no_exchange(spark):
+    """The profile is a function of each document's own row: its
+    executed plan over a local DataFrame shuffles nothing, and duplicate
+    ids are not merged (one row in, one profile out)."""
+    rows = [(1, "the quick brown fox"), (1, "jumps over the lazy dog"), (2, "abc")]
+    prof = dedup.minhash_oph_profiles(
+        spark.createDataFrame(rows, "doc_id long, text string")
+    )
+    assert sorted(r["sid"] for r in prof.collect()) == [1, 1]
+    assert "Exchange" not in prof._jdf.queryExecution().executedPlan().toString()
 
 
 def test_tf_idf_matches_python_reference(spark, sf_dir):

@@ -16,7 +16,7 @@ import zipfile
 
 import shardpack_spark
 from shardpack_spark.queries import load_all
-from shardpack_spark.queries.llm import _lsh_pairs, _shingles, fuzzy_dedup_lsh
+from shardpack_spark.queries.llm import _oph_pairs, _spread_docs, fuzzy_dedup_lsh
 
 
 def _temp_views(spark) -> set[str]:
@@ -36,10 +36,10 @@ def test_fuzzy_dedup_leaves_no_temp_views(spark, sf_dir):
 def test_q29_oph_reads_profile_from_cache(spark, sf_dir):
     """The OPH profile has four readers (both banding sides and both
     verify sides); they must read the persisted profile, not recompute
-    the corpus aggregation each."""
+    it each."""
     spark.catalog.clearCache()
     try:
-        df = _lsh_pairs(_shingles(spark, sf_dir), oph=True)
+        df = _oph_pairs(_spread_docs(spark, sf_dir))
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan
